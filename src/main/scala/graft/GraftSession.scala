@@ -36,9 +36,9 @@ object GraftSession {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       // commit algorithm v2: task commits move output directly into the
       // job's destination instead of the v1 two-phase job-level rename.
-      // Safe here BY CONSTRUCTION: every engine write lands in a
-      // PRIVATE destination (the sink's dot-prefixed shadow dirs,
-      // swapped in atomically afterwards; Verify's fresh output dirs),
+      // Safe here BY CONSTRUCTION: every engine write lands where no
+      // reader looks (the sink's fresh file names, which no reader sees
+      // until its log commit lists them; Verify's fresh output dirs),
       // so v2's only caveat — partial output visible at the final path
       // before job commit — has no observer. At scale this removes one
       // full rename pass per write job (the standard object-store/

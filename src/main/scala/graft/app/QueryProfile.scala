@@ -30,8 +30,11 @@ object QueryProfile {
     // a query with spark.sql.adaptive.enabled=false)
     sys.env.get("SPARK_GRAFT_PROFILE_CONF").foreach(_.split(';')
       .map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
+        kv.split("=", 2) match {
+          case Array(k, v) => spark.conf.set(k, v)
+          case _ => throw new IllegalArgumentException(
+            s"SPARK_GRAFT_PROFILE_CONF entry '$kv' is not key=value")
+        }
       })
     val q = Catalog.byName(name)
 

@@ -13,23 +13,24 @@ package graft.ops
   * (the pool bounds DRIVER-side concurrency; executor-side parallelism
   * stays the scheduler's).
   *
-  * Semantics mirror [[graft.sink.UpsertSink]]'s runConcurrently: wait
-  * for ALL tasks (uninterruptible — a still-running task must not race
+  * Semantics: wait for ALL tasks (uninterruptible — a still-running task must not race
   * the caller's next operation), then rethrow the FIRST failure by
   * input order. Results preserve input order. Tasks must be mutually
   * independent — the caller's contract, exactly as if it had called
-  * them in sequence.
+  * them in sequence. The pool is created per call, so its threads
+  * inherit the caller's SparkContext local properties (job labels).
   */
 private[graft] object Par {
 
   /** Run `tasks` concurrently (bounded pool), return results in input
-    * order. Sequential fast path for 0/1 tasks — no pool, no overhead.
+    * order. Sequential fast path for 0/1 tasks or `maxThreads <= 1` —
+    * no pool, no overhead.
     */
   def map[A, B](items: Seq[A], maxThreads: Int = 8)(f: A => B): Seq[B] = {
     if (items.isEmpty) return Seq.empty
-    if (items.size == 1) return Seq(f(items.head))
+    if (items.size == 1 || maxThreads <= 1) return items.map(f)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      math.min(items.size, math.max(2, maxThreads)))
+      math.min(items.size, maxThreads))
     try {
       val futures = items.map(a => pool.submit(
         new java.util.concurrent.Callable[B] { def call(): B = f(a) }))

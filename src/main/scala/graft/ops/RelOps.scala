@@ -46,16 +46,6 @@ object RelOps {
   def project(df: DataFrame, cols: String*): DataFrame =
     df.select(cols.map(col): _*)
 
-  /** FK flatten: nested `{id}` struct column -> scalar id column
-    * (reference: dbUpsert.ts:13-21). Also drops columns not in `keep`.
-    */
-  def flattenRefs(df: DataFrame, refCols: Seq[String], keep: Seq[String]): DataFrame = {
-    val flattened = refCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c, col(s"$c.id"))
-    }
-    flattened.select(keep.map(col): _*)
-  }
-
   /** Keyset pagination page: the reference's `id_gt: lastId, first: n`
     * incremental scan (subgraphSyncer.ts:88-133). At scale this is how a
     * source is consumed without OFFSET (which re-reads skipped rows).
@@ -102,14 +92,6 @@ object RelOps {
       .filter(col("__rn") === 1)
       .drop("__rn")
   }
-
-  /** High-water mark: `max(blockNumber)` read back from the sink before an
-    * incremental fetch (blockStakingHistoryStrategy.ts:32-38). Returns a
-    * 1-row DataFrame so it can be cross-joined (scalar subquery) without a
-    * driver round trip.
-    */
-  def highWaterMark(df: DataFrame, c: String): DataFrame =
-    df.agg(max(col(c)).as("hwm"))
 
   /** Rows above a high-water mark computed from the same (or another)
     * table — incremental sync (T5) without collecting the mark to the

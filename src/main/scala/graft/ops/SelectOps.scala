@@ -484,12 +484,6 @@ object SelectOps {
         percentile_approx(col("score_ppm"), lit(1.0 / 3.0),
           lit(accuracy)).as("t_mid"))
 
-  /** One-shot convenience: [[perplexityScored]] → [[perplexityThresholdsFromScored]]. */
-  def perplexityThresholds(df: DataFrame, idCol: String, textCol: String,
-                           accuracy: Int = 10000): DataFrame =
-    perplexityThresholdsFromScored(perplexityScored(df, idCol, textCol),
-      accuracy)
-
   /** The 100 TB bucketing path: join the (broadcast-sized) per-language
     * threshold table and assign tiers map-side — no per-language sort,
     * no window, corpus never shuffles (the lang-key join broadcasts the

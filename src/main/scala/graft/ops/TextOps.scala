@@ -195,15 +195,6 @@ object TextOps {
     exploded.groupBy(col(docCol)).agg(aggs.head, aggs.tail: _*)
   }
 
-  /** LSH band keys from the m0..m{k-1} signature columns of
-    * [[minhashSignatures]]: one hash per band of `rowsPerBand` minima.
-    */
-  def minhashBands(bands: Int, rowsPerBand: Int): Column =
-    array((0 until bands).map { b =>
-      xxhash64(concat_ws("_",
-        (0 until rowsPerBand).map(r => col(s"m${b * rowsPerBand + r}")): _*), lit(b))
-    }: _*)
-
   /** Exact Jaccard similarity of two pre-distinct shingle arrays. Integer
     * size ratio — deterministic across engines.
     */
@@ -1779,10 +1770,6 @@ object TextOps {
     "es" -> Seq("el", "los", "que", "es", "las"),
     "fr" -> Seq("le", "les", "est", "et", "dans"),
     "zh" -> Seq("de", "shi", "bu", "le", "wo"))
-
-  def langHits(text: Column, markers: Seq[String]): Column =
-    element_at(graft.functions.MarkerFunctions.groupHits(
-      tokens(text), Seq(markers)), 1)
 
   /** Best-guess language: highest marker-hit count, ties -> 'und'ecided
     * unless one language strictly wins.

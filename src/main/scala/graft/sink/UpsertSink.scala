@@ -1,43 +1,19 @@
 package graft.sink
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import java.util.Comparator
 
 import scala.jdk.CollectionConverters._
+import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
+import org.apache.spark.storage.StorageLevel
 
-/** Idempotent primary-key upsert sink — the Spark re-expression of the
-  * reference's `INSERT .. ON CONFLICT(pk) DO UPDATE` batched writer
-  * (src/handlers/dbUpsert.ts:50-85) and its atomic snapshot swap
-  * (src/handlers/schema.ts:4-49).
-  *
-  * Tables live in a hash-bucketed layout (parquet files under
-  * `table/__bucket=N/`), with the bucket computed from the primary key. `merge` then rewrites
-  * ONLY the buckets that contain updated keys: per-block incremental
-  * merges (T4/T6 re-sync the same keys every few blocks) cost
-  * O(batch + touched buckets), not O(table) — the cost model of the
-  * reference's targeted `ON CONFLICT` upsert rather than a full rebuild.
-  * At 100 TB with `numBuckets` sized so a bucket fits an executor
-  * comfortably, a small batch touches few buckets and the merge I/O is
-  * bounded by them; untouched buckets' files are never opened, let alone
-  * rewritten.
-  *
-  * Each bucket directory is swapped atomically (shadow write + ATOMIC_MOVE)
-  * so readers never observe a partial bucket; the full-table
-  * [[overwrite]] (initial load, reorg rebuild) keeps the whole-directory
-  * shadow swap (K5). Tables written flat by an older layout are migrated
-  * to the bucketed layout on their first merge. On Delta/Iceberg this
-  * whole class collapses to `MERGE INTO` — the operator surface
-  * (`merge(df, table, pk)`) is format-agnostic on purpose.
-  *
-  * Conflict semantics: within one incoming batch, last-write-wins by
-  * `versionCol` (ties broken deterministically); across batches the newest
-  * write replaces the stored row wholesale — matching the reference's
-  * DO UPDATE SET all-columns behavior (dbUpsert.ts:76-79).
-  */
 /** One table's delta for [[UpsertSink.mergeMany]] — the per-table
   * arguments of [[UpsertSink.merge]] as data.
   *
@@ -61,8 +37,9 @@ final case class TableMerge(table: String, updates: DataFrame,
 
 /** One table's payload for [[UpsertSink.overwriteMany]] — the per-table
   * arguments of [[UpsertSink.overwrite]] as data. A non-empty `pk`
-  * writes the shadow in the bucketed layout so later merges take the
-  * incremental path, exactly like the single-table form.
+  * writes the bucketed layout so later merges take the incremental
+  * path; an empty one keeps the table's logged merge key when `df`
+  * still carries those columns, exactly like the single-table form.
   */
 final case class TableWrite(table: String, df: DataFrame,
                             pk: Seq[String] = Seq.empty)
@@ -106,8 +83,8 @@ final case class TableDelete(table: String, keys: DataFrame,
   * [[UpsertSink.eraseMany]] overload: WITHOUT an erasure id the
   * retraction is at-least-once (re-running subtracts again — and a
   * double-decrement can clamp/drop rows surviving documents still
-  * hold); WITH an erasure id the journal + per-bucket markers make
-  * replay IDEMPOTENT — bit-identical to a single uncrashed run.
+  * hold); WITH an erasure id the id commits in the same log entry as
+  * the rewrite, so a replay is a no-op — bit-identical to one run.
   */
 final case class TableCountRetract(table: String, decrements: DataFrame,
                                    pk: Seq[String], cntCols: Seq[String],
@@ -118,36 +95,47 @@ final case class TableCountRetract(table: String, decrements: DataFrame,
     s"$table: count columns ${cntCols.mkString(", ")} overlap the pk")
 }
 
-private[sink] object SchemaCache {
-  /** Version-keyed parquet SCHEMA cache, shared across sink instances
-    * (catalog fixtures rebuild the handle per call, so an instance
-    * field would never hit). Every `spark.read.parquet` without an
-    * explicit schema pays parquet schema inference — a 1-task Spark
-    * job (SchemaMergeUtils.mergeSchemasInParallel) plus driver footer
-    * work, ~20-100 ms — PER READ; a lifecycle arc reads its store
-    * tables dozens of times. The schema of a table is a pure function
-    * of its on-disk content, so caching it keyed by [[UpsertSink
-    * .version]] (the same content fingerprint the decoded-quantizer
-    * caches key on) is exactly as coherent as those caches: any write
-    * moves the version and the next read re-infers. Schemas are
-    * session-independent (plain StructType), so no session key is
-    * needed. Entries are (version, schema incl. the bucket partition
-    * column when the layout has one — inference appends partition
-    * columns last, and the explicit-schema path matches by name, so
-    * subset bucket reads and snapshot-dir reads share the entry).
-    *
-    * A FILELESS (truncated) table can never hit: a cache entry is only
-    * written after a successful inference, and the delete-all that
-    * empties a table moves its version — so the read-a-truncated-table
-    * error contract is unchanged.
-    */
-  private[sink] val schemaCache = scala.collection.concurrent.TrieMap
-    .empty[(String, String), (Long, org.apache.spark.sql.types.StructType)]
-}
-
+/** Idempotent primary-key upsert sink — the Spark re-expression of the
+  * reference's `INSERT .. ON CONFLICT(pk) DO UPDATE` batched writer
+  * (src/handlers/dbUpsert.ts:50-85) and its atomic snapshot swap
+  * (src/handlers/schema.ts:4-49).
+  *
+  * Tables live in a hash-bucketed layout (parquet files under
+  * `table/__bucket=N/`), with the bucket computed from the primary key.
+  * `merge` then rewrites ONLY the buckets that contain updated keys:
+  * per-block incremental merges cost O(batch + touched buckets), not
+  * O(table) — the cost model of the reference's targeted `ON CONFLICT`
+  * upsert rather than a full rebuild. Untouched buckets' files are never
+  * opened, let alone rewritten.
+  *
+  * Consistency comes from ONE ordered commit log per root
+  * ([[CommitLog]], after Delta Lake's transaction log): every mutator
+  * writes its parquet files under fresh names that never move, then
+  * commits every table it changed in one `_log/<n>.json` entry. The
+  * entry records each table's live files by bucket, schema, merge key,
+  * bucket modulus, group id and applied admit/erasure ids, so:
+  *  - readers get their file list and schema from the head entry — no
+  *    directory walk, no schema inference job;
+  *  - a crash before the commit leaves only files no entry references,
+  *    which the next commit on that table deletes;
+  *  - a multi-table write (group build, group erase) lands whole or not
+  *    at all, and an op id lands in the same entry as its effect;
+  *  - a snapshot pins one entry, and the committing writer deletes only
+  *    files neither the head nor a pinned entry references.
+  * The per-table writer lease ([[writerLocked]]) serializes writers;
+  * readers take no lock. On Delta/Iceberg this whole class collapses to
+  * `MERGE INTO` — the operator surface (`merge(df, table, pk)`) is
+  * format-agnostic on purpose.
+  *
+  * Conflict semantics: within one incoming batch, last-write-wins by
+  * `versionCol` (ties broken deterministically); across batches the newest
+  * write replaces the stored row wholesale — matching the reference's
+  * DO UPDATE SET all-columns behavior (dbUpsert.ts:76-79).
+  */
 final class UpsertSink(spark: SparkSession, root: String,
                        numBuckets: Int = 64,
                        writerWaitMs: Long = 60000L) {
+  import UpsertSink.BucketCol
 
   /** The session this sink writes with — model-persistence helpers
     * (e.g. BpeOps.saveModel) build their DataFrames on it rather than
@@ -155,11 +143,17 @@ final class UpsertSink(spark: SparkSession, root: String,
     */
   def session: SparkSession = spark
 
-  private val BucketCol = "__bucket"
+  private val log = new CommitLog(Paths.get(root))
+
+  /** Test hook: called with "commit" right before a log entry is
+    * linked, and with "pinned" between a snapshot's pin and its read of
+    * the head — the points where a crash or a stall is injected.
+    */
+  @volatile private[sink] var testHook: String => Unit = _ => ()
 
   /** Label every Spark job `body` submits from THIS thread (guide §1.5
     * — label your jobs): descriptions are thread-local, so sink work
-    * submitted from [[runConcurrently]] pool threads labels correctly
+    * submitted from [[graft.ops.Par]] pool threads labels correctly
     * when set inside the task. The caller's own label is saved and
     * restored, so composing ops keep their outer description.
     */
@@ -173,25 +167,27 @@ final class UpsertSink(spark: SparkSession, root: String,
 
   /** Every table path flows through here, so this is where the name
     * contract is enforced: no path separators (a name like `../x`
-    * would aim [[drop]]'s recursive delete outside the sink root) and
-    * no dot prefix (reserved for sink internals — shadows, backups,
-    * snapshots — which recovery/cleanup sweeps by prefix).
+    * would aim a vacuum outside the sink root), no dot prefix and not
+    * `_log` (reserved for sink internals — the log, pins, leases).
     */
   private def requireValidTableName(table: String): Unit =
-    require(table.nonEmpty && !table.startsWith(".") &&
+    require(table.nonEmpty && !table.startsWith(".") && table != "_log" &&
         !table.exists(c => c == '/' || c == '\\'),
       s"invalid table name '$table': must be non-empty, not dot-prefixed " +
-        "(reserved for sink internals), and contain no path separators")
+        "or _log (reserved for sink internals), and contain no path separators")
 
   private def tableDir(table: String): Path = {
     requireValidTableName(table)
     Paths.get(root, table)
   }
 
-  def exists(table: String): Boolean = {
-    recover(table)
-    Files.exists(tableDir(table))
+  /** The table as the log head records it. */
+  private def state(table: String): Option[TableState] = {
+    requireValidTableName(table)
+    log.head().tables.get(table)
   }
+
+  def exists(table: String): Boolean = state(table).nonEmpty
 
   /** Identity of this sink's storage root — cache keys for readers that
     * hold decoded table content in memory (e.g. the ANN index metadata
@@ -199,344 +195,39 @@ final class UpsertSink(spark: SparkSession, root: String,
     */
   def rootPath: String = root
 
-  /** Cheap content-version fingerprint of a table: a hash over its
-    * files' (relative path, size, mtime), computed from ONE directory
-    * walk — no Spark job. [[overwrite]]'s shadow swap installs freshly
-    * written part files, so any rebuild changes the fingerprint; 0 for
-    * a missing table. Readers that cache decoded table content key on
-    * this to stay coherent with on-disk state.
-    *
-    * (path, size, mtime) alone is not collision-proof: a rewrite that
-    * reproduces identical names and sizes within the same millisecond
-    * would be invisible. Every sink write therefore also stamps a
-    * `_graft_gen` marker with a fresh UUID (atomic with the swap on the
-    * whole-table path), and the marker's CONTENT — not its metadata —
-    * folds into the hash, so cache coherence never depends on part-file
-    * naming or clock resolution.
+  /** Content version of a table, from the log head: drawn fresh on
+    * every commit that changes the table (content, layout or applied
+    * op ids), so it is unique across drop/re-create; 0 for a missing
+    * table. Readers that cache decoded table content key on it.
     */
-  def version(table: String): Long = retryVanishedWalk("version", table) {
-    recover(table)
-    val dir = tableDir(table)
-    if (!Files.exists(dir)) 0L
-    else {
-    val stream = Files.walk(dir)
-    try {
-      stream.sorted().iterator().asScala
-        .filter(p => Files.isRegularFile(p) &&
-          // dot-prefixed entries (.bkup_N backups, .gswap__ journals)
-          // are recovery transients, not content: recovery's stale-
-          // backup cleanup may remove them without any data change, and
-          // hashing them would both churn the fingerprint and widen the
-          // stat-a-vanishing-file race this walk retries around
-          !dir.relativize(p).toString.split('/').exists(_.startsWith(".")))
-        .foldLeft(1125899906842597L) { (h, p) =>
-          val s =
-            if (p.getFileName.toString == GenMarker)
-              s"$GenMarker|${new String(Files.readAllBytes(p), "UTF-8")}"
-            else s"${dir.relativize(p)}|${Files.size(p)}|" +
-              s"${Files.getLastModifiedTime(p).toMillis}"
-          s.foldLeft(h)((a, c) => a * 31 + c)
-        }
-    } finally stream.close()
-    }
-  }
+  def version(table: String): Long = state(table).fold(0L)(_.version)
 
-  /** Bounded restart for metadata walks racing a live writer/deleter.
-    * [[version]] and [[hasDataFiles]] walk the table dir WITHOUT taking
-    * a lease (they are reader-path), so a concurrent [[deleteMany]] can
-    * remove a `.bkup_N` backup or a whole emptied-bucket dir between
-    * the walk's listing and its stat — surfacing as
-    * UncheckedIOException(NoSuchFileException) out of FileTreeIterator
-    * (or a raw NoSuchFileException from a follow-up stat). That is the
-    * same transient the snapshot link walk already restarts around
-    * ([[isVanishedFile]]); these walks get the identical discipline: a
-    * vanished file means "a writer moved something mid-walk — re-walk",
-    * bounded so a pathological continuous rewriter fails loudly instead
-    * of looping.
+  /** Whether the table holds any data rows to read. A table every row
+    * of which was [[delete]]d still `exists()` (the TRUNCATE contract)
+    * but has no files to serve: a direct [[read]] fails. Store retract
+    * plans that derive their keys by SCANNING the store use this to
+    * no-op on a previously fully-erased store instead of crashing — run
+    * it inside the erasure lease (the thunk overloads) so a concurrent
+    * truncation cannot invalidate the answer before the scan.
     */
-  private def retryVanishedWalk[T](what: String, table: String)(body: => T): T = {
-    var attempt = 0
-    while (true) {
-      attempt += 1
-      try return body
-      catch {
-        case e if isVanishedFile(e) =>
-          if (attempt >= 10) throw new IllegalStateException(
-            s"$what of $table lost the walk race $attempt times — " +
-              "is a writer continuously rewriting the table?", e)
-          Thread.sleep(5L)
-      }
-    }
-    throw new IllegalStateException("unreachable")
-  }
+  def hasData(table: String): Boolean = state(table).exists(_.hasData)
 
-  /** Per-write generation marker (underscore prefix = invisible to
-    * parquet readers). See [[version]].
+  /** The shared group id stamped across every member of one
+    * [[overwriteMany]] write, or None for tables written alone. Readers
+    * holding multi-table decoded state (the ANN index quantizer caches)
+    * compare members' ids to detect a torn capture; PK merges into a
+    * member (index adds) preserve the id — same generation family.
     */
-  private val GenMarker = "_graft_gen"
+  def groupId(table: String): Option[String] = state(table).flatMap(_.group)
 
-  private def stampGeneration(dir: Path): Unit =
-    Files.write(dir.resolve(GenMarker),
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-
-  /** Crash recovery for the swap windows: [[overwrite]] moves target ->
-    * `.__old` then shadow -> target; a crash between the two leaves the
-    * table (or one bucket) absent with its data parked in the old dir.
-    * Without this, the next merge would see a missing table and silently
-    * recreate it from one batch — losing all history. Restoring the old
-    * dir re-establishes the pre-overwrite state, which the (idempotent)
-    * interrupted operation can then redo.
-    *
-    * Per-bucket backups live INSIDE the table dir (`.bkup_N` — dot
-    * prefix = invisible to parquet readers), so a whole-table overwrite
-    * atomically discards them WITH the old table: a backup can never
-    * outlive the table generation it belongs to and be "recovered" into
-    * a rebuilt table under a different bucket layout.
-    *
-    * Concurrency contract: READS may race each other and recovery —
-    * both recovery moves are attempted and the loser's (the path
-    * vanished or the destination appeared first) is a no-op (see
-    * [[tryMove]]; stale-backup deletes tolerate a concurrent deleter
-    * the same way). WRITES (merge/overwrite/delete/rebucket/drop) are
-    * single-writer per table — and since round 11 that contract is
-    * ENFORCED, not prose: every public mutator runs under a renewing
-    * lease file ([[withWriterLease]]), so a second concurrent writer
-    * on the same table serializes behind the first (or fails loudly
-    * after `writerWaitMs`) instead of interleaving bucket swaps.
-    *
-    * A reader's recovery racing an IN-FLIGHT writer's swap window is
-    * fenced by the write-intent marker ([[withWriteIntent]]): every
-    * swap window (the move sequences in [[swapInShadow]] and
-    * [[writeAndSwapBuckets]] — pure FS metadata ops, no Spark job, ms
-    * at most) is bracketed by `.{table}__inflight`, and recover()
-    * no-ops while a FRESH marker is present — a mid-swap state is a
-    * transient the writer is about to resolve, NOT a crash, and
-    * "recovering" it would graft the old generation back under the
-    * writer's feet (its non-tolerant move then fails on the restored
-    * path). A marker older than [[InFlightFreshMs]] is a crashed
-    * writer: recovery consumes it and restores as before. The window
-    * holds no Spark work, so a live writer can never be mistaken for
-    * a crash unless the JVM stalls tens of seconds inside a pure
-    * rename sequence.
+  /** True iff admit `id` has committed for `table` — the probe for
+    * operators whose admit DERIVES an additive fold before calling
+    * [[merge]]'s opId overload: a replay can skip the derivation (and
+    * its materialization) up front instead of building a frame the
+    * merge would discard anyway.
     */
-  private def recover(table: String): Unit = {
-    // ONE root listing feeds both the crash-journal sweep and the
-    // legacy-backup scan — recover runs on every read-path call, so
-    // the group-swap machinery must not add a scan of its own
-    val rootP = Paths.get(root)
-    val rootEntries: Seq[Path] =
-      if (!Files.isDirectory(rootP)) Seq.empty
-      else {
-        val s = Files.list(rootP)
-        try s.iterator().asScala.toSeq finally s.close()
-      }
-    rollForwardGroups(rootEntries.filter { p =>
-      val n = p.getFileName.toString
-      n.startsWith(".gswap__") && !n.endsWith(".tmp")
-    })
-    if (writerInFlight(table)) return
-    val target = tableDir(table)
-    val old = Paths.get(root, s".${table}__old")
-    if (!Files.exists(target) && Files.exists(old))
-      tryMove(old, target)
-    if (Files.exists(target)) {
-      restoreBucketBackups(target, Files.list(target), ".bkup_")
-      // pre-.bkup_ releases parked bucket backups NEXT TO the table
-      // (`.{table}__old_N`): migrate them too, so a table that crashed
-      // mid-merge under the old layout doesn't silently lose a bucket.
-      // The listing predates the journal sweep above — entries it may
-      // have consumed vanish tolerantly (tryMove/delete).
-      restoreBucketBackups(target,
-        scala.jdk.CollectionConverters.SeqHasAsJava(rootEntries)
-          .asJava.stream(), s".${table}__old_")
-    }
-  }
-
-  private def restoreBucketBackups(target: Path,
-                                   listing: java.util.stream.Stream[Path],
-                                   prefix: String): Unit =
-    numericSuffixed(listing, prefix).foreach { oldBucket =>
-      val part = s"$BucketCol=${oldBucket.getFileName.toString.stripPrefix(prefix)}"
-      val bucket = target.resolve(part)
-      if (!Files.exists(bucket)) tryMove(oldBucket, bucket)
-      else deleteRecursively(oldBucket) // swap completed; stale backup
-    }
-
-  /** Entries named `prefix` + a bare bucket NUMBER, closing the stream.
-    * The digit requirement is load-bearing: table "t"'s legacy prefix
-    * ".t__old_" would otherwise also match the crash artifacts of a
-    * sibling table literally named "t__old_5" (".t__old_5__old") and
-    * recovery/cleanup would graft or delete the wrong table's data.
-    * Shared by restore and cleanup so the two can never drift apart on
-    * what counts as a bucket backup.
-    */
-  private def numericSuffixed(listing: java.util.stream.Stream[Path],
-                              prefix: String): Seq[Path] =
-    try listing.iterator().asScala.toSeq
-      .filter { p =>
-        val name = p.getFileName.toString
-        name.startsWith(prefix) && {
-          val suffix = name.stripPrefix(prefix)
-          suffix.nonEmpty && suffix.forall(_.isDigit)
-        }
-      }
-    finally listing.close()
-
-  /** Roll FORWARD any crashed multi-table group swap. A `.gswap__<id>`
-    * journal is [[overwriteMany]]'s commit point — written only after
-    * every member shadow is complete — so once it exists the only
-    * cross-table-consistent outcome is ALL-NEW: completing the
-    * remaining renames here is what makes the group write atomic
-    * against crashes, not merely against live readers. Skipped while
-    * any member's write-intent marker is still fresh (that is a LIVE
-    * writer mid-window, not a crash). Idempotent and reader-racing
-    * tolerant (every move is a [[tryMove]]; a W entry whose shadow is
-    * gone has already swapped, a D entry whose dir is gone has already
-    * dropped). Dead `__old`/`__trash` dirs are deleted BEFORE the
-    * journal: the journal is the only thing stopping the single-table
-    * `__old` restore from grafting a dead generation back over the
-    * rolled-forward one.
-    */
-  /** `journals` comes from the ONE root listing [[recover]] already
-    * takes (shared with the legacy-backup scan), so the crash-journal
-    * sweep adds no directory scan of its own to the read path.
-    */
-  private def rollForwardGroups(journals: Seq[Path]): Unit = {
-    journals.foreach { j =>
-      val gid = j.getFileName.toString.stripPrefix(".gswap__")
-      val entries =
-        try new String(Files.readAllBytes(j), "UTF-8").split("\n").toSeq
-          .filter(_.contains("\t")).map { l =>
-            val Array(kind, t) = l.split("\t", 2); (kind, t)
-          }
-        catch {
-          // vanished mid-read: another recoverer just finished it
-          case _: java.io.IOException => Seq.empty[(String, String)]
-        }
-      if (entries.nonEmpty && !entries.exists(e => writerInFlight(e._2))) {
-        // per-entry re-checks close the stale-recoverer window: a
-        // recoverer that read the journal, stalled past a sibling's
-        // full roll-forward AND a new writer's next generation, then
-        // resumed, must not apply dead entries. The journal-existence
-        // and fence re-checks shrink that window to one rename; the
-        // group-id gate on W entries closes it outright — a shadow is
-        // installable ONLY when its _graft_group content names THIS
-        // journal's id, so a newer writer's (half-written, differently
-        // stamped or unstamped) shadow can never be grafted in.
-        entries.foreach {
-          case ("W", t) =>
-            val shadow = Paths.get(root, s".${t}__shadow")
-            val marker = shadow.resolve(GroupMarker)
-            val belongs =
-              try Files.exists(marker) &&
-                new String(Files.readAllBytes(marker), "UTF-8") == gid
-              catch { case _: java.io.IOException => false }
-            if (belongs && Files.exists(j) && !writerInFlight(t)) {
-              val target = tableDir(t)
-              if (Files.exists(target))
-                tryMove(target, Paths.get(root, s".${t}__old"))
-              tryMove(shadow, target)
-            }
-          case ("D", t) =>
-            val target = tableDir(t)
-            if (Files.exists(j) && !writerInFlight(t) &&
-                Files.exists(target))
-              tryMove(target, Paths.get(root, s".${t}__trash"))
-          case _ => ()
-        }
-        entries.foreach { case (_, t) =>
-          if (Files.exists(j) && !writerInFlight(t)) {
-            deleteRecursively(Paths.get(root, s".${t}__old"))
-            deleteRecursively(Paths.get(root, s".${t}__trash"))
-          }
-        }
-        try Files.deleteIfExists(j)
-        catch { case _: java.io.IOException => () }
-      }
-    }
-  }
-
-  /** How long a write-intent marker stays credible as a LIVE writer.
-    * The fenced windows are pure rename sequences (no Spark job, no
-    * I/O beyond directory metadata); 30 s is orders of magnitude above
-    * any real pause inside one, and bounds how long a crashed writer
-    * can defer reader-side recovery.
-    */
-  private val InFlightFreshMs = 30000L
-
-  private def inFlightMarker(table: String): Path =
-    Paths.get(root, s".${table}__inflight")
-
-  /** Bracket a swap window with the write-intent marker so concurrent
-    * readers treat the mid-swap state as transient (recover no-ops,
-    * [[snapshot]] retries) instead of a crash to repair. Single-writer
-    * per table (enforced by [[withWriterLease]] at the public entry
-    * points), so no writer-vs-writer coordination is needed here — the
-    * marker fences reader RECOVERY only.
-    */
-  private def withWriteIntent(table: String)(body: => Unit): Unit = {
-    stampWriteIntent(table)
-    try body
-    finally Files.deleteIfExists(inFlightMarker(table))
-  }
-
-  /** (Re)stamp the write-intent marker with a fresh timestamp,
-    * ATOMICALLY: the timestamp is written to a temp sibling and renamed
-    * over the marker path, so a reader racing the stamp can never
-    * observe a partially written (empty) marker, classify it as
-    * no-live-window, and run recovery under a live writer's feet. Long
-    * swap windows re-stamp per touched bucket (see
-    * [[writeAndSwapBuckets]]), so marker freshness outlives any real
-    * window regardless of how many buckets its per-bucket backup
-    * deletes touch — the fence's credibility never depends on the
-    * WHOLE window fitting inside [[InFlightFreshMs]], only each
-    * single-bucket step.
-    */
-  private def stampWriteIntent(table: String): Unit = {
-    // FENCING: every swap window begins by re-stamping the intent
-    // marker, so this is the chokepoint where a writer whose lease was
-    // broken out from under it (a stop-the-world pause past
-    // [[WriterLeaseMs]] — the renewal daemon pauses WITH the JVM — or
-    // a breaker racing a renewal) must ABORT instead of interleaving
-    // its remaining bucket swaps with the new holder's. One small
-    // file read per window; renewal-on-resume cannot help because the
-    // new holder's id already owns the lock.
-    heldLeases.get.get(table).foreach { id =>
-      val current =
-        try Some(new String(Files.readAllBytes(writerLock(table)), "UTF-8"))
-        catch { case _: java.io.IOException => None }
-      if (!current.contains(id))
-        throw new IllegalStateException(
-          s"writer lease on table '$table' was lost mid-write (JVM " +
-            "stall past the lease horizon, or a broken-and-reacquired " +
-            "lock) — aborting before any further swap; the new holder " +
-            "owns the table now")
-    }
-    val tmp = Files.createTempFile(Paths.get(root),
-      s".${table}__intent_", ".tmp")
-    Files.write(tmp, System.currentTimeMillis().toString.getBytes("UTF-8"))
-    Files.move(tmp, inFlightMarker(table), StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** Is a writer currently inside a fenced swap window? A stale marker
-    * (crashed writer) is consumed here so recovery can proceed.
-    */
-  private def writerInFlight(table: String): Boolean = {
-    val m = inFlightMarker(table)
-    if (!Files.exists(m)) return false
-    val fresh =
-      try {
-        val ts = new String(Files.readAllBytes(m), "UTF-8").trim.toLong
-        System.currentTimeMillis() - ts < InFlightFreshMs
-      } catch {
-        // vanished mid-read (writer just finished) or unreadable
-        // content: either way there is no credible live window
-        case _: Exception => false
-      }
-    if (!fresh) Files.deleteIfExists(m)
-    fresh
-  }
+  def admitCommitted(table: String, id: String): Boolean =
+    state(table).exists(_.admits(id))
 
   // ---- writer lease: the single-writer-per-table contract, ENFORCED --
 
@@ -544,33 +235,16 @@ final class UpsertSink(spark: SparkSession, root: String,
     * writer renews every [[WriterLeaseMs]]/3 from a dedicated daemon
     * thread, so breaking a lease requires the holder to have missed
     * three consecutive renewals — a crashed or hard-stalled JVM, not a
-    * busy one (renewal is one small file rewrite, independent of any
-    * Spark job the holder is running).
+    * busy one.
     */
   private val WriterLeaseMs = 15000L
 
   private def writerLock(table: String): Path =
     Paths.get(root, s".${table}__writer")
 
-  /** Is another writer's lease on `table` credible right now? Reader-
-    * side probe (one stat — readers stay lock-free): fresh-mtime lease
-    * not held by THIS thread. A stale lease (crashed writer) is not
-    * live; [[snapshotMany]] uses this to avoid capturing between two
-    * members' swaps of one multi-table operation.
-    */
-  private def leaseLive(table: String): Boolean =
-    !heldLeases.get.contains(table) && {
-      val lock = writerLock(table)
-      try Files.exists(lock) &&
-        System.currentTimeMillis() -
-          Files.getLastModifiedTime(lock).toMillis <= WriterLeaseMs
-      catch { case _: java.io.IOException => false }
-    }
-
   /** Tables whose lease THIS thread already holds — public mutators
-    * nest (merge → overwrite; mergeMany → merge on the migration
-    * path), and a nested acquire on a held table must pass through,
-    * not deadlock against itself.
+    * nest (a [[writerLocked]] scope around merges), and a nested
+    * acquire on a held table must pass through, not deadlock.
     */
   private val heldLeases = new ThreadLocal[
       scala.collection.mutable.Map[String, String]] {
@@ -578,55 +252,32 @@ final class UpsertSink(spark: SparkSession, root: String,
       scala.collection.mutable.Map.empty[String, String]
   }
 
-  /** Serialize WRITERS per table across threads, sink instances, and
-    * processes sharing one root. The single-writer-per-table contract
-    * was prose until round 11; at 100 TB with concurrent pipelines a
-    * violated contract silently interleaves two merges' bucket swaps
-    * (duplicate PKs, or one writer's non-tolerant move failing on the
-    * other's half-moved state). The lease makes it mechanical:
-    *
-    *  - acquisition is an atomic `Files.createFile` (O_CREAT|O_EXCL)
-    *    of `.{table}__writer`; freshness rides the file MTIME (content
-    *    is the owner id only, so a racer reading between create and
-    *    content-write still sees a FRESH lock and waits — never a
-    *    false no-lock);
-    *  - a second writer WAITS up to `writerWaitMs` (serializing the
-    *    common case: two pipelines flushing the same table back to
-    *    back), then fails LOUDLY naming the table and the contract;
-    *  - a lease older than [[WriterLeaseMs]] is a crashed writer:
-    *    broken and re-acquired (delete tolerates losing the race to
-    *    another breaker — createFile then arbitrates atomically);
-    *  - a held lease renews from a shared daemon scheduler, so
-    *    validity never depends on how long the writer's Spark jobs
-    *    run; release deletes only if the content is still this
-    *    acquire's id (never unlink a lease that was broken and
-    *    re-acquired while this holder was presumed dead).
-    *
-    * Multi-table acquisition (mergeMany) locks in sorted table order,
-    * so two overlapping batches cannot deadlock. Readers stay
-    * lock-free — the lease is writer-vs-writer only; reader-vs-writer
-    * safety remains the write-intent fence's job.
-    */
   /** Run `body` holding this sink's writer lease over `tables` — the
-    * public critical-section primitive for COMPOUND read-modify-write
-    * operations (an admit that reads existing counts and then merges
-    * the sums back; a compact that reads and overwrites). Without it,
-    * the derivation reads run un-leased and a concurrent writer (an
-    * eraser's bucket swap) can invalidate their captured file listings
-    * mid-plan — the reader crashes on FILE_NOT_EXIST instead of
-    * serializing. Reentrant per thread ([[withWriterLease]]'s
-    * heldLeases), so `body` may freely call this sink's mutators on
-    * the same tables; multi-table acquisition orders by name, so
-    * overlapping scopes never deadlock.
+    * critical section for COMPOUND read-modify-write operations (an
+    * admit that reads existing counts and merges the sums back; a
+    * compact that reads and overwrites). Writers serialize per table
+    * across threads, sink instances and processes sharing one root:
+    *
+    *  - acquisition is an atomic `Files.createFile` of
+    *    `.{table}__writer`; freshness rides the file MTIME (content is
+    *    the owner id only, so a racer reading between create and
+    *    content-write still sees a FRESH lock and waits);
+    *  - a second writer WAITS up to `writerWaitMs`, then fails LOUDLY
+    *    naming the table and the contract;
+    *  - a lease older than [[WriterLeaseMs]] is a crashed writer:
+    *    broken and re-acquired;
+    *  - a held lease renews from a shared daemon scheduler; every commit
+    *    re-checks it, so a holder whose lease was broken (a stall past
+    *    the horizon) aborts instead of committing over the new holder.
+    *
+    * Reentrant per thread; multi-table acquisition orders by name, so
+    * overlapping scopes never deadlock. Readers take no lease.
     */
   def writerLocked[T](tables: Seq[String])(body: => T): T =
     withWriterLease(tables)(body)
 
   private def withWriterLease[T](tables: Seq[String])(body: => T): T = {
-    // name contract FIRST: the lease path is derived from the name, so
-    // a malicious name must die as the same IllegalArgumentException
-    // every entry point throws — not as a lock-file I/O error outside
-    // the root
+    // name contract FIRST: the lease path is derived from the name
     tables.foreach(requireValidTableName)
     val need = tables.distinct.sorted.filterNot(heldLeases.get.contains)
     val owned = scala.collection.mutable.ListBuffer.empty[(String, String)]
@@ -640,11 +291,7 @@ final class UpsertSink(spark: SparkSession, root: String,
       if (owned.nonEmpty) {
         val held = owned.toList
         renewTask = Some(UpsertSink.leaseRenewer.scheduleAtFixedRate(
-          new Runnable {
-            def run(): Unit = held.foreach { case (t, id) =>
-              renewWriterLease(t, id)
-            }
-          },
+          () => held.foreach { case (t, id) => renewWriterLease(t, id) },
           WriterLeaseMs / 3, WriterLeaseMs / 3,
           java.util.concurrent.TimeUnit.MILLISECONDS))
       }
@@ -683,10 +330,8 @@ final class UpsertSink(spark: SparkSession, root: String,
           if (mtimeStale() && mtimeStale()) {
             // crashed holder, confirmed by a second probe immediately
             // before the break (a holder whose renewal landed between
-            // the two reads is LIVE — deleting its freshly-renewed
-            // lease would admit a second writer under a live one).
-            // Losing this delete race to another breaker is fine —
-            // createFile re-arbitrates.
+            // the two reads is LIVE). Losing this delete race to
+            // another breaker is fine — createFile re-arbitrates.
             try Files.deleteIfExists(lock)
             catch { case _: java.io.IOException => () }
           } else if (System.currentTimeMillis() >= deadline) {
@@ -715,166 +360,196 @@ final class UpsertSink(spark: SparkSession, root: String,
         Files.deleteIfExists(writerLock(table))
     } catch { case _: Exception => () } // already broken/re-acquired
 
-  /** A move that tolerates losing a recovery race: if another thread
-    * already moved the source (NoSuchFile) or created the destination
-    * (FileAlreadyExists), the filesystem is in the state this move was
-    * trying to reach — treat it as success.
+  /** FENCING: a writer whose lease was broken out from under it (a
+    * stop-the-world pause past [[WriterLeaseMs]] — the renewal daemon
+    * pauses WITH the JVM) must not commit over the new holder. One
+    * small file read per table per commit.
     */
-  private def tryMove(from: Path, to: Path): Unit =
-    try Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
-    catch {
-      case _: java.nio.file.NoSuchFileException => ()
-      case _: java.nio.file.FileAlreadyExistsException => ()
+  private def requireLease(table: String): Unit =
+    heldLeases.get.get(table).foreach { id =>
+      val current =
+        try Some(new String(Files.readAllBytes(writerLock(table)), "UTF-8"))
+        catch { case _: java.io.IOException => None }
+      if (!current.contains(id))
+        throw new IllegalStateException(
+          s"writer lease on table '$table' was lost mid-write (JVM " +
+            "stall past the lease horizon, or a broken-and-reacquired " +
+            "lock) — aborting before the commit; the new holder owns " +
+            "the table now")
     }
 
-  private def bucketDirs(table: String): Seq[Path] = {
-    val dir = tableDir(table)
-    if (!Files.exists(dir)) Seq.empty
-    else {
-      val stream = Files.list(dir)
-      try stream.iterator().asScala.toSeq
-        .filter(_.getFileName.toString.startsWith(s"$BucketCol="))
-      finally stream.close()
+  // ---- the commit log: write, commit, vacuum -------------------------
+
+  /** Commit `changes` (None drops the table) as one log entry, each
+    * changed table under a fresh version, then vacuum those tables. */
+  private def commit(changes: Map[String, Option[TableState]]): Unit =
+    if (changes.nonEmpty) {
+      val e = log.commit(changes.map { case (t, s) =>
+        t -> s.map(_.copy(version = CommitLog.freshVersion()))
+      }) {
+        changes.keys.foreach(requireLease)
+        testHook("commit")
+      }
+      vacuum(e, changes.keys)
     }
-  }
 
-  private def isBucketed(table: String): Boolean = bucketDirs(table).nonEmpty
-
-  /** Whether the table dir holds any DATA file (vs only `_graft_*`
-    * markers). [[delete]]-ing every row leaves a fileless dir — a
-    * TRUNCATEd table; [[merge]]/[[mergeMany]] must treat that as
-    * absent (write the delta whole) rather than as a flat-layout
-    * table needing migration, which would `read` a fileless dir and
-    * throw UNABLE_TO_INFER_SCHEMA. Underscore/dot prefixes are the
-    * parquet-invisible convention, same as the markers themselves.
+  /** Delete every file under the committed tables' dirs that neither
+    * `committed` nor an entry a pin may still read references — the
+    * files replaced by this commit and any left by a crashed write —
+    * then the emptied bucket dirs (and the table dir of a dropped
+    * table). With no pin open, the files on disk are exactly the live
+    * files. Runs under the tables' leases, so no write is in flight.
     */
-  /** Public emptiness probe: whether the table holds any data rows to
-    * read. A table every row of which was [[delete]]d still `exists()`
-    * (its dir and markers survive — the TRUNCATE contract) but has no
-    * schema to serve: a direct [[read]] fails. Store retract plans
-    * that derive their keys by SCANNING the store use this to no-op on
-    * a previously fully-erased store instead of crashing — run it
-    * inside the erasure lease (the thunk overloads) so a concurrent
-    * truncation cannot invalidate the answer before the scan.
-    */
-  def hasData(table: String): Boolean = {
-    recover(table)
-    hasDataFiles(table)
-  }
-
-  private def hasDataFiles(table: String): Boolean =
-    retryVanishedWalk("hasDataFiles", table) {
-      val dir = tableDir(table)
-      if (!Files.exists(dir)) false
-      else {
-        val stream = Files.walk(dir)
-        try stream.iterator().asScala.exists { p =>
+  private def vacuum(committed: Entry, tables: Iterable[String]): Unit = {
+    val kept = log.retained(committed)
+    tables.foreach { t =>
+      val dir = tableDir(t)
+      if (Files.isDirectory(dir)) {
+        val live = kept.iterator.flatMap(_.tables.get(t)).flatMap(_.paths).toSet
+        val s = Files.walk(dir)
+        val all = try s.iterator().asScala.toSeq finally s.close()
+        all.filter(Files.isRegularFile(_)).foreach { p =>
+          // a `.name.crc` checksum lives exactly as long as `name`
           val n = p.getFileName.toString
-          Files.isRegularFile(p) && !n.startsWith("_") && !n.startsWith(".")
-        } finally stream.close()
+          val owner =
+            if (n.startsWith(".") && n.endsWith(".crc")) n.drop(1).stripSuffix(".crc")
+            else n
+          if (!live(dir.relativize(p.resolveSibling(owner)).toString))
+            Files.deleteIfExists(p)
+        }
+        val gone = live.isEmpty && !committed.tables.contains(t)
+        all.filter(Files.isDirectory(_)).sortBy(-_.getNameCount)
+          .filter(d => d != dir || gone)
+          .foreach { d =>
+            try Files.delete(d)
+            catch { case _: java.nio.file.DirectoryNotEmptyException => () }
+          }
       }
     }
-
-  /** The bucket modulus a table was WRITTEN with, recorded in a
-    * `_graft_buckets` marker (underscore prefix = invisible to parquet
-    * readers, swapped atomically with the data). Re-opening a table with
-    * a different `numBuckets` would otherwise route an updated key to a
-    * different `__bucket=N` directory than its stored row and silently
-    * produce duplicate PKs — the marker makes the layout, not the
-    * instance, the source of truth.
-    */
-  private def bucketMarker(dir: Path): Path = dir.resolve("_graft_buckets")
-
-  private def storedBuckets(table: String): Option[Int] = {
-    val m = bucketMarker(tableDir(table))
-    if (Files.exists(m))
-      Some(new String(Files.readAllBytes(m), "UTF-8").trim.toInt)
-    else None
   }
 
-  /** Current table contents, bucket layout hidden from callers.
-    * Runs [[recover]] first: after a crash between [[overwrite]]'s two
-    * moves the data sits in `.{table}__old` with the target absent, and a
-    * direct read would throw path-not-found on recoverable data.
-    * `recover` is idempotent and costs one directory listing when there
-    * is nothing to repair.
-    */
-  def read(table: String): DataFrame = {
-    recover(table)
-    val df = parquetCachedSchema(table, version(table), None,
-      Seq(tableDir(table).toString))
-    if (df.columns.contains(BucketCol)) df.drop(BucketCol) else df
-  }
+  private val BucketDir = s"$BucketCol=(\\d+)".r
 
-  /** One parquet read through the version-keyed schema cache
-    * ([[SchemaCache.schemaCache]]): a hit supplies the schema explicitly
-    * (no inference job); a miss infers once and records it for every
-    * later read of the same content version — read(), subset bucket
-    * reads, and snapshot reads all share the entry (same content).
-    */
-  private def parquetCachedSchema(table: String, ver: Long,
-                                  basePath: Option[String],
-                                  paths: Seq[String]): DataFrame = {
-    val key = (root, table)
-    val reader0 = spark.read
-    val reader = basePath.fold(reader0)(bp => reader0.option("basePath", bp))
-    SchemaCache.schemaCache.get(key).filter(_._1 == ver).map(_._2) match {
-      case Some(sc) => reader.schema(sc).parquet(paths: _*)
-      case None =>
-        val df = labeled(s"sink:inferschema:$table")(reader.parquet(paths: _*))
-        if (SchemaCache.schemaCache.size >= 1024) SchemaCache.schemaCache.clear()
-        SchemaCache.schemaCache.put(key, (ver, df.schema))
-        df
+  /** Committed-layout data files under `dir` (relative path -> size):
+    * `name.parquet` (flat) or `__bucket=N/name.parquet`. */
+  private def dataFiles(dir: Path): Map[String, Long] =
+    if (!Files.isDirectory(dir)) Map.empty
+    else {
+      def data(n: String) = n.endsWith(".parquet") && !n.startsWith(".") && !n.startsWith("_")
+      val s = Files.walk(dir, 2)
+      try s.iterator().asScala.filter(Files.isRegularFile(_))
+        .map(p => dir.relativize(p).toString -> p)
+        .filter { case (rel, _) => rel.split('/') match {
+          case Array(n) => data(n)
+          case Array(BucketDir(_), n) => data(n)
+          case _ => false
+        } }
+        .map { case (rel, p) => rel -> Files.size(p) }.toMap
+      finally s.close()
     }
+
+  /** Write `df` (carrying [[BucketCol]] when `buckets` > 0) as fresh
+    * parquet files under the table dir and return them by bucket. The
+    * files land beside the live ones under new names and stay invisible
+    * until a commit references them; the table's lease keeps any other
+    * writer out of the dir, so the new files are the listing's delta.
+    */
+  private def writeFiles(table: String, df: DataFrame, buckets: Int,
+                         label: String): Map[Int, Seq[LogFile]] = {
+    val dir = tableDir(table)
+    val before = dataFiles(dir)
+    labeled(label) {
+      val w = if (buckets > 0) bucketAligned(df, buckets).write.partitionBy(BucketCol)
+        else df.write
+      w.mode(SaveMode.Append).parquet(dir.toString)
+    }
+    (dataFiles(dir) -- before.keySet).toSeq.map { case (rel, size) =>
+      rel.split('/') match {
+        case Array(BucketDir(b), n) => b.toInt -> LogFile(n, size)
+        case _ => TableState.Flat -> LogFile(rel, size)
+      }
+    }.groupMap(_._1)(_._2)
   }
+
+  /** A table's rows from the given buckets (all when None), read from
+    * exactly the files the log lists with the logged schema: Spark sees
+    * a fixed listing, so nothing walks the directory or infers a schema.
+    * Bucketed reads carry [[BucketCol]]. A missing or emptied table has
+    * no files to serve and fails as a direct parquet read of the path.
+    */
+  private def scan(table: String, st: Option[TableState],
+                   buckets: Option[Seq[Int]]): DataFrame = st match {
+    case Some(s) if s.hasData =>
+      // qualified exactly as the index qualifies its root, which it
+      // matches against the files' parent dir for a flat layout
+      val raw = new HPath(tableDir(table).toAbsolutePath.toString)
+      val base = raw.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .makeQualified(raw)
+      val full = if (s.bucketed) s.schema.add(BucketCol, IntegerType) else s.schema
+      val statuses = buckets.fold(s.files.toSeq)(_.flatMap(b => s.files.get(b).map(b -> _)))
+        .flatMap { case (b, fs) => fs.map(f => new FileStatus(f.size, false, 1,
+          32L << 20, 0L, new HPath(base, TableState.relPath(b, f.name)))) }
+      if (statuses.isEmpty)
+        spark.createDataFrame(spark.sparkContext.emptyRDD[Row], full)
+      else {
+        val index = new InMemoryFileIndex(spark, Seq(base), Map.empty,
+          Some(full), new FixedListing(base, statuses.toArray))
+        spark.baseRelationToDataFrame(HadoopFsRelation(index,
+          index.partitionSchema, s.schema, None, new ParquetFileFormat,
+          Map.empty)(spark))
+      }
+    case _ => spark.read.parquet(tableDir(table).toString)
+  }
+
+  /** Current table contents, bucket layout hidden from callers. */
+  def read(table: String): DataFrame = scan(table, state(table), None).drop(BucketCol)
+
+  /** One bounded (table, bucket) collect over several keyed frames that
+    * already carry [[BucketCol]]: each frame's shuffle runs (and a
+    * persisted frame materializes) in ONE job. */
+  private def touchedBuckets(frames: Seq[(String, DataFrame)],
+                             label: String): Map[String, Seq[Int]] =
+    if (frames.isEmpty) Map.empty
+    else labeled(label)(frames.map { case (t, df) =>
+        df.select(lit(t).as("__t"), col(BucketCol)) }
+        .reduce(_ unionByName _).distinct().collect()) // bounded by buckets
+      .groupBy(_.getString(0))
+      .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq.sorted }
 
   /** Rows of `table` from ONLY the buckets `keys` hash into — the
     * READ-side sibling of the merge/erase touched-bucket discipline,
     * for guards and receipts that check a bounded key set against a
-    * large table without paying a full scan (the search admit's
-    * NEW-ids guard, the erasure ledger's matched-row counts): the
-    * key frame's hash routes name the only bucket dirs a matching row
-    * can live in, so untouched buckets are never opened. `pk` must be
-    * the table's merge key (the layout is the hash of it; key columns
-    * are cast to the STORED types first — the same contract the
-    * merge/erase paths enforce, since a type-skewed hash would prune
-    * the WRONG buckets and silently miss every match). Same cost
-    * model as an incremental merge: bounded by the keys' touched
-    * buckets, degrading to the plain read only when the keys span
-    * every bucket — and [[rebucket]] grows the modulus exactly so
-    * that they don't. Flat-layout and fileless tables fall back to
-    * the plain read (nothing to prune). Like [[read]], per-file
-    * consistent only — run under the writer lease (or a snapshot)
-    * when racing writers matter.
+    * large table without paying a full scan. `pk` must be the table's
+    * merge key; key columns are cast to the STORED types first (a
+    * type-skewed hash would prune the WRONG buckets and silently miss
+    * every match). Flat-layout and fileless tables fall back to the
+    * plain read. Like [[read]], not pinned — run under the writer lease
+    * (or a snapshot) when racing writers matter.
     */
   private[graft] def readKeyBuckets(table: String, keys: DataFrame,
                                     pk: Seq[String]): DataFrame = {
     require(pk.nonEmpty, s"readKeyBuckets on $table needs the merge key")
-    recover(table)
-    if (!exists(table) || !hasDataFiles(table) || !isBucketed(table))
-      return read(table)
-    val stored = read(table).schema
-    val typed = pk.map { c =>
-      val f = stored.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"readKeyBuckets $table: key column $c not in stored schema " +
-            s"[${stored.map(_.name).mkString(", ")}]"))
-      keys(c).cast(f.dataType).as(c)
+    val cur = state(table)
+    cur.filter(s => s.hasData && s.bucketed) match {
+      case None => scan(table, cur, None).drop(BucketCol)
+      case Some(st) =>
+        val typed = pk.map { c =>
+          val f = st.schema.find(_.name == c).getOrElse(
+            throw new IllegalArgumentException(
+              s"readKeyBuckets $table: key column $c not in stored schema " +
+                s"[${st.schema.map(_.name).mkString(", ")}]"))
+          keys(c).cast(f.dataType).as(c)
+        }
+        // no key-level distinct: the bucket set is a pure function of
+        // the key VALUES (duplicates fold in the map-side partial
+        // aggregate), so deduping keys first would only add an exchange
+        val touched = touchedBuckets(
+            Seq(table -> withBucket(keys.select(typed: _*), pk, st.buckets)),
+            s"sink:keybuckets:$table")
+          .getOrElse(table, Nil).filter(st.files.contains)
+        if (touched.isEmpty) scan(table, cur, None).drop(BucketCol).limit(0)
+        else scan(table, cur, Some(touched)).drop(BucketCol)
     }
-    val buckets = storedBuckets(table).getOrElse(numBuckets)
-    val dir = tableDir(table)
-    // no key-level distinct: the bucket set is a pure function of the
-    // key VALUES (duplicates fold in the map-side partial aggregate),
-    // so deduping keys first would only add an exchange to this plan
-    val touched = labeled(s"sink:keybuckets:$table")(
-        withBucket(keys.select(typed: _*), pk, buckets)
-          .select(BucketCol).distinct()
-          .collect()).map(_.getInt(0)).sorted // bounded by numBuckets
-      .filter(b => Files.exists(dir.resolve(s"$BucketCol=$b")))
-    if (touched.isEmpty) read(table).limit(0)
-    else parquetCachedSchema(table, version(table), Some(dir.toString),
-        touched.map(b => dir.resolve(s"$BucketCol=$b").toString).toIndexedSeq)
-      .drop(BucketCol)
   }
 
   private def withBucket(df: DataFrame, pk: Seq[String],
@@ -883,176 +558,80 @@ final class UpsertSink(spark: SparkSession, root: String,
 
   /** Align write tasks to bucket boundaries before a `partitionBy`
     * write: without this, EVERY write task opens a file in EVERY bucket
-    * dir it sees rows for — up to tasks x buckets tiny files per merge
-    * (a classic dynamic-partition write explosion; at 64 buckets and 32
-    * tasks that is ~2k files for a 1k-row batch). One shuffle keyed on
-    * the bucket puts each bucket's rows in one task -> one file per
-    * bucket, and incremental merges stay metadata-cheap to read back.
-    * Partition count = the bucket modulus, not the session shuffle
-    * default: a merge can never profit from more write tasks than
-    * buckets, and the smaller task count keeps small incremental merges
-    * scheduling-cheap.
+    * dir it sees rows for — up to tasks x buckets tiny files per merge.
+    * One shuffle keyed on the bucket puts each bucket's rows in one task
+    * -> one file per bucket. Partition count = the bucket modulus: a
+    * merge can never profit from more write tasks than buckets.
     */
   private def bucketAligned(df: DataFrame, buckets: Int): DataFrame =
     df.repartition(buckets, col(BucketCol))
 
-  /** CONSISTENT point-in-time read under concurrent writes. [[read]]
-    * is only per-FILE consistent: every swap is an atomic move, but a
-    * scan overlapping a multi-bucket merge can see bucket 3 post-merge
-    * and bucket 5 pre-merge (and a task that opens a file Spark listed
-    * before a swap unlinked it dies with FileNotFound). `snapshot`
-    * pins the view the way transactional table formats do, with the
-    * POSIX primitive instead of a manifest: HARD-LINK every current
-    * data file into a private dir under `.snapshots/` (inode sharing —
-    * metadata-only, zero bytes copied, same filesystem by
-    * construction) and read from there. Later merges/deletes/
-    * rebuckets/overwrites replace PATHS; the snapshot's links keep the
-    * pre-swap inodes alive until [[TableSnapshot.close]] releases
-    * them. A writer racing the link walk (file swapped away mid-link)
-    * just restarts the walk — bounded retries, single-writer sinks
-    * converge immediately.
-    *
-    * TORN-CAPTURE guard: the vanished-file retry only fires when a
-    * path the walk is ABOUT to link has disappeared. A merge that
-    * swaps bucket A after we linked it and bucket B before we reach
-    * it raises nothing — the old A inode is alive through our link —
-    * yet the captured view would be half-old/half-new, a state the
-    * table never was. So each attempt (a) defers to a writer inside a
-    * fenced swap window (the `.{table}__inflight` intent marker — also
-    * what keeps this reader's recover() from grafting backups under a
-    * live writer's feet) and (b) fingerprints the table ([[version]]
-    * — one metadata walk, every write stamps a fresh gen-marker UUID)
-    * BEFORE the link walk, re-checking marker + fingerprint AFTER:
-    * any write landing or still in flight anywhere in the window
-    * discards the attempt. A returned snapshot is therefore a true
-    * point-in-time view, not merely per-file consistent. False
-    * retries (a write completing cleanly inside the window) cost one
-    * re-walk; acquisition needs one walk-length quiet window, which a
-    * bucket-granular writer leaves between every job.
-    *
-    * Snapshots survive even [[drop]] (they are point-in-time by
-    * design); a crashed reader leaves an orphan dir under
-    * `.snapshots/` whose reclaim is the operator's (close is the
-    * contract — use try/finally or `AutoCloseable`).
-    */
-  def snapshot(table: String): TableSnapshot = {
-    val src = tableDir(table)
-    val snapRoot = Paths.get(root, ".snapshots")
-    Files.createDirectories(snapRoot)
-    var attempt = 0
-    var inFlightWaitedMs = 0L
-    while (true) {
-      if (writerInFlight(table)) {
-        // mid-swap window: the table may transiently be absent or
-        // half-swapped — wait it out instead of capturing or
-        // "recovering" it. The wait is TIME-bounded, not attempt-
-        // bounded: a slow window (many touched buckets, each re-
-        // stamping the marker) stays credible well past a fixed retry
-        // count, and throwing while the marker is still fresh would be
-        // a spurious failure with a misleading message. The bound is
-        // two freshness horizons: a crashed writer's marker goes stale
-        // (and is consumed) within one, so only a writer LIVE enough
-        // to keep re-stamping can push the wait to the cap — at which
-        // point "continuously rewriting" is the accurate diagnosis.
-        if (inFlightWaitedMs >= 2 * InFlightFreshMs)
-          throw new IllegalStateException(
-            s"snapshot of $table found a writer in flight for over " +
-              s"$inFlightWaitedMs ms — is a writer continuously " +
-              "rewriting the table?")
-        Thread.sleep(10L)
-        inFlightWaitedMs += 10L
-      } else {
-      attempt += 1
-      recover(table)
-      // no fresh marker ⇒ any missing/fileless state is genuine, not a
-      // swap transient: reject exactly as the sequential contract does
-      require(exists(table) && hasDataFiles(table),
-        s"cannot snapshot missing or empty table $table")
-      val v0 = version(table)
-      val dir = Files.createTempDirectory(snapRoot, s"$table-")
-      try {
-        val walk = Files.walk(src)
-        try walk.iterator().asScala.foreach { p =>
-          val rel = src.relativize(p).toString
-          // skip hidden subtrees outright (a live writer's transient
-          // .bkup_N backups must not pin inodes in the snapshot) and
-          // marker files (_graft_*)
-          val segs = rel.split('/')
-          if (rel.nonEmpty && !segs.exists(_.startsWith("."))) {
-            if (Files.isDirectory(p)) Files.createDirectories(dir.resolve(rel))
-            else if (!segs.last.startsWith("_"))
-              Files.createLink(dir.resolve(rel), p)
-          }
-        } finally walk.close()
-        if (writerInFlight(table) || version(table) != v0) {
-          // a write landed (or is still landing) somewhere in the table
-          // during the walk: the linked view may be torn (half-old/
-          // half-new across buckets) even though no individual link
-          // failed — discard and re-walk
-          Fs.deleteRecursively(dir)
-          if (attempt >= 10) throw new IllegalStateException(
-            s"snapshot of $table saw a concurrent write on all $attempt " +
-              "attempts — is a writer continuously rewriting the table?")
-        } else {
-          // the snapshot's links ARE the live table's content at v0 —
-          // the schema cache entry for (table, v0) applies verbatim
-          val df0 = parquetCachedSchema(table, v0, None, Seq(dir.toString))
-          return new TableSnapshot(
-            if (df0.columns.contains(BucketCol)) df0.drop(BucketCol) else df0,
-            dir, v0)
-        }
-      } catch {
-        // a concurrent swap moved a file between walk and link: the
-        // half-built snapshot is stale — discard and re-walk. The race
-        // surfaces three ways: createLink's raw NoSuchFileException, a
-        // directory vanishing mid-iteration (UncheckedIOException
-        // wrapping it from the walk stream), and DirectoryIterator-
-        // Exception from the underlying iterator — all the same event.
-        // On the exhausted attempt the half-built dir must still be
-        // released before the failure propagates, or every crash here
-        // leaks pinned inodes under .snapshots/.
-        case e if isVanishedFile(e) =>
-          Fs.deleteRecursively(dir)
-          if (attempt >= 10) throw new IllegalStateException(
-            s"snapshot of $table lost the walk/link race $attempt times — " +
-              "is a writer continuously rewriting the table?", e)
-        case e: Throwable =>
-          Fs.deleteRecursively(dir)
-          throw e
-      }
-      }
-    }
-    throw new IllegalStateException("unreachable")
+  /** What a parquet read of `t`'s written files serves: every field,
+    * element and value nullable (the file-source read contract). */
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType),
+      valueContainsNull = true)
+    case o => o
   }
 
-  private def isVanishedFile(e: Throwable): Boolean = e match {
-    case _: java.nio.file.NoSuchFileException => true
-    case _: java.nio.file.DirectoryIteratorException =>
-      e.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
-    case u: java.io.UncheckedIOException =>
-      u.getCause.isInstanceOf[java.nio.file.NoSuchFileException]
-    case _ => false
+  private def schemaOf(df: DataFrame): StructType =
+    nullable(StructType(df.schema.filterNot(_.name == BucketCol))).asInstanceOf[StructType]
+
+  // ---- snapshots -----------------------------------------------------
+
+  /** CONSISTENT point-in-time read under concurrent writes: pins the
+    * log head (a file under `.snapshots/`) and reads exactly that
+    * entry's files. Later commits replace the live file lists; vacuum
+    * keeps every file a pinned entry references until
+    * [[TableSnapshot.close]] releases the pin. A missing or emptied
+    * table has nothing to pin. Snapshots survive even [[drop]]; a
+    * crashed reader's pin is reclaimed by [[cleanupSnapshots]].
+    */
+  def snapshot(table: String): TableSnapshot = snapshotMany(Seq(table)).head
+
+  /** Cross-table POINT-IN-TIME snapshot: every member read from ONE log
+    * entry, so a group write ([[overwriteMany]], [[mergeMany]],
+    * [[eraseMany]]) appears all-or-nothing. Returned snapshots align
+    * with `tables`; close every one (each holds its own pin).
+    *
+    * Pin protocol: the pins carry the head id read BEFORE they were
+    * written, and the entry read is the head read AFTER. A vacuum that
+    * saw the pins keeps everything from that older id on; one that
+    * listed pins before they existed committed before the re-read, so
+    * the re-read head is at or past its commit. A stall anywhere in
+    * between can neither tear the group nor read a deleted file.
+    */
+  def snapshotMany(tables: Seq[String]): Seq[TableSnapshot] = {
+    require(tables.nonEmpty && tables.distinct.size == tables.size,
+      s"snapshotMany needs distinct tables, got [${tables.mkString(", ")}]")
+    tables.foreach(requireValidTableName)
+    val pins = log.pin(tables)
+    try {
+      testHook("pinned")
+      val head = log.head().tables
+      tables.zip(pins).map { case (t, pin) =>
+        val st = head.get(t).filter(_.hasData).getOrElse(
+          throw new IllegalArgumentException(
+            s"cannot snapshot missing or empty table $t"))
+        new TableSnapshot(scan(t, Some(st), None).drop(BucketCol), pin, st.version)
+      }
+    } catch { case e: Throwable => pins.foreach(Files.deleteIfExists); throw e }
   }
 
-  /** Reclaim snapshot dirs older than `maxAgeMillis` — the operator
-    * sweep for readers that died without [[TableSnapshot.close]].
-    * Age is the snapshot DIR's creation-order mtime (hard links never
-    * touch it afterwards), so a long-RUNNING read older than the
-    * horizon can be reaped — size the horizon to the longest read you
-    * allow, exactly like a transactional format's VACUUM retention.
-    * Returns the number of snapshots removed.
+  /** Reclaim pins older than `maxAgeMillis` — the operator sweep for
+    * readers that died without [[TableSnapshot.close]]. Size the
+    * horizon to the longest read you allow, exactly like a
+    * transactional format's VACUUM retention; the files a reaped pin
+    * kept alive go with the next commit on their table. Returns the
+    * number of pins removed.
     */
-  def cleanupSnapshots(maxAgeMillis: Long): Int = {
-    val snapRoot = Paths.get(root, ".snapshots")
-    if (!Files.isDirectory(snapRoot)) return 0
-    val cutoff = System.currentTimeMillis() - maxAgeMillis
-    val stream = Files.list(snapRoot)
-    val stale = try stream.iterator().asScala.toSeq
-      .filter(p => Files.getLastModifiedTime(p).toMillis < cutoff)
-    finally stream.close()
-    stale.foreach(Fs.deleteRecursively)
-    stale.size
-  }
+  def cleanupSnapshots(maxAgeMillis: Long): Int =
+    log.dropPinsOlderThan(maxAgeMillis)
+
+  // ---- whole-table writes --------------------------------------------
 
   /** Create-if-missing (the reference's create-missing-only DDL mode,
     * dbCreator.ts:186-222): write only when absent.
@@ -1060,271 +639,96 @@ final class UpsertSink(spark: SparkSession, root: String,
   def createIfMissing(table: String, df: DataFrame): Unit =
     if (!exists(table)) overwrite(table, df)
 
-  /** Full atomic replace (initializeDb / reorg rebuild path): write to a
-    * shadow dir, then swap — readers never observe a partial table
-    * (schema.ts:10-49; reorgCleanupStrategy.ts:43-50). When `pk` is given
-    * the shadow is written in the bucketed layout so subsequent merges
-    * take the incremental path.
+  /** Full atomic replace (initializeDb / reorg rebuild path): readers see
+    * the old table or the new one, never a part (schema.ts:10-49;
+    * reorgCleanupStrategy.ts:43-50). A non-empty `pk` writes the
+    * bucketed layout; an empty one keeps the table's logged merge key
+    * when `df` still has those columns, so a rebuild never knocks a
+    * keyed table back to the flat layout. A solo overwrite clears the
+    * group id and the applied op ids: it is a new generation.
     */
   def overwrite(table: String, df: DataFrame, pk: Seq[String] = Seq.empty): Unit =
-    withWriterLease(Seq(table)) {
-    swapInShadow(table)(writeShadowData(_, df, pk))
-    }
+    writeGroup(Seq(TableWrite(table, df, pk)), Nil, None)
 
-  private def writeShadowData(shadow: Path, df: DataFrame,
-                              pk: Seq[String]): Unit =
-    labeled(s"sink:overwrite:${shadow.getFileName}") {
-      if (pk.nonEmpty) {
-        bucketAligned(withBucket(df, pk, numBuckets), numBuckets)
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy(BucketCol).parquet(shadow.toString)
-        Files.write(bucketMarker(shadow), numBuckets.toString.getBytes("UTF-8"))
-      } else df.write.mode(SaveMode.Overwrite).parquet(shadow.toString)
-    }
-
-  /** ATOMIC GROUP overwrite: replace (and/or drop) SEVERAL tables such
-    * that no reader — live or recovering from this writer's crash —
-    * ever observes a cross-table mix of generations. This is what a
-    * multi-table artifact (the ANN index's centroids + codebooks +
-    * code lists) needs from its rebuild: each single-table [[overwrite]]
-    * is atomic alone, but a sequence of them has windows where table 1
-    * is the new build and table 3 the old one.
-    *
-    * Mechanics, in crash-ordered phases:
-    *  1. Under ONE writer lease covering every member: per-table
-    *     recovery, then every shadow fully written and generation-
-    *     stamped, plus a shared `_graft_group` id across all members.
-    *     All Spark work happens here; a crash leaves every member on
-    *     the old generation (shadows are dot-prefixed — invisible).
-    *  2. The COMMIT POINT: fence every member's write-intent marker,
-    *     then write a `.gswap__<id>` journal (temp + ATOMIC_MOVE)
-    *     naming the group's writes and drops. Journal present means
-    *     committed: recovery from any later crash rolls FORWARD
-    *     ([[rollForwardGroups]]) so every member converges on the new
-    *     generation — never a mix.
-    *  3. The swap: per member, a pure rename pair (old aside, shadow
-    *     in), re-stamping the fence per table so a long member list
-    *     never outlives marker freshness. Drops move the dir aside
-    *     (rename — atomic) rather than deleting in-window.
-    *  4. Journal deleted, fences cleared, and only THEN the heavy
-    *     recursive deletes of dead generations — deferred outside the
-    *     fenced window on purpose.
-    *
-    * Concurrent readers of any member during phase 3 see the fence and
-    * wait ([[snapshot]]) or no-op ([[recover]]); [[snapshotMany]] adds
-    * the cross-table version re-check that makes a multi-table read
-    * all-or-nothing against this writer.
+  /** ATOMIC GROUP overwrite: replace (and/or drop) SEVERAL tables in one
+    * log entry, so no reader ever observes a cross-table mix of
+    * generations — what a multi-table artifact (the ANN index's
+    * centroids + codebooks + code lists) needs from its rebuild. Every
+    * member shares one fresh [[groupId]]. Member writes run
+    * concurrently; if any fails, nothing commits.
     */
   def overwriteMany(writes: Seq[TableWrite], drops: Seq[String] = Nil): Unit = {
     val all = writes.map(_.table) ++ drops
     require(all.nonEmpty, "overwriteMany needs at least one write or drop")
     require(all.distinct.size == all.size,
       s"overwriteMany: duplicate tables in [${all.mkString(", ")}]")
-    all.foreach(requireValidTableName)
-    withWriterLease(all) {
-      val groupId = java.util.UUID.randomUUID().toString
-      // phase 1 — every expensive step before any member changes
-      val shadows = writes.map { w =>
-        val shadow = Paths.get(root, s".${w.table}__shadow")
-        // recover BEFORE deleting the shadow: a committed crashed
-        // group's journal may still need this shadow (roll-forward
-        // treats a missing shadow as an already-completed swap —
-        // deleting first would silently strand that member on the old
-        // generation while its siblings converged)
-        recover(w.table)
-        deleteRecursively(shadow)
-        dropLegacyBucketBackups(w.table)
-        deleteRecursively(Paths.get(root, s".${w.table}__old"))
-        writeShadowData(shadow, w.df, w.pk)
-        stampGeneration(shadow)
-        Files.write(shadow.resolve(GroupMarker), groupId.getBytes("UTF-8"))
-        w.table -> shadow
+    writeGroup(writes, drops, Some(java.util.UUID.randomUUID().toString))
+  }
+
+  private def writeGroup(writes: Seq[TableWrite], drops: Seq[String],
+                         group: Option[String]): Unit =
+    withWriterLease(writes.map(_.table) ++ drops) {
+      val head = log.head().tables
+      val written = graft.ops.Par.map(writes) { w =>
+        val pk = if (w.pk.nonEmpty) w.pk
+          else head.get(w.table).map(_.pk)
+            .filter(k => k.nonEmpty && k.forall(w.df.columns.contains)).getOrElse(Nil)
+        val buckets = if (pk.nonEmpty) numBuckets else 0
+        val files = writeFiles(w.table,
+          if (pk.nonEmpty) withBucket(w.df, pk, buckets) else w.df,
+          buckets, s"sink:overwrite:${w.table}")
+        w.table -> Some(TableState(0L, schemaOf(w.df), pk, buckets, group,
+          files, Set.empty, Set.empty))
       }
-      drops.foreach { t =>
-        recover(t)
-        deleteRecursively(Paths.get(root, s".${t}__old"))
-        deleteRecursively(Paths.get(root, s".${t}__trash"))
-      }
-      // phase 2 — fence all members, then the commit-point journal
-      all.foreach(stampWriteIntent)
-      val journal = Paths.get(root, s".gswap__$groupId")
-      try {
-        val tmp = Files.createTempFile(Paths.get(root), ".gswaptmp_", ".tmp")
-        Files.write(tmp, (writes.map(w => s"W\t${w.table}") ++
-          drops.map(d => s"D\t$d")).mkString("\n").getBytes("UTF-8"))
-        Files.move(tmp, journal, StandardCopyOption.ATOMIC_MOVE)
-        // phase 3 — pure rename sequences, fence re-stamped per member
-        shadows.foreach { case (table, shadow) =>
-          stampWriteIntent(table)
-          val target = tableDir(table)
-          val old = Paths.get(root, s".${table}__old")
-          if (Files.exists(target))
-            Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-          Files.move(shadow, target, StandardCopyOption.ATOMIC_MOVE)
-        }
-        drops.foreach { table =>
-          stampWriteIntent(table)
-          val target = tableDir(table)
-          if (Files.exists(target))
-            Files.move(target, Paths.get(root, s".${table}__trash"),
-              StandardCopyOption.ATOMIC_MOVE)
-        }
-        Files.delete(journal)
-      } finally all.foreach(t => Files.deleteIfExists(inFlightMarker(t)))
-      // phase 4 — deferred heavy I/O: dead generations, dropped tables
-      writes.foreach(w =>
-        deleteRecursively(Paths.get(root, s".${w.table}__old")))
-      drops.foreach { t =>
-        deleteRecursively(Paths.get(root, s".${t}__trash"))
-        dropLegacyBucketBackups(t)
-      }
+      commit((written ++ drops.map(_ -> None)).toMap)
+    }
+
+  /** Drop a table entirely (no-op when absent). Files a pinned snapshot
+    * still reads stay until its pin is released. */
+  def drop(table: String): Unit = withWriterLease(Seq(table)) {
+    if (exists(table)) commit(Map(table -> None))
+    else vacuum(log.head(), Seq(table)) // leftovers of a crashed first write
+  }
+
+  /** BUCKET-LAYOUT EVOLUTION — the maintenance half of an incremental
+    * merge sink. The merge cost model only holds while a bucket fits an
+    * executor comfortably: a table that has grown 100x carries 100x-fat
+    * buckets, and a table provisioned wide but left small pays file-open
+    * and scheduling overhead per near-empty bucket. `rebucket` rewrites
+    * the table under `newBuckets` in one commit, so readers never
+    * observe a mixed-modulus table and later merges route by the NEW
+    * logged modulus. Also migrates a flat-layout table in place.
+    *
+    * `pk` must be the table's merge key: the layout is the hash of the
+    * pk columns — a different pk than future merges use would scatter
+    * their updated keys away from their stored rows.
+    */
+  def rebucket(table: String, pk: Seq[String], newBuckets: Int): Unit = {
+    require(pk.nonEmpty, s"rebucket of $table needs the table's merge key")
+    require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
+    withWriterLease(Seq(table)) {
+      val st = state(table).getOrElse(
+        throw new IllegalArgumentException(s"cannot rebucket missing table $table"))
+      val df = scan(table, Some(st), None).drop(BucketCol)
+      val files = writeFiles(table, withBucket(df, pk, newBuckets), newBuckets,
+        s"sink:overwrite:$table")
+      commit(Map(table -> Some(st.copy(pk = pk, buckets = newBuckets, files = files))))
     }
   }
 
-  /** Cross-table POINT-IN-TIME snapshot: every member captured with
-    * [[snapshot]]'s per-table guarantees, then the GROUP validated —
-    * no member's content version moved while later members were being
-    * captured and no writer window is open over any member. An
-    * [[overwriteMany]] group write therefore appears in a multi-table
-    * read all-or-nothing. Returned snapshots align with `tables`;
-    * close every one (each pins its inodes independently).
-    */
-  def snapshotMany(tables: Seq[String]): Seq[TableSnapshot] = {
-    require(tables.nonEmpty && tables.distinct.size == tables.size,
-      s"snapshotMany needs distinct tables, got [${tables.mkString(", ")}]")
-    var attempt = 0
-    var leaseWaitMs = 0L
-    while (attempt < 20) {
-      // a live writer LEASE over any member means a MULTI-TABLE
-      // operation (mergeMany/eraseMany hold the group lease across
-      // every member's rewrite) may be between two members' swaps — a
-      // cross-table state the per-table guards cannot see: each
-      // member's version is stable and no intent marker is up while
-      // the writer runs member B's Spark job after member A's swap
-      // landed. Wait the lease out (time-bounded) instead of capturing
-      // a torn group; leases THIS thread holds are exempt (a writer
-      // snapshotting its own tables mid-lease must not self-deadlock).
-      if (tables.exists(leaseLive)) {
-        if (leaseWaitMs >= writerWaitMs) throw new IllegalStateException(
-          s"snapshotMany of [${tables.mkString(", ")}] found a writer " +
-            s"lease live for over $leaseWaitMs ms — is a writer " +
-            "continuously rewriting the group?")
-        Thread.sleep(15L)
-        leaseWaitMs += 15L
-      } else {
-      attempt += 1
-      val v0 = tables.map(version)
-      // per-table captures are independent (each pins its own dir) —
-      // overlap their metadata walks + link walks (guide §2.6); the
-      // group validation below is what makes the READ all-or-nothing,
-      // and it is capture-order-independent. A member's snapshot
-      // throwing (missing table, exhausted retries) must not leak the
-      // other members' pinned inode dirs.
-      val attempts = graft.ops.Par.map(tables)(t =>
-        try Right(snapshot(t))
-        catch { case e: Throwable => Left(e) })
-      val snaps = attempts.collect { case Right(s) => s }
-      attempts.collectFirst { case Left(e) => e }.foreach { e =>
-        snaps.foreach(_.close()); throw e
-      }
-      // validation: any swap that LANDED during the capture window
-      // moved a version (captures are complete here, so a later write
-      // cannot affect them); any op that was MID-FLIGHT at v0-read was
-      // excluded by the lease wait above (an op cannot acquire its
-      // lease and land a swap inside the µs between that check and
-      // v0 — its shadow writes are Spark jobs). A lease acquired AFTER
-      // v0 is harmless here: either its swaps landed before this
-      // re-check (version catches them) or they come after every
-      // capture completed.
-      if (!tables.exists(writerInFlight) && tables.map(version) == v0)
-        return snaps.toSeq
-      snaps.foreach(_.close())
-      // a swap landed inside the capture window; brief pause so the
-      // retry isn't phase-locked to a periodic writer
-      Thread.sleep(25L * attempt)
-      }
-    }
-    throw new IllegalStateException(
-      s"snapshotMany of [${tables.mkString(", ")}] saw concurrent writes " +
-        s"on all $attempt attempts — is a writer continuously rewriting?")
-  }
-
-  /** The shared group id stamped across every member of one
-    * [[overwriteMany]] write (`_graft_group`), or None for tables
-    * written alone. Readers holding multi-table decoded state (the ANN
-    * index quantizer caches) compare members' ids to detect a torn
-    * capture; PK merges into a member (index adds) preserve the id —
-    * same generation family.
-    */
-  def groupId(table: String): Option[String] = {
-    val p = tableDir(table).resolve(GroupMarker)
-    try {
-      if (Files.exists(p)) Some(new String(Files.readAllBytes(p), "UTF-8"))
-      else None
-    } catch { case _: java.io.IOException => None }
-  }
-
-  private val GroupMarker = "_graft_group"
-
-  /** The whole-table swap skeleton: prepare a clean shadow dir, have
-    * `writeShadow` fill it, then atomically replace the table. Touches
-    * only `table`-specific paths, so distinct tables' swaps may run
-    * concurrently (root-dir listings inside recover/cleanup tolerate
-    * concurrent entries appearing and vanishing).
-    */
-  private def swapInShadow(table: String)(writeShadow: Path => Unit): Unit = {
-    val target = tableDir(table)
-    val shadow = Paths.get(root, s".${table}__shadow")
-    // restore any crashed-merge state FIRST — and before the stale
-    // shadow is deleted: a committed crashed GROUP journal may still
-    // need that shadow (roll-forward reads a missing shadow as an
-    // already-completed swap). Recovery also keeps the table whole if
-    // the shadow write below fails (disk full, job error); once the
-    // swap succeeds, stale bucket backups vanish WITH the old table
-    // dir (they live inside it), so they can never be "recovered"
-    // into the rebuilt table and resurrect purged rows
-    recover(table)
-    deleteRecursively(shadow)
-    // any LEGACY root-level backup (.{table}__old_N, pre-.bkup_
-    // releases) that SURVIVED recover() is provably orphaned — recover
-    // consumes them whenever the target (or its whole-table backup)
-    // exists — so delete them NOW, before the swap: deleted after it, a
-    // crash or permitted concurrent reader in between could still graft
-    // a dead generation's rows into the rebuilt table
-    dropLegacyBucketBackups(table)
-    writeShadow(shadow)
-    stampGeneration(shadow) // atomic with the swap below
-    val old = Paths.get(root, s".${table}__old")
-    deleteRecursively(old)
-    withWriteIntent(table) {
-      if (Files.exists(target)) Files.move(target, old, StandardCopyOption.ATOMIC_MOVE)
-      Files.move(shadow, target, StandardCopyOption.ATOMIC_MOVE)
-    }
-    deleteRecursively(old)
-  }
-
-  private def dropLegacyBucketBackups(table: String): Unit =
-    if (Files.isDirectory(Paths.get(root)))
-      numericSuffixed(Files.list(Paths.get(root)), s".${table}__old_")
-        .foreach(deleteRecursively)
+  // ---- merges --------------------------------------------------------
 
   /** The merge schema contract, checked loudly up front: an update
     * batch must carry exactly the stored columns with exactly the
-    * stored types. Without the check, an extra/missing column dies as
-    * a cryptic unionByName resolution error mid-plan — and a same-name
-    * column of a DIFFERENT type is worse: the union silently coerces
-    * (int->long), the rewrite lands only in TOUCHED buckets, and the
-    * table ends up with mixed physical types across bucket files,
-    * poisoning every later read with whichever footer schema inference
-    * samples. Order-insensitive (unionByName resolves by name);
-    * nullability ignored (parquet rows carry their own nulls). Returns
-    * the update re-projected to the stored column ORDER so every
-    * written footer carries one uniform schema. Cost: one driver-side
-    * footer read, no Spark job.
+    * stored types. A same-name column of a DIFFERENT type would
+    * otherwise silently coerce in the union and leave mixed physical
+    * types across bucket files. Order-insensitive; nullability ignored.
+    * Returns the update re-projected to the stored column ORDER so every
+    * written footer carries one uniform schema.
     */
-  private def alignToStored(table: String, updates: DataFrame): DataFrame = {
-    val storedSchema = read(table).schema
-    val s = storedSchema.map(f => f.name -> f.dataType.catalogString).toMap
+  private def alignToStored(table: String, stored: StructType,
+                            updates: DataFrame): DataFrame = {
+    val s = stored.map(f => f.name -> f.dataType.catalogString).toMap
     val u = updates.schema.map(f => f.name -> f.dataType.catalogString).toMap
     if (s != u) {
       val missing = (s.keySet -- u.keySet).toSeq.sorted
@@ -1341,17 +745,15 @@ final class UpsertSink(spark: SparkSession, root: String,
           "physical types across bucket files; an added column needs a " +
           "table rebuild via overwrite)")
     }
-    // re-project to the STORED column order: parquet footers then carry
-    // one uniform schema however the caller ordered the delta (an
-    // order-scrambled footer is harmless to by-name reads but poisons
-    // positional ones and schema sampling)
-    updates.select(storedSchema.map(f => col(f.name)): _*)
+    updates.select(stored.map(f => col(f.name)): _*)
   }
 
   /** PK merge: upsert `updates` into `table`, rewriting only the hash
     * buckets that contain updated keys. `versionCol` orders versions
     * within the incoming batch (e.g. blockNumber); rows whose keys match
-    * existing rows replace them.
+    * existing rows replace them. A missing or emptied table is created
+    * whole from the delta (even an empty one); a flat-layout table
+    * migrates to the bucketed layout on its first merge.
     */
   def merge(table: String, updates: DataFrame, pk: Seq[String],
             versionCol: Option[String] = None,
@@ -1360,637 +762,225 @@ final class UpsertSink(spark: SparkSession, root: String,
 
   /** [[merge]] with an EXACTLY-ONCE guarantee under crash-replay, keyed
     * by a caller-chosen `opId` — the ADMIT-direction sibling of
-    * [[eraseMany]]'s erasure journal, for merges that are NOT naturally
-    * idempotent: an additive count fold (the fingerprint / segment /
-    * substring / selection store admits read existing counts and write
-    * sums), replayed after a crash, double-counts — a false "duplicate"
-    * flag for every future probe of the affected keys. A pk-unique
-    * posting merge needs none of this (rewriting identical rows
-    * converges by itself).
-    *
-    * Same two-level discipline as the erasure journal: a
-    * `_graft_admits` line commits the table (full replay = no-op), and
-    * a `_gadmit_<id>` marker inside each swapped-in bucket fences a
-    * replay of a crash BETWEEN bucket swaps to exactly the buckets the
-    * crashed run never reached. Correctness rests on the fold being
-    * PER-KEY LOCAL (each updated row's value derives from that key's
-    * own stored row + the batch — true for all the count folds): a
-    * replay re-derives values from the mixed store, but the re-derived
-    * rows for already-swapped buckets never land (their buckets are
-    * fenced), and rows for unswapped buckets derive from their
-    * pre-crash state. Same caller contracts as the erasure id: replay
-    * with the SAME updates derivation, and replay a crashed admit
-    * BEFORE other writers mutate the table. The first-write path
-    * (missing/TRUNCATEd/flat table) is a whole-table atomic swap —
-    * table-level journal alone covers it.
+    * [[eraseMany]]'s erasure id, for merges that are NOT naturally
+    * idempotent: an additive count fold (read existing counts, write
+    * sums), replayed after a crash, double-counts. The id commits in
+    * the same log entry as the rewritten buckets, so a replay either
+    * finds it (and skips the table) or finds the table untouched (and
+    * applies the fold once). Replay with the SAME updates derivation.
     */
   def merge(table: String, updates: DataFrame, pk: Seq[String],
             versionCol: Option[String], pkUnique: Boolean,
             opId: Option[String]): Unit = {
     require(pk.nonEmpty, s"merge into $table needs a primary key")
-    // same contract TableMerge enforces: silently skipping the version
-    // resolution a caller explicitly asked for would write every
-    // version as a duplicate-pk row
-    require(!(pkUnique && versionCol.isDefined),
-      s"$table: pkUnique promises one row per pk — versionCol is meaningless")
-    opId.foreach(requireValidErasureId)
-    withWriterLease(Seq(table)) {
-    recover(table)
-    if (opId.exists(id => journalCommitted(table, AdmitJournal, id)))
-      return // table-level replay fence: this admit fully committed
-    val aligned =
-      if (exists(table) && hasDataFiles(table)) alignToStored(table, updates)
-      else updates
-    // bucket with the modulus the LAYOUT was written with, not the
-    // instance default — a mismatch would scatter updated keys away
-    // from their stored rows
-    val buckets =
-      if (exists(table) && isBucketed(table)) storedBuckets(table).getOrElse(numBuckets)
-      else numBuckets
-    // persisted: the touched-bucket collect AND the shadow write both
-    // consume it — un-persisted, a nondeterministic upstream could hash
-    // a recomputed row into a bucket absent from `touched`, and the
-    // bucket-move loop would silently drop it (it also runs the dedupe
-    // shuffle twice)
-    val deduped =
-      if (pkUnique) aligned else dedupeLastWins(aligned, pk, versionCol)
-    val latest = withBucket(deduped, pk, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-    if (!exists(table) || !isBucketed(table)) {
-      // first write, one-time migration of a flat-layout table, or a
-      // re-create of a TRUNCATEd (delete-all -> fileless) table
-      val merged =
-        if (!exists(table) || !hasDataFiles(table)) latest.drop(BucketCol)
-        else read(table)
-          .join(latest.select(pk.map(col): _*), pk, "left_anti")
-          .unionByName(latest.drop(BucketCol))
-      overwrite(table, merged, pk)
-    } else {
-      // incremental path: only buckets holding updated keys are rewritten
-      val marker = opId.map(admitMarkerName)
-      val dir = tableDir(table)
-      val touched = labeled(s"sink:merge:touched:$table")(
-        latest.select(BucketCol).distinct()
-          .collect()).map(_.getInt(0)).sorted // bounded by numBuckets
-        // bucket-level replay fence (opId merges): a bucket this admit
-        // already swapped in is not re-applied — its rows in `latest`
-        // re-derived against the post-fold store and must never land
-        .filter(b => !marker.exists(mk =>
-          Files.exists(dir.resolve(s"$BucketCol=$b").resolve(mk))))
-      if (touched.nonEmpty)
-        incrementalSwap(table, latest, pk, touched, buckets, marker)
-    }
-    opId.foreach(id => journalCommit(table, AdmitJournal, id))
-    } finally latest.unpersist()
-    }
+    opId.foreach(requireValidOpId)
+    applyMerges(Seq(TableMerge(table, updates, pk, versionCol, pkUnique)),
+      opId, createEmpty = true, s"sink:merge:touched:$table")
   }
 
-  /** Batched multi-table merge: upsert several independent tables' deltas
-    * in one sink round-trip. Semantically identical to calling [[merge]]
-    * per table; the point is the fixed-cost profile for SMALL deltas
-    * (per-micro-batch streaming state, e.g. DedupPipeline's corpus+bands
-    * pair): ONE Spark job learns every table's touched buckets (and
-    * materializes every delta's persist as a side effect), then the
-    * per-table shadow writes and atomic bucket swaps run CONCURRENTLY —
-    * they touch disjoint table directories and Spark actions are
-    * thread-safe, so a two-table batch pays roughly one table's
-    * wall-clock, not two. Tables still on the slow path (first write or
-    * flat-layout migration) fall back to [[merge]] sequentially.
-    *
-    * The single-writer-per-table contract is unchanged: callers must not
-    * merge the SAME table concurrently; distinct tables of one store are
-    * exactly what this method parallelizes.
+  /** Batched multi-table merge: upsert several tables' deltas in one
+    * sink round-trip and ONE commit. Semantically [[merge]] per table,
+    * except that an empty delta never creates a missing table. The
+    * fixed-cost profile is the point for SMALL deltas (per-micro-batch
+    * streaming state): ONE Spark job learns every table's touched
+    * buckets (materializing every delta's persist), then the per-table
+    * rewrites run CONCURRENTLY. If one table's rewrite fails, the
+    * others still commit and the first failure is rethrown.
     */
   def mergeMany(merges: Seq[TableMerge]): Unit = {
     require(merges.map(_.table).distinct.size == merges.size,
       s"one merge per table: ${merges.map(_.table).mkString(", ")}")
     merges.foreach(m =>
       require(m.pk.nonEmpty, s"merge into ${m.table} needs a primary key"))
+    applyMerges(merges, None, createEmpty = false,
+      s"sink:mergeMany:touched:${merges.map(_.table).mkString(",")}")
+  }
+
+  private def applyMerges(merges: Seq[TableMerge], opId: Option[String],
+                          createEmpty: Boolean, label: String): Unit =
     withWriterLease(merges.map(_.table)) {
-    merges.foreach(m => recover(m.table))
-    // check EVERY table's schema contract before ANY table writes: a
-    // multi-table batch must not land table A and then die on table B's
-    // type mismatch (the per-table swaps are atomic, the batch is not);
-    // aligned deltas also write stored-order footers. A migrate-
-    // partition table gets re-aligned inside merge() — one redundant
-    // driver-side footer read on the rare legacy flat-layout path, the
-    // accepted price of the up-front whole-batch contract check.
-    val merges2 = merges.map(m =>
-      if (exists(m.table) && hasDataFiles(m.table))
-        m.copy(updates = alignToStored(m.table, m.updates))
-      else m)
-    // a flat-layout table needs the one-time migration rewrite — rare
-    // legacy path, kept on plain merge (the empty-delta check mirrors
-    // the touched-bucket guard below: an empty delta must not trigger
-    // a migration rewrite)
-    val (migrate, rest) = merges2.partition(m => exists(m.table) && !isBucketed(m.table))
-    migrate.foreach(m =>
-      if (!m.updates.isEmpty)
-        merge(m.table, m.updates, m.pk, m.versionCol, m.pkUnique))
-    if (rest.isEmpty) return
-    val latests = rest.map { m =>
-      val existing = exists(m.table)
-      val buckets =
-        if (existing) storedBuckets(m.table).getOrElse(numBuckets) else numBuckets
-      val deduped =
-        if (m.pkUnique) m.updates
-        else dedupeLastWins(m.updates, m.pk, m.versionCol)
-      val latest = withBucket(deduped, m.pk, buckets)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (m, existing, buckets, latest)
-    }
-    try {
-      // one action over the union of (table, bucket) pairs: every
-      // delta's dedupe shuffle runs and caches here, and every table's
-      // touched set arrives in a single collect
-      val touchedAll = labeled(
-          s"sink:mergeMany:touched:${latests.map(_._1.table).mkString(",")}")(
-          latests.map { case (m, _, _, latest) =>
-            latest.select(lit(m.table).as("__t"), col(BucketCol)) }
-            .reduce(_ unionByName _).distinct().collect())
-        .groupBy(_.getString(0))
-        .map { case (t, rows) => t -> rows.map(_.getInt(1)).sorted }
-      // a table whose delta deduped to nothing has no touched buckets —
-      // nothing to write, and a missing table stays uncreated (an empty
-      // file-less table would be unreadable). Existing tables take the
-      // incremental bucket swap; missing ones are created whole from
-      // the already-bucketed delta.
-      runConcurrently(latests.collect {
-        case (m, existing, buckets, latest) if touchedAll.contains(m.table) => () =>
-          if (existing)
-            incrementalSwap(m.table, latest, m.pk, touchedAll(m.table), buckets)
-          else swapInShadow(m.table) { shadow =>
-            bucketAligned(latest, buckets).write.mode(SaveMode.Overwrite)
-              .partitionBy(BucketCol).parquet(shadow.toString)
-            Files.write(bucketMarker(shadow), buckets.toString.getBytes("UTF-8"))
-          }
-      })
-    } finally latests.foreach(_._4.unpersist())
-    }
-  }
-
-  /** Run independent per-table write tasks concurrently; waits for ALL
-    * to finish (a still-running loser must not race a caller's next
-    * operation on its table, and mergeMany unpersists the cached deltas
-    * right after this returns), then rethrows the first failure. The
-    * wait is UNINTERRUPTIBLE for the same reason — an interrupt while a
-    * swap is mid-flight must not release the caches or let a retry race
-    * the detached task over the same table dirs; the interrupt flag is
-    * restored for the caller once every task has finished.
-    */
-  private def runConcurrently(tasks: Seq[() => Unit]): Unit =
-    if (tasks.isEmpty) ()        // every delta deduped to nothing
-    else if (tasks.size == 1) tasks.head()
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+      val head = log.head().tables
+      // a table whose state already holds this op id applied it: skip
+      val live = merges.filterNot(m => opId.exists(id => head.get(m.table).exists(_.admits(id))))
+      // the schema contract for EVERY table before ANY table writes
+      val aligned = live.map(m => head.get(m.table).filter(_.hasData)
+        .fold(m)(s => m.copy(updates = alignToStored(m.table, s.schema, m.updates))))
+      val prepped = aligned.map { m =>
+        val st = head.get(m.table)
+        // bucket with the LOGGED modulus, never the instance default —
+        // a mismatch would scatter updated keys away from their rows
+        val buckets = st.filter(_.bucketed).fold(numBuckets)(_.buckets)
+        val deduped =
+          if (m.pkUnique) m.updates else dedupeLastWins(m.updates, m.pk, m.versionCol)
+        // persisted: the touched collect AND the rewrite both consume it
+        (m, st, buckets, withBucket(deduped, m.pk, buckets)
+          .persist(StorageLevel.MEMORY_AND_DISK))
+      }
       try {
-        val futures = tasks.map(t => pool.submit(new Runnable {
-          def run(): Unit = t()
-        }))
-        var interrupted = false
-        val failures = futures.flatMap { f =>
-          var done = false
-          var failure: Option[Throwable] = None
-          while (!done)
-            try { f.get(); done = true }
-            catch {
-              case e: java.util.concurrent.ExecutionException =>
-                failure = Some(e.getCause); done = true
-              case _: InterruptedException => interrupted = true
-            }
-          failure
+        val touched = touchedBuckets(prepped.collect {
+          case (m, st, _, latest) if st.exists(s => s.hasData && s.bucketed) ||
+            (!createEmpty && !st.exists(_.hasData)) => m.table -> latest
+        }, label)
+        val results = graft.ops.Par.map(prepped) { case (m, st, buckets, latest) =>
+          m.table -> Try(st match {
+            case Some(s) if s.hasData && s.bucketed =>
+              // incremental: only buckets holding updated keys rewrite
+              val t = touched.getOrElse(m.table, Nil)
+              if (t.isEmpty) None
+              else {
+                val withData = t.filter(s.files.contains)
+                val merged =
+                  if (withData.isEmpty) latest
+                  else scan(m.table, st, Some(withData))
+                    .join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
+                    .unionByName(latest)
+                Some(s.copy(files = s.files -- t ++
+                  writeFiles(m.table, merged, buckets, s"sink:swap:${m.table}")))
+              }
+            case Some(s) if s.hasData =>
+              // one-time migration of a flat-layout table
+              val merged = withBucket(scan(m.table, st, None), m.pk, buckets)
+                .join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
+                .unionByName(latest)
+              Some(s.copy(pk = m.pk, buckets = buckets,
+                files = writeFiles(m.table, merged, buckets, s"sink:swap:${m.table}")))
+            case _ if !createEmpty && !touched.contains(m.table) => None
+            case _ =>
+              // first write, or a re-create of an emptied table
+              Some(TableState(0L, schemaOf(m.updates), m.pk, buckets, None,
+                writeFiles(m.table, latest, buckets, s"sink:overwrite:${m.table}"),
+                st.fold(Set.empty[String])(_.admits),
+                st.fold(Set.empty[String])(_.erasures)))
+          })
         }
-        if (interrupted) Thread.currentThread().interrupt()
-        failures.headOption.foreach(throw _)
-      } finally pool.shutdown()
+        commitAll(results.map { case (t, r) =>
+          t -> r.map(_.orElse(opId.flatMap(_ => head.get(t)))
+            .map(s => s.copy(admits = s.admits ++ opId)))
+        })
+      } finally prepped.foreach(_._4.unpersist())
     }
 
-  /** The incremental tail of a merge: read back the touched buckets,
-    * keep their un-updated rows, and atomically swap in the rewritten
-    * buckets. `latest` must be persisted and already bucketed with
-    * `buckets`. Touches only `table`'s directory (plus its own shadow),
-    * so distinct tables' swaps may run concurrently.
-    */
-  private def incrementalSwap(table: String, latest: DataFrame,
-                              pk: Seq[String], touched: Array[Int],
-                              buckets: Int,
-                              onceMarker: Option[String] = None): Unit = {
-    val dir = tableDir(table)
-    val touchedWithData = touched.filter(b =>
-      Files.exists(dir.resolve(s"$BucketCol=$b")))
-    val currentTouched: Option[DataFrame] =
-      if (touchedWithData.isEmpty) None
-      else Some(parquetCachedSchema(table, version(table), Some(dir.toString),
-        touchedWithData.map(b =>
-          dir.resolve(s"$BucketCol=$b").toString).toIndexedSeq))
-    val merged = currentTouched match {
-      case None => latest
-      case Some(cur) => cur
-        .join(latest.select(pk.map(col): _*), pk, "left_anti")
-        .unionByName(latest)
-    }
-    writeAndSwapBuckets(table, merged, touched, buckets,
-      onceMarker = onceMarker)
+  /** Commit every member whose rewrite succeeded in one entry, then
+    * rethrow the first failure (unwrapped). */
+  private def commitAll(results: Seq[(String, Try[Option[TableState]])]): Unit = {
+    commit(results.collect { case (t, Success(Some(s))) => t -> Some(s) }.toMap)
+    results.collectFirst { case (_, Failure(e)) => e }.foreach(throw _)
   }
 
-  /** Shared bucket-rewrite tail of [[incrementalSwap]] and [[delete]]:
-    * write `merged` (already carrying [[BucketCol]]) to the table's
-    * shadow dir in the bucketed layout, then atomically swap each
-    * touched bucket in (per-bucket `.bkup_` backup makes every swap
-    * window crash-recoverable via [[recover]]).
-    *
-    * `removeEmptied` is the one semantic fork between the callers: a
-    * MERGE treats a touched bucket with no shadow replacement as
-    * untouchable (never displace a live bucket unless its replacement
-    * exists); a DELETE treats it as a bucket whose every row was
-    * deleted — the live dir is REMOVED. The .bkup_ window keeps both
-    * crash-recoverable: a crash mid-swap restores the pre-operation
-    * bucket and a re-run converges.
+  /** Last-write-wins within a batch: one row per PK — shared with the
+    * JDBC writer via [[MergeSemantics]] so the two sinks stay
+    * swap-compatible.
     */
-  private def writeAndSwapBuckets(table: String, merged: DataFrame,
-                                  touched: Array[Int], buckets: Int,
-                                  removeEmptied: Boolean = false,
-                                  onceMarker: Option[String] = None): Unit = {
-    val dir = tableDir(table)
-    // every caller of this tail (merge's incremental swap, delete,
-    // eraseMany's rewrite) is SCHEMA-PRESERVING by construction
-    // (updates are aligned to the stored schema first), so the schema
-    // cache entry can carry forward across the version bump — guarded
-    // by the pre-write version so an entry left stale by an earlier
-    // schema-CHANGING overwrite can never be resurrected
-    val ver0 = SchemaCache.schemaCache.get((root, table))
-      .map(_ => version(table))
-    val shadow = Paths.get(root, s".${table}__shadow")
-    deleteRecursively(shadow)
-    labeled(s"sink:swap:$table")(
-      bucketAligned(merged, buckets).write.mode(SaveMode.Overwrite)
-        .partitionBy(BucketCol).parquet(shadow.toString))
-    // the replay fence (erasure id / merge opId) rides INSIDE each
-    // shadow bucket, so the marker and the rewritten data land in one
-    // atomic rename (a bucket emptied outright needs none: its dir is
-    // removed, and a missing bucket is already skipped on replay)
-    onceMarker.foreach { mk =>
-      touched.foreach { b =>
-        val sb = shadow.resolve(s"$BucketCol=$b")
-        if (Files.exists(sb)) Files.write(sb.resolve(mk), Array.emptyByteArray)
-      }
-    }
-    withWriteIntent(table) {
-      touched.foreach { b =>
-        // re-stamp per bucket: the backup deletes below are real I/O
-        // (O(files in bucket)), so a many-bucket window could otherwise
-        // outlive the marker's freshness and let a reader run recovery
-        // mid-window (the marker then only has to stay credible across
-        // ONE bucket's deletes, not the whole loop)
-        stampWriteIntent(table)
-        val part = s"$BucketCol=$b"
-        val from = shadow.resolve(part)
-        val to = dir.resolve(part)
-        if (Files.exists(from) || removeEmptied) {
-          val old = dir.resolve(s".bkup_$b")
-          deleteRecursively(old)
-          if (Files.exists(to)) Files.move(to, old, StandardCopyOption.ATOMIC_MOVE)
-          if (Files.exists(from)) Files.move(from, to, StandardCopyOption.ATOMIC_MOVE)
-          deleteRecursively(old)
-        }
-      }
-      // not atomic with the bucket moves above, but each moved-in part
-      // file already changes (path, size, mtime) — the marker only has
-      // to defeat the identical-name/size/mtime corner, which a crash
-      // short of this line cannot reproduce
-      stampGeneration(dir)
-    }
-    deleteRecursively(shadow)
-    // carry-forward must NOT survive a truncating rewrite (removeEmptied
-    // deleting every bucket): a FILELESS table has no schema to serve and
-    // the TRUNCATE read contract requires the next read to fail — evict
-    // instead, keeping the SchemaCache scaladoc claim true. Only a
-    // removeEmptied caller can delete buckets, so the merge path skips
-    // the extra walk.
-    if (!removeEmptied || hasDataFiles(table)) ver0.foreach { v0 =>
-      SchemaCache.schemaCache.get((root, table)).filter(_._1 == v0)
-        .foreach { case (_, sc) =>
-          SchemaCache.schemaCache.put((root, table), (version(table), sc))
-        }
-    } else SchemaCache.schemaCache.remove((root, table))
-  }
+  private def dedupeLastWins(df: DataFrame, pk: Seq[String],
+                             versionCol: Option[String]): DataFrame =
+    MergeSemantics.dedupeLastWins(df, pk, versionCol)
 
-  /** Drop a table entirely (no-op when absent). Runs recovery first so
-    * a crashed swap's parked data is consumed, not orphaned beside the
-    * delete — and then ALSO removes any `.{table}__old` / shadow /
-    * legacy backup dirs: recover() treats a surviving whole-table
-    * backup as a crashed swap to restore, so a backup left behind
-    * (crash between an overwrite's two moves) would resurrect the
-    * dropped table from the dead on the next `exists`/`read`.
-    */
-  def drop(table: String): Unit = withWriterLease(Seq(table)) {
-    recover(table)
-    deleteRecursively(tableDir(table))
-    deleteRecursively(Paths.get(root, s".${table}__old"))
-    deleteRecursively(Paths.get(root, s".${table}__shadow"))
-    deleteRecursively(Paths.get(root, s".${table}__trash"))
-    dropLegacyBucketBackups(table)
-  }
+  // ---- erasure -------------------------------------------------------
 
   /** PK DELETE — the retention/right-to-erasure half of a merge sink:
     * physically remove the rows whose keys appear in `keys`, rewriting
-    * ONLY the buckets that contain them (the [[merge]] cost model:
-    * O(batch + touched buckets), never O(table) — at 100 TB a deletion
-    * batch touches its keys' buckets and no other file is opened).
-    * Same per-bucket shadow-swap discipline as a merge, so readers
-    * never observe a partial bucket and a crash mid-delete recovers.
-    * Keys absent from the table are no-ops (DELETE semantics); a
-    * bucket whose every row is deleted is removed outright. Flat-layout
-    * tables migrate to bucketed first (one rewrite), exactly like
-    * their first merge. Deleting EVERY row of a table leaves an empty
-    * (fileless) table — like a TRUNCATE: the next [[merge]] /
-    * [[mergeMany]] sees it as absent and re-creates it whole from its
-    * delta; a direct [[read]] before that re-create has no schema to
-    * serve and fails (drop the table if it is gone for good). A
-    * further `delete` on the TRUNCATEd table is a no-op.
-    *
-    * The caller's key column TYPES must match the table's stored
-    * schema for `hash` to route each key to the bucket its stored row
-    * lives in (int 5 and long 5 hash differently) — keys are cast to
-    * the stored types up front, so a lossless mismatch (int keys,
-    * long table) just works and a lossy one fails loudly under ANSI
-    * instead of silently deleting nothing.
+    * ONLY the buckets that contain them (the [[merge]] cost model). Keys
+    * absent from the table are no-ops; a bucket whose every row is
+    * deleted is removed outright. Deleting EVERY row leaves an empty
+    * table — like a TRUNCATE: the next [[merge]]/[[mergeMany]] re-creates
+    * it whole from its delta; a direct [[read]] before that fails; a
+    * further `delete` is a no-op. Key columns are cast to the stored
+    * types first, so int keys against a long table just work.
     */
   def delete(table: String, keys: DataFrame, pk: Seq[String]): Unit = {
     require(pk.nonEmpty, s"delete from $table needs a primary key")
-    withWriterLease(Seq(table)) {
-    recover(table)
-    require(exists(table), s"cannot delete from missing table $table")
-    if (!hasDataFiles(table)) return // already TRUNCATEd: nothing to delete
-    if (!isBucketed(table)) {
-      // one-time migration, then the incremental path below applies
-      val buckets = numBuckets
-      val df = read(table)
-      swapInShadow(table) { shadow =>
-        bucketAligned(withBucket(df, pk, buckets), buckets)
-          .write.mode(SaveMode.Overwrite)
-          .partitionBy(BucketCol).parquet(shadow.toString)
-        Files.write(bucketMarker(shadow), buckets.toString.getBytes("UTF-8"))
-      }
-    }
-    val buckets = storedBuckets(table).getOrElse(numBuckets)
-    // cast to the STORED key types: hash() is type-sensitive, so an
-    // int-typed key against a long-typed table would route to the
-    // wrong bucket and the delete would silently remove nothing
-    val stored = read(table).schema
-    val typedKeys = pk.map { c =>
-      val f = stored.find(_.name == c).getOrElse(throw new IllegalArgumentException(
-        s"delete from $table: key column $c not in stored schema " +
-          s"[${stored.map(_.name).mkString(", ")}]"))
-      col(c).cast(f.dataType).as(c)
-    }
-    val keyed = withBucket(keys.select(typedKeys: _*).distinct(), pk, buckets)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val dir = tableDir(table)
-      val touched = keyed.select(BucketCol).distinct()
-        .collect().map(_.getInt(0)).sorted // bounded by numBuckets
-        .filter(b => Files.exists(dir.resolve(s"$BucketCol=$b")))
-      if (touched.nonEmpty) {
-        val cur = spark.read.option("basePath", dir.toString)
-          .parquet(touched.map(b =>
-            dir.resolve(s"$BucketCol=$b").toString).toIndexedSeq: _*)
-        val kept = cur.join(keyed.select(pk.map(col): _*), pk, "left_anti")
-        // removeEmptied: a touched bucket with no shadow replacement is
-        // a bucket whose every row was deleted — see writeAndSwapBuckets
-        writeAndSwapBuckets(table, kept, touched, buckets,
-          removeEmptied = true)
-      }
-    } finally keyed.unpersist()
-    }
+    eraseMany(Seq(TableDelete(table, keys, pk)))
   }
 
-  /** GROUP PK delete — [[delete]] across a table GROUP under ONE
-    * writer lease covering every member (the [[mergeMany]] discipline,
-    * for the erasure direction): the per-table bucket swaps run
-    * concurrently on disjoint dirs, so a [[snapshotMany]] reader
-    * racing the group sees the writer windows overlap and re-captures
-    * around them — a store whose state spans tables (LSH postings +
-    * vectors, bands + shingle sets) erases a subject from ALL of them
-    * without ever exposing a posting whose payload row is already
-    * gone. Per-table swaps are atomic; like mergeMany, the BATCH is
-    * not atomic under a crash (recovery converges each table
-    * independently; re-run the delete to converge the group — deletes
-    * are idempotent). Every `pk` must be its table's FULL merge key
-    * (see [[TableDelete]]).
+  /** GROUP PK delete — [[delete]] across a table GROUP in one commit:
+    * a store whose state spans tables (LSH postings + vectors, bands +
+    * shingle sets) erases a subject from ALL of them at once. Every
+    * `pk` must be its table's FULL merge key (see [[TableDelete]]).
     */
   def deleteMany(deletes: Seq[TableDelete]): Unit = eraseMany(deletes)
 
   /** [[deleteMany]] with the delete keys DERIVED INSIDE the writer
     * lease. An erasure whose full merge keys come from scanning the
-    * store itself (the LSH retract pattern: band postings for the
-    * erased ids) has a race in the eager form — a concurrent admit
-    * landing between the caller's key scan and `deleteMany`'s lease
-    * acquisition adds postings the scan never saw, leaving dangling
-    * rows for "erased" ids. Declaring the member `tables` up front
-    * (the lease needs its scope before any work) and evaluating
-    * `derive` only after the lease is held closes that window: the key
-    * scan observes a store no concurrent writer can be mutating, so
-    * erased ids can NEVER resurface, even against concurrent admits.
-    * `derive` must only delete from the declared tables (enforced),
-    * and — as with any plan reading files the delete will rewrite —
-    * should eagerly checkpoint store-scanning key frames.
+    * store itself has a race in the eager form — a concurrent admit
+    * landing between the caller's key scan and the lease adds postings
+    * the scan never saw. Declaring the member `tables` up front and
+    * evaluating `derive` only after the lease is held closes that
+    * window. `derive` must only delete from the declared tables
+    * (enforced) and should eagerly checkpoint store-scanning frames.
     */
   def deleteMany(tables: Seq[String])(derive: => Seq[TableDelete]): Unit =
     eraseMany(tables)(derive)
 
   /** GROUP erasure across heterogeneous store shapes: PK deletes
     * ([[TableDelete]]) and count decrements ([[TableCountRetract]])
-    * under ONE writer lease covering every member — the full-store-
-    * family form of [[deleteMany]]: a subject erases from posting
-    * tables, payload tables, count inventories, and policy histograms
-    * in one group, and a [[snapshotMany]] reader racing it never
-    * captures a half-erased state across any of them. Per-table swaps
-    * are atomic and touch only the subject's buckets; like
-    * [[mergeMany]], the BATCH is not atomic under a crash (recovery
-    * converges each table independently — PK deletes re-run
-    * idempotently; count retractions are at-least-once UNLESS the
-    * caller supplies an erasure id, which makes replay exactly-once —
-    * see the erasureId overload and [[TableCountRetract]]).
+    * under ONE writer lease and ONE commit — a subject erases from
+    * posting tables, payload tables, count inventories and policy
+    * histograms at once, and no reader captures a half-erased state.
+    * Without an erasure id a count retraction is at-least-once under
+    * crash-replay; see the erasureId overload.
     */
-  def eraseMany(erases: Seq[TableErase]): Unit = {
-    require(erases.nonEmpty, "eraseMany needs at least one table")
-    withWriterLease(erases.map(_.table)) {
-      eraseManyLeased(erases, None)
-    }
-  }
+  def eraseMany(erases: Seq[TableErase]): Unit = eraseMany(erases, None)
 
   /** [[eraseMany]] with an EXACTLY-ONCE guarantee under crash-replay,
     * keyed by a caller-chosen `erasureId` (unique per logical erasure —
-    * a sweep id, a ticket number). Without an id, count retraction is
-    * at-least-once: replaying a crashed erasure subtracts again, and
-    * because counts clamp at zero and `dropAtZero` removes rows, a
-    * double-decrement can delete inventory rows that SURVIVING
-    * documents still hold — silently re-admitting true duplicates
-    * afterwards. The id closes that at both granularities:
-    *
-    *  - per TABLE, a committed erasure is journaled
-    *    (`_graft_erasures`, one id per line, written atomically after
-    *    the table's last bucket swap) — a replayed id skips the table;
-    *  - per BUCKET, each swapped-in bucket dir carries a
-    *    `_gerase_<id>` marker (atomic with the swap itself) — a replay
-    *    of a crash BETWEEN bucket swaps re-applies only the buckets
-    *    the crashed run never reached.
-    *
-    * So any replay interleaving converges to exactly one application
-    * per bucket, bit-identical to a single uncrashed run — the same
-    * discipline the batch-keyed delta layout ships for the admit
-    * direction. Two caller contracts: (1) the replay must re-derive
-    * the SAME payloads (retract exactly what was admitted — already
-    * the count-retract contract), and (2) a crashed erasure must be
-    * replayed BEFORE other writers mutate the member tables (a later
-    * merge/compact rewrites bucket dirs without their markers; the
-    * recovery protocol is "re-run in-flight erasures first", exactly
-    * like replaying a crashed streaming batch before admitting the
-    * next). Ids are never garbage-collected — one journal line per
-    * erasure per table, bytes per sweep.
+    * a sweep id, a ticket number). The id commits in the same log entry
+    * as the member rewrites (a member with nothing to erase records it
+    * too), so a replay skips every member that applied it and applies
+    * the rest once — bit-identical to a single uncrashed run. Replay
+    * must re-derive the SAME payloads. An id is never forgotten.
     */
   def eraseMany(erases: Seq[TableErase], erasureId: Option[String]): Unit = {
     require(erases.nonEmpty, "eraseMany needs at least one table")
-    erasureId.foreach(requireValidErasureId)
-    withWriterLease(erases.map(_.table)) {
-      eraseManyLeased(erases, erasureId)
-    }
+    erasureId.foreach(requireValidOpId)
+    withWriterLease(erases.map(_.table))(eraseLeased(erases, erasureId))
   }
 
   /** [[eraseMany]] with the per-table payloads DERIVED INSIDE the
-    * writer lease (see the [[deleteMany]] thunk form for why: key
-    * scans against the store itself must not race a concurrent
-    * admit). `derive` must only target the declared `tables`
-    * (enforced) and should eagerly checkpoint store-scanning frames.
-    */
+    * writer lease (see the [[deleteMany]] thunk form for why). */
   def eraseMany(tables: Seq[String])(derive: => Seq[TableErase]): Unit =
     eraseMany(tables, None)(derive)
 
-  /** The thunk form of the exactly-once overload — see
-    * [[eraseMany(erases:Seq[graft\.sink\.TableErase],erasureId:Option[String])*]]
-    * for the id contract.
-    */
+  /** The thunk form of the exactly-once overload. */
   def eraseMany(tables: Seq[String], erasureId: Option[String])(
       derive: => Seq[TableErase]): Unit = {
     require(tables.nonEmpty, "eraseMany needs at least one table")
     require(tables.distinct.size == tables.size,
       s"duplicate tables in lease scope: ${tables.mkString(", ")}")
-    erasureId.foreach(requireValidErasureId)
+    erasureId.foreach(requireValidOpId)
     withWriterLease(tables) {
       val erases = derive
-      // an EMPTY derivation is a no-op, not an error: a plan that scans
-      // the store for its keys legitimately derives nothing when the
-      // store was previously fully erased (fileless — the TRUNCATE
-      // contract), and it can only learn that inside the lease
+      // an EMPTY derivation is a no-op: a plan that scans the store for
+      // its keys legitimately derives nothing from an emptied store
       if (erases.nonEmpty) {
         val outside = erases.map(_.table).filterNot(tables.contains)
         require(outside.isEmpty,
           s"derived erases target tables outside the lease scope: " +
             s"${outside.mkString(", ")} (declared: ${tables.mkString(", ")})")
-        eraseManyLeased(erases, erasureId)
+        eraseLeased(erases, erasureId)
       }
     }
   }
 
-  /** Erasure-id grammar: filesystem-safe (the id names per-bucket
-    * marker files), bounded length.
-    */
-  private def requireValidErasureId(id: String): Unit =
+  /** Op-id grammar: printable and bounded. */
+  private def requireValidOpId(id: String): Unit =
     require(id.nonEmpty && id.length <= 128 &&
         id.forall(c => c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
       s"invalid erasure id '$id': need 1-128 chars of [A-Za-z0-9._-]")
 
-  /** The per-table op journals: committed operation ids, one per line,
-    * rewritten atomically (temp + move) after the table's last bucket
-    * swap. Two directions, two namespaces: `_graft_erasures` for
-    * [[eraseMany]]'s exactly-once erasure and `_graft_admits` for
-    * [[merge]]'s exactly-once additive fold (opId) — an admit and an
-    * erasure may legitimately share an id string without colliding.
-    * Underscore prefix = invisible to parquet readers but part of the
-    * [[version]] fingerprint (a journaled commit IS a content change).
-    */
-  private val EraseJournal = "_graft_erasures"
-  private val AdmitJournal = "_graft_admits"
-
-  /** True iff admit `id` has fully committed for `table` — the public
-    * probe of the `_graft_admits` journal, for operators whose admit
-    * DERIVES an additive fold before calling [[merge]]'s opId overload:
-    * a replay can skip the derivation (and its materialization) up
-    * front instead of building a frame the merge's table-level fence
-    * would discard anyway.
-    */
-  def admitCommitted(table: String, id: String): Boolean =
-    journalCommitted(table, AdmitJournal, id)
-
-  private def journalCommitted(table: String, journal: String,
-                               id: String): Boolean = {
-    val f = tableDir(table).resolve(journal)
-    Files.exists(f) && new String(Files.readAllBytes(f), "UTF-8")
-      .linesIterator.contains(id)
-  }
-
-  private def journalCommit(table: String, journal: String,
-                            id: String): Unit = {
-    if (journalCommitted(table, journal, id)) return
-    val f = tableDir(table).resolve(journal)
-    val prior =
-      if (Files.exists(f)) new String(Files.readAllBytes(f), "UTF-8") else ""
-    // dot-prefixed temp: excluded from the version fingerprint and from
-    // hasDataFiles, so a crash mid-commit leaves no observable residue
-    val tmp = tableDir(table).resolve(s".$journal.tmp")
-    Files.write(tmp, (prior + id + "\n").getBytes("UTF-8"))
-    Files.move(tmp, f, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** The bucket-level replay fences: a bucket dir swapped in by erasure
-    * (or opId-journaled merge) `id` carries this marker file
-    * (underscore = parquet-invisible; written into the shadow bucket
-    * BEFORE the atomic move, so marker and rewritten data land in one
-    * rename).
-    */
-  private def eraseMarkerName(id: String): String = s"_gerase_$id"
-  private def admitMarkerName(id: String): String = s"_gadmit_$id"
-
-  private def eraseManyLeased(erases: Seq[TableErase],
-                              erasureId: Option[String]): Unit = {
+  private def eraseLeased(erases: Seq[TableErase],
+                          erasureId: Option[String]): Unit = {
     require(erases.map(_.table).distinct.size == erases.size,
       s"one erase per table: ${erases.map(_.table).mkString(", ")}")
     erases.foreach(d =>
       require(d.pk.nonEmpty, s"erase from ${d.table} needs a primary key"))
-    erases.foreach(d => recover(d.table))
-    erases.foreach(d => require(exists(d.table),
+    val head = log.head().tables
+    erases.foreach(d => require(head.contains(d.table),
       s"cannot erase from missing table ${d.table}"))
-    // table-level replay fence: an id journaled for a table means that
-    // table's erasure fully committed in a prior run — skip it whole
-    val replayed = erasureId match {
-      case Some(id) => erases.filter(d => journalCommitted(d.table, EraseJournal, id))
-      case None => Seq.empty
-    }
-    val live = erases.filterNot(replayed.contains)
-    // flat-layout members migrate to the bucketed layout first (the
-    // rare legacy path, same one-time rewrite as the single-table form)
-    live.filter(d => hasDataFiles(d.table) && !isBucketed(d.table))
-      .foreach { d =>
-        val buckets = numBuckets
-        val df = read(d.table)
-        swapInShadow(d.table) { shadow =>
-          bucketAligned(withBucket(df, d.pk, buckets), buckets)
-            .write.mode(SaveMode.Overwrite)
-            .partitionBy(BucketCol).parquet(shadow.toString)
-          Files.write(bucketMarker(shadow), buckets.toString.getBytes("UTF-8"))
-        }
-      }
-    // a fileless (TRUNCATEd) member has nothing to apply — but the id
-    // still commits, so a replay converges identically
-    erasureId.foreach(id =>
-      live.filter(d => !hasDataFiles(d.table))
-        .foreach(d => journalCommit(d.table, EraseJournal, id)))
-    val prepped = live.filter(d => hasDataFiles(d.table)).map { d =>
-      val buckets = storedBuckets(d.table).getOrElse(numBuckets)
-      val stored = read(d.table).schema
+    val live = erases.filterNot(d => erasureId.exists(head(d.table).erasures))
+    val prepped = live.filter(d => head(d.table).hasData).map { d =>
+      val st = head(d.table)
+      val buckets = if (st.bucketed) st.buckets else numBuckets
+      val stored = st.schema
       def typed(frame: DataFrame, what: String): Seq[Column] = d.pk.map { c =>
         val f = stored.find(_.name == c).getOrElse(
           throw new IllegalArgumentException(
@@ -2020,130 +1010,66 @@ final class UpsertSink(spark: SparkSession, root: String,
           withBucket(decrements
             .groupBy(typed(decrements, "count retract"): _*)
             .agg(aggs.head, aggs.tail: _*), pk, buckets)
-      }).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      (d, buckets, keyed)
+      }).persist(StorageLevel.MEMORY_AND_DISK)
+      (d, st, buckets, keyed)
     }
     try {
-      val marker = erasureId.map(eraseMarkerName)
-      // ONE action over the union of (table, bucket) pairs — the
-      // mergeMany discipline applied to the erase side: every payload's
-      // dedupe/sum shuffle runs and persists here, and every member's
-      // touched set arrives in a single collect instead of one
-      // serialized driver round-trip per member
-      val touchedAll: Map[String, Array[Int]] =
-        if (prepped.isEmpty) Map.empty
-        else labeled(
-            s"sink:erase:touched:${prepped.map(_._1.table).mkString(",")}")(
-            prepped.map { case (d, _, keyed) =>
-              keyed.select(lit(d.table).as("__t"), col(BucketCol)) }
-              .reduce(_ unionByName _).distinct().collect())
-          .groupBy(_.getString(0))
-          .map { case (t, rows) => t -> rows.map(_.getInt(1)).sorted }
-      val tasks = prepped.flatMap { case (d, buckets, keyed) =>
-        val dir = tableDir(d.table)
-        val touched = touchedAll.getOrElse(d.table, Array.empty[Int])
-          .filter(b => Files.exists(dir.resolve(s"$BucketCol=$b")))
-          // bucket-level replay fence: a bucket already swapped by this
-          // erasure id (crash between bucket swaps) is not re-applied
-          .filter(b => !marker.exists(mk =>
-            Files.exists(dir.resolve(s"$BucketCol=$b").resolve(mk))))
-        if (touched.isEmpty) {
-          erasureId.foreach(id => journalCommit(d.table, EraseJournal, id))
-          None
-        }
-        else Some { () =>
-          val cur = parquetCachedSchema(d.table, version(d.table),
-            Some(dir.toString), touched.map(b =>
-              dir.resolve(s"$BucketCol=$b").toString).toIndexedSeq)
-          val kept = d match {
-            case td: TableDelete =>
-              cur.join(keyed.select(td.pk.map(col): _*), td.pk, "left_anti")
-            case cr: TableCountRetract =>
-              // decrement in place: stored counts minus the subject's
-              // sums, clamped at zero; un-decremented rows pass through
-              // the left join unchanged
-              val stored = cur.schema
-              val updated = cur.join(
-                keyed.select((cr.pk ++ cr.cntCols.map(c => s"__dec_$c"))
-                  .map(col): _*),
-                cr.pk, "left")
-              val outCols = cur.columns.toSeq.map { c =>
-                if (cr.cntCols.contains(c)) {
-                  val tpe = stored(c).dataType
-                  greatest(col(c) - coalesce(col(s"__dec_$c"),
-                    lit(0).cast(tpe)), lit(0).cast(tpe)).cast(tpe).as(c)
-                } else col(c)
-              }
-              val dec = updated.select(outCols: _*)
-              if (cr.dropAtZero)
-                dec.filter(cr.cntCols.map(col(_) > 0).reduce(_ || _))
-              else dec
+      val touchedAll = touchedBuckets(prepped.map(p => p._1.table -> p._4),
+        s"sink:erase:touched:${prepped.map(_._1.table).mkString(",")}")
+      val results = graft.ops.Par.map(prepped) { case (d, st, buckets, keyed) =>
+        d.table -> Try {
+          val touched = touchedAll.getOrElse(d.table, Nil)
+            .filter(b => !st.bucketed || st.files.contains(b))
+          if (touched.isEmpty) None
+          else {
+            // a flat member rewrites whole, into the bucketed layout
+            val cur =
+              if (st.bucketed) scan(d.table, Some(st), Some(touched))
+              else withBucket(scan(d.table, Some(st), None), d.pk, buckets)
+            val kept = d match {
+              case td: TableDelete =>
+                cur.join(keyed.select(td.pk.map(col): _*), td.pk, "left_anti")
+              case cr: TableCountRetract =>
+                // decrement in place: stored counts minus the subject's
+                // sums, clamped at zero; un-decremented rows pass through
+                val updated = cur.join(
+                  keyed.select((cr.pk ++ cr.cntCols.map(c => s"__dec_$c"))
+                    .map(col): _*),
+                  cr.pk, "left")
+                val outCols = cur.columns.toSeq.map { c =>
+                  if (cr.cntCols.contains(c)) {
+                    val tpe = cur.schema(c).dataType
+                    greatest(col(c) - coalesce(col(s"__dec_$c"),
+                      lit(0).cast(tpe)), lit(0).cast(tpe)).cast(tpe).as(c)
+                  } else col(c)
+                }
+                val dec = updated.select(outCols: _*)
+                if (cr.dropAtZero)
+                  dec.filter(cr.cntCols.map(col(_) > 0).reduce(_ || _))
+                else dec
+            }
+            val written = writeFiles(d.table, kept, buckets, s"sink:swap:${d.table}")
+            Some(if (st.bucketed) st.copy(files = st.files -- touched ++ written)
+              else st.copy(pk = d.pk, buckets = buckets, files = written))
           }
-          writeAndSwapBuckets(d.table, kept, touched, buckets,
-            removeEmptied = true, onceMarker = marker)
-          // the table-level commit point: past here a replay skips the
-          // whole table; short of here the per-bucket markers carry it
-          erasureId.foreach(id => journalCommit(d.table, EraseJournal, id))
         }
-      }
-      runConcurrently(tasks)
-    } finally prepped.foreach(_._3.unpersist())
+      }.toMap
+      commitAll(live.map { d =>
+        d.table -> results.getOrElse(d.table, Success(None)).map(
+          _.orElse(erasureId.map(_ => head(d.table)))
+            .map(s => s.copy(erasures = s.erasures ++ erasureId)))
+      })
+    } finally prepped.foreach(_._4.unpersist())
   }
-
-  /** BUCKET-LAYOUT EVOLUTION — the maintenance half of an incremental
-    * merge sink. The merge cost model only holds while a bucket fits an
-    * executor comfortably: a table that has grown 100x since its first
-    * write carries 100x-fat buckets (every small merge rewrites a huge
-    * bucket), and a table provisioned wide but left small pays file-open
-    * and scheduling overhead per near-empty bucket — the many-small-
-    * files regime. `rebucket` rewrites the table under `newBuckets`
-    * atomically through the whole-table shadow swap, so concurrent
-    * readers never observe a mixed-modulus table and subsequent merges
-    * route by the NEW stored marker (merges always honor the stored
-    * modulus, never the instance default). Also migrates a flat-layout
-    * table into the bucketed layout in place (one rewrite instead of
-    * waiting for the first merge to do it).
-    *
-    * `pk` must be the table's merge key: the layout is the hash of the
-    * pk columns, which the sink derives per call rather than storing —
-    * passing a different pk than future merges use would scatter their
-    * updated keys away from their stored rows (the same contract as
-    * [[merge]] itself).
-    */
-  def rebucket(table: String, pk: Seq[String], newBuckets: Int): Unit = {
-    require(pk.nonEmpty, s"rebucket of $table needs the table's merge key")
-    require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
-    withWriterLease(Seq(table)) {
-    recover(table)
-    require(exists(table), s"cannot rebucket missing table $table")
-    val df = read(table)
-    swapInShadow(table) { shadow =>
-      bucketAligned(withBucket(df, pk, newBuckets), newBuckets)
-        .write.mode(SaveMode.Overwrite)
-        .partitionBy(BucketCol).parquet(shadow.toString)
-      Files.write(bucketMarker(shadow), newBuckets.toString.getBytes("UTF-8"))
-    }
-    }
-  }
-
-  /** Last-write-wins within a batch: one row per PK — shared with the
-    * JDBC writer via [[MergeSemantics]] so the two sinks stay
-    * swap-compatible. When every column is part of the key (pure
-    * link/band tables) rows with equal keys are identical and a plain
-    * dropDuplicates suffices.
-    */
-  private def dedupeLastWins(df: DataFrame, pk: Seq[String],
-                             versionCol: Option[String]): DataFrame =
-    MergeSemantics.dedupeLastWins(df, pk, versionCol)
-
-  private def deleteRecursively(p: Path): Unit = Fs.deleteRecursively(p)
 }
 
 object UpsertSink {
+  /** The bucket partition column of the bucketed layout. */
+  private[sink] val BucketCol = "__bucket"
+
   /** One shared daemon thread renews every held writer lease in the
-    * process (see [[UpsertSink.withWriterLease]]) — renewal is a small
-    * file rewrite per held table per tick, so one thread serves any
-    * number of sinks without per-write thread churn.
+    * process — renewal is a small file touch per held table per tick,
+    * so one thread serves any number of sinks.
     */
   private val leaseRenewer: java.util.concurrent.ScheduledExecutorService =
     java.util.concurrent.Executors.newSingleThreadScheduledExecutor(
@@ -2154,33 +1080,42 @@ object UpsertSink {
       })
 }
 
-/** A pinned point-in-time view of a sink table — see
-  * [[UpsertSink.snapshot]]. `df` reads the snapshot's hard-linked
-  * files, so its content never changes however many writes land on
-  * the live table; [[close]] releases the links (idempotent). Actions
-  * on `df` after close fail — the snapshot's lifetime is the caller's
-  * read window, not the DataFrame's.
-  */
-final class TableSnapshot private[sink] (val df: DataFrame,
-                                         private[sink] val dir: Path,
-                                         /** The source table's content
-                                           * version AT CAPTURE (verified
-                                           * unchanged across the link
-                                           * walk) — lets snapshot readers
-                                           * share version-keyed decoded-
-                                           * state caches with live
-                                           * readers: same version, same
-                                           * bytes. */
-                                         val srcVersion: Long)
-    extends AutoCloseable {
-  override def close(): Unit = Fs.deleteRecursively(dir)
+/** The file listing Spark's index would otherwise walk the table dir
+  * for: exactly the files a log entry lists, under the table dir. */
+private final class FixedListing(base: HPath, files: Array[FileStatus])
+    extends FileStatusCache {
+  override def getLeafFiles(path: HPath): Option[Array[FileStatus]] =
+    if (path == base) Some(files) else None
+  override def putLeafFiles(path: HPath, leafFiles: Array[FileStatus]): Unit = ()
+  override def invalidateAll(): Unit = ()
 }
 
-/** Shared local-fs helpers for sink-layout maintenance. */
+/** A pinned point-in-time view of a sink table — see
+  * [[UpsertSink.snapshot]]. `df` reads the pinned log entry's files, so
+  * its content never changes however many writes land on the live
+  * table; [[close]] releases the pin (idempotent), after which the next
+  * commit on the table may delete those files — the snapshot's lifetime
+  * is the caller's read window, not the DataFrame's.
+  */
+final class TableSnapshot private[sink] (val df: DataFrame,
+                                         /** The pin file. */
+                                         private[sink] val dir: Path,
+                                         /** The table's content version
+                                           * in the pinned entry — lets
+                                           * snapshot readers share
+                                           * version-keyed decoded-state
+                                           * caches with live readers:
+                                           * same version, same bytes. */
+                                         val srcVersion: Long)
+    extends AutoCloseable {
+  override def close(): Unit = Files.deleteIfExists(dir)
+}
+
+/** Shared local-fs helpers. */
 private[graft] object Fs {
   /** Recursive delete that tolerates a concurrent deleter of the same
-    * tree (two recoveries may race stale-backup cleanup): a file that
-    * vanished mid-walk is exactly the outcome this delete wanted.
+    * tree: a file that vanished mid-walk is exactly the outcome this
+    * delete wanted.
     */
   def deleteRecursively(p: Path): Unit =
     try {
@@ -2194,10 +1129,6 @@ private[graft] object Fs {
         finally walk.close()
       }
     } catch {
-      // a concurrent deleter of the same tree can invalidate the
-      // exists/walk window or a directory mid-traversal — the tree
-      // being gone is exactly this delete's goal, so swallow both the
-      // raw and the stream-wrapped form
       case _: java.nio.file.NoSuchFileException => ()
       case e: java.io.UncheckedIOException
           if e.getCause.isInstanceOf[java.nio.file.NoSuchFileException] => ()

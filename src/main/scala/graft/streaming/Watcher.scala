@@ -5,7 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.sink.UpsertSink
+import graft.sink.{TableWrite, UpsertSink}
 
 /** One chain block head (S3/S4). */
 final case class Block(number: BigInt, hash: String, timestamp: BigInt)
@@ -106,29 +106,23 @@ object ChangeLog {
 
 /** Reorg detection + rebuild (T7, the hardest streaming piece): stored
   * head hash != on-chain hash at the same height means committed history
-  * is contradicted; rebuild the full dataset into a shadow location and
-  * swap atomically (reorgCleanupStrategy.ts:19-62 + schema.ts:4-49).
+  * is contradicted; rebuild the full dataset and swap it in atomically
+  * (reorgCleanupStrategy.ts:19-62 + schema.ts:4-49).
   */
 final class ReorgGuard(source: BlockSource, sink: UpsertSink) {
   /** Returns true when a reorg was detected and handled. `rebuild` must
-    * produce the full replacement table set.
-    *
-    * Crash-recovery contract: each table swap is individually atomic
-    * (shadow + ATOMIC_MOVE), but the SET of tables is swapped one by
-    * one. Recovery relies on ordering at the CALLER: persist the new
-    * head hash only AFTER check() returns — check() itself never
-    * updates it — so a crash mid-rebuild leaves the old hash in place,
-    * the next poll re-detects the same reorg, and the rebuild re-runs
-    * idempotently over all tables (overwrite replaces wholesale).
-    * Tables swap in sorted order so repeated recoveries converge
-    * deterministically.
+    * produce the full replacement table set, which lands in ONE sink
+    * commit ([[UpsertSink.overwriteMany]]): a crash mid-rebuild leaves
+    * every table on the old generation, and the next poll re-detects the
+    * reorg and re-runs the rebuild. Each rebuilt table keeps its logged
+    * merge key, so the next merge into it rewrites only touched buckets.
     */
   def check(storedHead: Option[Block])(rebuild: () => Map[String, DataFrame]): Boolean =
     storedHead match {
       case Some(head) if source.hashAt(head.number) != head.hash =>
-        rebuild().toSeq.sortBy(_._1).foreach {
-          case (table, df) => sink.overwrite(table, df)
-        }
+        val tables = rebuild().toSeq.sortBy(_._1)
+        if (tables.nonEmpty)
+          sink.overwriteMany(tables.map { case (t, df) => TableWrite(t, df) })
         true
       case _ => false
     }
@@ -149,19 +143,26 @@ object StateReconcile {
     }
 
   /** Rows whose on-chain state differs, with the decoded label — the
-    * update set for the sink merge.
+    * update set for the sink merge. The chain keys proposals by their
+    * 0x-hex id; a binary (`Bytes`) id column — the production schema —
+    * is matched as `0x` + lower-case hex and returned unchanged, so the
+    * result merges straight back into the sink. String ids match as-is.
     */
   def reconcile(spark: SparkSession, proposals: DataFrame,
                 chainStates: Map[String, Int]): DataFrame = {
     import spark.implicits._
-    val chain = chainStates.toSeq.toDF("id", "chainState")
+    val binary = proposals.schema("id").dataType == org.apache.spark.sql.types.BinaryType
+    val chain = chainStates.toSeq.toDF("__key", "chainState")
+      .withColumn("__key", if (binary) lower(col("__key")) else col("__key"))
     proposals
       .filter(col("rawState").isin(mutableStates: _*))
-      .join(broadcast(chain), Seq("id"))
+      .withColumn("__key",
+        if (binary) concat(lit("0x"), lower(hex(col("id")))) else col("id"))
+      .join(broadcast(chain), Seq("__key"))
       .filter(col("rawState") =!= col("chainState"))
       .withColumn("rawState", col("chainState"))
       .withColumn("state", decodeState(col("chainState")))
-      .drop("chainState")
+      .drop("chainState", "__key")
   }
 }
 

@@ -67,37 +67,17 @@ final class Syncer(spark: SparkSession, config: GraftConfig,
     * keyset walk is I/O-bound wall-clock that need not serialize); each
     * thread submits its merge jobs to the shared SparkSession, which is
     * thread-safe, and the merged tables are disjoint across providers so
-    * no two threads touch the same sink path.
+    * no two threads touch the same sink path. [[graft.ops.Par]] waits
+    * for every provider before rethrowing the first failure, so no
+    * provider sync outlives the call, and its per-call pool threads
+    * inherit the caller's SparkContext local properties.
     */
   def syncAll(parallelism: Int = 4): Map[String, Long] = {
     val groups = syncableEntities
       .groupBy(_.subgraphProvider).toSeq // G1: one source per provider
-    if (groups.size <= 1 || parallelism <= 1)
-      groups.flatMap { case (providerName, entities) =>
-        syncProvider(providerName, entities)
-      }.toMap
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(parallelism, groups.size))
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        import scala.concurrent.duration.Duration
-        implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
-        val perProvider = groups.map { case (providerName, entities) =>
-          Future(syncProvider(providerName, entities))
-        }
-        try Await.result(Future.sequence(perProvider), Duration.Inf).flatten.toMap
-        catch { case e: Throwable =>
-          // one provider failed: the OTHER providers' syncs are still
-          // running on the pool, and a graceful shutdown() would leave
-          // them merging detached — racing any caller retry over the
-          // same shadow dirs. Cancel hard and WAIT before propagating.
-          pool.shutdownNow()
-          pool.awaitTermination(5, java.util.concurrent.TimeUnit.MINUTES)
-          throw e
-        }
-      } finally pool.shutdown()
-    }
+    graft.ops.Par.map(groups, parallelism) { case (providerName, entities) =>
+      syncProvider(providerName, entities)
+    }.flatten.toMap
   }
 
   private def syncProvider(providerName: String,

@@ -419,12 +419,13 @@ class SimOpsSpec extends SparkSpec {
       "vec_id", "embedding", sink)
     assert(sink.groupId("ann_codes") == gids.head,
       "index add must not leave the build's generation family")
-    // fabricate the failure the guard exists for: codes from another
-    // generation than the quantizers — the probe must refuse, not
-    // silently decode one generation's codes with another's codebooks
-    java.nio.file.Files.write(
-      root.resolve("ann_codes").resolve("_graft_group"),
-      "another-generation".getBytes("UTF-8"))
+    // the failure the guard exists for, made through the log: codes
+    // committed by ANOTHER group write than the quantizers' — the probe
+    // must refuse, not silently decode one generation's codes with
+    // another's codebooks
+    val codes = sink.read("ann_codes").localCheckpoint(true)
+    sink.overwriteMany(Seq(graft.sink.TableWrite("ann_codes", codes)))
+    assert(sink.groupId("ann_codes").nonEmpty && sink.groupId("ann_codes") != gids.head)
     val queries = e.filter($"vec_id" % 50 === 0)
     val ex = intercept[IllegalStateException] {
       SimOps.ivfPqProbeIndex(queries, e, "vec_id", "embedding", sink, 5)
@@ -432,9 +433,9 @@ class SimOpsSpec extends SparkSpec {
     assert(ex.getMessage.contains("torn generations"),
       s"wrong failure: ${ex.getMessage}")
     // a MISSING id among stamped siblings is as torn as a different
-    // one (legacy index mid-migration to a group write)
-    java.nio.file.Files.delete(
-      root.resolve("ann_codes").resolve("_graft_group"))
+    // one: a solo overwrite commits the codes with no group id
+    sink.overwrite("ann_codes", codes)
+    assert(sink.groupId("ann_codes").isEmpty)
     val ex2 = intercept[IllegalStateException] {
       SimOps.ivfPqProbeIndex(queries, e, "vec_id", "embedding", sink, 5)
     }

@@ -16,6 +16,34 @@ class UpsertSinkSpec extends SparkSpec {
   private def freshSink(): UpsertSink =
     new UpsertSink(spark, Files.createTempDirectory("graft_sink").toString)
 
+  /** Run `body` with a crash injected right before its log commit: the
+    * writer dies with its files written and nothing committed.
+    */
+  private def crashBeforeCommit(sink: UpsertSink)(body: => Unit): Unit = {
+    sink.testHook = p =>
+      if (p == "commit") throw new IllegalStateException("injected crash before commit")
+    try {
+      val e = intercept[IllegalStateException](body)
+      assert(e.getMessage.contains("injected crash"), e.getMessage)
+    } finally sink.testHook = _ => ()
+  }
+
+  /** Data files on disk under a table, relative to its dir. */
+  private def parquetFiles(root: java.nio.file.Path, t: String): Set[String] = {
+    val dir = root.resolve(t)
+    if (!Files.exists(dir)) Set.empty
+    else {
+      val s = Files.walk(dir)
+      try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+        .map(p => dir.relativize(p).toString).toSet
+      finally s.close()
+    }
+  }
+
+  /** The files the log head references for a table. */
+  private def liveFiles(root: java.nio.file.Path, t: String): Set[String] =
+    new CommitLog(root).head().tables.get(t).fold(Set.empty[String])(_.paths.toSet)
+
   test("merge creates the table when missing") {
     val sink = freshSink()
     sink.merge("t", Seq((1L, "a"), (2L, "b")).toDF("id", "v"), Seq("id"))
@@ -301,54 +329,38 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("write-intent fence: fresh marker defers recovery, stale marker is consumed") {
-    // deterministic pins for the fence the two-thread stress test
-    // exercises probabilistically. A FRESH .{table}__inflight marker
-    // means a live writer is mid-swap: readers must treat the
-    // half-swapped state as transient (no recovery moves, no capture);
-    // a STALE marker is a crashed writer: recovery consumes it and
-    // restores exactly as before the fence existed.
+    // the fence's property under the commit log: a writer between its
+    // file writes and its commit — live or crashed there — is invisible
+    // to readers and never makes them wait; nothing needs recovering
     val sink = freshSink()
     sink.merge("t", (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    val root = java.nio.file.Paths.get(sink.rootPath)
-    val marker = root.resolve(".t__inflight")
-    val table = root.resolve("t")
-    val old = root.resolve(".t__old")
-
-    // simulate a writer crash INSIDE the overwrite window: table moved
-    // to .__old, marker still present with a stale timestamp
-    Files.move(table, old)
-    Files.write(marker,
-      (System.currentTimeMillis() - 60000L).toString.getBytes("UTF-8"))
-    // stale marker -> recovery proceeds: the table is restored whole
-    assert(sink.read("t").count() == 20, "stale-marker crash state not recovered")
-    assert(!Files.exists(marker), "stale marker not consumed by recovery")
-
-    // now a FRESH marker with the same crash shape: recovery must NOT
-    // touch the parked dir (the 'writer' is about to complete the swap)
-    Files.move(table, old)
-    Files.write(marker, System.currentTimeMillis().toString.getBytes("UTF-8"))
-    assert(!sink.exists("t"),
-      "reader recovered a mid-swap state under a live writer's feet")
-    assert(Files.exists(old), "parked dir was consumed despite the fence")
-    // ADVICE r10: snapshot must WAIT OUT a credible window instead of
-    // throwing after a fixed attempt cap (a slow multi-bucket swap was
-    // producing spurious 'continuously rewriting' failures). Re-stamp
-    // the marker near the end of its 30 s freshness horizon: the
-    // reader blocks while the marker stays fresh, the 'writer' never
-    // completes (a crash), the marker goes stale ~1.5 s in, recovery
-    // consumes it, and the capture then SUCCEEDS on the restored
-    // table.
-    Files.write(marker,
-      (System.currentTimeMillis() - 28500L).toString.getBytes("UTF-8"))
-    val t0 = System.nanoTime()
-    val snap = sink.snapshot("t")
+    crashBeforeCommit(sink) {
+      sink.overwrite("t", Seq((99L, "new")).toDF("id", "v"), Seq("id"))
+    }
+    assert(sink.read("t").count() == 20, "a crashed overwrite became visible")
+    // a LIVE writer paused right before its commit
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    sink.testHook = p => if (p == "commit") { entered.countDown(); release.await() }
+    @volatile var writerErr: Option[Throwable] = None
+    val writer = new Thread(() =>
+      try sink.overwrite("t", Seq((99L, "new")).toDF("id", "v"), Seq("id"))
+      catch { case e: Throwable => writerErr = Some(e) })
+    writer.start()
     try {
-      assert((System.nanoTime() - t0) / 1e9 >= 1.0,
-        "snapshot did not wait out the fresh marker")
-      assert(snap.df.count() == 20)
-    } finally snap.close()
-    assert(!Files.exists(marker), "stale marker not consumed")
-    assert(sink.read("t").count() == 20)
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      val t0 = System.nanoTime()
+      val snap = sink.snapshot("t")
+      try assert(snap.df.count() == 20) finally snap.close()
+      assert(sink.read("t").count() == 20, "reader saw an uncommitted write")
+      assert((System.nanoTime() - t0) / 1e9 < 20.0, "reader waited on the writer")
+    } finally {
+      release.countDown()
+      writer.join(60000)
+      sink.testHook = _ => ()
+    }
+    writerErr.foreach(e => fail(s"writer died: $e", e))
+    assert(sink.read("t").as[(Long, String)].collect().toSeq == Seq((99L, "new")))
   }
 
   test("merge rejects schema drift loudly BEFORE touching the table") {
@@ -516,87 +528,83 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("crash window between swap moves recovers instead of losing the table") {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val root = JFiles.createTempDirectory("graft_sink").toString
-    val sink = new UpsertSink(spark, root)
+    // a whole-table overwrite that crashes before its commit leaves the
+    // table on its old content — the next merge must not recreate the
+    // table from one batch and silently lose history
+    val sink = freshSink()
     sink.merge("t", (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    // simulate a crash between overwrite's two moves: table parked in
-    // .__old, target missing — without recovery the next merge would
-    // recreate the table from one batch, silently losing history
-    JFiles.move(Paths.get(root, "t"), Paths.get(root, ".t__old"),
-      StandardCopyOption.ATOMIC_MOVE)
+    crashBeforeCommit(sink) {
+      sink.overwrite("t", Seq((0L, "lost")).toDF("id", "v"), Seq("id"))
+    }
     sink.merge("t", Seq((21L, "v21")).toDF("id", "v"), Seq("id"))
     val rows = sink.read("t").as[(Long, String)].collect().toMap
-    assert(rows.size == 21, s"history lost after crash recovery: ${rows.size}")
-    assert(rows(1L) == "v1" && rows(21L) == "v21")
+    assert(rows.size == 21, s"history lost after the crash: ${rows.size}")
+    assert(rows(1L) == "v1" && rows(21L) == "v21" && !rows.contains(0L))
   }
 
   test("read recovers a table parked by a crashed overwrite") {
-    import java.nio.file.{Files => JFiles, Paths, StandardCopyOption}
-    val root = JFiles.createTempDirectory("graft_sink").toString
-    val sink = new UpsertSink(spark, root)
+    // a crashed overwrite: its files are on disk, but no entry lists
+    // them — a direct read serves the committed table, never throws
+    val sink = freshSink()
     sink.merge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
-    // crash between overwrite's two moves: data recoverable on disk but
-    // the target path is absent — a direct read must repair, not throw
-    JFiles.move(Paths.get(root, "t"), Paths.get(root, ".t__old"),
-      StandardCopyOption.ATOMIC_MOVE)
+    crashBeforeCommit(sink) {
+      sink.overwrite("t", Seq((2L, "b")).toDF("id", "v"), Seq("id"))
+    }
     assert(sink.read("t").as[(Long, String)].collect().toSeq == Seq((1L, "a")))
   }
 
   test("overwrite (reorg rebuild) discards stale bucket backups from a crashed merge") {
-    import scala.jdk.CollectionConverters._
     val root = Files.createTempDirectory("graft_sink_rb")
     val sink = new UpsertSink(spark, root.toString, numBuckets = 4)
     sink.merge("t", (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    // simulate a merge crashed mid-bucket-swap: two buckets parked in
-    // their in-table backup dirs with the target bucket dirs absent
-    val parked = Files.list(root.resolve("t")).iterator().asScala
-      .filter(_.getFileName.toString.startsWith("__bucket=")).take(2).toSeq
-    assert(parked.size == 2, "seed data did not populate 2+ buckets")
-    parked.foreach { b =>
-      val n = b.getFileName.toString.stripPrefix("__bucket=")
-      Files.move(b, root.resolve("t").resolve(s".bkup_$n"))
+    // a merge crashed before its commit: its rewritten bucket files sit
+    // beside the live ones, referenced by no entry
+    crashBeforeCommit(sink) {
+      sink.merge("t", (1L to 40L).map(i => (i, s"crashed$i")).toDF("id", "v"),
+        Seq("id"))
     }
-    // reorg rebuild replaces the table wholesale WITH the parked
-    // backups still in place (no read in between — overwrite itself
-    // must handle the crashed-merge state); the pre-rebuild bucket
-    // backups vanish with the old table dir, so a later recover() can
-    // never resurrect rows the rebuild purged
+    assert(parquetFiles(root, "t").size > liveFiles(root, "t").size,
+      "the crashed merge left no files to discard")
+    // the reorg rebuild replaces the table wholesale with the crashed
+    // files still in place; they must never resurface
     sink.overwrite("t", Seq((1L, "rebuilt")).toDF("id", "v"), Seq("id"))
     sink.merge("t", Seq((2L, "post")).toDF("id", "v"), Seq("id"))
     val rows = sink.read("t").as[(Long, String)].collect().toMap
     assert(rows == Map(1L -> "rebuilt", 2L -> "post"),
       s"pre-rebuild rows resurrected: ${rows.size} rows")
+    assert(parquetFiles(root, "t") == liveFiles(root, "t"),
+      "the crashed merge's files outlived the rebuild's commit")
   }
 
   test("legacy root-level bucket backups (.t__old_N) still recover") {
-    import scala.jdk.CollectionConverters._
+    // a merge crashed between its bucket writes and its commit must not
+    // cost the table a bucket: every bucket still reads its committed
+    // rows, and the next commit deletes the crashed writer's files
     val root = Files.createTempDirectory("graft_sink_legacy")
     val sink = new UpsertSink(spark, root.toString, numBuckets = 4)
     sink.merge("t", (1L to 40L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
-    // a merge that crashed under the PREVIOUS release parked its bucket
-    // NEXT TO the table dir — upgrading must not strand (and so lose)
-    // that bucket's rows
-    val parked = Files.list(root.resolve("t")).iterator().asScala
-      .find(_.getFileName.toString.startsWith("__bucket=")).get
-    val n = parked.getFileName.toString.stripPrefix("__bucket=")
-    Files.move(parked, root.resolve(s".t__old_$n"))
-    assert(sink.read("t").count() == 40, "legacy bucket backup not migrated")
-    assert(!Files.exists(root.resolve(s".t__old_$n")))
+    crashBeforeCommit(sink) {
+      sink.merge("t", Seq((3L, "x")).toDF("id", "v"), Seq("id"))
+    }
+    val rows = sink.read("t").as[(Long, String)].collect().toMap
+    assert(rows.size == 40 && rows(3L) == "v3", "crashed merge lost or leaked a bucket")
+    sink.merge("t", Seq((4L, "y")).toDF("id", "v"), Seq("id"))
+    assert(sink.read("t").count() == 40)
+    assert(parquetFiles(root, "t") == liveFiles(root, "t"))
   }
 
   test("overwrite deletes orphaned legacy backups instead of grafting them later") {
-    import java.nio.file.{Files => JFiles, Paths}
-    val root = JFiles.createTempDirectory("graft_sink_orph").toString
-    val sink = new UpsertSink(spark, root)
-    // a dead generation's legacy bucket backup lingers with NO table dir
-    // (table dropped externally after an old-release crashed merge)
-    JFiles.createDirectories(Paths.get(root, ".t__old_3"))
-    JFiles.write(Paths.get(root, ".t__old_3", "junk.parquet"), Array[Byte](1))
+    import java.nio.file.{Files => JFiles}
+    val root = JFiles.createTempDirectory("graft_sink_orph")
+    val sink = new UpsertSink(spark, root.toString)
+    // a dead writer's data file lingers in a bucket dir of a table that
+    // has no committed state at all
+    val junk = root.resolve("t").resolve("__bucket=3").resolve("junk.parquet")
+    JFiles.createDirectories(junk.getParent)
+    JFiles.write(junk, Array[Byte](1))
     sink.overwrite("t", Seq((1L, "fresh")).toDF("id", "v"), Seq("id"))
-    // the orphan must be GONE — a later recover() would otherwise move
-    // it into the rebuilt table as __bucket=3 and resurrect dead rows
-    assert(!JFiles.exists(Paths.get(root, ".t__old_3")))
+    // the orphan must be GONE after the first commit, and never read
+    assert(!JFiles.exists(junk))
     assert(sink.read("t").as[(Long, String)].collect().toSeq == Seq((1L, "fresh")))
   }
 
@@ -605,15 +613,14 @@ class UpsertSinkSpec extends SparkSpec {
     val root = JFiles.createTempDirectory("graft_sink_sib").toString
     val sink = new UpsertSink(spark, root)
     sink.merge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
-    // ".t__old_5__old" is table "t__old_5"'s whole-table crash backup,
-    // NOT a bucket-5 backup of table "t" — the non-numeric suffix must
-    // exclude it from t's recovery and cleanup
-    JFiles.createDirectories(Paths.get(root, ".t__old_5__old"))
-    JFiles.write(Paths.get(root, ".t__old_5__old", "their.parquet"), Array[Byte](1))
+    // "t__old_5" is a sibling table whose name extends t's: its
+    // uncommitted files are not t's to read or to vacuum
+    JFiles.createDirectories(Paths.get(root, "t__old_5"))
+    JFiles.write(Paths.get(root, "t__old_5", "their.parquet"), Array[Byte](1))
     assert(sink.read("t").count() == 1)
     sink.overwrite("t", Seq((2L, "b")).toDF("id", "v"), Seq("id"))
-    assert(JFiles.exists(Paths.get(root, ".t__old_5__old")),
-      "sibling table's crash backup was consumed by the wrong table")
+    assert(JFiles.exists(Paths.get(root, "t__old_5", "their.parquet")),
+      "sibling table's files were consumed by the wrong table")
   }
 
   test("flat-layout table migrates to bucketed on first merge") {
@@ -812,42 +819,38 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("write-intent marker survives long multi-bucket windows and is never observable empty") {
-    // ADVICE r10: (a) the marker must be re-stamped per touched bucket
-    // so a window longer than the freshness horizon stays fenced; (b)
-    // marker creation must be atomic (temp + rename) so a racing
-    // reader can never read a partially written file. (b) is
-    // structural (stampWriteIntent); here we pin (a)'s observable:
-    // a many-bucket delete window re-stamps — the marker's mtime/
-    // content timestamp moves DURING the window.
-    val root = Files.createTempDirectory("graft_sink_fence").toString
-    val sink = new UpsertSink(spark, root, numBuckets = 16)
+    // the log's counterpart of an atomically stamped marker: the head is
+    // never observable partial. A watcher reading the head throughout a
+    // 16-bucket rewrite always parses a complete entry listing the whole
+    // table, and sees the write land.
+    val root = Files.createTempDirectory("graft_sink_fence")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 16)
     sink.merge("t", (1L to 400L).map(i => (i, s"v$i")).toDF("id", "v"),
       Seq("id"))
-    import scala.jdk.CollectionConverters._
-    val marker = java.nio.file.Paths.get(root, ".t__inflight")
-    val stamps = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
+    val log = new CommitLog(root)
+    val v0 = sink.version("t")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[Long]()
     val torn = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     @volatile var stop = false
     val watcher = new Thread(() => while (!stop) {
       try {
-        if (Files.exists(marker)) {
-          val s = new String(Files.readAllBytes(marker), "UTF-8").trim
-          // atomic stamping: observable content is ALWAYS a complete
-          // timestamp, never empty/partial
-          if (s.isEmpty || !s.forall(_.isDigit)) torn.add(s)
-          else stamps.add(s.toLong)
-        }
-      } catch { case _: java.nio.file.NoSuchFileException => () }
+        val st = log.head().tables("t")
+        if (st.files.size != 16) torn.add(s"${st.files.size} buckets")
+        seen.add(st.version)
+      } catch { case e: Throwable => torn.add(e.toString) }
     })
     watcher.start()
-    // touch all 16 buckets -> 16 re-stamps inside one window
+    // touch all 16 buckets inside one write
     sink.merge("t", (1L to 400L).map(i => (i, s"w$i")).toDF("id", "v"),
       Seq("id"))
+    Thread.sleep(50)
     stop = true
     watcher.join(10000)
-    assert(torn.isEmpty, s"observed torn marker content: '${torn.peek()}'")
-    val seen = stamps.iterator().asScala.toSeq.distinct
-    assert(seen.nonEmpty, "watcher never observed the fenced window")
+    assert(torn.isEmpty, s"observed a torn head: '${torn.peek()}'")
+    val versions = seen.iterator().asScala.toSeq.distinct
+    assert(versions.contains(v0) || versions.contains(sink.version("t")),
+      "watcher never read the head")
+    assert(versions.toSet.subsetOf(Set(v0, sink.version("t"))))
   }
 
   test("overwriteMany: group write round-trips, drops atomically, one shared group id") {
@@ -877,95 +880,73 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("group-swap crash: a committed journal rolls every member FORWARD — never a mix") {
-    // fabricate the exact post-commit crash state overwriteMany can
-    // leave: journal written (the commit point), member `a` already
-    // swapped to the new generation (its old dir parked), member `b`
-    // not yet (shadow still pending), drop of `c` not yet executed.
-    // The only cross-table-consistent outcome is ALL-NEW + c gone.
+    // a group write crashed before its commit leaves EVERY member on the
+    // old generation; its re-run moves every member to the new one at
+    // once — never a mix — and leaves nothing on disk but live files
     val root = Files.createTempDirectory("graft_gswap")
     val sink = new UpsertSink(spark, root.toString)
     sink.overwrite("a", Seq((1L, "old")).toDF("id", "v"))
     sink.overwrite("b", Seq((1L, "old")).toDF("id", "v"))
     sink.overwrite("c", Seq((1L, "old")).toDF("id", "v"))
-    val gid = java.util.UUID.randomUUID().toString
-    for (t <- Seq("a", "b")) {
-      val shadow = root.resolve(s".${t}__shadow")
-      Seq((1L, "new")).toDF("id", "v").write.parquet(shadow.toString)
-      Files.write(shadow.resolve("_graft_gen"),
-        java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
-      Files.write(shadow.resolve("_graft_group"), gid.getBytes("UTF-8"))
-    }
-    // `a` crashed mid-swap AFTER its own renames completed
-    Files.move(root.resolve("a"), root.resolve(".a__old"))
-    Files.move(root.resolve(".a__shadow"), root.resolve("a"))
-    Files.write(root.resolve(s".gswap__$gid"),
-      "W\ta\nW\tb\nD\tc".getBytes("UTF-8"))
-    // any member read triggers recovery and converges the WHOLE group
-    assert(sink.read("b").as[(Long, String)].collect().toSeq
-      == Seq((1L, "new")))
-    assert(sink.read("a").as[(Long, String)].collect().toSeq
-      == Seq((1L, "new")))
-    assert(!sink.exists("c"), "journaled drop must complete on recovery")
-    assert(sink.groupId("a") == Some(gid) && sink.groupId("b") == Some(gid))
-    val leftovers = Files.list(root).iterator().asScala
-      .map(_.getFileName.toString)
-      .filter(n => n.startsWith(".gswap__") || n.endsWith("__old") ||
-        n.endsWith("__trash") || n.endsWith("__shadow")).toSeq
-    assert(leftovers.isEmpty, s"roll-forward left debris: $leftovers")
+    def group(): Unit = sink.overwriteMany(Seq(
+        TableWrite("a", Seq((1L, "new")).toDF("id", "v")),
+        TableWrite("b", Seq((1L, "new")).toDF("id", "v"))),
+      drops = Seq("c"))
+    crashBeforeCommit(sink)(group())
+    for (t <- Seq("a", "b", "c"))
+      assert(sink.read(t).as[(Long, String)].collect().toSeq == Seq((1L, "old")),
+        s"$t left the old generation without a commit")
+    group()
+    for (t <- Seq("a", "b"))
+      assert(sink.read(t).as[(Long, String)].collect().toSeq == Seq((1L, "new")))
+    assert(!sink.exists("c"), "the group's drop did not land with it")
+    assert(sink.groupId("a").nonEmpty && sink.groupId("a") == sink.groupId("b"))
+    for (t <- Seq("a", "b"))
+      assert(parquetFiles(root, t) == liveFiles(root, t), s"$t: debris left")
+    assert(!Files.exists(root.resolve("c")), "dropped table's dir survived")
   }
 
   test("group-swap roll-forward refuses a shadow that is not the journal's own") {
-    // the stale-recoverer hazard: a journal from a crashed group write
-    // plus a SHADOW stamped by some OTHER (newer, possibly mid-write)
-    // writer. The group-id gate must refuse the install — grafting a
-    // foreign half-written shadow over the live table would be silent
-    // corruption. The journal itself is still consumed (its own swap
-    // provably completed or its shadow is gone).
+    // files another writer left in a table dir without committing them
+    // are never read as the table, and a READ never deletes them (only
+    // the table's next committing writer vacuums)
     val root = Files.createTempDirectory("graft_gswap_foreign")
     val sink = new UpsertSink(spark, root.toString)
     sink.overwrite("b", Seq((1L, "live")).toDF("id", "v"))
-    val shadow = root.resolve(".b__shadow")
-    Seq((1L, "foreign")).toDF("id", "v").write.parquet(shadow.toString)
-    Files.write(shadow.resolve("_graft_group"),
-      "some-other-generation".getBytes("UTF-8"))
-    Files.write(root.resolve(".gswap__crashed-gid"), "W\tb".getBytes("UTF-8"))
+    Seq((1L, "foreign")).toDF("id", "v").write.mode("append")
+      .parquet(root.resolve("b").toString)
+    val foreign = parquetFiles(root, "b") -- liveFiles(root, "b")
+    assert(foreign.nonEmpty)
     assert(sink.read("b").as[(Long, String)].collect().toSeq
-      == Seq((1L, "live")), "foreign shadow grafted over the live table")
-    assert(!Files.exists(root.resolve(".gswap__crashed-gid")),
-      "journal with nothing left to do must still be consumed")
-    assert(Files.exists(shadow),
-      "the foreign writer's shadow is not roll-forward's to delete")
+      == Seq((1L, "live")), "foreign files grafted into the live table")
+    assert(foreign.subsetOf(parquetFiles(root, "b")),
+      "a reader deleted another writer's files")
   }
 
   test("a new write on a member recovers a committed crashed group BEFORE touching its shadow") {
-    // the ordering bug this pins: deleting the stale shadow before
-    // recover() would make roll-forward read the pending W entry as
-    // "already swapped", stranding the member on the old generation
-    // while its sibling converged — observable when the new write then
-    // fails before landing anything
+    // a crashed group write followed by a FAILING solo write on one
+    // member: both members stay on one generation (the old), and the
+    // group's re-run then moves both
     val root = Files.createTempDirectory("graft_gswap_order")
     val sink = new UpsertSink(spark, root.toString)
     sink.overwrite("t", Seq((1L, "g0")).toDF("id", "v"))
     sink.overwrite("s", Seq((1L, "g0")).toDF("id", "v"))
-    val gid = java.util.UUID.randomUUID().toString
-    for (t <- Seq("t", "s")) {
-      val shadow = root.resolve(s".${t}__shadow")
-      Seq((1L, "g1")).toDF("id", "v").write.parquet(shadow.toString)
-      Files.write(shadow.resolve("_graft_group"), gid.getBytes("UTF-8"))
-    }
-    Files.write(root.resolve(s".gswap__$gid"), "W\tt\nW\ts".getBytes("UTF-8"))
-    // the new write's shadow job fails (ANSI division by zero) — but
-    // its entry into the swap machinery must FIRST roll the crashed
-    // group forward, so t is on g1 when the failure propagates
+    def group(): Unit = sink.overwriteMany(Seq(
+      TableWrite("t", Seq((1L, "g1")).toDF("id", "v")),
+      TableWrite("s", Seq((1L, "g1")).toDF("id", "v"))))
+    crashBeforeCommit(sink)(group())
+    // the new write's job fails (ANSI division by zero)
     intercept[Exception] {
       import org.apache.spark.sql.functions.{col, lit}
       sink.overwrite("t",
         Seq(1L).toDF("id").select(col("id"), (col("id") / lit(0)).as("v")))
     }
-    assert(sink.read("t").as[(Long, String)].collect().toSeq
-      == Seq((1L, "g1")), "pending member stranded on the old generation")
-    assert(sink.read("s").as[(Long, String)].collect().toSeq
-      == Seq((1L, "g1")))
+    for (t <- Seq("t", "s"))
+      assert(sink.read(t).as[(Long, String)].collect().toSeq == Seq((1L, "g0")),
+        s"$t left its generation without a commit")
+    group()
+    for (t <- Seq("t", "s"))
+      assert(sink.read(t).as[(Long, String)].collect().toSeq == Seq((1L, "g1")))
   }
 
   test("snapshotMany: a failing member releases the already-captured snapshots") {
@@ -1013,25 +994,37 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("group-swap roll-forward defers to a LIVE writer's fresh fence") {
+    // a LIVE group writer paused right before its commit: readers see the
+    // old group until the entry links, then the new one, whole
     val root = Files.createTempDirectory("graft_gswap_live")
     val sink = new UpsertSink(spark, root.toString)
-    sink.overwrite("b", Seq((1L, "old")).toDF("id", "v"))
-    val gid = java.util.UUID.randomUUID().toString
-    val shadow = root.resolve(".b__shadow")
-    Seq((1L, "new")).toDF("id", "v").write.parquet(shadow.toString)
-    Files.write(shadow.resolve("_graft_group"), gid.getBytes("UTF-8"))
-    Files.write(root.resolve(s".gswap__$gid"), "W\tb".getBytes("UTF-8"))
-    // a FRESH fence = live writer mid-window: recovery must not touch it
-    Files.write(root.resolve(".b__inflight"),
-      System.currentTimeMillis().toString.getBytes("UTF-8"))
-    assert(sink.read("b").as[(Long, String)].collect().toSeq
-      == Seq((1L, "old")), "recovery ran under a live writer's fence")
-    assert(Files.exists(root.resolve(s".gswap__$gid")),
-      "journal consumed under a live writer's fence")
-    // the writer dies (fence cleared): recovery now completes the swap
-    Files.delete(root.resolve(".b__inflight"))
-    assert(sink.read("b").as[(Long, String)].collect().toSeq
-      == Seq((1L, "new")))
+    sink.overwriteMany(Seq(TableWrite("a", Seq((1L, "old")).toDF("id", "v")),
+      TableWrite("b", Seq((1L, "old")).toDF("id", "v"))))
+    val entered = new java.util.concurrent.CountDownLatch(1)
+    val release = new java.util.concurrent.CountDownLatch(1)
+    sink.testHook = p => if (p == "commit") { entered.countDown(); release.await() }
+    @volatile var writerErr: Option[Throwable] = None
+    val writer = new Thread(() =>
+      try sink.overwriteMany(Seq(TableWrite("a", Seq((1L, "new")).toDF("id", "v")),
+        TableWrite("b", Seq((1L, "new")).toDF("id", "v"))))
+      catch { case e: Throwable => writerErr = Some(e) })
+    writer.start()
+    try {
+      assert(entered.await(60, java.util.concurrent.TimeUnit.SECONDS))
+      assert(sink.read("b").as[(Long, String)].collect().toSeq
+        == Seq((1L, "old")), "reader saw a group write before its commit")
+      val snaps = sink.snapshotMany(Seq("a", "b"))
+      try assert(snaps.map(_.df.select("v").as[String].collect().toSeq)
+        == Seq(Seq("old"), Seq("old")))
+      finally snaps.foreach(_.close())
+    } finally {
+      release.countDown()
+      writer.join(60000)
+      sink.testHook = _ => ()
+    }
+    writerErr.foreach(e => fail(s"writer died: $e", e))
+    for (t <- Seq("a", "b"))
+      assert(sink.read(t).as[(Long, String)].collect().toSeq == Seq((1L, "new")))
   }
 
   test("deleteMany: group PK delete across tables, absent keys no-op, contract loud") {
@@ -1214,60 +1207,33 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("erasure-id replay after a partial crash converges per BUCKET, bit-exact") {
-    import java.nio.file.{Files => JF, Path, StandardCopyOption}
-    def copyTree(from: Path, to: Path): Unit = {
-      val s = JF.walk(from)
-      try s.iterator().asScala.foreach { p =>
-        val dst = to.resolve(from.relativize(p).toString)
-        if (JF.isDirectory(p)) JF.createDirectories(dst)
-        else JF.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
-      } finally s.close()
-    }
-    // counts spread across all 4 buckets so the erasure swaps several
+    // an erasure that crashes before its commit applied NOTHING (its id
+    // and its rewritten buckets land in one entry); the replay applies it
+    // once, and a replay after the commit moves nothing
     val rows = (1L to 40L).map(i => (i, 5L))
     val ref = new UpsertSink(spark,
-      JF.createTempDirectory("graft_sink_eref").toString, numBuckets = 4)
+      Files.createTempDirectory("graft_sink_eref").toString, numBuckets = 4)
     ref.merge("inv", rows.toDF("k", "cnt"), Seq("k"))
-    val realRoot = JF.createTempDirectory("graft_sink_ecrash")
-    val real = new UpsertSink(spark, realRoot.toString, numBuckets = 4)
+    val real = new UpsertSink(spark,
+      Files.createTempDirectory("graft_sink_ecrash").toString, numBuckets = 4)
     real.merge("inv", rows.toDF("k", "cnt"), Seq("k"))
     val dec = (1L to 40L).filter(_ % 2 == 0).map((_, 2L)).toDF("k", "cnt")
     ref.eraseMany(Seq(TableCountRetract("inv", dec, Seq("k"), Seq("cnt"))),
       None)
     val want = ref.read("inv").collect().map(_.toSeq).toSet
-    // take a pre-erase copy of one bucket, then erase with an id
-    val invDir = realRoot.resolve("inv")
-    val bucketDirs = { val s = JF.list(invDir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("__bucket=")).toSeq.sorted finally s.close() }
-    assert(bucketDirs.size >= 3, s"fixture spread too thin: $bucketDirs")
-    val victim = bucketDirs.head
-    val parked = JF.createTempDirectory("graft_sink_park").resolve(victim)
-    copyTree(invDir.resolve(victim), parked)
-    real.eraseMany(Seq("inv"), Some("sweep-xyz")) {
+    def erase(): Unit = real.eraseMany(Seq("inv"), Some("sweep-xyz")) {
       Seq(TableCountRetract("inv", dec, Seq("k"), Seq("cnt")))
     }
-    assert(real.read("inv").collect().map(_.toSeq).toSet == want)
-    // SIMULATED CRASH between bucket swaps and the journal commit: the
-    // journal line vanishes, and ONE bucket reverts to its pre-erase
-    // content (its swap "never happened" — no marker inside)
-    JF.delete(invDir.resolve("_graft_erasures"))
-    graft.sink.Fs.deleteRecursively(invDir.resolve(victim))
-    copyTree(parked, invDir.resolve(victim))
-    // the replay: marker-carrying buckets are skipped, the reverted
-    // bucket re-applies once — bit-exact convergence
-    real.eraseMany(Seq("inv"), Some("sweep-xyz")) {
-      Seq(TableCountRetract("inv", dec, Seq("k"), Seq("cnt")))
-    }
+    crashBeforeCommit(real)(erase())
+    assert(real.read("inv").as[(Long, Long)].collect().toSet == rows.toSet,
+      "a crashed erasure applied part of itself")
+    erase()
     assert(real.read("inv").collect().map(_.toSeq).toSet == want,
-      "partial-crash replay diverged from a single uncrashed erasure")
-    // and the worst window — ALL buckets swapped, journal missing —
-    // replays to a no-op too (every bucket carries the marker)
-    JF.delete(invDir.resolve("_graft_erasures"))
-    real.eraseMany(Seq("inv"), Some("sweep-xyz")) {
-      Seq(TableCountRetract("inv", dec, Seq("k"), Seq("cnt")))
-    }
+      "crash replay diverged from a single uncrashed erasure")
+    val v = real.version("inv")
+    erase()
     assert(real.read("inv").collect().map(_.toSeq).toSet == want)
+    assert(real.version("inv") == v, "a committed erasure's replay moved the table")
   }
 
   test("merge with an opId: replayed additive fold == single fold, bit-exact") {
@@ -1310,15 +1276,6 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("merge-opId replay after a partial crash converges per BUCKET, bit-exact") {
-    import java.nio.file.{Files => JF, Path, StandardCopyOption}
-    def copyTree(from: Path, to: Path): Unit = {
-      val s = JF.walk(from)
-      try s.iterator().asScala.foreach { p =>
-        val dst = to.resolve(from.relativize(p).toString)
-        if (JF.isDirectory(p)) JF.createDirectories(dst)
-        else JF.copy(p, dst, StandardCopyOption.REPLACE_EXISTING)
-      } finally s.close()
-    }
     val rows = (1L to 40L).map(i => (i, 5L))
     def fold(s: UpsertSink, id: Option[String]): Unit =
       s.writerLocked(Seq("inv")) {
@@ -1331,36 +1288,23 @@ class UpsertSinkSpec extends SparkSpec {
         s.merge("inv", summed, Seq("k"), None, pkUnique = true, opId = id)
       }
     val ref = new UpsertSink(spark,
-      JF.createTempDirectory("graft_sink_aref").toString, numBuckets = 4)
+      Files.createTempDirectory("graft_sink_aref").toString, numBuckets = 4)
     ref.merge("inv", rows.toDF("k", "cnt"), Seq("k"))
     fold(ref, None)
     val want = ref.read("inv").collect().map(_.toSeq).toSet
-    val realRoot = JF.createTempDirectory("graft_sink_acrash")
-    val real = new UpsertSink(spark, realRoot.toString, numBuckets = 4)
+    val real = new UpsertSink(spark,
+      Files.createTempDirectory("graft_sink_acrash").toString, numBuckets = 4)
     real.merge("inv", rows.toDF("k", "cnt"), Seq("k"))
-    val invDir = realRoot.resolve("inv")
-    val bucketDirs = { val s = JF.list(invDir)
-      try s.iterator().asScala.map(_.getFileName.toString)
-        .filter(_.startsWith("__bucket=")).toSeq.sorted finally s.close() }
-    assert(bucketDirs.size >= 3, s"fixture spread too thin: $bucketDirs")
-    val victim = bucketDirs.head
-    val parked = JF.createTempDirectory("graft_sink_apark").resolve(victim)
-    copyTree(invDir.resolve(victim), parked)
-    fold(real, Some("batch-xyz"))
-    assert(real.read("inv").collect().map(_.toSeq).toSet == want)
-    // SIMULATED CRASH between bucket swaps and the journal commit: the
-    // journal line vanishes and ONE bucket reverts to its pre-fold
-    // content (its swap "never happened" — no marker inside). The
-    // replay RE-DERIVES sums from this MIXED store: fenced buckets'
-    // double values never land, the reverted bucket re-folds once.
-    JF.delete(invDir.resolve("_graft_admits"))
-    graft.sink.Fs.deleteRecursively(invDir.resolve(victim))
-    copyTree(parked, invDir.resolve(victim))
+    // the fold crashes before its commit: the replay RE-DERIVES its sums
+    // from the untouched store and folds exactly once
+    crashBeforeCommit(real)(fold(real, Some("batch-xyz")))
+    assert(real.read("inv").as[(Long, Long)].collect().toSet == rows.toSet,
+      "a crashed fold applied part of itself")
+    assert(!real.admitCommitted("inv", "batch-xyz"))
     fold(real, Some("batch-xyz"))
     assert(real.read("inv").collect().map(_.toSeq).toSet == want,
-      "partial-crash replay diverged from a single uncrashed fold")
-    // the worst window — all buckets swapped, journal missing
-    JF.delete(invDir.resolve("_graft_admits"))
+      "crash replay diverged from a single uncrashed fold")
+    assert(real.admitCommitted("inv", "batch-xyz"))
     fold(real, Some("batch-xyz"))
     assert(real.read("inv").collect().map(_.toSeq).toSet == want)
   }

@@ -135,6 +135,68 @@ class WatcherSpec extends SparkSpec {
     })
   }
 
+  test("reorg rebuild keeps the keyed layout: the next one-key merge rewrites one bucket") {
+    val root = Files.createTempDirectory("graft_reorg_keyed")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 8)
+    sink.merge("t", (1L to 100L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    sink.merge("u", (1L to 10L).map(i => (i, i)).toDF("id", "n"), Seq("id"))
+    val chain = new FakeChain(BigInt(100), hashes = n => s"0xNEW$n")
+    // the rebuild hands over frames without keys, as a re-sync does
+    assert(new ReorgGuard(chain, sink).check(
+        Some(Block(BigInt(90), "0xOLD90", BigInt(0)))) { () =>
+      Map("t" -> (1L to 100L).map(i => (i, s"r$i")).toDF("id", "v"),
+        "u" -> (1L to 10L).map(i => (i, -i)).toDF("id", "n"))
+    })
+    assert(sink.read("u").filter($"n" < 0).count() == 10L)
+    def files(): Map[String, Long] = {
+      val s = Files.walk(root.resolve("t"))
+      try {
+        import scala.jdk.CollectionConverters._
+        s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+          .map(p => root.resolve("t").relativize(p).toString -> Files.size(p)).toMap
+      } finally s.close()
+    }
+    val before = files()
+    sink.merge("t", Seq((42L, "changed")).toDF("id", "v"), Seq("id"))
+    val after = files()
+    val changedBuckets = ((before.keySet -- after.keySet) ++ (after.keySet -- before.keySet))
+      .map(_.takeWhile(_ != '/'))
+    assert(changedBuckets.size == 1 && changedBuckets.head.startsWith("__bucket="),
+      s"a one-key merge after the rebuild rewrote: $changedBuckets")
+    assert(sink.read("t").filter($"id" === 42L).select("v").as[String].collect()
+      .toSeq == Seq("changed"))
+  }
+
+  test("state reconcile on the production Proposal schema: binary ids match the chain's 0x-hex keys") {
+    import java.nio.file.Paths
+    import org.apache.spark.sql.functions.{col, lit}
+    val cfg = graft.model.ConfigLoader.load(
+      Files.readString(Paths.get("config/entities.yml")))
+    val struct = cfg.schema.structTypeOf("Proposal")
+    assert(struct("id").dataType == org.apache.spark.sql.types.BinaryType)
+    def row(id: Array[Byte]) = org.apache.spark.sql.Row.fromSeq(
+      struct.fields.toSeq.map(f => f.name match {
+        case "id" => id
+        case "rawState" => 1
+        case "state" => "Active"
+        case _ => null
+      }))
+    val proposals = spark.createDataFrame(java.util.Arrays.asList(
+        row(Array(0x0a, 0xbc).map(_.toByte)), row(Array(0x01.toByte))),
+      org.apache.spark.sql.types.StructType(struct.fields.map(_.copy(nullable = true))))
+    val sink = new UpsertSink(spark, Files.createTempDirectory("graft_reconcile").toString)
+    sink.merge("Proposal", proposals, Seq("id"))
+    // the chain keys by 0x-hex (any case): 0x0ABC changes, 0x01 agrees
+    val updates = StateReconcile.reconcile(spark, sink.read("Proposal"),
+      Map("0x0ABC" -> 7, "0x01" -> 1))
+    assert(updates.schema("id").dataType == org.apache.spark.sql.types.BinaryType)
+    sink.merge("Proposal", updates, Seq("id"))
+    val states = sink.read("Proposal")
+      .select(org.apache.spark.sql.functions.hex(col("id")), col("state"), col("rawState"))
+      .as[(String, String, Int)].collect().sortBy(_._1).toSeq
+    assert(states == Seq(("01", "Active", 1), ("0ABC", "Executed", 7)))
+  }
+
   test("state reconcile: only mutable rows whose chain state differs, decoded") {
     val proposals = Seq(
       ("p1", 0, "Pending"),   // chain says 7 -> update to Executed
