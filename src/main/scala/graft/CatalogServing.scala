@@ -836,7 +836,7 @@ private[graft] trait CatalogServing extends CatalogShared {
         "bucketed store, DELETE every key the q25 quality gate fails " +
         "(rewriting only touched buckets — O(batch), never O(table)), " +
         "compact the now-smaller table to a narrower modulus " +
-        "(rebucket under the atomic shadow swap), and read the " +
+        "(rebucket in one atomic commit), and read the " +
         "survivors back. Content must equal a pure anti-join over the " +
         "source — which makes the sink's physical delete/rebucket " +
         "machinery answer to a DuckDB oracle instead of only its own " +
@@ -1040,7 +1040,7 @@ private[graft] trait CatalogServing extends CatalogShared {
         "map-side batch assignment, nothing corpus-scale), then ingest " +
         "a mode-collapsed batch (every vector one direction — the " +
         "unambiguous retrain signal), rebuild from the grown corpus " +
-        "under the sink's atomic shadow swap, and serve probes off the " +
+        "in one atomic sink commit, and serve probes off the " +
         "rebuilt index. Both DriftDecisions ride the output as audit " +
         "columns so the harness sees the arc, not just the probes. " +
         "k-means + approximate probes inside -> rows-only; " +

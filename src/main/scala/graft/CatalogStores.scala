@@ -1368,8 +1368,8 @@ private[graft] trait CatalogStores extends CatalogShared {
         "oracle through the one observable that exposes a double " +
         "fold: COUNT-correct erasure. The day-1 batch is admitted " +
         "into the fingerprint store TWICE under one admit id (the " +
-        "crashed-admit recovery path — the _graft_admits journal + " +
-        "per-bucket markers make the replay a no-op), a day-1 subset " +
+        "crashed-admit recovery path — the admit id, committed with " +
+        "the fold, makes the replay a no-op), a day-1 subset " +
         "is then ERASED, and day-2 — day-1's texts re-keyed under " +
         "fresh ids, the constructed-duplicates convention (q124's " +
         "re-key trick), so discrimination never depends on the SF's " +

@@ -159,7 +159,7 @@ object BpeOps {
   /** Persisted-model table name under a sink root. */
   private val MergesTable = "bpe_merges"
 
-  /** Persist a learned model through the sink (atomic shadow swap —
+  /** Persist a learned model through the sink (one atomic commit —
     * concurrent encoders never see a half-written vocabulary): one row
     * per merge (rank, left, right) plus a rank -1 stats row carrying
     * the coverage counters. The tokenizer equivalent of the ANN

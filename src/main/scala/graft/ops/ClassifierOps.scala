@@ -121,7 +121,7 @@ object ClassifierOps {
   /** Persisted-model table name under a sink root. */
   private val WeightsTable = "classifier_weights"
 
-  /** Persist a trained model through the sink (atomic shadow swap, the
+  /** Persist a trained model through the sink (one atomic commit, the
     * [[graft.ops.BpeOps.saveModel]] lifecycle): one row per bucket
     * weight plus a bucket -1 bias row. Train once per corpus
     * generation; every applier loads the same coefficients.

@@ -326,7 +326,7 @@ object SearchOps {
     * Replay interplay — stats fold FIRST, journaled, then the
     * idempotent merges: a replayed admission (same `admitId`) whose
     * fold already committed skips BOTH the guard and the fold up front
-    * (the `_graft_admits` probe — its own earlier doclens merge would
+    * (the admit-id probe — its own earlier doclens merge would
     * otherwise trip the guard) and re-runs only the self-converging
     * posting/length merges; a replay that crashed BEFORE the fold
     * committed sees doclens untouched, passes the guard, and folds

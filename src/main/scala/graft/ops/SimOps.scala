@@ -710,8 +710,8 @@ object SimOps {
     // and code lists (plus the SQ8 refine table, stored or DROPPED per
     // storeSq8) land under a single cross-table swap, so neither a
     // concurrent probe nor a crashed rebuild can ever pair one
-    // generation's quantizers with another's codes — the sink's group
-    // journal rolls a crash FORWARD to the complete new index.
+    // generation's quantizers with another's codes — the sink commits
+    // the whole group in one log entry, so a crash leaves the old index.
     // coalesce(1): centroids/codebooks are nlist x dim and
     // m x ksub x dsub rows — default parallelism would write (and every
     // probe's bounded collect would open) 32 near-empty part files per
@@ -834,7 +834,7 @@ object SimOps {
     * each TABLE's own on-disk content version (one directory walk to
     * probe — no Spark job). A serving process holds its index metadata
     * in memory exactly once (FAISS does the same); a REBUILD through
-    * the sink's shadow swap changes the version fingerprints, so the
+    * the sink's commit log changes the table versions, so the
     * next probe decodes fresh. Per-table keys matter for the
     * add-after-train path: [[ivfPqIndexAdd]] touches only the code
     * lists, so a probe right after an add re-reads the code SCAN but
@@ -977,7 +977,7 @@ object SimOps {
     * vectors join their nearest existing list, and index quality
     * degrades only as the data DISTRIBUTION drifts from the trained
     * quantizers — at which point the owner re-runs [[buildIvfPqIndex]]
-    * (the shadow-swap overwrite makes the rebuild atomic under
+    * (its one-commit group overwrite makes the rebuild atomic under
     * concurrent probes). The merge is the only action — no trailing
     * count, which would re-execute the encode.
     */
@@ -990,7 +990,7 @@ object SimOps {
     * so a caller updating the index TOGETHER with its own tables (e.g.
     * the semantic-admission stream's corpus) can fuse everything into
     * ONE `mergeMany` round-trip — one Spark job learns every table's
-    * touched buckets and the shadow swaps run concurrently.
+    * touched buckets and the bucket rewrites run concurrently.
     * Requires id-unique input (pkUnique — the encode adds no dupes).
     * `attrCols` must match the build's: the code-list schema is the
     * index's contract.
@@ -1142,8 +1142,8 @@ object SimOps {
   /** CLOSE the drift loop [[ivfIndexDriftStats]] opens: measure the
     * fresh batch's total-variation distance from the stored index's
     * list distribution and, when it exceeds `threshold`, re-run
-    * [[buildIvfPqIndex]] from `corpus` — under the sink's existing
-    * shadow swap, so concurrent probes see the old index until the
+    * [[buildIvfPqIndex]] from `corpus` — in one sink commit, so
+    * concurrent probes see the old index until the
     * atomic switch and never a half-built one. This is the
     * add-after-train lifecycle's missing arc: add absorbs inserts
     * cheaply, drift stats quantify degradation, and the rebuild fires
@@ -1469,7 +1469,7 @@ object SimOps {
     * one-shard rebuild could still score one generation's codes
     * against another's quantizers — or die on a swapped-away file.
     * Here every shard's centroids, codebooks, code lists (and SQ8
-    * refine codes, when probed) pin as hard-linked snapshots for the
+    * refine codes, when probed) read one pinned log entry for the
     * whole `use` window: a rebuild landing mid-probe is simply not
     * visible. Requires `refineFromSq8` (a snapshot cannot pin the
     * caller's corpus table; the exact-refine variant reads it) —

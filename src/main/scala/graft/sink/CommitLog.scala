@@ -169,8 +169,8 @@ private[sink] final class CommitLog(root: Path) {
     }.minOption
 
   /** Every entry a reader may still use once `committed` is published:
-    * the ones from the oldest pin on, and the relative paths each keeps
-    * live per table. Entries below that floor are deleted.
+    * `committed` and those from the oldest pin on. Entries below that
+    * floor are deleted.
     */
   def retained(committed: Entry): Seq[Entry] = {
     val floor = pinFloor().fold(committed.id)(_ min committed.id)
@@ -209,7 +209,7 @@ private[sink] object CommitLog {
     e.tables.toSeq.sortBy(_._1).foreach { case (t, s) =>
       val n = tables.putObject(t)
       n.put("version", s.version)
-      n.set("schema", mapper.readTree(s.schema.json))
+      n.put("schema", s.schema.json)
       val pk = n.putArray("pk"); s.pk.foreach(pk.add)
       n.put("buckets", s.buckets)
       s.group.foreach(n.put("group", _))
@@ -234,7 +234,7 @@ private[sink] object CommitLog {
         val n = kv.getValue
         kv.getKey -> TableState(
           n.get("version").asLong(),
-          DataType.fromJson(n.get("schema").toString).asInstanceOf[StructType],
+          DataType.fromJson(n.get("schema").asText()).asInstanceOf[StructType],
           strings(n.get("pk")),
           n.get("buckets").asInt(),
           Option(n.get("group")).map(_.asText()),

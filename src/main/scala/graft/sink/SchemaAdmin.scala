@@ -14,7 +14,7 @@ package graft.sink
   *
   * This is deliberately driver-side, single-connection work: it touches
   * catalog metadata, not data, so there is nothing to distribute. The
-  * data-plane counterpart (bucketed parquet shadow swap / JDBC upsert)
+  * data-plane counterpart (bucketed parquet commit log / JDBC upsert)
   * lives in [[UpsertSink]]/[[JdbcUpsertSink]]; both share the
   * [[SqlConnectionFactory]] seam so the whole admin path unit-tests
   * offline, the same way the reference mock-patches knex.

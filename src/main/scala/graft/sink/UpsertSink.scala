@@ -822,6 +822,9 @@ final class UpsertSink(spark: SparkSession, root: String,
             (!createEmpty && !st.exists(_.hasData)) => m.table -> latest
         }, label)
         val results = graft.ops.Par.map(prepped) { case (m, st, buckets, latest) =>
+          def upserted(cur: DataFrame): DataFrame =
+            cur.join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
+              .unionByName(latest)
           m.table -> Try(st match {
             case Some(s) if s.hasData && s.bucketed =>
               // incremental: only buckets holding updated keys rewrite
@@ -831,17 +834,13 @@ final class UpsertSink(spark: SparkSession, root: String,
                 val withData = t.filter(s.files.contains)
                 val merged =
                   if (withData.isEmpty) latest
-                  else scan(m.table, st, Some(withData))
-                    .join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
-                    .unionByName(latest)
+                  else upserted(scan(m.table, st, Some(withData)))
                 Some(s.copy(files = s.files -- t ++
                   writeFiles(m.table, merged, buckets, s"sink:swap:${m.table}")))
               }
             case Some(s) if s.hasData =>
               // one-time migration of a flat-layout table
-              val merged = withBucket(scan(m.table, st, None), m.pk, buckets)
-                .join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
-                .unionByName(latest)
+              val merged = upserted(withBucket(scan(m.table, st, None), m.pk, buckets))
               Some(s.copy(pk = m.pk, buckets = buckets,
                 files = writeFiles(m.table, merged, buckets, s"sink:swap:${m.table}")))
             case _ if !createEmpty && !touched.contains(m.table) => None

@@ -20,7 +20,7 @@ import graft.sink.UpsertSink
   * into the corpus table and [[SimOps.ivfPqIndexAdd]] encodes them
   * into the code lists against the stored quantizers (FAISS add-after-
   * train — rebuild on distribution drift is the owner's explicit call,
-  * atomic under the sink's shadow swap).
+  * atomic as one sink commit).
   *
   * Bootstrap: the first non-empty batch is admitted after in-batch
   * dedup and TRAINS the index (there is nothing to probe yet).
@@ -165,7 +165,7 @@ object SemanticAdmitPipeline {
             sink, nlist = nlist, m = m, ksub = ksub)
         } else
           // ONE mergeMany round-trip for corpus + code lists: one Spark
-          // job learns both tables' touched buckets, the shadow swaps
+          // job learns both tables' touched buckets, the bucket rewrites
           // run concurrently on disjoint dirs (the q64 fusion)
           sink.mergeMany(graft.sink.TableMerge(corpusTable, admitted,
             Seq(idCol), pkUnique = true)

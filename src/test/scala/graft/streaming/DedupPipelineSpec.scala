@@ -155,17 +155,11 @@ class DedupPipelineSpec extends SparkSpec {
     val batch1 = Seq((1L, base), (10L, unique)).toDF("doc_id", "text")
 
     // --- first-batch crash: bands table exists, corpus table does not
-    // (simulated by removing the committed corpus table)
+    // (simulated by dropping the committed corpus table)
     val root1 = Files.createTempDirectory("graft_crash1")
     val s1b = new UpsertSink(spark, root1.toString)
     DedupPipeline.admitNearDups(s1b, "Corpus", "CorpusBands", batch1)
-    def deleteTree(p: java.nio.file.Path): Unit = {
-      val walk = Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-        .forEach(f => Files.delete(f))
-      finally walk.close()
-    }
-    deleteTree(root1.resolve("Corpus"))
+    s1b.drop("Corpus")
     assert(s1b.exists("CorpusBands") && !s1b.exists("Corpus"))
     // replay: must not throw, must re-admit both docs
     DedupPipeline.admitNearDups(s1b, "Corpus", "CorpusBands", batch1)
