@@ -112,16 +112,22 @@ final case class TableCountRetract(table: String, decrements: DataFrame,
   * ([[CommitLog]], after Delta Lake's transaction log): every mutator
   * writes its parquet files under fresh names that never move, then
   * commits every table it changed in one `_log/<n>.json` entry. The
-  * entry records each table's live files by bucket, schema, merge key,
-  * bucket modulus, group id and applied admit/erasure ids, so:
-  *  - readers get their file list and schema from the head entry — no
+  * entry names each table's version; the version's immutable manifest
+  * (`table/_manifest-<version>.json`) records its live files by bucket,
+  * schema, merge key, bucket modulus, group id and applied admit/erasure
+  * ids, so:
+  *  - readers get their file list and schema from the head — no
   *    directory walk, no schema inference job;
   *  - a crash before the commit leaves only files no entry references,
-  *    which the next commit on that table deletes;
+  *    which the next commit on that table deletes, and a read of a table
+  *    the head does not list never looks at its directory;
   *  - a multi-table write (group build, group erase) lands whole or not
   *    at all, and an op id lands in the same entry as its effect;
   *  - a snapshot pins one entry, and the committing writer deletes only
-  *    files neither the head nor a pinned entry references.
+  *    files neither the head nor an entry pinned for the table
+  *    references.
+  * A root holding table data but no log (the sink's earlier layout)
+  * fails every write loudly instead of being vacuumed away.
   * The per-table writer lease ([[writerLocked]]) serializes writers;
   * readers take no lock. On Delta/Iceberg this whole class collapses to
   * `MERGE INTO` — the operator surface (`merge(df, table, pk)`) is
@@ -184,8 +190,12 @@ final class UpsertSink(spark: SparkSession, root: String,
   /** The table as the log head records it. */
   private def state(table: String): Option[TableState] = {
     requireValidTableName(table)
-    log.head().tables.get(table)
+    log.state(table)
   }
+
+  /** The head's states of `tables` — under their leases, stable. */
+  private def states(tables: Seq[String]): Map[String, TableState] =
+    tables.flatMap(t => state(t).map(t -> _)).toMap
 
   def exists(table: String): Boolean = state(table).nonEmpty
 
@@ -295,6 +305,7 @@ final class UpsertSink(spark: SparkSession, root: String,
           WriterLeaseMs / 3, WriterLeaseMs / 3,
           java.util.concurrent.TimeUnit.MILLISECONDS))
       }
+      requireLogLayout()
       body
     } finally {
       renewTask.foreach(_.cancel(false))
@@ -304,6 +315,29 @@ final class UpsertSink(spark: SparkSession, root: String,
       }
     }
   }
+
+  /** A root whose table dirs hold data but which has no commit log was
+    * written by the sink's earlier on-disk layout: no entry references
+    * its files, so the first commit's vacuum would delete them. Fail
+    * loudly instead. A new root starts its log here, before any file is
+    * written, so a crashed first write is never taken for such data.
+    */
+  private def requireLogLayout(): Unit =
+    if (!log.started) {
+      val legacy = if (!Files.isDirectory(Paths.get(root))) None else {
+        val s = Files.list(Paths.get(root))
+        try s.iterator().asScala
+          .filter(p => Files.isDirectory(p) && !p.getFileName.toString.startsWith("."))
+          .find(dataFiles(_).nonEmpty)
+        finally s.close()
+      }
+      legacy.foreach(p => throw new IllegalStateException(
+        s"sink root $root holds table data ($p) but no commit log (_log): it " +
+          "was written by an older sink layout, which this sink cannot " +
+          "read and whose files its first commit would delete — rebuild " +
+          "the store into a fresh root"))
+      log.start()
+    }
 
   private def acquireWriterLease(table: String): String = {
     // a brand-new store acquires its first lease before any write has
@@ -394,18 +428,18 @@ final class UpsertSink(spark: SparkSession, root: String,
     }
 
   /** Delete every file under the committed tables' dirs that neither
-    * `committed` nor an entry a pin may still read references — the
-    * files replaced by this commit and any left by a crashed write —
-    * then the emptied bucket dirs (and the table dir of a dropped
-    * table). With no pin open, the files on disk are exactly the live
-    * files. Runs under the tables' leases, so no write is in flight.
+    * `committed` nor an entry pinned for that table references (through
+    * their manifests) — the files replaced by this commit and any left by a
+    * crashed write — then the emptied bucket dirs (and the table dir of
+    * a dropped table). With no pin open, the files on disk are exactly
+    * the head's. Runs under the tables' leases, so no write is in flight.
     */
   private def vacuum(committed: Entry, tables: Iterable[String]): Unit = {
-    val kept = log.retained(committed)
+    val kept = log.retained(committed, tables)
     tables.foreach { t =>
       val dir = tableDir(t)
       if (Files.isDirectory(dir)) {
-        val live = kept.iterator.flatMap(_.tables.get(t)).flatMap(_.paths).toSet
+        val live = kept(t).flatMap(log.manifest(t, _)).iterator.flatMap(_.paths).toSet
         val s = Files.walk(dir)
         val all = try s.iterator().asScala.toSeq finally s.close()
         all.filter(Files.isRegularFile(_)).foreach { p =>
@@ -475,7 +509,9 @@ final class UpsertSink(spark: SparkSession, root: String,
     * exactly the files the log lists with the logged schema: Spark sees
     * a fixed listing, so nothing walks the directory or infers a schema.
     * Bucketed reads carry [[BucketCol]]. A missing or emptied table has
-    * no files to serve and fails as a direct parquet read of the path.
+    * no files to serve: it fails as a parquet read of a path that never
+    * exists, NOT of the table dir, which may still hold files no head
+    * references (a crashed first write, a pinned older generation).
     */
   private def scan(table: String, st: Option[TableState],
                    buckets: Option[Seq[Int]]): DataFrame = st match {
@@ -498,7 +534,7 @@ final class UpsertSink(spark: SparkSession, root: String,
           index.partitionSchema, s.schema, None, new ParquetFileFormat,
           Map.empty)(spark))
       }
-    case _ => spark.read.parquet(tableDir(table).toString)
+    case _ => spark.read.parquet(Paths.get(root, "_log", "missing", table).toString)
   }
 
   /** Current table contents, bucket layout hidden from callers. */
@@ -597,24 +633,21 @@ final class UpsertSink(spark: SparkSession, root: String,
     * [[eraseMany]]) appears all-or-nothing. Returned snapshots align
     * with `tables`; close every one (each holds its own pin).
     *
-    * Pin protocol: the pins carry the head id read BEFORE they were
-    * written, and the entry read is the head read AFTER. A vacuum that
-    * saw the pins keeps everything from that older id on; one that
-    * listed pins before they existed committed before the re-read, so
-    * the re-read head is at or past its commit. A stall anywhere in
-    * between can neither tear the group nor read a deleted file.
+    * Pin protocol ([[CommitLog.pinHead]]): the pins name one entry, and
+    * it is read only if it is still the head once the pins are
+    * published; otherwise the pins move to the new head. A stall
+    * anywhere in between can neither tear the group nor read a deleted
+    * file, and a pin never released holds one generation, not a range.
     */
   def snapshotMany(tables: Seq[String]): Seq[TableSnapshot] = {
     require(tables.nonEmpty && tables.distinct.size == tables.size,
       s"snapshotMany needs distinct tables, got [${tables.mkString(", ")}]")
     tables.foreach(requireValidTableName)
-    val pins = log.pin(tables)
+    val (head, pins) = log.pinHead(tables)(testHook("pinned"))
     try {
-      testHook("pinned")
-      val head = log.head().tables
       tables.zip(pins).map { case (t, pin) =>
-        val st = head.get(t).filter(_.hasData).getOrElse(
-          throw new IllegalArgumentException(
+        val st = head.tables.get(t).flatMap(log.manifest(t, _)).filter(_.hasData)
+          .getOrElse(throw new IllegalArgumentException(
             s"cannot snapshot missing or empty table $t"))
         new TableSnapshot(scan(t, Some(st), None).drop(BucketCol), pin, st.version)
       }
@@ -668,7 +701,7 @@ final class UpsertSink(spark: SparkSession, root: String,
   private def writeGroup(writes: Seq[TableWrite], drops: Seq[String],
                          group: Option[String]): Unit =
     withWriterLease(writes.map(_.table) ++ drops) {
-      val head = log.head().tables
+      val head = states(writes.map(_.table))
       val written = graft.ops.Par.map(writes) { w =>
         val pk = if (w.pk.nonEmpty) w.pk
           else head.get(w.table).map(_.pk)
@@ -799,7 +832,7 @@ final class UpsertSink(spark: SparkSession, root: String,
   private def applyMerges(merges: Seq[TableMerge], opId: Option[String],
                           createEmpty: Boolean, label: String): Unit =
     withWriterLease(merges.map(_.table)) {
-      val head = log.head().tables
+      val head = states(merges.map(_.table))
       // a table whose state already holds this op id applied it: skip
       val live = merges.filterNot(m => opId.exists(id => head.get(m.table).exists(_.admits(id))))
       // the schema contract for EVERY table before ANY table writes
@@ -972,7 +1005,7 @@ final class UpsertSink(spark: SparkSession, root: String,
       s"one erase per table: ${erases.map(_.table).mkString(", ")}")
     erases.foreach(d =>
       require(d.pk.nonEmpty, s"erase from ${d.table} needs a primary key"))
-    val head = log.head().tables
+    val head = states(erases.map(_.table))
     erases.foreach(d => require(head.contains(d.table),
       s"cannot erase from missing table ${d.table}"))
     val live = erases.filterNot(d => erasureId.exists(head(d.table).erasures))

@@ -8,7 +8,8 @@ import scala.jdk.CollectionConverters._
 import graft.SparkSpec
 
 /** The sink's commit log: pinned snapshots under stalls, exactly-once
-  * replay of crashed writes, and vacuum keeping exactly the live files.
+  * replay of crashed writes, vacuum keeping exactly the live files,
+  * reads that never serve unreferenced files, and bounded pins.
   */
 class CommitLogSpec extends SparkSpec {
 
@@ -21,19 +22,28 @@ class CommitLogSpec extends SparkSpec {
     finally sink.testHook = _ => ()
   }
 
+  /** Every file under the table dir but parquet's `.crc` checksums. */
   private def onDisk(root: Path, t: String): Set[String] = {
     val dir = root.resolve(t)
     if (!Files.exists(dir)) Set.empty
     else {
       val s = Files.walk(dir)
-      try s.iterator().asScala.filter(_.toString.endsWith(".parquet"))
+      try s.iterator().asScala
+        .filter(p => Files.isRegularFile(p) && !p.toString.endsWith(".crc"))
         .map(p => dir.relativize(p).toString).toSet
       finally s.close()
     }
   }
 
+  /** The head's files of `t`: its data files and its manifest. */
   private def referenced(root: Path, t: String): Set[String] =
-    new CommitLog(root).head().tables.get(t).fold(Set.empty[String])(_.paths.toSet)
+    new CommitLog(root).state(t).fold(Set.empty[String])(_.paths.toSet)
+
+  private def entries(root: Path): Seq[Path] = {
+    val s = Files.list(root.resolve("_log"))
+    try s.iterator().asScala.filter(_.getFileName.toString.endsWith(".json")).toSeq
+    finally s.close()
+  }
 
   test("snapshotMany stalled between pin and read while a group writer commits twice: one generation, no deleted file") {
     val root = Files.createTempDirectory("graft_log_pin")
@@ -159,5 +169,95 @@ class CommitLogSpec extends SparkSpec {
       Thread.sleep(500) // listener events are delivered asynchronously
       assert(jobs.get() == 0, s"${jobs.get()} jobs to build a read")
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("a crashed first write is neither read nor exists; a later write clears its files") {
+    val root = Files.createTempDirectory("graft_log_first")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 4)
+    crashBeforeCommit(sink)(sink.merge("t", (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id")))
+    crashBeforeCommit(sink)(sink.overwrite("u", Seq((1L, "a")).toDF("id", "v")))
+    for (t <- Seq("t", "u")) {
+      assert(onDisk(root, t).exists(_.endsWith(".parquet")), s"$t: the crash left no files to ignore")
+      assert(!sink.exists(t) && sink.version(t) == 0L && !sink.hasData(t))
+      intercept[org.apache.spark.sql.AnalysisException](sink.read(t).collect())
+      intercept[IllegalArgumentException](sink.snapshot(t))
+    }
+    sink.merge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
+    assert(sink.read("t").as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+    assert(onDisk(root, "t") == referenced(root, "t"))
+    sink.drop("u")
+    assert(!Files.exists(root.resolve("u")), "drop left a crashed write's files")
+  }
+
+  test("a table emptied or dropped under an open snapshot reads as empty or missing, not as the pinned files") {
+    val root = Files.createTempDirectory("graft_log_emptied")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 4)
+    for (t <- Seq("e", "d")) sink.merge(t, (1L to 10L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    val snaps = sink.snapshotMany(Seq("e", "d"))
+    try {
+      sink.delete("e", (1L to 10L).toDF("id"), Seq("id"))
+      sink.drop("d")
+      assert(sink.exists("e") && !sink.hasData("e") && !sink.exists("d"))
+      for (t <- Seq("e", "d")) {
+        assert(onDisk(root, t).exists(_.endsWith(".parquet")), s"$t: the pinned files are gone")
+        intercept[org.apache.spark.sql.AnalysisException](sink.read(t).collect())
+      }
+      assert(snaps.map(_.df.count()) == Seq(10L, 10L), "the snapshots lost their files")
+    } finally snaps.foreach(_.close())
+  }
+
+  test("a root of the earlier layout (data, no log) fails the first write and keeps its files") {
+    val root = Files.createTempDirectory("graft_log_legacy")
+    val old = root.resolve("t").resolve("__bucket=0")
+    (1L to 5L).map(i => (i, s"v$i")).toDF("id", "v").write.parquet(old.toString)
+    def files(): Set[String] = {
+      val s = Files.walk(root.resolve("t"))
+      try s.iterator().asScala.map(_.toString).toSet finally s.close()
+    }
+    val before = files()
+    val sink = new UpsertSink(spark, root.toString)
+    assert(!sink.exists("t"))
+    for (write <- Seq[() => Unit](
+        () => sink.merge("t", Seq((1L, "x")).toDF("id", "v"), Seq("id")),
+        () => sink.createIfMissing("t", Seq((1L, "x")).toDF("id", "v")),
+        () => sink.overwrite("other", Seq((1L, "x")).toDF("id", "v")),
+        () => sink.drop("t"))) {
+      val e = intercept[IllegalStateException](write())
+      assert(e.getMessage.contains("no commit log") && e.getMessage.contains(root.toString), e.getMessage)
+    }
+    assert(files() == before, "a write deleted or added files of the earlier layout")
+    assert(!Files.exists(root.resolve("_log")) && !Files.exists(root.resolve("other")))
+  }
+
+  test("a pin never released holds one entry and one generation of files, however many commits follow") {
+    val root = Files.createTempDirectory("graft_log_leak")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 2)
+    sink.merge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
+    sink.merge("u", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
+    val leaked = sink.snapshot("t") // never closed
+    val pinnedFiles = referenced(root, "t")
+    for (i <- 1 to 6) {
+      sink.merge("t", Seq((1L, s"t$i")).toDF("id", "v"), Seq("id"))
+      sink.merge("u", Seq((1L, s"u$i")).toDF("id", "v"), Seq("id"))
+    }
+    assert(entries(root).size == 2, s"entries kept: ${entries(root)}")
+    assert(onDisk(root, "t") == referenced(root, "t") ++ pinnedFiles)
+    assert(onDisk(root, "u") == referenced(root, "u"))
+    assert(leaked.df.as[(Long, String)].collect().toSeq == Seq((1L, "a")))
+  }
+
+  test("the log entry does not grow with applied op ids; each table's manifest holds its own") {
+    val root = Files.createTempDirectory("graft_log_size")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 2)
+    sink.merge("a", Seq((1L, 1L)).toDF("k", "cnt"), Seq("k"))
+    sink.merge("b", Seq((1L, 1L)).toDF("k", "cnt"), Seq("k"))
+    def headBytes(): Long = entries(root).map(Files.size).sum
+    val start = headBytes()
+    for (i <- 1 to 8)
+      sink.merge("a", Seq((1L, i.toLong)).toDF("k", "cnt"), Seq("k"), None, pkUnique = true,
+        opId = Some(s"admit-$i"))
+    assert(headBytes() == start, "op ids landed in the root entry")
+    assert((1 to 8).forall(i => sink.admitCommitted("a", s"admit-$i")))
+    assert(!sink.admitCommitted("b", "admit-1"))
   }
 }

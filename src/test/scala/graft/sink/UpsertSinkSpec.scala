@@ -40,9 +40,10 @@ class UpsertSinkSpec extends SparkSpec {
     }
   }
 
-  /** The files the log head references for a table. */
+  /** The data files the log head references for a table. */
   private def liveFiles(root: java.nio.file.Path, t: String): Set[String] =
-    new CommitLog(root).head().tables.get(t).fold(Set.empty[String])(_.paths.toSet)
+    new CommitLog(root).state(t).fold(Set.empty[String])(
+      _.paths.filter(_.endsWith(".parquet")).toSet)
 
   test("merge creates the table when missing") {
     val sink = freshSink()
@@ -598,7 +599,9 @@ class UpsertSinkSpec extends SparkSpec {
     val root = JFiles.createTempDirectory("graft_sink_orph")
     val sink = new UpsertSink(spark, root.toString)
     // a dead writer's data file lingers in a bucket dir of a table that
-    // has no committed state at all
+    // has no committed state at all (the root's log exists: a writer
+    // starts it before writing any file)
+    sink.merge("other", Seq((1L, "a")).toDF("id", "v"), Seq("id"))
     val junk = root.resolve("t").resolve("__bucket=3").resolve("junk.parquet")
     JFiles.createDirectories(junk.getParent)
     JFiles.write(junk, Array[Byte](1))
@@ -834,7 +837,7 @@ class UpsertSinkSpec extends SparkSpec {
     @volatile var stop = false
     val watcher = new Thread(() => while (!stop) {
       try {
-        val st = log.head().tables("t")
+        val st = log.state("t").get
         if (st.files.size != 16) torn.add(s"${st.files.size} buckets")
         seen.add(st.version)
       } catch { case e: Throwable => torn.add(e.toString) }
