@@ -117,6 +117,11 @@ object ConfigLoader {
     val schema = SchemaMap(entities)
     val issues = schema.validate()
     require(issues.isEmpty, s"invalid entity config: ${issues.mkString("; ")}")
+    // an empty page cannot advance a keyset cursor, an empty chunk merges
+    // nothing: both sizes must be positive
+    val sizes = ("database.batchSize" -> db.batchSize) +: providers.values.toSeq
+      .map(p => s"subgraphProviders.${p.name}.maxRowsPerRequest" -> p.maxRowsPerRequest)
+    sizes.foreach { case (key, v) => require(v > 0, s"$key must be positive, got $v") }
     GraftConfig(db, chain, providers, schema)
   }
 

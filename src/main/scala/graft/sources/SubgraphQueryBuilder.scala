@@ -25,6 +25,9 @@ object SubgraphQueryBuilder {
   /** Plural camel-case result key for entity queries. */
   def resultKey(entityName: String): String = toCamelCase(pluralize(entityName))
 
+  /** The `resultKey_index` alias of a batch document's index-th query. */
+  def alias(entityName: String, index: Int): String = s"${resultKey(entityName)}_$index"
+
   /** Typed literal serialization (formatQueryValue, ts:131-169): strings
     * quoted, numbers/bigints/booleans bare, arrays bracketed, nested maps
     * braced (for operators like `_change_block: {number_gte: N}`), nulls
@@ -98,8 +101,8 @@ object SubgraphQueryBuilder {
     * (src/context/subgraphProvider.ts:208-231).
     */
   def entityQuery(spec: QuerySpec, index: Int): String = {
-    val key = resultKey(spec.entity.name)
-    s"${key}_$index: $key${arguments(spec)} { ${fieldList(spec.entity)} }"
+    s"${alias(spec.entity.name, index)}: ${resultKey(spec.entity.name)}" +
+      s"${arguments(spec)} { ${fieldList(spec.entity)} }"
   }
 
   /** The `_meta` block carrying the source's block coordinates

@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.concurrent.atomic.AtomicLong
 
-import scala.annotation.tailrec
 import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
@@ -12,6 +11,7 @@ import org.apache.spark.sql.types._
 import graft.model.{EntityDef, ProviderConfig, SchemaMap}
 import graft.sink.Retry
 import graft.sources.SubgraphQueryBuilder.QuerySpec
+import graft.sources.SubgraphSource.Record
 
 /** HTTP transport boundary — pluggable so the connector is fully testable
   * offline (the reference mock-patches global.fetch the same way,
@@ -46,10 +46,10 @@ final case class BatchResult(
 /** Subgraph scan connector: merged batch documents, alias demux, keyset
   * pagination, graceful degradation (SURVEY §2.1 S1, §2.6 O2, §2.11 R2).
   *
-  * The fetch loop runs on the driver (page-sized units, like the
-  * reference); rows land in a DataFrame for everything downstream. A
-  * DataSource V2 wrapper can layer on top — the pushdown surface
-  * (filters/columns/limit) is already explicit in [[QuerySpec]].
+  * Every read — [[fetchAll]], [[graft.sync.Syncer]]'s chunked merges and
+  * the DataSource V2 reader ([[SubgraphTableProvider]]) — consumes the one
+  * lazy keyset stream [[pages]], page-sized units on the driver like the
+  * reference; rows land in a DataFrame for everything downstream.
   */
 final class SubgraphSource(provider: ProviderConfig, transport: Transport,
                            maxRetries: Int = 3, retryDelayMs: Long = 200,
@@ -119,9 +119,9 @@ final class SubgraphSource(provider: ProviderConfig, transport: Transport,
       val individual = specs.zipWithIndex.map { case (spec, i) =>
         val res = executeCounted(Seq(spec), withMetadata = false,
           countQueries = false)
-        val key0 = s"${SubgraphQueryBuilder.resultKey(spec.entity.name)}_0"
-        val keyI = s"${SubgraphQueryBuilder.resultKey(spec.entity.name)}_$i"
-        (keyI, res.records.getOrElse(key0, Seq.empty), res.failed)
+        (SubgraphQueryBuilder.alias(spec.entity.name, i),
+          res.records.getOrElse(SubgraphQueryBuilder.alias(spec.entity.name, 0), Seq.empty),
+          res.failed)
       }
       BatchResult(
         individual.collect { case (k, recs, false) => k -> recs }.toMap,
@@ -153,164 +153,127 @@ final class SubgraphSource(provider: ProviderConfig, transport: Transport,
     BatchResult(records, meta)
   }
 
-  private def jsonArrayToMaps(n: JsonNode): Seq[Map[String, Any]] =
+  private def jsonArrayToMaps(n: JsonNode): Seq[Record] =
     if (n == null || !n.isArray) Seq.empty
     else n.elements().asScala.map(jsonToMap).toSeq
 
-  private def jsonToMap(n: JsonNode): Map[String, Any] =
-    n.properties().asScala.map { e =>
-      e.getKey -> (e.getValue match {
-        case v if v.isNull => null
-        case v if v.isTextual => v.asText
-        case v if v.isBoolean => v.asBoolean
-        case v if v.isIntegralNumber => BigInt(v.asText)
-        case v if v.isNumber => BigDecimal(v.asText)
-        case v if v.isArray => v.elements().asScala.map {
-          case x if x.isTextual => x.asText
-          case x if x.isBoolean => x.asBoolean
-          case x if x.isIntegralNumber => BigInt(x.asText)
-          case x if x.isNumber => BigDecimal(x.asText)
-          case x => x.asText
-        }.toSeq
-        case v if v.isObject => jsonToMap(v)
-      })
-    }.toMap
+  private def jsonToMap(n: JsonNode): Record =
+    n.properties().asScala.map(e => e.getKey -> jsonValue(e.getValue)).toMap
 
-  /** Keyset start cursor from a caller-supplied `id_gt` (e.g. a pushed
-    * `id > x` filter). Binary ids encode to the subgraph's canonical
-    * lowercase 0x-hex string; any other non-string cursor is a caller bug
-    * and fails loudly — silently restarting from zero would return rows
-    * the pushed filter promised to exclude. None = no cursor: the first
-    * page carries NO id_gt at all (a synthetic "0x00" floor would
-    * silently exclude rows whose id sorts at or below it, e.g. the
-    * common singleton ids "0" or "").
+  private def jsonValue(v: JsonNode): Any = v match {
+    case v if v.isNull => null
+    case v if v.isTextual => v.asText
+    case v if v.isBoolean => v.asBoolean
+    case v if v.isIntegralNumber => BigInt(v.asText)
+    case v if v.isNumber => BigDecimal(v.asText)
+    case v if v.isArray => v.elements().asScala.map(jsonValue).toSeq
+    case v if v.isObject => jsonToMap(v)
+    case v => v.asText
+  }
+
+  /** Keyset scan of one entity: ordered by id, `first: maxRowsPerRequest`
+    * (subgraphSyncer.ts:88-133), starting after a caller's `id_gt` (binary
+    * ids as canonical 0x-hex; any other non-string cursor fails loudly
+    * rather than restart from zero). No `id_gt`, no cursor: a synthetic
+    * "0x00" floor would drop ids like "0" or "".
     */
-  private def startCursorOf(where: Map[String, Any]): Option[String] =
-    where.get("id_gt") match {
-      case Some(s: String) => Some(s)
-      case Some(b: Array[Byte]) => Some(SubgraphSource.bytesToHex(b))
-      case Some(other) => throw new IllegalArgumentException(
+  def scanSpec(entity: EntityDef, where: Map[String, Any] = Map.empty): QuerySpec = {
+    val cursor = where.get("id_gt").map {
+      case s: String => s
+      case b: Array[Byte] => SubgraphSource.bytesToHex(b)
+      case other => throw new IllegalArgumentException(
         s"id_gt cursor must be a hex string, got ${other.getClass.getName}: $other")
-      case None => None
     }
+    QuerySpec(entity, where = where ++ cursor.map("id_gt" -> _),
+      orderBy = Some("id"), first = Some(provider.maxRowsPerRequest))
+  }
 
   /** One page with retry/backoff (R1): a failed request throws after
     * `maxRetries` so an error mid-pagination can never masquerade as a
     * short final page.
     */
-  private def fetchPage(spec: QuerySpec, key: String): Seq[Map[String, Any]] =
+  private def fetchPage(spec: QuerySpec): Seq[Record] =
     Retry.withBackoff(maxRetries, retryDelayMs, sleep) { () =>
       val res = execute(Seq(spec), withMetadata = false)
       if (res.failed) throw new java.io.IOException(
         s"subgraph fetch failed for ${spec.entity.name} after retries")
-      res.records.getOrElse(key, Seq.empty)
+      res.records.getOrElse(SubgraphQueryBuilder.alias(spec.entity.name, 0), Seq.empty)
     }
 
-  /** Single-page fetch with retry: `first: n` pushed (O1); failure throws
-    * instead of degrading to empty (used by the DSv2 limit-pushdown path).
+  /** `spec` re-issued after `page`'s last id. A non-advancing cursor or a
+    * non-string id THROWS: ending here would commit a truncated prefix.
     */
-  def fetchFirstPage(entity: EntityDef, where: Map[String, Any],
-                     n: Int): Seq[Map[String, Any]] = {
-    val spec = QuerySpec(entity, where = where, orderBy = Some("id"),
-      first = Some(n))
-    fetchPage(spec, s"${SubgraphQueryBuilder.resultKey(entity.name)}_0")
-  }
-
-  /** One arbitrary-spec page with retry (e.g. a pushed TopN's
-    * orderBy/orderDirection/first); failure throws.
-    */
-  def fetchPageSpec(spec: QuerySpec): Seq[Map[String, Any]] =
-    fetchPage(spec, s"${SubgraphQueryBuilder.resultKey(spec.entity.name)}_0")
-
-  @tailrec
-  private def pageLoop(spec: QuerySpec, key: String, cursor: Option[String],
-                       acc: Vector[Map[String, Any]]): Vector[Map[String, Any]] = {
-    val page = fetchPage(spec, key)
-    val all = acc ++ page
-    if (page.size < provider.maxRowsPerRequest) all
-    else page.last.get("id") match {
-      case Some(last: String) if cursor.forall(last > _) =>
-        pageLoop(SubgraphQueryBuilder.nextPage(spec, last), key, Some(last), all)
-      // a non-advancing cursor (server collation disagreeing with the
-      // cursor comparison) or a non-string id (keyset needs the string
-      // form) must THROW: returning `all` here would silently commit a
-      // truncated prefix as a complete scan
+  private def continuation(spec: QuerySpec, page: Seq[Record]): QuerySpec = {
+    val cursor = spec.where.get("id_gt")
+    page.last.get("id") match {
+      case Some(last: String) if cursor.forall(c => last > c.toString) =>
+        SubgraphQueryBuilder.nextPage(spec, last)
       case Some(last: String) => throw new IllegalStateException(
         s"keyset cursor did not advance for ${spec.entity.name}: page " +
-          s"ended at '$last' after cursor '${cursor.getOrElse("")}' — " +
+          s"ended at '$last' after cursor '${cursor.get}' — " +
           "server ordering disagrees with the cursor comparison")
       case other => throw new IllegalStateException(
-        s"keyset pagination needs a string id for ${spec.entity.name}; " +
-          s"got $other")
+        s"keyset pagination needs a string id for ${spec.entity.name}; got $other")
     }
   }
 
-  /** Full keyset-paginated scan of one entity: `first: maxRows` ordered by
-    * id; while a page comes back full, re-issue with `id_gt: lastId`
-    * (subgraphSyncer.ts:88-133). Accumulates pages (O3 union-all); a
-    * persistent transport/GraphQL failure mid-walk throws rather than
-    * committing the truncated prefix as a complete scan.
+  /** The keyset page stream behind every read. Lazily yields `spec`'s
+    * pages, the first from `firstPage` if a batched document carried it;
+    * after a full page the next pull re-issues the spec with `id_gt:
+    * lastId`. A page shorter than `spec.first` ends the scan; a spec not in
+    * ascending id order (a pushed TopN) is one page. A consumer that stops
+    * after n rows (`flatten.take(n)`) requests nothing past its n-th row.
     */
-  def fetchAll(entity: EntityDef,
-               where: Map[String, Any] = Map.empty): Seq[Map[String, Any]] = {
-    val cursor = startCursorOf(where)
-    val baseWhere = cursor match {
-      case Some(c) => where + ("id_gt" -> c)
-      case None => where - "id_gt"
-    }
-    val base = QuerySpec(entity, where = baseWhere,
-      orderBy = Some("id"), first = Some(provider.maxRowsPerRequest))
-    pageLoop(base, s"${SubgraphQueryBuilder.resultKey(entity.name)}_0",
-      cursor, Vector.empty)
-  }
-
-  /** Batched multi-entity scan: the first page of EVERY entity travels in
-    * ONE merged document (the reference's cross-entity batching win —
-    * subgraphProvider.ts:208-231, 5 queries -> 1 request), with
-    * batch-to-individual fallback (R3) keyed on the error signal. Entities
-    * whose first page came back full continue with the per-entity keyset
-    * walk; entities that still fail after fallback are retried with
-    * backoff and throw on persistent failure.
-    */
-  def fetchAllBatched(entities: Seq[(EntityDef, Map[String, Any])])
-      : Map[String, Seq[Map[String, Any]]] = {
-    if (entities.isEmpty) return Map.empty
-    val pageSize = provider.maxRowsPerRequest
-    val withCursors = entities.map { case (e, where) =>
-      (e, where, startCursorOf(where))
-    }
-    val specs = withCursors.map { case (e, where, cursor) =>
-      val baseWhere = cursor match {
-        case Some(c) => where + ("id_gt" -> c)
-        case None => where - "id_gt"
+  def pages(spec: QuerySpec,
+            firstPage: Option[Seq[Record]] = None): Iterator[Seq[Record]] =
+    new Iterator[Seq[Record]] {
+      private var current = spec
+      private var prefetched = firstPage
+      private var served: Option[Seq[Record]] = None // the page yielded last
+      def hasNext: Boolean = served.forall(p => spec.first.exists(p.size >= _) &&
+        spec.orderBy.contains("id") && !spec.orderDirection.contains("desc"))
+      def next(): Seq[Record] = {
+        if (!hasNext) throw new NoSuchElementException("keyset scan ended")
+        served.foreach(p => current = continuation(current, p))
+        served = Some(prefetched.getOrElse(fetchPage(current)))
+        prefetched = None
+        served.get
       }
-      QuerySpec(e, where = baseWhere,
-        orderBy = Some("id"), first = Some(pageSize))
     }
-    val first = executeWithFallback(specs, withMetadata = false)
-    specs.zip(withCursors).zipWithIndex.map { case ((spec, (e, _, cursor)), i) =>
-      val keyI = s"${SubgraphQueryBuilder.resultKey(e.name)}_$i"
-      val key0 = s"${SubgraphQueryBuilder.resultKey(e.name)}_0"
-      val page: Seq[Map[String, Any]] =
-        if (first.failed || first.failedKeys.contains(keyI)) fetchPage(spec, key0)
-        else first.records.getOrElse(keyI, Seq.empty)
-      val all =
-        if (page.size < pageSize) page.toVector
-        else page.last.get("id") match {
-          case Some(last: String) if cursor.forall(last > _) =>
-            pageLoop(SubgraphQueryBuilder.nextPage(spec, last), key0,
-              Some(last), page.toVector)
-          case other => throw new IllegalStateException(
-            s"keyset continuation for ${e.name}: page ended at $other " +
-              s"after cursor '${cursor.getOrElse("")}' — refusing to " +
-              "commit a truncated scan")
-        }
-      e.name -> (all: Seq[Map[String, Any]])
-    }.toMap
-  }
+
+  /** Page streams whose first pages travel in ONE merged document
+    * (subgraphProvider.ts:208-231, 5 queries -> 1 request) with
+    * batch-to-individual fallback (R3); a first page that still failed is
+    * re-fetched with retry/backoff when pulled.
+    */
+  def batchedPages(specs: Seq[QuerySpec]): Seq[Iterator[Seq[Record]]] =
+    if (specs.isEmpty) Seq.empty
+    else {
+      val first = executeWithFallback(specs, withMetadata = false)
+      specs.zipWithIndex.map { case (spec, i) =>
+        val key = SubgraphQueryBuilder.alias(spec.entity.name, i)
+        pages(spec, Option.unless(first.failedKeys(key))(
+          first.records.getOrElse(key, Seq.empty)))
+      }
+    }
+
+  /** Full keyset scan of one entity, materialized (O3 union-all). */
+  def fetchAll(entity: EntityDef,
+               where: Map[String, Any] = Map.empty): Seq[Record] =
+    pages(scanSpec(entity, where)).flatten.toVector
+
+  /** Full keyset scans of several entities, first pages batched. */
+  def fetchAllBatched(entities: Seq[(EntityDef, Map[String, Any])])
+      : Map[String, Seq[Record]] =
+    entities.map(_._1.name)
+      .zip(batchedPages(entities.map { case (e, w) => scanSpec(e, w) }))
+      .map { case (name, p) => name -> p.flatten.toVector }.toMap
 }
 
 object SubgraphSource {
+
+  /** One wire record: field -> decoded JSON value (FKs as nested maps). */
+  type Record = Map[String, Any]
 
   /** FK flatten + projection: nested `{id}` objects reduce to their scalar
     * id, fields not in the entity's column map are dropped
@@ -318,9 +281,9 @@ object SubgraphSource {
     * StructType from [[SchemaMap.structTypeOf]].
     */
   def toDataFrame(spark: SparkSession, schema: SchemaMap, entity: EntityDef,
-                  records: Seq[Map[String, Any]]): DataFrame = {
+                  records: Seq[Record]): DataFrame = {
     val struct = schema.structTypeOf(entity.name)
-    spark.createDataFrame(toRows(records, struct).asJava, struct)
+    spark.createDataFrame(records.map(toRow(_, struct)).asJava, struct)
   }
 
   /** Row materialization against an arbitrary target struct (used by both
@@ -328,18 +291,16 @@ object SubgraphSource {
     * matched by name, FK objects flatten to their id, wire values coerce
     * to the field's Spark type.
     */
-  def toRows(records: Seq[Map[String, Any]], struct: StructType): Seq[Row] =
-    records.map { rec =>
-      Row.fromSeq(struct.fields.map { f =>
-        val raw = rec.get(f.name) match {
-          case Some(m: Map[_, _]) => // FK nested object -> id
-            m.asInstanceOf[Map[String, Any]].get("id").orNull
-          case Some(v) => v
-          case None => null
-        }
-        coerce(raw, f.dataType)
-      }.toSeq)
-    }
+  def toRow(rec: Record, struct: StructType): Row =
+    Row.fromSeq(struct.fields.map { f =>
+      val raw = rec.get(f.name) match {
+        case Some(m: Map[_, _]) => // FK nested object -> id
+          m.asInstanceOf[Record].get("id").orNull
+        case Some(v) => v
+        case None => null
+      }
+      coerce(raw, f.dataType)
+    }.toSeq)
 
   /** Wire-value coercion per target Spark type (F6: JSON decode + bigint
     * coercion, subgraphProvider.ts:192).

@@ -234,11 +234,12 @@ final class SubgraphScanBuilder(configKey: String,
   }
 }
 
-/** Single-partition scan: the subgraph endpoint is one upstream server, so
-  * the paginated fetch is inherently sequential on the cursor (the
-  * reference's loop, subgraphSyncer.ts:88-133). Parallelism at 100 TB
-  * comes from many entities/providers scanning concurrently, not from
-  * splitting one keyset walk.
+/** Single-partition scan over [[SubgraphSource.pages]]: the subgraph
+  * endpoint is one upstream server, so the paginated fetch is inherently
+  * sequential on the cursor (the reference's loop,
+  * subgraphSyncer.ts:88-133). Parallelism at 100 TB comes from many
+  * entities/providers scanning concurrently, not from splitting one
+  * keyset walk.
   */
 final class SubgraphScan(configKey: String, entity: EntityDef,
                          schema: StructType, where: Map[String, Any],
@@ -252,45 +253,26 @@ final class SubgraphScan(configKey: String, entity: EntityDef,
     Array(new InputPartition {})
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    // the reader runs on an executor; capture only what it needs
-    val entityDef = entity
-    val required = schema.fieldNames.toSet
-    val key = configKey
-    val w = where
-    val lim = limit
-    val top = topN
-    val readerSchema = schema
+    // the reader runs on an executor; capture only what it needs. Fetch
+    // the required columns PLUS the primary key — keyset pagination needs
+    // the id cursor even when the query prunes it
+    val spec = QuerySpec(entity.copy(columns = entity.columns.filter(c =>
+        schema.fieldNames.contains(c.name) || entity.primaryKey.contains(c.name))),
+      where = where, orderBy = Some(topN.fold("id")(_._1)),
+      orderDirection = topN.map(_._2))
+    val (key, readerSchema, n) = (configKey, schema, topN.map(_._3).orElse(limit))
     (_: InputPartition) => new PartitionReader[InternalRow] {
       // resolved where the reader runs — never serialized (see registry doc)
       private val b = SubgraphTableProvider.registry(key)
-      private val provider = b.provider
-      private val source = new SubgraphSource(provider, b.transport)
-      // fetch the required columns PLUS the primary key — keyset
-      // pagination needs the id cursor even when the query prunes it
-      private val fetchEntity = entityDef.copy(columns = entityDef.columns
-        .filter(c => required.contains(c.name) ||
-          entityDef.primaryKey.contains(c.name)))
-      private val rows: Iterator[InternalRow] = {
-        val fetched = (top, lim) match {
-          case (Some((field, dir, n)), _) =>
-            // pushed TopN: the server sorts and truncates — one request,
-            // no full-entity fetch, no local sort of the whole table
-            source.fetchPageSpec(QuerySpec(fetchEntity, where = w,
-              orderBy = Some(field), orderDirection = Some(dir),
-              first = Some(n)))
-          case (None, Some(n)) if n <= provider.maxRowsPerRequest =>
-            // limit fits one page: push `first: n` (O1 limit pushdown);
-            // retries with backoff and throws on persistent failure so a
-            // failed request can't read as an empty table
-            source.fetchFirstPage(fetchEntity, w, n)
-          case _ =>
-            val all = source.fetchAll(fetchEntity, w)
-            lim.map(all.take).getOrElse(all)
-        }
-        val converter = CatalystTypeConverters.createToCatalystConverter(readerSchema)
-        SubgraphSource.toRows(fetched, readerSchema).iterator
-          .map(r => converter(r).asInstanceOf[InternalRow])
-      }
+      private val page = b.provider.maxRowsPerRequest
+      // a pushed TopN or limit of n rows pulls no page past the n-th row
+      // (the server sorts and truncates a TopN in one request); a full
+      // scan streams page by page without holding the entity
+      private val records = new SubgraphSource(b.provider, b.transport)
+        .pages(spec.copy(first = Some(n.fold(page)(math.min(_, page))))).flatten
+      private val converter = CatalystTypeConverters.createToCatalystConverter(readerSchema)
+      private val rows = n.fold(records)(records.take).map(r =>
+        converter(SubgraphSource.toRow(r, readerSchema)).asInstanceOf[InternalRow])
       override def next(): Boolean = rows.hasNext
       override def get(): InternalRow = rows.next()
       override def close(): Unit = ()

@@ -5,22 +5,29 @@ import org.apache.spark.sql.SparkSession
 import graft.model.{EntityDef, GraftConfig}
 import graft.sink.{Retry, UpsertSink}
 import graft.sources.{SubgraphSource, Transport}
+import graft.sources.SubgraphSource.Record
 
-/** Batch ETL driver — the reference's initial-sync lifecycle (SURVEY
-  * §3.1, src/app/main.ts:9-34 + src/handlers/subgraphSyncer.ts):
+/** Batch ETL driver — the reference's sync lifecycle (SURVEY §3.1,
+  * src/app/main.ts:9-34 + src/handlers/subgraphSyncer.ts). `syncAll`,
+  * `syncEntity` and `syncChanged` run one fetch-and-merge path:
   *
-  *  1. entities are grouped by subgraph provider (G1) — one connector per
-  *     source;
-  *  2. each entity is scanned with batched, keyset-paginated GraphQL
-  *     (S1/O2) — pagination lives inside the connector, invisible here;
-  *  3. records flatten FK objects and coerce wire types into the resolved
-  *     StructType (P2/F6);
-  *  4. the sink merges by primary key with retry/backoff (K1/R1) —
-  *     re-running a sync is idempotent.
+  *  1. every entity is checked before any request: its FK columns must
+  *     round-trip the GraphQL wire (`wireIssues`) and its provider must
+  *     exist;
+  *  2. entities are grouped by subgraph provider (G1) — one connector per
+  *     source — and each group's first pages travel in ONE batched
+  *     request (G2, with batch-to-individual fallback R3);
+  *  3. each entity's keyset page stream (S1/O2) flattens FK objects and
+  *     coerces wire types into the resolved StructType (P2/F6), and is
+  *     merged by primary key with retry/backoff (K1/R1) in
+  *     `database.batchSize`-row chunks as its pages arrive
+  *     (dbUpsert.ts:66-84) — driver memory holds one chunk plus the
+  *     group's unread first pages, not an entity or a provider.
   *
-  * `LastProcessedBlock` is excluded like the reference excludes it from
-  * entity sync (main.ts:23): progress bookkeeping belongs to the
-  * streaming layer, not the entity scan.
+  * A failure mid-scan leaves the chunks merged before it in place;
+  * re-running a sync is idempotent. `LastProcessedBlock` is excluded like
+  * the reference excludes it from entity sync (main.ts:23): progress
+  * bookkeeping belongs to the streaming layer, not the entity scan.
   */
 final class Syncer(spark: SparkSession, config: GraftConfig,
                    transport: Transport, sink: UpsertSink) {
@@ -40,60 +47,47 @@ final class Syncer(spark: SparkSession, config: GraftConfig,
         s"${entity.name}: unknown provider ${entity.subgraphProvider}"))
   }
 
-  /** Merge fetched records into the sink; returns rows upserted. */
-  private def upsert(entity: EntityDef, records: Seq[Map[String, Any]]): Long =
-    if (records.isEmpty) 0L
-    else {
-      val df = SubgraphSource.toDataFrame(spark, config.schema, entity, records)
+  /** Merge one entity's page stream in `database.batchSize`-row chunks as
+    * the pages arrive; returns rows upserted.
+    */
+  private def merge(entity: EntityDef, pages: Iterator[Seq[Record]]): Long =
+    pages.flatten.grouped(config.database.batchSize).map { chunk =>
+      val df = SubgraphSource.toDataFrame(spark, config.schema, entity, chunk)
       Retry.withBackoff(config.database.maxRetries,
         config.database.initialRetryDelay) { () =>
         sink.merge(entity.name, df, entity.primaryKey)
       }
-      records.size.toLong
-    }
+      chunk.size.toLong
+    }.sum
 
-  /** Sync one entity end-to-end; returns rows upserted. */
-  def syncEntity(entity: EntityDef,
-                 where: Map[String, Any] = Map.empty): Long =
-    upsert(entity, sourceFor(entity).fetchAll(entity, where))
-
-  /** Full initial sync: every entity, grouped by provider (G1), with each
-    * provider's first pages batched into ONE request (G2 — the
-    * reference's cross-entity batching, 80% request reduction) and
-    * batch-to-individual fallback isolation (R3).
-    *
-    * Providers are independent upstream endpoints, so their paginated
-    * fetches run CONCURRENTLY (up to `parallelism` driver threads — the
-    * keyset walk is I/O-bound wall-clock that need not serialize); each
-    * thread submits its merge jobs to the shared SparkSession, which is
-    * thread-safe, and the merged tables are disjoint across providers so
-    * no two threads touch the same sink path. [[graft.ops.Par]] waits
-    * for every provider before rethrowing the first failure, so no
-    * provider sync outlives the call, and its per-call pool threads
-    * inherit the caller's SparkContext local properties.
+  /** The fetch-and-merge path; returns rows upserted per entity. Provider
+    * groups touch disjoint tables, so up to `parallelism` of them run at
+    * once ([[graft.ops.Par]]: waits for all, rethrows the first failure,
+    * pool threads inherit the caller's SparkContext local properties).
     */
-  def syncAll(parallelism: Int = 4): Map[String, Long] = {
-    val groups = syncableEntities
-      .groupBy(_.subgraphProvider).toSeq // G1: one source per provider
-    graft.ops.Par.map(groups, parallelism) { case (providerName, entities) =>
-      syncProvider(providerName, entities)
+  private def sync(scans: Seq[(EntityDef, Map[String, Any])],
+                   parallelism: Int = 1): Map[String, Long] = {
+    val byProvider = scans.groupBy { case (e, _) => sourceFor(e) }.toSeq
+    graft.ops.Par.map(byProvider, parallelism) { case (source, group) =>
+      val streams = source.batchedPages(group.map { case (e, w) => source.scanSpec(e, w) })
+      group.zip(streams).map { case ((e, _), pages) => e.name -> merge(e, pages) }
     }.flatten.toMap
   }
 
-  private def syncProvider(providerName: String,
-                           entities: Seq[EntityDef]): Seq[(String, Long)] = {
-    val fetched = sources(providerName)
-      .fetchAllBatched(entities.map(e => e -> Map.empty[String, Any]))
-    entities.map(e => e.name -> upsert(e, fetched.getOrElse(e.name, Seq.empty)))
-  }
+  /** Sync one entity end-to-end; returns rows upserted. */
+  def syncEntity(entity: EntityDef, where: Map[String, Any] = Map.empty): Long =
+    sync(Seq(entity -> where))(entity.name)
 
-  /** Selective re-sync of the entities a CDC change log named (T4). */
+  /** Full initial sync of every syncable entity, up to `parallelism`
+    * providers at once.
+    */
+  def syncAll(parallelism: Int = 4): Map[String, Long] =
+    sync(syncableEntities.map(_ -> Map.empty[String, Any]), parallelism)
+
+  /** Selective re-sync of the entities a CDC change log named (T4), with
+    * the incremental predicate (P4): only rows changed since the block.
+    */
   def syncChanged(entityNames: Set[String], fromBlock: BigInt): Map[String, Long] =
-    syncableEntities.filter(e => entityNames.contains(e.name))
-      .map { e =>
-        // incremental predicate (P4): only rows changed since the block
-        val where: Map[String, Any] =
-          Map("_change_block" -> Map("number_gte" -> fromBlock))
-        e.name -> syncEntity(e, where)
-      }.toMap
+    sync(syncableEntities.filter(e => entityNames.contains(e.name))
+      .map(_ -> Map[String, Any]("_change_block" -> Map("number_gte" -> fromBlock))))
 }

@@ -145,4 +145,18 @@ class ModelSpec extends AnyFunSuite {
         |    columns: [{ name: ref, type: Missing }, { name: id, type: String }]
         |""".stripMargin))
   }
+
+  test("ConfigLoader rejects non-positive batch and page sizes, naming the key") {
+    def load(batch: Int, page: Int) = ConfigLoader.load(
+      s"""database: { batchSize: $batch }
+         |subgraphProviders:
+         |  main: { url: "http://x", maxRowsPerRequest: $page, id: s, apiKey: k }
+         |""".stripMargin)
+    assert(load(1, 1).database.batchSize == 1)
+    val batch = intercept[IllegalArgumentException](load(0, 10))
+    assert(batch.getMessage.contains("database.batchSize must be positive, got 0"))
+    val page = intercept[IllegalArgumentException](load(10, -1))
+    assert(page.getMessage.contains(
+      "subgraphProviders.main.maxRowsPerRequest must be positive, got -1"))
+  }
 }

@@ -104,6 +104,13 @@ class SubgraphTableProviderSpec extends SparkSpec {
     assert(g.requests.size == 1) // no pagination for a pushed limit
   }
 
+  test("a limit beyond one page stops paging after n rows") {
+    val g = new MiniGraph
+    register("t6b", g)
+    assert(read("t6b").limit(15).count() == 15)
+    assert(g.requests.size == 2, s"pageSize 10, limit 15: ${g.requests.size} requests")
+  }
+
   test("TopN pushdown: orderBy+limit becomes one orderBy/orderDirection/first request") {
     val g = new MiniGraph
     register("t8", g)
