@@ -1499,8 +1499,9 @@ private[graft] trait CatalogStores extends CatalogShared {
         "group) through its full lifecycle: built from the archive " +
         "(tokenize ONCE — q87 re-tokenizes the corpus on every query, " +
         "the wrong amortization for serving), a day-1 batch ADMITTED " +
-        "(PK-merged postings + lengths, touched buckets only; the " +
-        "(count, token-sum) stats fold rides the admit journal), " +
+        "(postings + lengths PK-merged, the (count, token-sum) " +
+        "count-merged into the stats row, one commit under the admit " +
+        "id), " +
         "subjects ERASED (posting keys re-derived from their text — " +
         "no store scan — plus their length rows plus the exact stats " +
         "decrement, one erasure group: a search can never see a doc " +
@@ -1782,8 +1783,8 @@ private[graft] trait CatalogStores extends CatalogShared {
         "its checkpoint-stable batchId): the archive builds the BM25 " +
         "inverted index, two micro-batches of new documents admit " +
         "under journaled ids <prefix>-b0/-b1 (touched-bucket posting/" +
-        "length merges + the 1-row stats fold riding the admit " +
-        "journal), and batch 0 is then RE-DELIVERED under its own id — " +
+        "length merges + the 1-row stats count merge, one commit under " +
+        "the id), and batch 0 is then RE-DELIVERED under its own id — " +
         "the kill/restart recovery path: the journal must make the " +
         "replayed fold a no-op, or (N, avgdl) inflates and every " +
         "served score below drifts. Exact oracle: the post-stream " +
@@ -2364,8 +2365,8 @@ private[graft] trait CatalogStores extends CatalogShared {
         "documents admitting while GDPR requests erase old ones — and " +
         "this row makes the convergence claim DRIVER-CHECKED every " +
         "round. Sequence: admit b0, sweep b0, admit b1, RE-DELIVER " +
-        "admit b0 (its journal must skip the guard AND the additive " +
-        "stats fold — the admitted cohort's mass folds once), sweep " +
+        "admit b0 (its admit id must make the whole admit a no-op — " +
+        "the admitted cohort's mass folds once), sweep " +
         "b1, RE-DELIVER sweep b0 (its journal must no-op the data " +
         "phases — the erased cohort's mass leaves once). Exact oracle: " +
         "the post-duplex search equals DuckDB's direct BM25 over the " +

@@ -124,8 +124,6 @@ object GraphOps {
         // rounds 2+ touch only the checkpointed contracted set; drop the
         // full symmetrized edge list from executor storage immediately
         sym.unpersist(blocking = false)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] round $round converged=$converged t=${System.nanoTime()/1e9}")
     }
     sym.unpersist()
     if (!converged)

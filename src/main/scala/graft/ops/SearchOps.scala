@@ -53,10 +53,13 @@ import graft.sink.{TableDelete, TableErase, TableMerge, TableWrite, UpsertSink}
   * mutates (re-folding an indexed id's (1, dl) would silently corrupt
   * the maintained (N, avgdl); and admitting a MODIFIED text under an
   * existing id would leave stale postings for terms the new text no
-  * longer contains). Erase first, then admit. The stats fold is
-  * additive — pass `admitId` and a replayed admission converges
-  * exactly-once through the admit journal (the count-store family
-  * contract).
+  * longer contains). Erase first, then admit. An admit is ONE sink
+  * commit: postings and lengths PK-merge and the stats row count-merges
+  * (the sink adds the batch's (n, sum_dl)) in one
+  * [[UpsertSink.mergeMany]] — pass `admitId` and the id lands on all
+  * three tables with their rows, so a re-delivered admit is a no-op,
+  * even after an erasure of one of its documents (the count-store
+  * family contract).
   */
 object SearchOps {
 
@@ -305,103 +308,66 @@ object SearchOps {
       .withColumnRenamed("__q", queryCol)
   }
 
-  /** ADMIT a batch of NEW documents: PK-merge their postings and
-    * lengths (touched buckets only, never a rebuild) and FOLD the
-    * batch's (count, token sum) into the stats row — the whole
-    * admission under the writer lease so a concurrent eraser cannot
-    * interleave (the store-family convention).
+  /** ADMIT a batch of NEW documents in ONE sink commit under `admitId`:
+    * PK-merge their postings and lengths and count-merge the batch's
+    * per-document (1, dl) into the stats row (the sink adds them inside
+    * its bucket rewrite) — one [[UpsertSink.mergeMany]], under the
+    * writer lease so a concurrent eraser cannot interleave.
     *
-    * The NEW-ids contract is ENFORCED (r14 advice): re-admitting an id
-    * the index already holds would PK-merge its postings/lengths onto
-    * themselves (harmless) but fold its (1, dl) into the stats row
-    * AGAIN — silently corrupting (N, avgdl) for every future score, at
-    * odds with the family's refuse-loudly posture. The guard checks
-    * the batch's ids against `bm25_doclens` inside the lease and
-    * refuses on any overlap — erase first, then admit. Cost rides the
-    * admit's own bucket discipline ([[graft.sink.UpsertSink
-    * .readKeyBuckets]]): only the length buckets the batch's ids hash
-    * into are opened, never the whole id inventory — the guard stays
-    * batch-sized at any archive size, like the merges it protects.
+    * The NEW-ids contract is ENFORCED: re-admitting an id the index
+    * already holds would count its (1, dl) into the stats row AGAIN —
+    * silently corrupting (N, avgdl) for every future score. The guard
+    * checks the batch's ids against `bm25_doclens` inside the lease and
+    * refuses on any overlap — erase first, then admit. It opens only
+    * the length buckets the batch's ids hash into
+    * ([[graft.sink.UpsertSink.readKeyBuckets]]), so it stays
+    * batch-sized at any archive size.
     *
-    * Replay interplay — stats fold FIRST, journaled, then the
-    * idempotent merges: a replayed admission (same `admitId`) whose
-    * fold already committed skips BOTH the guard and the fold up front
-    * (the admit-id probe — its own earlier doclens merge would
-    * otherwise trip the guard) and re-runs only the self-converging
-    * posting/length merges; a replay that crashed BEFORE the fold
-    * committed sees doclens untouched, passes the guard, and folds
-    * exactly once through the journal. Without an `admitId` the fold
-    * is at-least-once AND a replay of a crash that landed the merges
-    * can be refused by the guard — pass an id for crash-replayable
-    * admission (the count-store family contract).
+    * Replay: every member records `admitId` in the commit that applies
+    * it, so a replay of a committed admit skips all three tables (a
+    * whole no-op — an erasure since then stays erased), and a replay
+    * after a partial failure applies only the members that lack the id.
+    * Either way some member holds the id and the guard is skipped: it
+    * would misread the admit's own committed lengths as a duplicate.
+    * Without an `admitId` the stats merge is at-least-once and a replay
+    * after a partial failure can be refused by the guard.
     */
   def invertedIndexAdmit(batch: DataFrame, idCol: String, textCol: String,
                          sink: UpsertSink,
                          admitId: Option[String] = None): Unit = {
-    // fail loudly BEFORE the first merge: the first-write path would
-    // otherwise half-create the index (postings + lengths) and then
-    // crash on the missing stats table — every sibling op guards the
+    // fail loudly BEFORE the merge: the first-write path would
+    // otherwise half-create the index — every sibling op guards the
     // same way (ivfPqIndexRemove, invertedIndexSearch)
     require(invertedIndexExists(sink),
       s"no inverted index under ${sink.rootPath} — run invertedIndexBuild")
-    sink.writerLocked(Seq(Postings, DocLens, Stats)) {
-      // a replayed admit whose fold committed skips guard + fold up
-      // front (the journal probe) — merge's table-level fence would
-      // discard the fold anyway, but not before the localCheckpoint
-      // materialized it, and the guard would misread the replay's own
-      // committed doclens merge as a duplicate admission
-      if (!admitId.exists(id => sink.admitCommitted(Stats, id))) {
+    val tables = Seq(Stats, Postings, DocLens)
+    sink.writerLocked(tables) {
+      // a FILELESS doclens table is the erase-everything end state: no
+      // id can be indexed, so the guard is vacuously clean
+      if (!admitId.exists(id => tables.exists(sink.admitCommitted(_, id))) &&
+          sink.hasData(DocLens)) {
         // checkpointed once: the ids drive BOTH the bucket routing and
         // the membership join — a nondeterministic upstream recomputed
         // between the two could route to the wrong buckets
         val ids = batch.select(col(idCol).as("doc_id")).distinct()
           .localCheckpoint(true)
-        // ONE action answers the guard AND both sides of the stats fold
-        // (the EraseOps countFrames fusion applied here): the NEW-ids
-        // count, the batch's (n, sum_dl), and the stored 1-row stats
-        // union into a single 3-row collect instead of three serialized
-        // driver round-trips. A FILELESS doclens table is the
-        // erase-everything end state (the stats row survives
-        // structurally at zero): no id can be indexed, so the guard leg
-        // is vacuously clean and skipped — readKeyBuckets' fileless
-        // fallback would fail the plain-read contract anyway.
-        val guardLeg =
-          if (!sink.hasData(DocLens)) None
-          else Some(sink.readKeyBuckets(DocLens, ids, Seq("doc_id"))
-            .select("doc_id")
-            .join(broadcast(ids), Seq("doc_id"), "left_semi")
-            .agg(count(lit(1)).as("a"), lit(0L).as("b"))
-            .select(lit("guard").as("__leg"), col("a"), col("b")))
-        val legs = Seq(
-          statRows(batch, idCol, textCol)
-            .select(lit("batch").as("__leg"), col("n").as("a"),
-              col("sum_dl").as("b")),
-          sink.read(Stats)
-            .select(lit("stored").as("__leg"), col("n").as("a"),
-              col("sum_dl").as("b"))) ++ guardLeg
-        val rows = legs.reduce(_ unionByName _).collect()
-          .map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-        val already = rows.get("guard").map(_._1).getOrElse(0L)
+        val already = sink.readKeyBuckets(DocLens, ids, Seq("doc_id"))
+          .select("doc_id").join(broadcast(ids), Seq("doc_id"), "left_semi")
+          .count()
         require(already == 0L,
           s"invertedIndexAdmit: $already of the batch's ids are already " +
             s"indexed under ${sink.rootPath} — admit is for NEW document " +
-            "ids (re-folding an indexed id corrupts the maintained " +
+            "ids (re-counting an indexed id corrupts the maintained " +
             "(N, avgdl)); erase first, then admit")
-        // the folded row is pure driver-side arithmetic over the
-        // collected legs — no frame reads the store file the merge
-        // rewrites, so no checkpoint is needed
-        val (bn, bs) = rows("batch")
-        val (sn, ss) = rows("stored")
-        import batch.sparkSession.implicits._
-        val folded = Seq((0, sn + bn, ss + bs)).toDF("k", "n", "sum_dl")
-        sink.merge(Stats, folded, Seq("k"), None, pkUnique = true,
-          opId = admitId)
       }
       sink.mergeMany(Seq(
+        TableMerge(Stats, lenRows(batch, idCol, textCol).select(lit(0).as("k"),
+          lit(1L).as("n"), col("dl").as("sum_dl")),
+          Seq("k"), counts = Seq("n", "sum_dl")),
         TableMerge(Postings, postingRows(batch, idCol, textCol),
           Seq("w", "doc_id"), pkUnique = true),
         TableMerge(DocLens, lenRows(batch, idCol, textCol),
-          Seq("doc_id"), pkUnique = true)))
+          Seq("doc_id"), pkUnique = true)), admitId)
     }
   }
 

@@ -258,28 +258,25 @@ object SelectOps {
     * every admitted batch; the target sample refreshes by refit, not
     * by fold). Post-fold the policy is bit-identical to a fresh fit on
     * (archive ∪ batch, same target), provided batch ids are disjoint
-    * from the target's (the [[rawPool]] convention). O(buckets + one
-    * batch gram scan); additive ⇒ at-least-once under crash-replay.
+    * from the target's (the [[rawPool]] convention). O(touched buckets
+    * + one batch gram scan): the batch's per-bucket counts go in as a
+    * count merge on `cr`; additive ⇒ at-least-once under crash-replay
+    * without `admitId`, exactly-once with it.
     */
   def selectionStoreAdmitRaw(batch: DataFrame, textCol: String,
                              sink: graft.sink.UpsertSink,
                              admitId: Option[String] = None): Unit =
-    // whole fold under the writer lease (reentrant into merge): the
-    // bucket-count read and the updated-histogram derivation serialize
-    // against a concurrent retract
+    // whole fold under the writer lease (reentrant into the merge): the
+    // bucket-count read serializes against a concurrent retract
     sink.writerLocked(Seq(AffStore)) {
       val buckets = sink.read(AffStore).count().toInt
       require(buckets > 0,
         "selection store is empty — build the policy first")
-      val dh = bucketHist(batch, textCol, buckets)
-        .select(col("bucket").cast("int").as("bucket"), col("cnt"))
-      val updated = sink.read(AffStore)
-        .join(broadcast(dh), Seq("bucket"), "left")
-        .select(col("bucket"), col("ct"),
-          (col("cr") + coalesce(col("cnt"), lit(0L))).as("cr"))
-        .localCheckpoint(true) // reads the store files the merge rewrites
-      sink.merge(AffStore, updated, Seq("bucket"), None,
-        pkUnique = true, opId = admitId)
+      sink.mergeMany(Seq(graft.sink.TableMerge(AffStore,
+        bucketHist(batch, textCol, buckets).select(
+          col("bucket").cast("int").as("bucket"), lit(0L).as("ct"),
+          col("cnt").as("cr")),
+        Seq("bucket"), pkUnique = true, counts = Seq("ct", "cr"))), admitId)
     }
 
   /** ERASE documents from the selection policy: subtract the erased

@@ -1692,17 +1692,10 @@ object SimOps {
     }
     routed.toSeq.sortBy(_._1).foreach { case (s, _) =>
       val slice = vecs.filter(shardOf(idCol, shards) === s)
-      opId match {
-        case None => ivfPqIndexAdd(slice, idCol, vecCol, sinks(s), attrCols)
-        case Some(id) =>
-          // the journaled form runs per-table merges (the opId overload;
-          // mergeMany carries no journal): a fully-committed shard skips
-          // at the table fence, a crash between a shard's two merges
-          // replays only the uncommitted one
-          ivfPqIndexAddMerges(slice, idCol, vecCol, sinks(s), attrCols)
-            .foreach(m => sinks(s).merge(m.table, m.updates, m.pk,
-              m.versionCol, m.pkUnique, Some(id)))
-      }
+      // one commit per shard under `opId`: a committed shard skips, a
+      // partially failed one replays only the members lacking the id
+      sinks(s).mergeMany(
+        ivfPqIndexAddMerges(slice, idCol, vecCol, sinks(s), attrCols), opId)
     }
     routed
   }

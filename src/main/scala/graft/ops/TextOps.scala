@@ -1137,37 +1137,27 @@ object TextOps {
   }
 
   /** Admission for the exact-dup store: probe the batch against the
-    * archive fingerprints, then fold the batch's fp counts IN (touched
-    * fps only — the [[segmentStoreAdmit]] discipline), so the next
-    * batch exact-dedups against this one too. Returns the probe result
-    * (dup flags vs the PRE-admission archive). Additive fold ⇒
-    * AT-LEAST-ONCE under crash-replay, like every count admit.
+    * archive fingerprints, then count-merge the batch's fp counts IN
+    * (the sink adds them inside the touched buckets), so the next batch
+    * exact-dedups against this one too. Returns the probe result (dup
+    * flags vs the PRE-admission archive). Additive ⇒ at-least-once
+    * under crash-replay without `admitId`, exactly-once with it.
     */
   def fingerprintStoreAdmit(batch: DataFrame, idCol: String,
                             textCol: String,
                             sink: graft.sink.UpsertSink,
                             admitId: Option[String] = None): DataFrame =
-    // whole admission under the writer lease (reentrant into merge):
-    // probe and existing-count reads serialize against erasers
+    // whole admission under the writer lease (reentrant into the
+    // merge): the probe serializes against erasers
     sink.writerLocked(Seq(FpStore)) {
     // eager localCheckpoint: the probe plan reads store files the merge
     // below rewrites
     val out = fingerprintStoreProbe(batch, idCol, textCol, sink)
       .localCheckpoint(true)
-    val batchCounts = batch.select(fingerprint(col(textCol)).as("fp"))
-      .groupBy("fp").agg(count(lit(1)).as("__bcnt"))
-    // broadcast-legal orientation (the segmentStoreAdmit lesson): store
-    // scan inner-joins the broadcast batch fps (map-only), then the
-    // batch-bounded existing counts broadcast back
-    val existing = sink.read(FpStore)
-      .join(broadcast(batchCounts.select(col("fp"))), "fp")
-    val summed = batchCounts
-      .join(broadcast(existing), Seq("fp"), "left")
-      .select(col("fp"),
-        (coalesce(col("cnt"), lit(0L)) + col("__bcnt")).as("cnt"))
-      .localCheckpoint(true) // reads the store files the merge rewrites
-    sink.merge(FpStore, summed, Seq("fp"), None, pkUnique = true,
-      opId = admitId)
+    sink.mergeMany(Seq(graft.sink.TableMerge(FpStore,
+      batch.select(fingerprint(col(textCol)).as("fp"))
+        .groupBy("fp").agg(count(lit(1)).as("cnt")),
+      Seq("fp"), pkUnique = true, counts = Seq("cnt"))), admitId)
     out
     }
 
@@ -1262,44 +1252,26 @@ object TextOps {
     }
   }
 
-  /** Admission: screen the batch, then fold its segment counts into the
-    * inventory (touched hashes only — existing counts are fetched by a
-    * broadcast lookup against the store scan, summed, and PK-merged) so
-    * the next batch screens against this one's boilerplate too.
+  /** Admission: screen the batch, then count-merge its segment counts
+    * into the inventory (the sink adds them inside the touched buckets)
+    * so the next batch screens against this one's boilerplate too.
     */
   def segmentStoreAdmit(batch: DataFrame, idCol: String, textCol: String,
                         sink: graft.sink.UpsertSink, segWords: Int = 25,
                         minArchiveCount: Long = 1,
                         admitId: Option[String] = None): DataFrame =
-    // whole admission under the writer lease (reentrant into merge):
-    // probe AND the existing-count read consult store files a
-    // concurrent eraser could swap away mid-plan
+    // whole admission under the writer lease (reentrant into the
+    // merge): the probe consults store files a concurrent eraser could
+    // swap away mid-plan
     sink.writerLocked(Seq(SegStore)) {
     // eager localCheckpoint: the probe plan reads store files the merge
     // below rewrites (same hazard as minhashStoreAdmit)
     val out = segmentStoreProbe(batch, idCol, textCol, sink, segWords,
       minArchiveCount).localCheckpoint(true)
-    val batchCounts = segRows(batch, idCol, textCol, segWords)
-      .groupBy(col("__h").as("seg_hash"))
-      .agg(count(lit(1)).as("__bcnt"))
-    // two broadcast-legal joins, not one right-outer with a broadcast
-    // hint on its PRESERVED side (Spark cannot build a BHJ there and
-    // would silently shuffle the corpus-scale inventory): the store
-    // scan inner-joins the broadcast batch hashes (map-only, touched
-    // rows out), then the batch-bounded existing counts broadcast back
-    // onto the batch side
-    val existing = sink.read(SegStore)
-      .join(broadcast(batchCounts.select(col("seg_hash"))), "seg_hash")
-    val summed = batchCounts
-      .join(broadcast(existing), Seq("seg_hash"), "left")
-      .select(col("seg_hash"),
-        (coalesce(col("cnt"), lit(0L)) + col("__bcnt")).as("cnt"))
-      // eager checkpoint (batch-bounded): the plan reads the store
-      // files the merge below rewrites — an executor loss mid-merge
-      // would otherwise recompute from post-swap files
-      .localCheckpoint(true)
-    sink.merge(SegStore, summed, Seq("seg_hash"), None,
-      pkUnique = true, opId = admitId)
+    sink.mergeMany(Seq(graft.sink.TableMerge(SegStore,
+      segRows(batch, idCol, textCol, segWords)
+        .groupBy(col("__h").as("seg_hash")).agg(count(lit(1)).as("cnt")),
+      Seq("seg_hash"), pkUnique = true, counts = Seq("cnt"))), admitId)
     out
     }
 
@@ -1500,27 +1472,29 @@ object TextOps {
     cutBySpans(batch, idCol, textCol, starts, minTokens, bc)
   }
 
-  /** [[substrStoreProbe]] then fold the batch's windows INTO the
-    * inventory (additive count merge — touched hashes only), so the
+  /** [[substrStoreProbe]] then count-merge the batch's windows INTO the
+    * inventory (the sink adds them inside the touched buckets), so the
     * next batch also screens against this one: cumulative admission.
     * Screen-before-fold, so a batch never dedups against itself.
     * Admissions serialize per store under the sink's writer lease.
     *
-    * Delivery contract: AT-LEAST-ONCE. The fold is additive, so a
-    * re-delivered batch (a micro-batch replayed after a crash between
-    * the fold and the caller's own offset commit) double-counts its
-    * windows. Where that matters — any `minArchiveCount > 1` screen,
-    * or count-derived retention — use [[substrDeltaAdmit]], whose
-    * per-(window, batch) keyed fold is idempotent under re-delivery.
+    * Delivery contract: AT-LEAST-ONCE without `admitId` — a re-delivered
+    * batch (a micro-batch replayed after a crash between the merge and
+    * the caller's own offset commit) double-counts its windows; with
+    * `admitId` the merge commits the id with the counts and a replay is
+    * a no-op. Without a stable id, where double counts matter — any
+    * `minArchiveCount > 1` screen, or count-derived retention — use
+    * [[substrDeltaAdmit]], whose per-(window, batch) keyed fold is
+    * idempotent under re-delivery.
     */
   def substrStoreAdmit(batch: DataFrame, idCol: String, textCol: String,
                        sink: graft.sink.UpsertSink, minTokens: Int = 20,
                        minArchiveCount: Long = 1,
                        admitId: Option[String] = None): DataFrame =
-    // whole admission under the writer lease (reentrant into merge):
-    // probe and existing-count reads serialize against erasers
+    // whole admission under the writer lease (reentrant into the
+    // merge): the probe serializes against erasers
     sink.writerLocked(Seq(SubstrStore)) {
-    // window rows checkpointed ONCE: the probe and the count fold both
+    // window rows checkpointed ONCE: the probe and the count merge both
     // consume them, and the tokenize + per-position digest scan is the
     // dominant map cost of an admission
     val rows = windowRows(batch, idCol, textCol, minTokens)
@@ -1530,26 +1504,9 @@ object TextOps {
     val out = substrProbeFromRows(batch, rows, idCol, textCol, sink,
       minTokens, minArchiveCount, broadcastBatch = true)
       .localCheckpoint(true)
-    val batchCounts = rows
-      .groupBy(col("__gh").as("win_hash"))
-      .agg(count(lit(1)).as("__bcnt"))
-    // broadcast-legal orientation (the segmentStoreAdmit lesson): the
-    // store scan inner-joins the broadcast batch hashes (map-only,
-    // touched rows out), then the batch-bounded existing counts
-    // broadcast back onto the batch side
-    val existing = sink.read(SubstrStore)
-      .join(broadcast(batchCounts.select(col("win_hash"))), "win_hash")
-    // eager checkpoint (batch-bounded, so cheap): `summed` reads the
-    // substr_windows store the merge below rewrites — without full
-    // materialization an executor loss mid-merge would recompute a
-    // partition from post-swap files and double-fold counts
-    val summed = batchCounts
-      .join(broadcast(existing), Seq("win_hash"), "left")
-      .select(col("win_hash"),
-        (coalesce(col("cnt"), lit(0L)) + col("__bcnt")).as("cnt"))
-      .localCheckpoint(true)
-    sink.merge(SubstrStore, summed, Seq("win_hash"), None,
-      pkUnique = true, opId = admitId)
+    sink.mergeMany(Seq(graft.sink.TableMerge(SubstrStore,
+      rows.groupBy(col("__gh").as("win_hash")).agg(count(lit(1)).as("cnt")),
+      Seq("win_hash"), pkUnique = true, counts = Seq("cnt"))), admitId)
     out
     }
 

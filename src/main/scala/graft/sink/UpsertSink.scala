@@ -26,13 +26,29 @@ import org.apache.spark.storage.StorageLevel
   * non-unique merge of those keys repairs them). Incompatible with
   * `versionCol` — a delta with at most one row per key has nothing for
   * the version order to decide.
+  *
+  * A non-empty `counts` makes this a COUNT merge — the reference's
+  * `ON CONFLICT (pk) DO UPDATE SET c = t.c + EXCLUDED.c` for an
+  * aggregated inventory (rows = pk + count columns): the delta's rows
+  * are summed per pk (duplicate keys add up), added to the stored
+  * counts inside the touched buckets, and absent keys are inserted. The
+  * exact inverse of [[TableCountRetract]]; replayed under the same op id
+  * it is a no-op, so an additive admit needs no read of its own.
   */
 final case class TableMerge(table: String, updates: DataFrame,
                             pk: Seq[String],
                             versionCol: Option[String] = None,
-                            pkUnique: Boolean = false) {
+                            pkUnique: Boolean = false,
+                            counts: Seq[String] = Nil) {
   require(!(pkUnique && versionCol.isDefined),
     s"$table: pkUnique promises one row per pk — versionCol is meaningless")
+  require(counts.isEmpty || versionCol.isEmpty,
+    s"$table: count columns add up — versionCol is meaningless")
+  require(counts.intersect(pk).isEmpty,
+    s"$table: count columns ${counts.mkString(", ")} overlap the pk")
+  require(counts.isEmpty || updates.columns.toSet == (pk ++ counts).toSet,
+    s"$table: a count merge carries exactly its pk and count columns " +
+      s"[${(pk ++ counts).mkString(", ")}], got [${updates.columns.mkString(", ")}]")
 }
 
 /** One table's payload for [[UpsertSink.overwriteMany]] — the per-table
@@ -136,7 +152,11 @@ final case class TableCountRetract(table: String, decrements: DataFrame,
   * Conflict semantics: within one incoming batch, last-write-wins by
   * `versionCol` (ties broken deterministically); across batches the newest
   * write replaces the stored row wholesale — matching the reference's
-  * DO UPDATE SET all-columns behavior (dbUpsert.ts:76-79).
+  * DO UPDATE SET all-columns behavior (dbUpsert.ts:76-79). A count merge
+  * ([[TableMerge]] `counts`) instead adds the delta's per-pk sums to the
+  * stored counts in the same touched-bucket rewrite, and a count retract
+  * ([[TableCountRetract]]) subtracts them: both count folds live here,
+  * so an admit or erasure under an op id is one commit, exactly once.
   */
 final class UpsertSink(spark: SparkSession, root: String,
                        numBuckets: Int = 64,
@@ -231,10 +251,10 @@ final class UpsertSink(spark: SparkSession, root: String,
   def groupId(table: String): Option[String] = state(table).flatMap(_.group)
 
   /** True iff admit `id` has committed for `table` — the probe for
-    * operators whose admit DERIVES an additive fold before calling
-    * [[merge]]'s opId overload: a replay can skip the derivation (and
-    * its materialization) up front instead of building a frame the
-    * merge would discard anyway.
+    * operators that check something before their op-id merge (the
+    * inverted index's NEW-ids guard): a replay whose merge already
+    * landed on a member skips the check, which would otherwise misread
+    * the admit's own committed rows.
     */
   def admitCommitted(table: String, id: String): Boolean =
     state(table).exists(_.admits(id))
@@ -264,8 +284,8 @@ final class UpsertSink(spark: SparkSession, root: String,
 
   /** Run `body` holding this sink's writer lease over `tables` — the
     * critical section for COMPOUND read-modify-write operations (an
-    * admit that reads existing counts and merges the sums back; a
-    * compact that reads and overwrites). Writers serialize per table
+    * admit that probes the store and then merges into it; a compact
+    * that reads and overwrites). Writers serialize per table
     * across threads, sink instances and processes sharing one root:
     *
     *  - acquisition is an atomic `Files.createFile` of
@@ -796,11 +816,12 @@ final class UpsertSink(spark: SparkSession, root: String,
   /** [[merge]] with an EXACTLY-ONCE guarantee under crash-replay, keyed
     * by a caller-chosen `opId` — the ADMIT-direction sibling of
     * [[eraseMany]]'s erasure id, for merges that are NOT naturally
-    * idempotent: an additive count fold (read existing counts, write
-    * sums), replayed after a crash, double-counts. The id commits in
+    * idempotent: a merge of sums derived from the stored rows, replayed
+    * after a crash, double-counts (a [[TableMerge]] with `counts` folds
+    * inside the sink instead, through [[mergeMany]]). The id commits in
     * the same log entry as the rewritten buckets, so a replay either
     * finds it (and skips the table) or finds the table untouched (and
-    * applies the fold once). Replay with the SAME updates derivation.
+    * applies the merge once). Replay with the SAME updates derivation.
     */
   def merge(table: String, updates: DataFrame, pk: Seq[String],
             versionCol: Option[String], pkUnique: Boolean,
@@ -820,12 +841,20 @@ final class UpsertSink(spark: SparkSession, root: String,
     * rewrites run CONCURRENTLY. If one table's rewrite fails, the
     * others still commit and the first failure is rethrown.
     */
-  def mergeMany(merges: Seq[TableMerge]): Unit = {
+  def mergeMany(merges: Seq[TableMerge]): Unit = mergeMany(merges, None)
+
+  /** [[mergeMany]] with the [[merge]] op-id guarantee: every member that
+    * applies records `opId` in the one commit, and a replay skips the
+    * members that hold it — after a partial failure, only the members
+    * that failed apply, once.
+    */
+  def mergeMany(merges: Seq[TableMerge], opId: Option[String]): Unit = {
     require(merges.map(_.table).distinct.size == merges.size,
       s"one merge per table: ${merges.map(_.table).mkString(", ")}")
     merges.foreach(m =>
       require(m.pk.nonEmpty, s"merge into ${m.table} needs a primary key"))
-    applyMerges(merges, None, createEmpty = false,
+    opId.foreach(requireValidOpId)
+    applyMerges(merges, opId, createEmpty = false,
       s"sink:mergeMany:touched:${merges.map(_.table).mkString(",")}")
   }
 
@@ -844,7 +873,11 @@ final class UpsertSink(spark: SparkSession, root: String,
         // a mismatch would scatter updated keys away from their rows
         val buckets = st.filter(_.bucketed).fold(numBuckets)(_.buckets)
         val deduped =
-          if (m.pkUnique) m.updates else dedupeLastWins(m.updates, m.pk, m.versionCol)
+          if (m.pkUnique) m.updates
+          else if (m.counts.nonEmpty)
+            sumCounts(m.updates, m.pk.map(col), m.counts, m.updates.schema)
+              .select(m.updates.columns.toSeq.map(col): _*)
+          else dedupeLastWins(m.updates, m.pk, m.versionCol)
         // persisted: the touched collect AND the rewrite both consume it
         (m, st, buckets, withBucket(deduped, m.pk, buckets)
           .persist(StorageLevel.MEMORY_AND_DISK))
@@ -856,7 +889,13 @@ final class UpsertSink(spark: SparkSession, root: String,
         }, label)
         val results = graft.ops.Par.map(prepped) { case (m, st, buckets, latest) =>
           def upserted(cur: DataFrame): DataFrame =
-            cur.join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
+            if (m.counts.nonEmpty)
+              // DO UPDATE SET c = t.c + EXCLUDED.c: stored and delta rows
+              // sum per pk (a key's bucket is a function of the key), so
+              // absent keys insert and present ones add
+              sumCounts(cur.unionByName(latest), (m.pk :+ BucketCol).map(col),
+                m.counts, cur.schema).select(cur.columns.toSeq.map(col): _*)
+            else cur.join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
               .unionByName(latest)
           m.table -> Try(st match {
             case Some(s) if s.hasData && s.bucketed =>
@@ -906,6 +945,21 @@ final class UpsertSink(spark: SparkSession, root: String,
   private def dedupeLastWins(df: DataFrame, pk: Seq[String],
                              versionCol: Option[String]): DataFrame =
     MergeSemantics.dedupeLastWins(df, pk, versionCol)
+
+  /** One row per `keys` value, each of `cntCols` summed as its type in
+    * `types` and cast back to it (a sum must not promote the stored
+    * column type under a rewrite), named `name(c)` — the per-pk fold
+    * that count merges and count retractions share.
+    */
+  private def sumCounts(df: DataFrame, keys: Seq[Column], cntCols: Seq[String],
+                        types: StructType,
+                        name: String => String = identity): DataFrame = {
+    val aggs = cntCols.map { c =>
+      val tpe = types(c).dataType
+      sum(col(c).cast(tpe)).cast(tpe).as(name(c))
+    }
+    df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
+  }
 
   // ---- erasure -------------------------------------------------------
 
@@ -1025,9 +1079,7 @@ final class UpsertSink(spark: SparkSession, root: String,
           withBucket(keys.select(typed(keys, "delete from"): _*).distinct(),
             pk, buckets)
         case TableCountRetract(t, decrements, pk, cntCols, _) =>
-          // one decrement row per pk: sum the caller's rows, cast each
-          // count to its STORED type (the subtraction below must not
-          // promote the column type under a rewrite)
+          // one decrement row per pk, each count in its STORED type
           cntCols.foreach { c =>
             require(stored.exists(_.name == c),
               s"count retract $t: count column $c not in stored schema " +
@@ -1035,13 +1087,8 @@ final class UpsertSink(spark: SparkSession, root: String,
             require(decrements.columns.contains(c),
               s"count retract $t: decrements frame lacks count column $c")
           }
-          val aggs = cntCols.map { c =>
-            val tpe = stored.find(_.name == c).get.dataType
-            sum(col(c).cast(tpe)).cast(tpe).as(s"__dec_$c")
-          }
-          withBucket(decrements
-            .groupBy(typed(decrements, "count retract"): _*)
-            .agg(aggs.head, aggs.tail: _*), pk, buckets)
+          withBucket(sumCounts(decrements, typed(decrements, "count retract"),
+            cntCols, stored, c => s"__dec_$c"), pk, buckets)
       }).persist(StorageLevel.MEMORY_AND_DISK)
       (d, st, buckets, keyed)
     }

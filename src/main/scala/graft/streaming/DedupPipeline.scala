@@ -305,7 +305,7 @@ object DedupPipeline {
     * search serving layer's ingest arc: micro-batches of NEW documents
     * run [[graft.ops.SearchOps.invertedIndexAdmit]] under a PER-BATCH
     * journaled admit id, `"<admitIdPrefix>-b<batchId>"`. This is the
-    * admit journal's natural habitat: the stats fold is ADDITIVE, so a
+    * admit id's natural habitat: the stats count merge is ADDITIVE, so a
     * micro-batch re-delivered after a kill/restart would double-count
     * (N, sum_dl) — corrupting every future BM25 score — unless the
     * replayed batch carries the SAME id as the crashed attempt. Spark's
@@ -316,15 +316,15 @@ object DedupPipeline {
     * crashed stream should be restarted before other writers mutate
     * the index tables.
     *
-    * Per-batch cost: the batch's own tokenize + two touched-bucket
-    * merges + the 1-row stats fold + the NEW-ids guard's column-pruned
-    * doclens check — nothing scales with the accumulated index (the
-    * store-slope artifact measures the admit leg flat each round). The
-    * NEW-ids contract is the stream's contract as well: route only
-    * first-seen document ids here (compose behind [[exactDedupStream]]
-    * or the q64 admission screen); a batch carrying an already-indexed
-    * id fails the micro-batch loudly rather than corrupting the stats
-    * row.
+    * Per-batch cost: the batch's own tokenize + one commit of two
+    * touched-bucket merges and the 1-row stats count merge + the
+    * NEW-ids guard's column-pruned doclens check — nothing scales with
+    * the accumulated index (the store-slope artifact measures the
+    * admit leg flat each round). The NEW-ids contract is the stream's
+    * contract as well: route only first-seen document ids here
+    * (compose behind [[exactDedupStream]] or the q64 admission screen);
+    * a batch carrying an already-indexed id fails the micro-batch
+    * loudly rather than corrupting the stats row.
     */
   def searchIndexAdmitStream(spark: SparkSession, sourceDir: String,
                              schema: StructType, sink: UpsertSink,

@@ -119,8 +119,8 @@ object SemanticAdmitPipeline {
       // CACHED: the screen feeds BOTH the in-batch pair generator and
       // the final anti-join — uncached, the whole probe subtree (index
       // scan + two broadcast joins + two top-k aggregates) executes
-      // twice inside the one localCheckpoint job (the AdmitProfile
-      // attribution that found this). The cache is batch-bounded,
+      // twice inside the one localCheckpoint job (a per-stage
+      // timing of admitBatch found this). The cache is batch-bounded,
       // materialized fully by the checkpoint (so the merges never
       // re-read through it), and dropped at batch end.
       val screened =

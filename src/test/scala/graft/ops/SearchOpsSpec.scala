@@ -2,6 +2,8 @@ package graft.ops
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
@@ -323,5 +325,58 @@ class SearchOpsSpec extends SparkSpec {
       .select("member_table").as[String].collect().toSet
     assert(led == Set("fingerprint_store", SearchOps.Postings,
       SearchOps.DocLens, SearchOps.Stats))
+  }
+
+  /** The id of the sink's newest commit-log entry (`_log/<n>.json`). */
+  private def headEntry(sink: UpsertSink): Long = {
+    val s = Files.list(java.nio.file.Paths.get(sink.rootPath, "_log"))
+    try s.iterator().asScala.map(_.getFileName.toString)
+      .collect { case n if n.matches("\\d+\\.json") => n.stripSuffix(".json").toLong }
+      .max
+    finally s.close()
+  }
+
+  test("an admit is ONE commit; a replay of it commits nothing") {
+    val docs = Tables.load(spark, sf, "documents").limit(60).localCheckpoint()
+    val sink = freshSink("onecommit")
+    SearchOps.invertedIndexBuild(docs.filter($"doc_id" % 3 =!= 0),
+      "doc_id", "text", sink)
+    val before = headEntry(sink)
+    SearchOps.invertedIndexAdmit(docs.filter($"doc_id" % 3 === 0), "doc_id",
+      "text", sink, admitId = Some("one-1"))
+    assert(headEntry(sink) == before + 1,
+      s"admit made ${headEntry(sink) - before} log entries")
+    SearchOps.invertedIndexAdmit(docs.filter($"doc_id" % 3 === 0), "doc_id",
+      "text", sink, admitId = Some("one-1"))
+    assert(headEntry(sink) == before + 1, "a replayed admit committed")
+  }
+
+  test("a re-delivered admit never resurrects an erased document") {
+    val docs = Tables.load(spark, sf, "documents").limit(60).localCheckpoint()
+    val archive = docs.filter($"doc_id" % 3 =!= 0)
+    val batch = docs.filter($"doc_id" % 3 === 0)
+    val sink = freshSink("redeliver")
+    SearchOps.invertedIndexBuild(archive, "doc_id", "text", sink)
+    SearchOps.invertedIndexAdmit(batch, "doc_id", "text", sink,
+      admitId = Some("rd-1"))
+    val tables = Seq(SearchOps.Postings, SearchOps.DocLens, SearchOps.Stats)
+    val versions = tables.map(sink.version)
+    SearchOps.invertedIndexAdmit(batch, "doc_id", "text", sink,
+      admitId = Some("rd-1"))
+    assert(tables.map(sink.version) == versions,
+      s"a replayed admit moved ${tables.zip(versions).filter { case (t, v) =>
+        sink.version(t) != v }.map(_._1).mkString(", ")}")
+    // erase one of the batch's documents, then the admit is re-delivered
+    val gone = batch.select("doc_id").as[Long].collect().min
+    EraseOps.eraseSubjects(batch.filter($"doc_id" === gone), "doc_id", "text",
+      sink, sweepId = "rd-erase")
+    SearchOps.invertedIndexAdmit(batch, "doc_id", "text", sink,
+      admitId = Some("rd-1"))
+    val expected = freshSink("redeliver_expect")
+    SearchOps.invertedIndexBuild(docs.filter($"doc_id" =!= gone),
+      "doc_id", "text", expected)
+    for (t <- tables)
+      assert(rows(sink, t) == rows(expected, t),
+        s"$t after erase + re-delivered admit != fresh build without the erased doc")
   }
 }

@@ -1312,6 +1312,110 @@ class UpsertSinkSpec extends SparkSpec {
     assert(real.read("inv").collect().map(_.toSeq).toSet == want)
   }
 
+  test("count merge adds to stored counts, inserts absent keys, keeps stored types") {
+    val sink = freshSink()
+    sink.merge("inv", Seq(("a", 5, 50L), ("b", 2, 20L)).toDF("k", "n", "s"), Seq("k"))
+    val typesBefore = sink.read("inv").schema.map(f => f.name -> f.dataType)
+    sink.mergeMany(Seq(TableMerge("inv",
+      Seq(("a", 2, 7L), ("z", 4, 40L)).toDF("k", "n", "s"), Seq("k"),
+      counts = Seq("n", "s"))))
+    assert(sink.read("inv").as[(String, Int, Long)].collect().sorted.toSeq ==
+      Seq(("a", 7, 57L), ("b", 2, 20L), ("z", 4, 40L)))
+    assert(sink.read("inv").schema.map(f => f.name -> f.dataType) == typesBefore,
+      "a count merge promoted a stored column type")
+  }
+
+  test("count merge sums duplicate keys within one delta, also into a missing table") {
+    val sink = freshSink()
+    val delta = Seq(("a", 1L), ("a", 2L), ("b", 3L), ("a", 4L)).toDF("k", "cnt")
+    sink.mergeMany(Seq(TableMerge("inv", delta, Seq("k"), counts = Seq("cnt"))))
+    assert(sink.read("inv").as[(String, Long)].collect().sorted.toSeq ==
+      Seq(("a", 7L), ("b", 3L)))
+    sink.mergeMany(Seq(TableMerge("inv", delta, Seq("k"), counts = Seq("cnt"))))
+    assert(sink.read("inv").as[(String, Long)].collect().sorted.toSeq ==
+      Seq(("a", 14L), ("b", 6L)))
+  }
+
+  test("count merge rewrites ONLY the delta's buckets") {
+    val root = Files.createTempDirectory("graft_sink_cbkt")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 8)
+    sink.merge("inv", (1L to 200L).map(i => (i, 1L)).toDF("k", "cnt"), Seq("k"))
+    def bucketOf(f: String): String = f.split('/').head
+    val before = liveFiles(root, "inv")
+    sink.mergeMany(Seq(TableMerge("inv", Seq((42L, 5L), (42L, 1L)).toDF("k", "cnt"),
+      Seq("k"), counts = Seq("cnt"))))
+    val after = liveFiles(root, "inv")
+    val rewritten = (before diff after).map(bucketOf)
+    assert(rewritten.size == 1 && (after diff before).map(bucketOf) == rewritten,
+      s"a one-key count merge rewrote buckets ${rewritten.mkString(", ")}")
+    // every other bucket's files are the same files, byte for byte
+    assert((before intersect after).size == before.size - (before diff after).size)
+    val got = sink.read("inv").as[(Long, Long)].collect().toMap
+    assert(got.size == 200 && got(42L) == 7L && got(41L) == 1L)
+  }
+
+  test("count merge rejects a non-pk non-count column, a counted pk and versionCol") {
+    val df = Seq(("a", 1L, 2L, "x")).toDF("k", "cnt", "ver", "v")
+    assertThrows[IllegalArgumentException] {
+      TableMerge("inv", df.select("k", "cnt", "v"), Seq("k"), counts = Seq("cnt"))
+    }
+    assertThrows[IllegalArgumentException] {
+      TableMerge("inv", df.select("k", "cnt", "ver"), Seq("k"),
+        versionCol = Some("ver"), counts = Seq("cnt"))
+    }
+    assertThrows[IllegalArgumentException] {
+      TableMerge("inv", df.select("k", "cnt"), Seq("k", "cnt"), counts = Seq("cnt"))
+    }
+  }
+
+  test("count merge replayed under the same op id changes no table") {
+    val sink = freshSink()
+    sink.merge("inv", Seq(("a", 5L)).toDF("k", "cnt"), Seq("k"))
+    sink.merge("post", Seq((1L, "p1")).toDF("id", "v"), Seq("id"))
+    def admit(): Unit = sink.mergeMany(Seq(
+      TableMerge("inv", Seq(("a", 2L), ("z", 1L)).toDF("k", "cnt"), Seq("k"),
+        counts = Seq("cnt")),
+      TableMerge("post", Seq((2L, "p2")).toDF("id", "v"), Seq("id"))), Some("admit-1"))
+    admit()
+    val versions = Seq("inv", "post").map(sink.version)
+    admit()
+    assert(Seq("inv", "post").map(sink.version) == versions, "a replay committed")
+    assert(sink.read("inv").as[(String, Long)].collect().sorted.toSeq ==
+      Seq(("a", 7L), ("z", 1L)))
+    assert(sink.read("post").count() == 2)
+  }
+
+  test("mergeMany with an op id after a partial failure applies only the members lacking it") {
+    // the "bad" member's touched bucket file is corrupted so its rewrite
+    // dies while "good" commits with the id; the bytes are then restored
+    // and the replay must apply "bad" alone — "good" counted once
+    val root = Files.createTempDirectory("graft_sink_opfail")
+    val sink = new UpsertSink(spark, root.toString, numBuckets = 2)
+    sink.merge("good", Seq(("a", 5L)).toDF("k", "cnt"), Seq("k"))
+    sink.merge("bad", (1L to 200L).map(i => (i, i)).toDF("id", "n"), Seq("id"))
+    val parts = liveFiles(root, "bad").toSeq.map(f => root.resolve("bad").resolve(f))
+    val saved = parts.map(p => p -> Files.readAllBytes(p))
+    parts.foreach { p =>
+      val bytes = Files.readAllBytes(p)
+      java.util.Arrays.fill(bytes, 4, 68.min(bytes.length / 2), 0x42.toByte)
+      Files.write(p, bytes)
+    }
+    def admit(): Unit = sink.mergeMany(Seq(
+      TableMerge("good", Seq(("a", 2L)).toDF("k", "cnt"), Seq("k"), counts = Seq("cnt")),
+      TableMerge("bad", Seq((1L, 9L)).toDF("id", "n"), Seq("id"))), Some("op-7"))
+    intercept[Throwable](admit())
+    assert(sink.admitCommitted("good", "op-7") && !sink.admitCommitted("bad", "op-7"))
+    val goodVersion = sink.version("good")
+    saved.foreach { case (p, b) => Files.write(p, b) }
+    admit()
+    assert(sink.version("good") == goodVersion, "the replay re-applied the committed member")
+    assert(sink.read("good").as[(String, Long)].collect().toSeq == Seq(("a", 7L)))
+    assert(sink.admitCommitted("bad", "op-7"))
+    assert(sink.read("bad").filter($"id" === 1L).as[(Long, Long)].collect().toSeq ==
+      Seq((1L, 9L)))
+    assert(sink.read("bad").count() == 200)
+  }
+
   test("snapshotMany vs a LIVE group-DELETER thread: never a half-erased capture") {
     val sink = freshSink()
     // both tables always carry the SAME id set; the deleter erases one
