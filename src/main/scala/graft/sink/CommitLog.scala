@@ -257,9 +257,12 @@ private[sink] object CommitLog {
   private val EntryName = """(\d+)\.json""".r
   private val mapper = new ObjectMapper()
 
-  /** A fresh table version: random, positive, never 0 (0 = missing). */
+  /** A fresh table version: random, never 0 (0 = missing), and always 19
+    * decimal digits, so an entry's size depends only on the tables it
+    * names, never on the draw. */
   def freshVersion(): Long =
-    (java.util.UUID.randomUUID().getMostSignificantBits & Long.MaxValue) | 1L
+    1000000000000000000L + java.lang.Math.floorMod(
+      java.util.UUID.randomUUID().getMostSignificantBits, 8000000000000000000L)
 
   private def encodeState(s: TableState): Array[Byte] = {
     val n = mapper.createObjectNode()
