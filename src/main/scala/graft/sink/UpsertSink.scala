@@ -615,12 +615,16 @@ final class UpsertSink(spark: SparkSession, root: String,
   /** Align write tasks to bucket boundaries before a `partitionBy`
     * write: without this, EVERY write task opens a file in EVERY bucket
     * dir it sees rows for — up to tasks x buckets tiny files per merge.
-    * One shuffle keyed on the bucket puts each bucket's rows in one task
-    * -> one file per bucket. Partition count = the bucket modulus: a
-    * merge can never profit from more write tasks than buckets.
+    * One hash shuffle keyed on the bucket puts each bucket's rows whole
+    * in one task, and the write sorts each task's rows by bucket, so a
+    * task carrying several buckets still writes one file per bucket.
+    * Width = min(modulus, session shuffle parallelism): a write never
+    * profits from more tasks than buckets or cores, and every task past
+    * the cores is a mostly-empty one that still pays a task's fixed cost.
     */
   private def bucketAligned(df: DataFrame, buckets: Int): DataFrame =
-    df.repartition(buckets, col(BucketCol))
+    df.repartition(buckets.min(spark.sessionState.conf.numShufflePartitions),
+      col(BucketCol))
 
   /** What a parquet read of `t`'s written files serves: every field,
     * element and value nullable (the file-source read contract). */
@@ -827,7 +831,7 @@ final class UpsertSink(spark: SparkSession, root: String,
             versionCol: Option[String], pkUnique: Boolean,
             opId: Option[String]): Unit = {
     require(pk.nonEmpty, s"merge into $table needs a primary key")
-    opId.foreach(requireValidOpId)
+    opId.foreach(requireValidOpId("admit"))
     applyMerges(Seq(TableMerge(table, updates, pk, versionCol, pkUnique)),
       opId, createEmpty = true, s"sink:merge:touched:$table")
   }
@@ -853,7 +857,7 @@ final class UpsertSink(spark: SparkSession, root: String,
       s"one merge per table: ${merges.map(_.table).mkString(", ")}")
     merges.foreach(m =>
       require(m.pk.nonEmpty, s"merge into ${m.table} needs a primary key"))
-    opId.foreach(requireValidOpId)
+    opId.foreach(requireValidOpId("admit"))
     applyMerges(merges, opId, createEmpty = false,
       s"sink:mergeMany:touched:${merges.map(_.table).mkString(",")}")
   }
@@ -1017,7 +1021,7 @@ final class UpsertSink(spark: SparkSession, root: String,
     */
   def eraseMany(erases: Seq[TableErase], erasureId: Option[String]): Unit = {
     require(erases.nonEmpty, "eraseMany needs at least one table")
-    erasureId.foreach(requireValidOpId)
+    erasureId.foreach(requireValidOpId("erasure"))
     withWriterLease(erases.map(_.table))(eraseLeased(erases, erasureId))
   }
 
@@ -1032,7 +1036,7 @@ final class UpsertSink(spark: SparkSession, root: String,
     require(tables.nonEmpty, "eraseMany needs at least one table")
     require(tables.distinct.size == tables.size,
       s"duplicate tables in lease scope: ${tables.mkString(", ")}")
-    erasureId.foreach(requireValidOpId)
+    erasureId.foreach(requireValidOpId("erasure"))
     withWriterLease(tables) {
       val erases = derive
       // an EMPTY derivation is a no-op: a plan that scans the store for
@@ -1047,11 +1051,12 @@ final class UpsertSink(spark: SparkSession, root: String,
     }
   }
 
-  /** Op-id grammar: printable and bounded. */
-  private def requireValidOpId(id: String): Unit =
+  /** Op-id grammar: printable and bounded. `kind` names the id in the
+    * error ("admit", "erasure"). */
+  private def requireValidOpId(kind: String)(id: String): Unit =
     require(id.nonEmpty && id.length <= 128 &&
         id.forall(c => c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
-      s"invalid erasure id '$id': need 1-128 chars of [A-Za-z0-9._-]")
+      s"invalid $kind id '$id': need 1-128 chars of [A-Za-z0-9._-]")
 
   private def eraseLeased(erases: Seq[TableErase],
                           erasureId: Option[String]): Unit = {

@@ -1576,4 +1576,98 @@ class UpsertSinkSpec extends SparkSpec {
     val none = sink.readKeyBuckets("t", Seq.empty[Long].toDF("id"), Seq("id"))
     assert(none.columns.toSeq == Seq("id", "v") && none.count() == 0L)
   }
+
+  /** Task counts of the stages that wrote output in the jobs `body`
+    * submits under a label starting with one of `prefixes`. A sentinel
+    * job run after `body` flushes the (asynchronous, ordered) listener
+    * events before the counts are read.
+    */
+  private def writeStageWidths(prefixes: String*)(body: => Unit): Seq[Int] = {
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler._
+    val sentinel = "upsert-sink-spec:sentinel"
+    val labelled = ConcurrentHashMap.newKeySet[Int]()
+    val widths = new ConcurrentLinkedQueue[Int]()
+    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val flushed = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
+        if (desc == sentinel) sentinelJob.set(e.jobId)
+        else if (desc != null && prefixes.exists(desc.startsWith))
+          e.stageIds.foreach(labelled.add)
+      }
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
+        val info = e.stageInfo
+        if (labelled.contains(info.stageId) &&
+            info.taskMetrics.outputMetrics.bytesWritten > 0) widths.add(info.numTasks)
+      }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get()) flushed.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener events never flushed")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    widths.asScala.toSeq
+  }
+
+  test("writes at the default modulus run no wider than the session's shuffle parallelism") {
+    val sink = freshSink() // default modulus, 64 buckets
+    val width = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    assert(width < 64, s"the suite's session runs $width shuffle partitions")
+    sink.merge("t", (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    val ops = Seq[(String, () => Unit)](
+      "1-row merge" -> (() => sink.merge("t", Seq((7L, "x")).toDF("id", "v"), Seq("id"))),
+      "1-key delete" -> (() => sink.delete("t", Seq(8L).toDF("id"), Seq("id"))),
+      "overwrite" -> (() => sink.overwrite("u",
+        (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))))
+    for ((name, op) <- ops) {
+      val widths = writeStageWidths("sink:swap:", "sink:overwrite:")(op())
+      assert(widths.nonEmpty, s"$name: no write stage seen")
+      assert(widths.max <= width, s"$name: write stages of ${widths.mkString(", ")} tasks")
+    }
+    assert(sink.read("t").count() == 199 && sink.read("u").count() == 200)
+  }
+
+  test("bucket layout at the default modulus: one file per populated bucket, one more per 1-row merge") {
+    import org.apache.spark.sql.functions.{hash, lit, pmod}
+    val root = Files.createTempDirectory("graft_sink_layout")
+    val sink = new UpsertSink(spark, root.toString)
+    val rows = (1L to 1000L).map(i => (i, s"v$i")).toDF("id", "v")
+    sink.overwrite("t", rows, Seq("id"))
+    def byBucket(): Map[String, Set[String]] =
+      liveFiles(root, "t").groupBy(_.split('/').head)
+    val populated = rows.select(pmod(hash($"id"), lit(64))).distinct().count()
+    val before = byBucket()
+    assert(before.size == populated && before.values.forall(_.size == 1),
+      s"files per bucket: ${before.values.map(_.size).toSeq.sorted}")
+    assert(parquetFiles(root, "t") == liveFiles(root, "t"))
+    sink.merge("t", Seq((7L, "x")).toDF("id", "v"), Seq("id"))
+    val after = byBucket()
+    val added = after.values.flatten.toSet -- before.values.flatten
+    assert(added.size == 1, s"a 1-row merge added ${added.size} files")
+    assert(after.keySet == before.keySet && after.values.forall(_.size == 1))
+  }
+
+  test("a bad op id fails naming the kind of id the caller passed") {
+    val sink = freshSink()
+    val admit = intercept[IllegalArgumentException] {
+      sink.mergeMany(Seq(TableMerge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))),
+        Some("bad id!"))
+    }
+    assert(admit.getMessage.contains("invalid admit id 'bad id!'"), admit.getMessage)
+    val merge = intercept[IllegalArgumentException] {
+      sink.merge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"), None, false, Some(""))
+    }
+    assert(merge.getMessage.contains("invalid admit id"), merge.getMessage)
+    val erase = intercept[IllegalArgumentException] {
+      sink.eraseMany(Seq(TableDelete("t", Seq(1L).toDF("id"), Seq("id"))), Some("bad/id"))
+    }
+    assert(erase.getMessage.contains("invalid erasure id 'bad/id'"), erase.getMessage)
+    assert(!sink.exists("t"), "a rejected call wrote a table")
+  }
 }
