@@ -286,20 +286,23 @@ object EraseOps {
     val tables = members.result()
     val derivations = plans.result()
     val excludedMap = excluded.result()
-    val subjects = docs.select(col(idCol)).distinct().count()
+    val spark = docs.sparkSession
+    // each step's jobs carry its label (not `sink:`: they are the op's
+    // own jobs, not the sink's)
+    val subjects = Par.labeled(spark, "erase:subjects")(
+      docs.select(col(idCol)).distinct().count())
     val ledgerTables = tables ++ excludedMap.keys.toSeq
     // the member name comes from the ONE owner of the shard naming
     // scheme, so receipts can always join back to on-disk shard paths
     val shardMember = (sh: Int) => SimOps.shardMemberName(sh)
-    val spark = docs.sparkSession
 
     // ---- ledger state probe (the pending/final protocol): bounded —
     // one row per member table per sweep
     val priorRows: Seq[org.apache.spark.sql.Row] =
       if (!ledger || !(sink.exists(LedgerTable) && sink.hasData(LedgerTable)))
         Seq.empty
-      else sink.read(LedgerTable).filter(col("sweep_id") === sweepId)
-        .collect().toSeq
+      else Par.labeled(spark, "erase:ledger-probe")(
+        sink.read(LedgerTable).filter(col("sweep_id") === sweepId).collect().toSeq)
     // a FINAL receipt wins exactly once: its presence means the whole
     // sweep (data + receipt) completed — the data phases below still
     // replay (journaled no-ops), the receipt is never rewritten
@@ -337,13 +340,14 @@ object EraseOps {
         // and the retraction share one materialization; the
         // checkpoints are independent per-member actions — overlap
         // them (guide §2.6) instead of serializing 6-8 tiny jobs
-        val erases = Par.map(derivations.flatMap(_())) {
-          case TableDelete(t, keys, pk) =>
-            TableDelete(t, keys.localCheckpoint(true), pk)
-          case TableCountRetract(t, dec, pk, cntCols, drop) =>
-            TableCountRetract(t, dec.localCheckpoint(true), pk, cntCols,
-              drop)
-        }
+        val erases = Par.labeled(spark, "erase:checkpoint")(
+          Par.map(derivations.flatMap(_())) {
+            case TableDelete(t, keys, pk) =>
+              TableDelete(t, keys.localCheckpoint(true), pk)
+            case TableCountRetract(t, dec, pk, cntCols, drop) =>
+              TableCountRetract(t, dec.localCheckpoint(true), pk, cntCols,
+                drop)
+          })
         // every receipt figure in ONE action: the per-member bounded
         // aggregates union into a single (member, count) frame, so a
         // six-member sweep pays one collect's scheduling overhead
@@ -368,7 +372,8 @@ object EraseOps {
                 .select(lit(t).as("__t"), col("__c")))
           }
         if (countFrames.nonEmpty)
-          countFrames.reduce(_.unionByName(_)).collect() // ≤ one row per member
+          Par.labeled(spark, "erase:receipt-counts")(
+            countFrames.reduce(_.unionByName(_)).collect()) // ≤ one row per member
             .foreach(r => removed(r.getString(0)) += r.getLong(1))
         ledgerTables.foreach(t => verBefore(t) =
           pend.get(t).map(_._3).getOrElse(sink.version(t)))

@@ -1,5 +1,7 @@
 package graft.ops
 
+import org.apache.spark.sql.SparkSession
+
 /** Overlap INDEPENDENT Spark actions from a small driver-side thread
   * pool (the guide-§2.6 move): Spark's scheduler happily runs several
   * jobs at once inside one application — actions are only sequential
@@ -50,6 +52,20 @@ private[graft] object Par {
       results.collectFirst { case Left(e) => e }.foreach(throw _)
       results.collect { case Right(b) => b }
     } finally pool.shutdown()
+  }
+
+  /** Label every Spark job `body` submits from THIS thread (guide §1.5
+    * — label your jobs): descriptions are thread-local, and a [[map]]
+    * pool's threads inherit the label set when the call started. The
+    * caller's own label is saved and restored, so composing ops keep
+    * their outer description.
+    */
+  def labeled[T](spark: SparkSession, desc: String)(body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(desc)
+    try body
+    finally sc.setJobDescription(prev)
   }
 
   def run(tasks: Seq[() => Unit], maxThreads: Int = 8): Unit = {

@@ -349,11 +349,13 @@ object SearchOps {
         // checkpointed once: the ids drive BOTH the bucket routing and
         // the membership join — a nondeterministic upstream recomputed
         // between the two could route to the wrong buckets
-        val ids = batch.select(col(idCol).as("doc_id")).distinct()
-          .localCheckpoint(true)
-        val already = sink.readKeyBuckets(DocLens, ids, Seq("doc_id"))
-          .select("doc_id").join(broadcast(ids), Seq("doc_id"), "left_semi")
-          .count()
+        val already = Par.labeled(batch.sparkSession, "admit:guard") {
+          val ids = batch.select(col(idCol).as("doc_id")).distinct()
+            .localCheckpoint(true)
+          sink.readKeyBuckets(DocLens, ids, Seq("doc_id"))
+            .select("doc_id").join(broadcast(ids), Seq("doc_id"), "left_semi")
+            .count()
+        }
         require(already == 0L,
           s"invertedIndexAdmit: $already of the batch's ids are already " +
             s"indexed under ${sink.rootPath} — admit is for NEW document " +

@@ -2091,12 +2091,15 @@ object SimOps {
 
   /** Admission: probe, then fold the batch into the store (one
     * mergeMany round-trip over both tables) so later batches dedup
-    * against this one too. Returns the pre-admission pairs.
+    * against this one too. Returns the pre-admission pairs. `admitId`
+    * makes the fold exactly-once: a re-delivered admit leaves both
+    * tables alone, so a vector erased since stays erased.
     */
   def embLshStoreAdmit(batch: DataFrame, idCol: String, vecCol: String,
                        sink: graft.sink.UpsertSink, threshold: Double,
                        planes: Int = 4, tables: Int = 48,
-                       dim: Int = 64): DataFrame =
+                       dim: Int = 64,
+                       admitId: Option[String] = None): DataFrame =
     // whole admission under the writer lease (reentrant into mergeMany):
     // the probe reads store files a concurrent eraser could swap away
     sink.writerLocked(Seq(EmbSigs, EmbVecs)) {
@@ -2114,7 +2117,7 @@ object SimOps {
       graft.sink.TableMerge(EmbVecs,
         batch.select(col(idCol).as("id"), col(vecCol).as("v"),
           norm(col(vecCol)).as("n")),
-        Seq("id"), pkUnique = true)))
+        Seq("id"), pkUnique = true)), admitId)
     out
     }
 

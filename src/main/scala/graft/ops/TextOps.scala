@@ -339,12 +339,15 @@ object TextOps {
     * fold the batch INTO the state (one `mergeMany` round-trip, both
     * tables' touched buckets learned in one job) so the next batch
     * dedups against this one too. Returns the probe result — the pairs
-    * that existed BEFORE the batch joined the archive.
+    * that existed BEFORE the batch joined the archive. `admitId` makes
+    * the fold exactly-once: a re-delivered admit leaves both tables
+    * alone, so a document erased since stays erased.
     */
   def minhashStoreAdmit(batch: DataFrame, idCol: String, textCol: String,
                         sink: graft.sink.UpsertSink,
                         threshold: Double = 0.5, n: Int = 3,
-                        k: Int = 128, bands: Int = 32): DataFrame =
+                        k: Int = 128, bands: Int = 32,
+                        admitId: Option[String] = None): DataFrame =
     // whole admission under the writer lease (reentrant into mergeMany):
     // the probe reads store files a CONCURRENT writer (an eraser) could
     // otherwise swap away mid-plan — read-modify-write serializes
@@ -364,7 +367,7 @@ object TextOps {
         Seq("band", "doc_id"), pkUnique = true),
       graft.sink.TableMerge(NearDupShingles,
         batch.select(col(idCol).as("doc_id"), sh.as("sh")),
-        Seq("doc_id"), pkUnique = true)))
+        Seq("doc_id"), pkUnique = true)), admitId)
     out
     }
 

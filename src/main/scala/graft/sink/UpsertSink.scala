@@ -8,10 +8,12 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, ByteType, DataType, DateType,
+  IntegerType, LongType, MapType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.storage.StorageLevel
 
 /** One table's delta for [[UpsertSink.mergeMany]] — the per-table
@@ -176,20 +178,6 @@ final class UpsertSink(spark: SparkSession, root: String,
     * the head — the points where a crash or a stall is injected.
     */
   @volatile private[sink] var testHook: String => Unit = _ => ()
-
-  /** Label every Spark job `body` submits from THIS thread (guide §1.5
-    * — label your jobs): descriptions are thread-local, so sink work
-    * submitted from [[graft.ops.Par]] pool threads labels correctly
-    * when set inside the task. The caller's own label is saved and
-    * restored, so composing ops keep their outer description.
-    */
-  private def labeled[T](desc: String)(body: => T): T = {
-    val sc = spark.sparkContext
-    val prev = sc.getLocalProperty("spark.job.description")
-    sc.setJobDescription(desc)
-    try body
-    finally sc.setJobDescription(prev)
-  }
 
   /** Every table path flows through here, so this is where the name
     * contract is enforced: no path separators (a name like `../x`
@@ -512,7 +500,7 @@ final class UpsertSink(spark: SparkSession, root: String,
                          label: String): Map[Int, Seq[LogFile]] = {
     val dir = tableDir(table)
     val before = dataFiles(dir)
-    labeled(label) {
+    graft.ops.Par.labeled(spark, label) {
       val w = if (buckets > 0) bucketAligned(df, buckets).write.partitionBy(BucketCol)
         else df.write
       w.mode(SaveMode.Append).parquet(dir.toString)
@@ -566,7 +554,7 @@ final class UpsertSink(spark: SparkSession, root: String,
   private def touchedBuckets(frames: Seq[(String, DataFrame)],
                              label: String): Map[String, Seq[Int]] =
     if (frames.isEmpty) Map.empty
-    else labeled(label)(frames.map { case (t, df) =>
+    else graft.ops.Par.labeled(spark, label)(frames.map { case (t, df) =>
         df.select(lit(t).as("__t"), col(BucketCol)) }
         .reduce(_ unionByName _).distinct().collect()) // bounded by buckets
       .groupBy(_.getString(0))
@@ -840,10 +828,14 @@ final class UpsertSink(spark: SparkSession, root: String,
     * sink round-trip and ONE commit. Semantically [[merge]] per table,
     * except that an empty delta never creates a missing table. The
     * fixed-cost profile is the point for SMALL deltas (per-micro-batch
-    * streaming state): ONE Spark job learns every table's touched
-    * buckets (materializing every delta's persist), then the per-table
-    * rewrites run CONCURRENTLY. If one table's rewrite fails, the
-    * others still commit and the first failure is rethrown.
+    * streaming state). A delta the driver already holds (a local
+    * relation, e.g. `createDataFrame(rows, schema)`) yields its touched
+    * buckets on the driver with no Spark job, and with unique keys it
+    * skips the dedupe and the cache. The distributed deltas share ONE
+    * Spark job that learns their touched buckets (materializing each
+    * one's persist). Then the per-table rewrites run CONCURRENTLY. If
+    * one table's rewrite fails, the others still commit and the first
+    * failure is rethrown.
     */
   def mergeMany(merges: Seq[TableMerge]): Unit = mergeMany(merges, None)
 
@@ -876,22 +868,31 @@ final class UpsertSink(spark: SparkSession, root: String,
         // bucket with the LOGGED modulus, never the instance default —
         // a mismatch would scatter updated keys away from their rows
         val buckets = st.filter(_.bucketed).fold(numBuckets)(_.buckets)
-        val deduped =
-          if (m.pkUnique) m.updates
-          else if (m.counts.nonEmpty)
-            sumCounts(m.updates, m.pk.map(col), m.counts, m.updates.schema)
-              .select(m.updates.columns.toSeq.map(col): _*)
-          else dedupeLastWins(m.updates, m.pk, m.versionCol)
-        // persisted: the touched collect AND the rewrite both consume it
-        (m, st, buckets, withBucket(deduped, m.pk, buckets)
-          .persist(StorageLevel.MEMORY_AND_DISK))
+        val keyed = withBucket(m.updates, m.pk, buckets)
+        // a delta the driver already holds yields its (pk, bucket) rows
+        // with no Spark job: its touched buckets come from them, and
+        // unique keys need neither the dedupe nor the cache
+        val held = heldKeys(keyed, m.pk)
+        val unique = m.pkUnique || held.exists(distinctKeys(_, m.pk.map(m.updates.schema(_).dataType)))
+        val latest =
+          if (unique) keyed
+          else withBucket(
+            if (m.counts.nonEmpty)
+              sumCounts(m.updates, m.pk.map(col), m.counts, m.updates.schema)
+                .select(m.updates.columns.toSeq.map(col): _*)
+            else dedupeLastWins(m.updates, m.pk, m.versionCol), m.pk, buckets)
+        // persisted: the touched collect or the dedupe, and the rewrite,
+        // consume it
+        val cached = held.isEmpty || !unique
+        (m, st, buckets, if (cached) latest.persist(StorageLevel.MEMORY_AND_DISK) else latest,
+          held.map(_.map(_.getInt(m.pk.size)).distinct.sorted.toSeq), cached)
       }
       try {
         val touched = touchedBuckets(prepped.collect {
-          case (m, st, _, latest) if st.exists(s => s.hasData && s.bucketed) ||
+          case (m, st, _, latest, None, _) if st.exists(s => s.hasData && s.bucketed) ||
             (!createEmpty && !st.exists(_.hasData)) => m.table -> latest
-        }, label)
-        val results = graft.ops.Par.map(prepped) { case (m, st, buckets, latest) =>
+        }, label) ++ prepped.collect { case (m, _, _, _, Some(t), _) if t.nonEmpty => m.table -> t }
+        val results = graft.ops.Par.map(prepped) { case (m, st, buckets, latest, _, _) =>
           def upserted(cur: DataFrame): DataFrame =
             if (m.counts.nonEmpty)
               // DO UPDATE SET c = t.c + EXCLUDED.c: stored and delta rows
@@ -932,8 +933,31 @@ final class UpsertSink(spark: SparkSession, root: String,
           t -> r.map(_.orElse(opId.flatMap(_ => head.get(t)))
             .map(s => s.copy(admits = s.admits ++ opId)))
         })
-      } finally prepped.foreach(_._4.unpersist())
+      } finally prepped.foreach(p => if (p._6) p._4.unpersist())
     }
+
+  /** The (pk, [[BucketCol]]) rows of a bucketed delta the driver already
+    * holds — one that optimizes to a local relation, whose collect runs
+    * no Spark job — or None for a distributed delta. */
+  private def heldKeys(keyed: DataFrame, pk: Seq[String]): Option[Array[Row]] =
+    keyed.queryExecution.optimizedPlan match {
+      case _: LocalRelation => Some(keyed.select((pk :+ BucketCol).map(col): _*).collect())
+      case _ => None
+    }
+
+  /** Whether `rows` (key values first) hold each key once as Spark's
+    * grouping sees it: binary keys compare by content; float, double,
+    * complex and collated keys, whose grouping normalizes values, are
+    * never called unique — a wrong verdict would write duplicate keys. */
+  private def distinctKeys(rows: Array[Row], types: Seq[DataType]): Boolean =
+    types.forall {
+      case StringType | BinaryType | BooleanType | ByteType | ShortType | IntegerType |
+           LongType | DateType | TimestampType | TimestampNTZType => true
+      case _ => false
+    } && rows.map(r => types.indices.map(i => r.get(i) match {
+      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+      case v => v
+    })).distinct.length == rows.length
 
   /** Commit every member whose rewrite succeeded in one entry, then
     * rethrow the first failure (unwrapped). */

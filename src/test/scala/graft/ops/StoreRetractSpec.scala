@@ -498,6 +498,41 @@ class StoreRetractSpec extends SparkSpec {
         s"$t: replayed admission diverged from a single admit")
   }
 
+  test("minhash and LSH admits with an admitId: a re-delivered admit keeps an erased document erased") {
+    val sink = freshSink("admitid_postings")
+    def vec(seed: Int): Array[Float] =
+      Array.tabulate(16)(i =>
+        ((((seed * 31L + i) * 2654435761L) % 1000L) / 1000.0f) - 0.5f)
+    TextOps.minhashStoreBuild((1L to 10L).map(i => (i, text(i))).toDF("doc_id", "text"),
+      "doc_id", "text", sink, n = 3, k = 32, bands = 8)
+    SimOps.embLshStoreBuild((1 to 10).map(i => (i.toLong, vec(i))).toDF("vec_id", "embedding"),
+      "vec_id", "embedding", sink, planes = 4, tables = 8, dim = 16)
+    val docs = Seq((101L, text(101)), (102L, text(102))).toDF("doc_id", "text")
+    val vecs = Seq((101L, vec(101)), (102L, vec(102))).toDF("vec_id", "embedding")
+    def admit(): Unit = {
+      TextOps.minhashStoreAdmit(docs, "doc_id", "text", sink, n = 3, k = 32,
+        bands = 8, admitId = Some("batch-7")).collect()
+      SimOps.embLshStoreAdmit(vecs, "vec_id", "embedding", sink, threshold = 0.999,
+        planes = 4, tables = 8, dim = 16, admitId = Some("batch-7")).collect()
+    }
+    admit()
+    TextOps.minhashStoreRetract(Seq(101L).toDF("doc_id"), "doc_id", sink)
+    SimOps.embLshStoreRetract(Seq(101L).toDF("vec_id"), "vec_id", sink)
+    val after = Seq("neardup_bands", "neardup_shingles", "embdup_sigs", "embdup_vecs")
+      .map(t => t -> rows(sink, t))
+    admit() // the re-delivery: must change no table
+    for ((t, before) <- after)
+      assert(rows(sink, t) == before, s"$t: a re-delivered admit changed the table")
+    assert(sink.read("neardup_shingles").filter($"doc_id" === 101L).isEmpty &&
+      sink.read("neardup_bands").filter($"doc_id" === 101L).isEmpty,
+      "the re-delivered admit re-inserted an erased document")
+    assert(sink.read("embdup_vecs").filter($"id" === 101L).isEmpty &&
+      sink.read("embdup_sigs").filter($"id" === 101L).isEmpty,
+      "the re-delivered admit re-inserted an erased vector")
+    assert(sink.read("neardup_shingles").filter($"doc_id" === 102L).count() == 1 &&
+      sink.read("embdup_vecs").filter($"id" === 102L).count() == 1)
+  }
+
   test("eraseSubjects reaches the ANN serving layer: single + sharded index") {
     val sink = freshSink("sweep_ann")
     def vec(seed: Int): Array[Float] =

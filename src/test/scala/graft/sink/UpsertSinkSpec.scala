@@ -1577,24 +1577,60 @@ class UpsertSinkSpec extends SparkSpec {
     assert(none.columns.toSeq == Seq("id", "v") && none.count() == 0L)
   }
 
-  /** Task counts of the stages that wrote output in the jobs `body`
-    * submits under a label starting with one of `prefixes`. A sentinel
-    * job run after `body` flushes the (asynchronous, ordered) listener
-    * events before the counts are read.
+  /** Run `body` with `listener` attached. A sentinel job run after
+    * `body` flushes the (asynchronous, ordered) listener events before
+    * this returns.
     */
-  private def writeStageWidths(prefixes: String*)(body: => Unit): Seq[Int] = {
-    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue, CountDownLatch, TimeUnit}
+  private def listening(listener: org.apache.spark.scheduler.SparkListener)(body: => Unit): Unit = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
     import org.apache.spark.scheduler._
     val sentinel = "upsert-sink-spec:sentinel"
-    val labelled = ConcurrentHashMap.newKeySet[Int]()
-    val widths = new ConcurrentLinkedQueue[Int]()
     val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
     val flushed = new CountDownLatch(1)
-    val listener = new SparkListener {
+    val flush = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+          sentinelJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get()) flushed.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(flush)
+    try {
+      body
+      spark.sparkContext.setJobDescription(sentinel)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener events never flushed")
+    } finally {
+      spark.sparkContext.removeSparkListener(flush)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  /** The job descriptions of the jobs `body` submits. */
+  private def jobLabels(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler._
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(Option(e.properties).map(_.getProperty("spark.job.description"))
+          .flatMap(Option(_)).getOrElse("<unlabelled>"))
+    })(body)
+    labels.asScala.toSeq.filterNot(_ == "upsert-sink-spec:sentinel")
+  }
+
+  /** Task counts of the stages that wrote output in the jobs `body`
+    * submits under a label starting with one of `prefixes`.
+    */
+  private def writeStageWidths(prefixes: String*)(body: => Unit): Seq[Int] = {
+    import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
+    import org.apache.spark.scheduler._
+    val labelled = ConcurrentHashMap.newKeySet[Int]()
+    val widths = new ConcurrentLinkedQueue[Int]()
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val desc = Option(e.properties).map(_.getProperty("spark.job.description")).orNull
-        if (desc == sentinel) sentinelJob.set(e.jobId)
-        else if (desc != null && prefixes.exists(desc.startsWith))
+        if (desc != null && prefixes.exists(desc.startsWith))
           e.stageIds.foreach(labelled.add)
       }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit = {
@@ -1602,16 +1638,7 @@ class UpsertSinkSpec extends SparkSpec {
         if (labelled.contains(info.stageId) &&
             info.taskMetrics.outputMetrics.bytesWritten > 0) widths.add(info.numTasks)
       }
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelJob.get()) flushed.countDown()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setJobDescription(sentinel)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener events never flushed")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    })(body)
     widths.asScala.toSeq
   }
 
@@ -1669,5 +1696,67 @@ class UpsertSinkSpec extends SparkSpec {
     }
     assert(erase.getMessage.contains("invalid erasure id 'bad/id'"), erase.getMessage)
     assert(!sink.exists("t"), "a rejected call wrote a table")
+  }
+
+  test("a 1-row merge the driver holds runs no touched-bucket job; a distributed one does") {
+    val sink = freshSink() // default modulus, 64 buckets
+    sink.merge("t", (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    val held = jobLabels(sink.merge("t", Seq((7L, "x")).toDF("id", "v"), Seq("id")))
+    assert(held.exists(_.startsWith("sink:swap:t")), s"no rewrite job: $held")
+    assert(!held.exists(_.startsWith("sink:merge:touched:")), s"jobs: $held")
+    val distributed = jobLabels(sink.merge("t",
+      Seq((8L, "y")).toDF("id", "v").localCheckpoint(), Seq("id")))
+    assert(distributed.exists(_.startsWith("sink:merge:touched:t")), s"jobs: $distributed")
+    assert(sink.read("t").filter($"id" <= 8L && $"id" >= 7L).as[(Long, String)]
+      .collect().sorted.toSeq == Seq((7L, "x"), (8L, "y")))
+    assert(sink.read("t").count() == 200L)
+  }
+
+  test("a delta the driver holds merges exactly like a distributed copy of the same rows") {
+    import org.apache.spark.sql.DataFrame
+    def contents(sink: UpsertSink): Seq[String] =
+      if (!sink.exists("t")) Seq("<missing>")
+      else if (!sink.hasData("t")) Seq("<no data>")
+      else sink.read("t").collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.mkString("0x[", ",", "]")
+        case v => String.valueOf(v)
+      }.mkString("|")).toSeq.sorted
+    // each case merges `base` (when given), then `delta` held on the
+    // driver in one sink and checkpointed (distributed) in another
+    def parity(name: String, base: Option[DataFrame], delta: DataFrame)(
+        merge: (UpsertSink, DataFrame) => Unit): Seq[String] = {
+      val Seq(held, distributed) = Seq(delta, delta.localCheckpoint()).map { d =>
+        val sink = freshSink()
+        base.foreach(merge(sink, _))
+        merge(sink, d)
+        contents(sink)
+      }
+      assert(held == distributed, s"$name: held $held vs distributed $distributed")
+      held
+    }
+    val base = Some((1L to 20L).map(i => (i, s"v$i", 0L)).toDF("id", "v", "ver"))
+    val dups = Seq((3L, "a", 2L), (3L, "b", 1L), (4L, "c", 9L), (30L, "d", 1L))
+      .toDF("id", "v", "ver")
+    val lastWins = parity("last-wins", base, dups)((s, d) => s.merge("t", d, Seq("id")))
+    assert(lastWins.count(_.startsWith("3|")) == 1 && lastWins.size == 21, lastWins)
+    val versioned = parity("versionCol", base, dups)((s, d) =>
+      s.merge("t", d, Seq("id"), versionCol = Some("ver")))
+    assert(versioned.contains("3|a|2"), versioned)
+    val counts = parity("count merge", Some(Seq(("a", 5L)).toDF("k", "cnt")),
+      Seq(("a", 1L), ("b", 3L), ("a", 2L)).toDF("k", "cnt"))((s, d) =>
+      s.mergeMany(Seq(TableMerge("t", d, Seq("k"), counts = Seq("cnt")))))
+    assert(counts == Seq("a|8", "b|3"), counts)
+    val binary = parity("binary keys", Some(Seq((Array[Byte](1, 2), "s")).toDF("k", "v")),
+      Seq((Array[Byte](1, 2), "a"), (Array[Byte](1, 2), "b"), (Array[Byte](3), "c"))
+        .toDF("k", "v"))((s, d) => s.merge("t", d, Seq("k")))
+    assert(binary == Seq("0x[1,2]|b", "0x[3]|c"), binary)
+    val zeros = parity("signed zero keys", Some(Seq((0.0, "s"), (1.5, "t")).toDF("k", "v")),
+      Seq((-0.0, "a"), (0.0, "b")).toDF("k", "v"))((s, d) => s.merge("t", d, Seq("k")))
+    assert(zeros.size == 2, zeros)
+    val empty = Seq.empty[(Long, String)].toDF("id", "v")
+    assert(parity("empty mergeMany", None, empty)((s, d) =>
+      s.mergeMany(Seq(TableMerge("t", d, Seq("id"))))) == Seq("<missing>"))
+    assert(parity("empty merge", None, empty)((s, d) =>
+      s.merge("t", d, Seq("id"))) != Seq("<missing>"))
   }
 }
