@@ -12,8 +12,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, ByteType, DataType, DateType,
-  IntegerType, LongType, MapType, ShortType, StringType, StructType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, BooleanType, ByteType, DataType,
+  DateType, IntegerType, LongType, MapType, ShortType, StringType, StructType, TimestampNTZType,
+  TimestampType}
 import org.apache.spark.storage.StorageLevel
 
 /** One table's delta for [[UpsertSink.mergeMany]] — the per-table
@@ -869,11 +870,15 @@ final class UpsertSink(spark: SparkSession, root: String,
         // a mismatch would scatter updated keys away from their rows
         val buckets = st.filter(_.bucketed).fold(numBuckets)(_.buckets)
         val keyed = withBucket(m.updates, m.pk, buckets)
-        // a delta the driver already holds yields its (pk, bucket) rows
-        // with no Spark job: its touched buckets come from them, and
-        // unique keys need neither the dedupe nor the cache
-        val held = heldKeys(keyed, m.pk)
-        val unique = m.pkUnique || held.exists(distinctKeys(_, m.pk.map(m.updates.schema(_).dataType)))
+        // a delta the driver already holds (a local relation) yields its
+        // (pk, bucket) rows with no Spark job: its touched buckets come
+        // from them, and unique keys need neither the dedupe nor the cache
+        val held = keyed.queryExecution.optimizedPlan match {
+          case _: LocalRelation => Some(keyed.select((m.pk :+ BucketCol).map(col): _*).collect())
+          case _ => None
+        }
+        val unique = m.pkUnique ||
+          held.exists(distinctKeys(_, m.pk.map(m.updates.schema(_).dataType)))
         val latest =
           if (unique) keyed
           else withBucket(
@@ -881,8 +886,8 @@ final class UpsertSink(spark: SparkSession, root: String,
               sumCounts(m.updates, m.pk.map(col), m.counts, m.updates.schema)
                 .select(m.updates.columns.toSeq.map(col): _*)
             else dedupeLastWins(m.updates, m.pk, m.versionCol), m.pk, buckets)
-        // persisted: the touched collect or the dedupe, and the rewrite,
-        // consume it
+        // a distributed or deduped delta is cached: the touched collect
+        // and the rewrite's two reads would otherwise recompute it
         val cached = held.isEmpty || !unique
         (m, st, buckets, if (cached) latest.persist(StorageLevel.MEMORY_AND_DISK) else latest,
           held.map(_.map(_.getInt(m.pk.size)).distinct.sorted.toSeq), cached)
@@ -936,19 +941,9 @@ final class UpsertSink(spark: SparkSession, root: String,
       } finally prepped.foreach(p => if (p._6) p._4.unpersist())
     }
 
-  /** The (pk, [[BucketCol]]) rows of a bucketed delta the driver already
-    * holds — one that optimizes to a local relation, whose collect runs
-    * no Spark job — or None for a distributed delta. */
-  private def heldKeys(keyed: DataFrame, pk: Seq[String]): Option[Array[Row]] =
-    keyed.queryExecution.optimizedPlan match {
-      case _: LocalRelation => Some(keyed.select((pk :+ BucketCol).map(col): _*).collect())
-      case _ => None
-    }
-
-  /** Whether `rows` (key values first) hold each key once as Spark's
-    * grouping sees it: binary keys compare by content; float, double,
-    * complex and collated keys, whose grouping normalizes values, are
-    * never called unique — a wrong verdict would write duplicate keys. */
+  /** Whether `rows` (key values first) hold each key once as Spark groups
+    * them: binary by content; float, double, complex and collated keys
+    * (Spark normalizes them) are never called unique. */
   private def distinctKeys(rows: Array[Row], types: Seq[DataType]): Boolean =
     types.forall {
       case StringType | BinaryType | BooleanType | ByteType | ShortType | IntegerType |
