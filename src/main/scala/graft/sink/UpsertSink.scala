@@ -877,8 +877,7 @@ final class UpsertSink(spark: SparkSession, root: String,
           case _: LocalRelation => Some(keyed.select((m.pk :+ BucketCol).map(col): _*).collect())
           case _ => None
         }
-        val unique = m.pkUnique ||
-          held.exists(distinctKeys(_, m.pk.map(m.updates.schema(_).dataType)))
+        val unique = m.pkUnique || held.exists(distinctKeys)
         val latest =
           if (unique) keyed
           else withBucket(
@@ -941,18 +940,18 @@ final class UpsertSink(spark: SparkSession, root: String,
       } finally prepped.foreach(p => if (p._6) p._4.unpersist())
     }
 
-  /** Whether `rows` (key values first) hold each key once as Spark groups
-    * them: binary by content; float, double, complex and collated keys
-    * (Spark normalizes them) are never called unique. */
-  private def distinctKeys(rows: Array[Row], types: Seq[DataType]): Boolean =
-    types.forall {
+  /** Whether `rows` (key columns, then [[BucketCol]]) hold each key once
+    * as Spark groups them: binary by content; float, double, complex and
+    * collated keys (Spark normalizes them) are never called unique. */
+  private def distinctKeys(rows: Array[Row]): Boolean =
+    rows.headOption.forall(_.schema.init.forall(_.dataType match {
       case StringType | BinaryType | BooleanType | ByteType | ShortType | IntegerType |
            LongType | DateType | TimestampType | TimestampNTZType => true
       case _ => false
-    } && rows.map(r => types.indices.map(i => r.get(i) match {
+    })) && rows.map(_.toSeq.init.map {
       case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
       case v => v
-    })).distinct.length == rows.length
+    }).distinct.length == rows.length
 
   /** Commit every member whose rewrite succeeded in one entry, then
     * rethrow the first failure (unwrapped). */
