@@ -67,10 +67,15 @@ object SearchOps {
   private[graft] val DocLens = "bm25_doclens"
   private[graft] val Stats = "bm25_stats"
 
+  /** One (doc_id, w) row per token occurrence. */
+  private def tokenRows(docs: DataFrame, idCol: String,
+                        textCol: String): DataFrame =
+    docs.select(col(idCol).as("doc_id"),
+      explode(TextOps.tokens(col(textCol))).as("w"))
+
   private def postingRows(docs: DataFrame, idCol: String,
                           textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-        explode(TextOps.tokens(col(textCol))).as("w"))
+    tokenRows(docs, idCol, textCol)
       .groupBy("w", "doc_id").agg(count(lit(1)).as("tf"))
       .select(col("w"), col("doc_id"), col("tf"))
 
@@ -323,6 +328,14 @@ object SearchOps {
     * ([[graft.sink.UpsertSink.readKeyBuckets]]), so it stays
     * batch-sized at any archive size.
     *
+    * A batch the driver already holds (a local relation, e.g.
+    * `createDataFrame(rows, schema)` or `toDF`) stays there: its ids
+    * route on the driver and the guard matches them with a filter in
+    * ONE Spark job, and its postings delta is collected once (only when
+    * the merge will apply it) so the sink merges every member with no
+    * touched-bucket job. A distributed batch checkpoints its ids and
+    * lets the sink learn the postings' buckets in a job.
+    *
     * Replay: every member records `admitId` in the commit that applies
     * it, so a replay of a committed admit skips all three tables (a
     * whole no-op — an erasure since then stays erased), and a replay
@@ -341,20 +354,26 @@ object SearchOps {
     require(invertedIndexExists(sink),
       s"no inverted index under ${sink.rootPath} — run invertedIndexBuild")
     val tables = Seq(Stats, Postings, DocLens)
+    val spark = batch.sparkSession
     sink.writerLocked(tables) {
+      val ids = batch.select(col(idCol).as("doc_id"))
+      // a batch the driver holds (a local relation) keeps its ids and
+      // its postings delta on the driver: the guard routes and matches
+      // its ids with no join, and the sink merges the held delta with no
+      // touched-bucket job
+      val held = UpsertSink.held(ids).isDefined
       // a FILELESS doclens table is the erase-everything end state: no
       // id can be indexed, so the guard is vacuously clean
       if (!admitId.exists(id => tables.exists(sink.admitCommitted(_, id))) &&
           sink.hasData(DocLens)) {
-        // checkpointed once: the ids drive BOTH the bucket routing and
-        // the membership join — a nondeterministic upstream recomputed
-        // between the two could route to the wrong buckets
-        val already = Par.labeled(batch.sparkSession, "admit:guard") {
-          val ids = batch.select(col(idCol).as("doc_id")).distinct()
-            .localCheckpoint(true)
-          sink.readKeyBuckets(DocLens, ids, Seq("doc_id"))
-            .select("doc_id").join(broadcast(ids), Seq("doc_id"), "left_semi")
-            .count()
+        val already = Par.labeled(spark, "admit:guard") {
+          if (held) sink.readKeyBuckets(DocLens, ids, Seq("doc_id"))
+            .select("doc_id").collect().length.toLong // bounded by the batch
+          // checkpointed once: the ids drive BOTH the bucket routing and
+          // the membership join — a nondeterministic upstream recomputed
+          // between the two could route to the wrong buckets
+          else sink.readKeyBuckets(DocLens, ids.distinct().localCheckpoint(true),
+            Seq("doc_id")).count()
         }
         require(already == 0L,
           s"invertedIndexAdmit: $already of the batch's ids are already " +
@@ -362,12 +381,18 @@ object SearchOps {
             "ids (re-counting an indexed id corrupts the maintained " +
             "(N, avgdl)); erase first, then admit")
       }
+      val postings = postingRows(batch, idCol, textCol)
+      // held only when the merge will apply it: a re-delivered admit
+      // whose postings already landed runs no job at all
+      val heldPostings =
+        if (held && !admitId.exists(sink.admitCommitted(Postings, _)))
+          Par.labeled(spark, "admit:hold")(UpsertSink.hold(postings))
+        else postings
       sink.mergeMany(Seq(
         TableMerge(Stats, lenRows(batch, idCol, textCol).select(lit(0).as("k"),
           lit(1L).as("n"), col("dl").as("sum_dl")),
           Seq("k"), counts = Seq("n", "sum_dl")),
-        TableMerge(Postings, postingRows(batch, idCol, textCol),
-          Seq("w", "doc_id"), pkUnique = true),
+        TableMerge(Postings, heldPostings, Seq("w", "doc_id"), pkUnique = true),
         TableMerge(DocLens, lenRows(batch, idCol, textCol),
           Seq("doc_id"), pkUnique = true)), admitId)
     }
@@ -395,11 +420,11 @@ object SearchOps {
   private[graft] def invertedRetractPlan(
       docs: DataFrame, idCol: String, textCol: String): Seq[TableErase] =
     Seq(
+      // key rows may repeat: a delete matches keys, not rows
       TableDelete(Postings,
-        postingRows(docs, idCol, textCol).select(col("w"), col("doc_id")),
+        tokenRows(docs, idCol, textCol).select(col("w"), col("doc_id")),
         Seq("w", "doc_id")),
-      TableDelete(DocLens,
-        docs.select(col(idCol).as("doc_id")).distinct(), Seq("doc_id")),
+      TableDelete(DocLens, docs.select(col(idCol).as("doc_id")), Seq("doc_id")),
       // per-doc decrement rows — the sink sums them per pk; the stats
       // row is STRUCTURAL (a zero row means "empty corpus", which the
       // search guard names), so it never drops

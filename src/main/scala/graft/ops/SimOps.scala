@@ -1902,8 +1902,6 @@ object SimOps {
                              // bucket routing AND membership join
     val frames = routed.filter(s => ivfPqIndexExists(sinks(s))).map { s =>
       sinks(s).readKeyBuckets(IdxCodes, keys, Seq("id"))
-        .select("id")
-        .join(keys, Seq("id"), "left_semi")
         .agg(count(lit(1)).as("__c"))
         .select(lit(s).as("__s"), col("__c"))
     }

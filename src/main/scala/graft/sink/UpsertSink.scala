@@ -164,7 +164,7 @@ final case class TableCountRetract(table: String, decrements: DataFrame,
 final class UpsertSink(spark: SparkSession, root: String,
                        numBuckets: Int = 64,
                        writerWaitMs: Long = 60000L) {
-  import UpsertSink.BucketCol
+  import UpsertSink.{BucketCol, distinctCount, held, keyFilter}
 
   /** The session this sink writes with — model-persistence helpers
     * (e.g. BpeOps.saveModel) build their DataFrames on it rather than
@@ -561,41 +561,65 @@ final class UpsertSink(spark: SparkSession, root: String,
       .groupBy(_.getString(0))
       .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq.sorted }
 
-  /** Rows of `table` from ONLY the buckets `keys` hash into — the
-    * READ-side sibling of the merge/erase touched-bucket discipline,
-    * for guards and receipts that check a bounded key set against a
-    * large table without paying a full scan. `pk` must be the table's
-    * merge key; key columns are cast to the STORED types first (a
-    * type-skewed hash would prune the WRONG buckets and silently miss
-    * every match). Flat-layout and fileless tables fall back to the
-    * plain read. Like [[read]], not pinned — run under the writer lease
-    * (or a snapshot) when racing writers matter.
+  /** Rows of `table` whose `pk` matches a key in `keys` (a semi-join),
+    * opening ONLY the buckets `keys` hash into — the READ-side sibling
+    * of the merge/erase touched-bucket discipline, for guards and
+    * receipts that check a bounded key set against a large table without
+    * paying a full scan. `pk` must be the table's merge key; key columns
+    * are cast to the STORED types first (a type-skewed hash would prune
+    * the WRONG buckets and silently miss every match). Keys the driver
+    * holds ([[UpsertSink.held]]) route on the driver and, when their
+    * types compare exactly there, match as a filter on the key values:
+    * no Spark job runs before the caller's action, and that action needs
+    * no join. Distributed keys learn their buckets in one job and
+    * semi-join. Flat-layout and fileless tables fall back to the plain
+    * read. Like [[read]], not pinned — run under the writer lease (or a
+    * snapshot) when racing writers matter.
     */
   private[graft] def readKeyBuckets(table: String, keys: DataFrame,
                                     pk: Seq[String]): DataFrame = {
     require(pk.nonEmpty, s"readKeyBuckets on $table needs the merge key")
     val cur = state(table)
-    cur.filter(s => s.hasData && s.bucketed) match {
-      case None => scan(table, cur, None).drop(BucketCol)
+    val all = scan(table, cur, None).drop(BucketCol) // a missing table fails here
+    val stored = cur.get.schema
+    val typed = keys.select(pk.map { c =>
+      val f = stored.find(_.name == c).getOrElse(
+        throw new IllegalArgumentException(
+          s"readKeyBuckets $table: key column $c not in stored schema " +
+            s"[${stored.map(_.name).mkString(", ")}]"))
+      keys(c).cast(f.dataType).as(c)
+    }: _*)
+    cur.filter(_.bucketed) match {
+      case None => semiJoin(all, typed, pk)
       case Some(st) =>
-        val typed = pk.map { c =>
-          val f = st.schema.find(_.name == c).getOrElse(
-            throw new IllegalArgumentException(
-              s"readKeyBuckets $table: key column $c not in stored schema " +
-                s"[${st.schema.map(_.name).mkString(", ")}]"))
-          keys(c).cast(f.dataType).as(c)
-        }
+        val keyed = withBucket(typed, pk, st.buckets)
+        val routes = heldRoutes(keyed, pk)
         // no key-level distinct: the bucket set is a pure function of
         // the key VALUES (duplicates fold in the map-side partial
         // aggregate), so deduping keys first would only add an exchange
-        val touched = touchedBuckets(
-            Seq(table -> withBucket(keys.select(typed: _*), pk, st.buckets)),
-            s"sink:keybuckets:$table")
-          .getOrElse(table, Nil).filter(st.files.contains)
-        if (touched.isEmpty) scan(table, cur, None).drop(BucketCol).limit(0)
-        else scan(table, cur, Some(touched)).drop(BucketCol)
+        val touched = routes.fold(touchedBuckets(Seq(table -> keyed),
+            s"sink:keybuckets:$table").getOrElse(table, Nil))(bucketsOf)
+          .filter(st.files.contains)
+        val rows = if (touched.isEmpty) all.limit(0)
+          else scan(table, cur, Some(touched)).drop(BucketCol)
+        routes.flatMap(r => keyFilter(typed.schema, r.map(_.toSeq.init)))
+          .fold(semiJoin(rows, typed, pk))(rows.filter)
     }
   }
+
+  /** `rows` semi-joined to the bounded key set `keys` (broadcast). */
+  private def semiJoin(rows: DataFrame, keys: DataFrame, pk: Seq[String]): DataFrame =
+    rows.join(broadcast(keys.select(pk.map(col): _*)), pk, "left_semi")
+
+  /** The (pk, [[BucketCol]]) rows of a bucketed frame the driver holds
+    * ([[UpsertSink.held]]) — its touched buckets with no Spark job — or
+    * None for a distributed frame. */
+  private def heldRoutes(keyed: DataFrame, pk: Seq[String]): Option[Array[Row]] =
+    held(keyed.select((pk :+ BucketCol).map(col): _*))
+
+  /** The buckets of [[heldRoutes]] rows. */
+  private def bucketsOf(routes: Array[Row]): Seq[Int] =
+    routes.map(r => r.getInt(r.length - 1)).distinct.sorted.toSeq
 
   private def withBucket(df: DataFrame, pk: Seq[String],
                          buckets: Int): DataFrame =
@@ -873,11 +897,8 @@ final class UpsertSink(spark: SparkSession, root: String,
         // a delta the driver already holds (a local relation) yields its
         // (pk, bucket) rows with no Spark job: its touched buckets come
         // from them, and unique keys need neither the dedupe nor the cache
-        val held = keyed.queryExecution.optimizedPlan match {
-          case _: LocalRelation => Some(keyed.select((m.pk :+ BucketCol).map(col): _*).collect())
-          case _ => None
-        }
-        val unique = m.pkUnique || held.exists(distinctKeys)
+        val routes = heldRoutes(keyed, m.pk)
+        val unique = m.pkUnique || routes.exists(r => distinctCount(r).contains(r.length))
         val latest =
           if (unique) keyed
           else withBucket(
@@ -887,9 +908,9 @@ final class UpsertSink(spark: SparkSession, root: String,
             else dedupeLastWins(m.updates, m.pk, m.versionCol), m.pk, buckets)
         // a distributed or deduped delta is cached: the touched collect
         // and the rewrite's two reads would otherwise recompute it
-        val cached = held.isEmpty || !unique
+        val cached = routes.isEmpty || !unique
         (m, st, buckets, if (cached) latest.persist(StorageLevel.MEMORY_AND_DISK) else latest,
-          held.map(_.map(_.getInt(m.pk.size)).distinct.sorted.toSeq), cached)
+          routes.map(bucketsOf), cached)
       }
       try {
         val touched = touchedBuckets(prepped.collect {
@@ -939,19 +960,6 @@ final class UpsertSink(spark: SparkSession, root: String,
         })
       } finally prepped.foreach(p => if (p._6) p._4.unpersist())
     }
-
-  /** Whether `rows` (key columns, then [[BucketCol]]) hold each key once
-    * as Spark groups them: binary by content; float, double, complex and
-    * collated keys (Spark normalizes them) are never called unique. */
-  private def distinctKeys(rows: Array[Row]): Boolean =
-    rows.headOption.forall(_.schema.init.forall(_.dataType match {
-      case StringType | BinaryType | BooleanType | ByteType | ShortType | IntegerType |
-           LongType | DateType | TimestampType | TimestampNTZType => true
-      case _ => false
-    })) && rows.map(_.toSeq.init.map {
-      case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
-      case v => v
-    }).distinct.length == rows.length
 
   /** Commit every member whose rewrite succeeded in one entry, then
     * rethrow the first failure (unwrapped). */
@@ -1025,7 +1033,12 @@ final class UpsertSink(spark: SparkSession, root: String,
     * posting tables, payload tables, count inventories and policy
     * histograms at once, and no reader captures a half-erased state.
     * Without an erasure id a count retraction is at-least-once under
-    * crash-replay; see the erasureId overload.
+    * crash-replay; see the erasureId overload. A payload the driver
+    * already holds (a local relation, e.g. `createDataFrame(rows,
+    * schema)`) routes on the driver: its touched buckets come from its
+    * key rows with no Spark job, and it is neither deduped nor cached.
+    * The distributed payloads share ONE Spark job that learns their
+    * touched buckets.
     */
   def eraseMany(erases: Seq[TableErase]): Unit = eraseMany(erases, None)
 
@@ -1097,10 +1110,15 @@ final class UpsertSink(spark: SparkSession, root: String,
               s"[${stored.map(_.name).mkString(", ")}]"))
         frame(c).cast(f.dataType).as(c)
       }
-      val keyed = (d match {
+      // a payload the driver holds routes on the driver: its touched
+      // buckets come from its key rows, and it is read once (by the
+      // rewrite), so it needs neither the distinct nor the cache
+      val (keyed, routes) = d match {
         case TableDelete(_, keys, pk) =>
-          withBucket(keys.select(typed(keys, "delete from"): _*).distinct(),
-            pk, buckets)
+          val typedKeys = keys.select(typed(keys, "delete from"): _*)
+          val routes = heldRoutes(withBucket(typedKeys, pk, buckets), pk)
+          (withBucket(if (routes.isDefined) typedKeys else typedKeys.distinct(),
+            pk, buckets), routes)
         case TableCountRetract(t, decrements, pk, cntCols, _) =>
           // one decrement row per pk, each count in its STORED type
           cntCols.foreach { c =>
@@ -1110,15 +1128,20 @@ final class UpsertSink(spark: SparkSession, root: String,
             require(decrements.columns.contains(c),
               s"count retract $t: decrements frame lacks count column $c")
           }
-          withBucket(sumCounts(decrements, typed(decrements, "count retract"),
-            cntCols, stored, c => s"__dec_$c"), pk, buckets)
-      }).persist(StorageLevel.MEMORY_AND_DISK)
-      (d, st, buckets, keyed)
+          val pks = typed(decrements, "count retract")
+          (withBucket(sumCounts(decrements, pks, cntCols, stored, c => s"__dec_$c"),
+            pk, buckets), heldRoutes(withBucket(decrements.select(pks: _*), pk, buckets), pk))
+      }
+      (d, st, buckets,
+        if (routes.isDefined) keyed else keyed.persist(StorageLevel.MEMORY_AND_DISK),
+        routes.map(bucketsOf))
     }
     try {
-      val touchedAll = touchedBuckets(prepped.map(p => p._1.table -> p._4),
-        s"sink:erase:touched:${prepped.map(_._1.table).mkString(",")}")
-      val results = graft.ops.Par.map(prepped) { case (d, st, buckets, keyed) =>
+      val touchedAll = touchedBuckets(prepped.collect { case (d, _, _, keyed, None) =>
+          d.table -> keyed },
+        s"sink:erase:touched:${prepped.map(_._1.table).mkString(",")}") ++
+        prepped.collect { case (d, _, _, _, Some(t)) => d.table -> t }
+      val results = graft.ops.Par.map(prepped) { case (d, st, buckets, keyed, _) =>
         d.table -> Try {
           val touched = touchedAll.getOrElse(d.table, Nil)
             .filter(b => !st.bucketed || st.files.contains(b))
@@ -1161,13 +1184,68 @@ final class UpsertSink(spark: SparkSession, root: String,
           _.orElse(erasureId.map(_ => head(d.table)))
             .map(s => s.copy(erasures = s.erasures ++ erasureId)))
       })
-    } finally prepped.foreach(_._4.unpersist())
+    } finally prepped.foreach(p => if (p._5.isEmpty) p._4.unpersist())
   }
 }
 
 object UpsertSink {
   /** The bucket partition column of the bucketed layout. */
   private[sink] val BucketCol = "__bucket"
+
+  /** Whether the driver already holds `df`: its plan optimizes to a
+    * [[LocalRelation]] (`createDataFrame(rows, schema)`, `toDF`, or a
+    * projection or filter of one), whose collect runs no Spark job. */
+  private def local(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.isInstanceOf[LocalRelation]
+
+  /** The rows of a frame the driver already holds, collected with no
+    * Spark job; None for a distributed frame, which this never runs. */
+  private[graft] def held(df: DataFrame): Option[Array[Row]] =
+    if (local(df)) Some(df.collect()) else None
+
+  /** `df` as a frame the driver holds: itself when it already is one,
+    * else its rows, collected in one action. Bounded frames only: the
+    * rows live in driver memory. */
+  private[graft] def hold(df: DataFrame): DataFrame =
+    if (local(df)) df
+    else df.sparkSession.createDataFrame(df.collect().toSeq.asJava, df.schema)
+
+  /** THE key-equality rule for key work on the driver: keys of these
+    * types compare there exactly as Spark groups and joins them (binary
+    * by content, nulls equal to each other when grouped). Spark
+    * normalizes float, double, decimal, complex and collated keys, so
+    * those are left to Spark. */
+  private def exactKeys(types: Seq[DataType]): Boolean = types.forall {
+    case StringType | BinaryType | BooleanType | ByteType | ShortType | IntegerType |
+         LongType | DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** A key's values as the driver compares them under the rule. */
+  private def keyOf(values: Seq[Any]): Seq[Any] = values.map {
+    case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+    case v => v
+  }
+
+  /** What `distinct().count()` of `rows` (every column a key column)
+    * returns, computed on the driver under the rule; None when the key
+    * types fall outside it. */
+  private[graft] def distinctCount(rows: Array[Row]): Option[Long] =
+    if (!rows.headOption.forall(r => exactKeys(r.schema.map(_.dataType)))) None
+    else Some(rows.iterator.map(r => keyOf(r.toSeq)).distinct.size.toLong)
+
+  /** A filter passing exactly the rows a semi-join to `keys` keeps (key
+    * values in the `schema` types; a key holding a null matches
+    * nothing), or None when the key types fall outside the rule. */
+  private def keyFilter(schema: StructType, keys: Array[Seq[Any]]): Option[Column] =
+    if (!exactKeys(schema.map(_.dataType))) None
+    else {
+      val live = keys.filterNot(_.contains(null)).distinctBy(keyOf).toSeq
+      def lits(k: Seq[Any]): Seq[Column] = k.zip(schema).map { case (v, f) =>
+        lit(v).cast(f.dataType).as(f.name) }
+      Some(if (schema.size == 1) col(schema.head.name).isin(live.map(lits(_).head): _*)
+        else struct(schema.map(f => col(f.name)): _*).isin(live.map(k => struct(lits(k): _*)): _*))
+    }
 
   /** One shared daemon thread renews every held writer lease in the
     * process — renewal is a small file touch per held table per tick,

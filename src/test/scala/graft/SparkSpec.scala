@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,6 +15,49 @@ trait SparkSpec extends AnyFunSuite {
     s
   }
   val sf: String = "/root/testdata/sf0.001"
+
+  /** Run `body` with `listener` attached. A sentinel job run after
+    * `body` flushes the (asynchronous, ordered) listener events before
+    * this returns.
+    */
+  def listening(listener: org.apache.spark.scheduler.SparkListener)(body: => Unit): Unit = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.scheduler._
+    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
+    val flushed = new CountDownLatch(1)
+    val flush = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == Sentinel))
+          sentinelJob.set(e.jobId)
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == sentinelJob.get()) flushed.countDown()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    spark.sparkContext.addSparkListener(flush)
+    try {
+      body
+      spark.sparkContext.setJobDescription(Sentinel)
+      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
+      assert(flushed.await(60, TimeUnit.SECONDS), "listener events never flushed")
+    } finally {
+      spark.sparkContext.removeSparkListener(flush)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
+
+  private val Sentinel = "spark-spec:sentinel"
+
+  /** The job descriptions of the jobs `body` submits. */
+  def jobLabels(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler._
+    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        labels.add(Option(e.properties).map(_.getProperty("spark.job.description"))
+          .flatMap(Option(_)).getOrElse("<unlabelled>"))
+    })(body)
+    labels.asScala.toSeq.filterNot(_ == Sentinel)
+  }
 
   /** Run `body` with the TRUE interpreted expression path:
     * factoryMode=NO_CODEGEN forces InterpretedUnsafeProjection, which

@@ -379,4 +379,48 @@ class SearchOpsSpec extends SparkSpec {
       assert(rows(sink, t) == rows(expected, t),
         s"$t after erase + re-delivered admit != fresh build without the erased doc")
   }
+
+  test("an admit and an erase over a batch the driver holds match the same rows checkpointed") {
+    val docs = Tables.load(spark, sf, "documents").select("doc_id", "text").limit(60)
+      .collect().toSeq
+    val schema = Tables.load(spark, sf, "documents").select("doc_id", "text").schema
+    def id(r: org.apache.spark.sql.Row): Long = r.getAs[Number](0).longValue
+    val archive = docs.filter(id(_) % 3 != 0)
+    val batch = docs.filter(id(_) % 3 == 0)
+    // the erasure names one subject twice: it still counts once
+    val subjects = archive.filter(id(_) % 7 == 2)
+    val erase = subjects :+ subjects.head
+    val tables = Seq(SearchOps.Postings, SearchOps.DocLens, SearchOps.Stats)
+    def run(held: Boolean) = {
+      def frame(rows: Seq[org.apache.spark.sql.Row]) = {
+        val df = spark.createDataFrame(rows.asJava, schema)
+        if (held) df else df.localCheckpoint()
+      }
+      val sink = freshSink(s"held_$held")
+      SearchOps.invertedIndexBuild(frame(archive).localCheckpoint(), "doc_id", "text", sink)
+      var report: EraseOps.EraseReport = null
+      val labels = jobLabels {
+        SearchOps.invertedIndexAdmit(frame(batch), "doc_id", "text", sink, Some("admit-1"))
+        report = EraseOps.eraseSubjects(frame(erase), "doc_id", "text", sink, "sweep-1")
+      }
+      val redelivered = jobLabels(
+        SearchOps.invertedIndexAdmit(frame(batch), "doc_id", "text", sink, Some("admit-1")))
+      val ledger = sink.read(EraseOps.LedgerTable)
+        .select($"sweep_id", $"member_table", $"action", $"subjects", $"removed",
+          $"ver_before" =!= $"ver_after")
+        .collect().map(_.toSeq).toSet
+      (tables.map(t => t -> rows(sink, t)).toMap, ledger, report, labels, redelivered)
+    }
+    val (heldTables, heldLedger, heldReport, heldLabels, heldRedelivered) = run(held = true)
+    val (cpTables, cpLedger, cpReport, _, _) = run(held = false)
+    for (t <- tables) assert(heldTables(t) == cpTables(t), s"$t: held and checkpointed differ")
+    assert(heldLedger == cpLedger, s"ledger: held $heldLedger vs checkpointed $cpLedger")
+    assert(heldReport == cpReport, s"report: held $heldReport vs checkpointed $cpReport")
+    assert(heldReport.subjects == subjects.size.toLong, heldReport)
+    assert(heldLedger.exists(r => r(1) == SearchOps.Postings && r(4) != 0L), heldLedger)
+    for (step <- Seq("erase:subjects", "sink:keybuckets:", "sink:erase:touched:",
+        "sink:mergeMany:touched:"))
+      assert(!heldLabels.exists(_.startsWith(step)), s"held batch ran $step: $heldLabels")
+    assert(heldRedelivered.isEmpty, s"a re-delivered admit ran jobs: $heldRedelivered")
+  }
 }

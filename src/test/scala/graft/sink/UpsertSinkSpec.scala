@@ -1577,48 +1577,6 @@ class UpsertSinkSpec extends SparkSpec {
     assert(none.columns.toSeq == Seq("id", "v") && none.count() == 0L)
   }
 
-  /** Run `body` with `listener` attached. A sentinel job run after
-    * `body` flushes the (asynchronous, ordered) listener events before
-    * this returns.
-    */
-  private def listening(listener: org.apache.spark.scheduler.SparkListener)(body: => Unit): Unit = {
-    import java.util.concurrent.{CountDownLatch, TimeUnit}
-    import org.apache.spark.scheduler._
-    val sentinel = "upsert-sink-spec:sentinel"
-    val sentinelJob = new java.util.concurrent.atomic.AtomicInteger(-1)
-    val flushed = new CountDownLatch(1)
-    val flush = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
-          sentinelJob.set(e.jobId)
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == sentinelJob.get()) flushed.countDown()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    spark.sparkContext.addSparkListener(flush)
-    try {
-      body
-      spark.sparkContext.setJobDescription(sentinel)
-      try spark.range(1).count() finally spark.sparkContext.setJobDescription(null)
-      assert(flushed.await(60, TimeUnit.SECONDS), "listener events never flushed")
-    } finally {
-      spark.sparkContext.removeSparkListener(flush)
-      spark.sparkContext.removeSparkListener(listener)
-    }
-  }
-
-  /** The job descriptions of the jobs `body` submits. */
-  private def jobLabels(body: => Unit): Seq[String] = {
-    import org.apache.spark.scheduler._
-    val labels = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    listening(new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        labels.add(Option(e.properties).map(_.getProperty("spark.job.description"))
-          .flatMap(Option(_)).getOrElse("<unlabelled>"))
-    })(body)
-    labels.asScala.toSeq.filterNot(_ == "upsert-sink-spec:sentinel")
-  }
-
   /** Task counts of the stages that wrote output in the jobs `body`
     * submits under a label starting with one of `prefixes`.
     */
@@ -1712,15 +1670,17 @@ class UpsertSinkSpec extends SparkSpec {
     assert(sink.read("t").count() == 200L)
   }
 
+  /** Table `t`'s rows as sorted strings (binary by content). */
+  private def contents(sink: UpsertSink): Seq[String] =
+    if (!sink.exists("t")) Seq("<missing>")
+    else if (!sink.hasData("t")) Seq("<no data>")
+    else sink.read("t").collect().map(_.toSeq.map {
+      case b: Array[Byte] => b.mkString("0x[", ",", "]")
+      case v => String.valueOf(v)
+    }.mkString("|")).toSeq.sorted
+
   test("a delta the driver holds merges exactly like a distributed copy of the same rows") {
     import org.apache.spark.sql.DataFrame
-    def contents(sink: UpsertSink): Seq[String] =
-      if (!sink.exists("t")) Seq("<missing>")
-      else if (!sink.hasData("t")) Seq("<no data>")
-      else sink.read("t").collect().map(_.toSeq.map {
-        case b: Array[Byte] => b.mkString("0x[", ",", "]")
-        case v => String.valueOf(v)
-      }.mkString("|")).toSeq.sorted
     // each case merges `base` (when given), then `delta` held on the
     // driver in one sink and checkpointed (distributed) in another
     def parity(name: String, base: Option[DataFrame], delta: DataFrame)(
@@ -1758,5 +1718,106 @@ class UpsertSinkSpec extends SparkSpec {
       s.mergeMany(Seq(TableMerge("t", d, Seq("id"))))) == Seq("<missing>"))
     assert(parity("empty merge", None, empty)((s, d) =>
       s.merge("t", d, Seq("id"))) != Seq("<missing>"))
+  }
+
+  test("a held 1-key delete runs no sink:erase:touched job; a distributed one does") {
+    val sink = freshSink() // default modulus, 64 buckets
+    sink.merge("t", (1L to 200L).map(i => (i, s"v$i")).toDF("id", "v"), Seq("id"))
+    val held = jobLabels(sink.delete("t", Seq(7L).toDF("id"), Seq("id")))
+    assert(held.exists(_.startsWith("sink:swap:t")), s"no rewrite job: $held")
+    assert(!held.exists(_.startsWith("sink:erase:touched:")), s"jobs: $held")
+    val distributed = jobLabels(sink.delete("t", Seq(8L).toDF("id").localCheckpoint(),
+      Seq("id")))
+    assert(distributed.exists(_.startsWith("sink:erase:touched:t")), s"jobs: $distributed")
+    assert(sink.read("t").count() == 198L &&
+      sink.read("t").filter($"id".isin(7L, 8L)).isEmpty)
+  }
+
+  test("an erase the driver holds leaves the table a distributed copy of it leaves") {
+    import org.apache.spark.sql.DataFrame
+    // each case builds `base` with `pk`, then erases `payload` held on
+    // the driver in one sink and checkpointed (distributed) in another
+    def parity(name: String, base: DataFrame, pk: Seq[String], payload: DataFrame)(
+        erase: (UpsertSink, DataFrame) => Unit): Seq[String] = {
+      val Seq(held, distributed) = Seq(payload, payload.localCheckpoint()).map { d =>
+        val sink = new UpsertSink(spark,
+          Files.createTempDirectory("graft_sink_erase").toString, numBuckets = 8)
+        sink.merge("t", base, pk)
+        erase(sink, d)
+        contents(sink)
+      }
+      assert(held == distributed, s"$name: held $held vs distributed $distributed")
+      held
+    }
+    def delete(pk: String*)(s: UpsertSink, d: DataFrame): Unit = s.delete("t", d, pk)
+    val base = (1L to 20L).map(i => (i, s"v$i")).toDF("id", "v")
+    val dups = parity("duplicate keys", base, Seq("id"),
+      Seq(3L, 3L, 4L, 99L).toDF("id"))(delete("id"))
+    assert(dups.size == 18 && !dups.exists(_.startsWith("3|")), dups)
+    val binary = parity("binary keys",
+      Seq((Array[Byte](1, 2), "a"), (Array[Byte](3), "b"), (Array[Byte](4), "c")).toDF("k", "v"),
+      Seq("k"), Seq(Array[Byte](1, 2), Array[Byte](1, 2), Array[Byte](3)).toDF("k"))(delete("k"))
+    assert(binary == Seq("0x[4]|c"), binary)
+    val nulls = parity("a null key", Seq((Some("a"), 1), (None, 2)).toDF("k", "v"), Seq("k"),
+      Seq(Some("a"), None).toDF("k"))(delete("k"))
+    assert(nulls == Seq("null|2"), nulls) // a null key matches nothing
+    val composite = parity("composite pk",
+      Seq(("a", 1L, 1), ("a", 2L, 2), ("b", 1L, 3)).toDF("w", "d", "v"), Seq("w", "d"),
+      Seq(("a", 1L), ("b", 2L), ("a", 1L)).toDF("w", "d"))(delete("w", "d"))
+    assert(composite == Seq("a|2|2", "b|1|3"), composite)
+    val intKeys = parity("int keys against a long table", base, Seq("id"),
+      Seq(5, 6).toDF("id"))(delete("id"))
+    assert(intKeys.size == 18 && !intKeys.exists(_.startsWith("5|")), intKeys)
+    val counts = Seq(("a", 5L), ("b", 2L), ("c", 1L)).toDF("k", "cnt")
+    val repeated = Seq(("a", 1L), ("a", 1L), ("b", 2L), ("z", 4L)).toDF("k", "cnt")
+    for (drop <- Seq(true, false)) {
+      val left = parity(s"count retract, dropAtZero = $drop", counts, Seq("k"), repeated)(
+        (s, d) => s.eraseMany(Seq(TableCountRetract("t", d, Seq("k"), Seq("cnt"), drop))))
+      assert(left == (Seq("a|3", "c|1") ++ (if (drop) Nil else Seq("b|0"))).sorted, left)
+    }
+    // the erasure-id replay: a second delivery of the same erasure after
+    // the table regrew must change nothing
+    val replay = parity("erasure-id replay", counts, Seq("k"), repeated) { (s, d) =>
+      def once(): Unit = s.eraseMany(Seq(TableCountRetract("t", d, Seq("k"), Seq("cnt"))),
+        Some("sweep-1"))
+      once()
+      once()
+    }
+    assert(replay == Seq("a|3", "c|1"), replay)
+  }
+
+  test("readKeyBuckets with held keys runs no sink:keybuckets job and returns the distributed copy's rows") {
+    import org.apache.spark.sql.DataFrame
+    val sink = new UpsertSink(spark,
+      Files.createTempDirectory("graft_sink_rkb_held").toString, numBuckets = 8)
+    sink.merge("t", (1L to 40L).map(i => (i, s"w${i % 3}", s"v$i")).toDF("id", "w", "v"),
+      Seq("id"))
+    sink.merge("c", (1L to 40L).map(i => (s"w${i % 3}", i, i * 2)).toDF("w", "id", "v"),
+      Seq("w", "id"))
+    sink.merge("b", (1 to 40).map(i => (Array[Byte](i.toByte, 7), i)).toDF("k", "v"), Seq("k"))
+    def read(table: String, keys: DataFrame, pk: String*): Seq[String] =
+      sink.readKeyBuckets(table, keys, pk).collect().map(_.toSeq.map {
+        case b: Array[Byte] => b.mkString("0x[", ",", "]")
+        case v => String.valueOf(v)
+      }.mkString("|")).toSeq.sorted
+    // more than 10 keys: Spark tests membership in a set, not a list
+    val many = (1L to 12L).map(i => (s"w${i % 3}", i))
+    for ((table, pk, keys, expected) <- Seq(
+        ("t", Seq("id"), Seq(7L, 7L, 12L, 999L).toDF("id"), Seq("12|w0|v12", "7|w1|v7")),
+        ("t", Seq("id"), Seq(7, 8).toDF("id"), Seq("7|w1|v7", "8|w2|v8")), // int keys, long pk
+        ("t", Seq("id"), Seq(Some(3L), None).toDF("id"), Seq("3|w0|v3")),
+        ("c", Seq("w", "id"), Seq(("w1", 7L), ("w0", 7L), ("w0", 12L)).toDF("w", "id"),
+          Seq("w0|12|24", "w1|7|14")),
+        ("c", Seq("w", "id"), many.toDF("w", "id"), many.map { case (w, i) => s"$w|$i|${i * 2}" }.sorted),
+        ("b", Seq("k"), (3 to 14).map(i => Array[Byte](i.toByte, 7)).toDF("k"),
+          (3 to 14).map(i => s"0x[$i,7]|$i").sorted),
+        ("t", Seq("id"), Seq.empty[Long].toDF("id"), Nil))) {
+      var held: Seq[String] = Nil
+      val labels = jobLabels { held = read(table, keys, pk: _*) }
+      assert(!labels.exists(_.startsWith("sink:keybuckets:")), s"$table $pk: jobs $labels")
+      assert(held == expected, s"$table $pk: $held")
+      val distributed = read(table, keys.localCheckpoint(), pk: _*)
+      assert(held == distributed, s"$table $pk: held $held vs distributed $distributed")
+    }
   }
 }
