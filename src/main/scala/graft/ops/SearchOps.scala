@@ -67,15 +67,10 @@ object SearchOps {
   private[graft] val DocLens = "bm25_doclens"
   private[graft] val Stats = "bm25_stats"
 
-  /** One (doc_id, w) row per token occurrence. */
-  private def tokenRows(docs: DataFrame, idCol: String,
-                        textCol: String): DataFrame =
-    docs.select(col(idCol).as("doc_id"),
-      explode(TextOps.tokens(col(textCol))).as("w"))
-
   private def postingRows(docs: DataFrame, idCol: String,
                           textCol: String): DataFrame =
-    tokenRows(docs, idCol, textCol)
+    docs.select(col(idCol).as("doc_id"),
+        explode(TextOps.tokens(col(textCol))).as("w"))
       .groupBy("w", "doc_id").agg(count(lit(1)).as("tf"))
       .select(col("w"), col("doc_id"), col("tf"))
 
@@ -330,8 +325,9 @@ object SearchOps {
     *
     * A batch the driver already holds (a local relation, e.g.
     * `createDataFrame(rows, schema)` or `toDF`) stays there: its ids
-    * route on the driver and the guard matches them with a filter in
-    * ONE Spark job, and its postings delta is collected once (only when
+    * route on the driver and the guard matches them in ONE Spark job
+    * (a filter on the ids; a batch of more than 200 ids semi-joins
+    * them), and its postings delta is collected once (only when
     * the merge will apply it) so the sink merges every member with no
     * touched-bucket job. A distributed batch checkpoints its ids and
     * lets the sink learn the postings' buckets in a job.
@@ -358,8 +354,8 @@ object SearchOps {
     sink.writerLocked(tables) {
       val ids = batch.select(col(idCol).as("doc_id"))
       // a batch the driver holds (a local relation) keeps its ids and
-      // its postings delta on the driver: the guard routes and matches
-      // its ids with no join, and the sink merges the held delta with no
+      // its postings delta on the driver: the guard routes its ids with
+      // no job, and the sink merges the held delta with no
       // touched-bucket job
       val held = UpsertSink.held(ids).isDefined
       // a FILELESS doclens table is the erase-everything end state: no
@@ -371,7 +367,9 @@ object SearchOps {
             .select("doc_id").collect().length.toLong // bounded by the batch
           // checkpointed once: the ids drive BOTH the bucket routing and
           // the membership join — a nondeterministic upstream recomputed
-          // between the two could route to the wrong buckets
+          // between the two could route to the wrong buckets. The
+          // checkpoint keeps the batch's size, so Spark broadcasts a
+          // batch under its broadcast threshold
           else sink.readKeyBuckets(DocLens, ids.distinct().localCheckpoint(true),
             Seq("doc_id")).count()
         }
@@ -420,11 +418,11 @@ object SearchOps {
   private[graft] def invertedRetractPlan(
       docs: DataFrame, idCol: String, textCol: String): Seq[TableErase] =
     Seq(
-      // key rows may repeat: a delete matches keys, not rows
       TableDelete(Postings,
-        tokenRows(docs, idCol, textCol).select(col("w"), col("doc_id")),
+        postingRows(docs, idCol, textCol).select(col("w"), col("doc_id")),
         Seq("w", "doc_id")),
-      TableDelete(DocLens, docs.select(col(idCol).as("doc_id")), Seq("doc_id")),
+      TableDelete(DocLens,
+        docs.select(col(idCol).as("doc_id")).distinct(), Seq("doc_id")),
       // per-doc decrement rows — the sink sums them per pk; the stats
       // row is STRUCTURAL (a zero row means "empty corpus", which the
       // search guard names), so it never drops

@@ -423,4 +423,44 @@ class SearchOpsSpec extends SparkSpec {
       assert(!heldLabels.exists(_.startsWith(step)), s"held batch ran $step: $heldLabels")
     assert(heldRedelivered.isEmpty, s"a re-delivered admit ran jobs: $heldRedelivered")
   }
+
+  test("a distributed sweep whose keys pass the broadcast threshold sort-merges its receipt") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+      SparkListenerSQLExecutionStart}
+    val docs = Tables.load(spark, sf, "documents").limit(60).localCheckpoint()
+    val subjects = docs.filter($"doc_id" % 7 === 2)
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    // the sweep's report and tables, and the final plan of each query
+    // labelled erase:receipt-counts
+    def sweep(threshold: String) = {
+      val sink = freshSink(s"sweep_smj_$threshold")
+      SearchOps.invertedIndexBuild(docs, "doc_id", "text", sink)
+      val receipt = scala.collection.concurrent.TrieMap.empty[Long, Unit]
+      val plans = scala.collection.concurrent.TrieMap.empty[Long, String]
+      val prev = spark.conf.get(key)
+      spark.conf.set(key, threshold)
+      var report: EraseOps.EraseReport = null
+      try listening(new SparkListener {
+        override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+          case s: SparkListenerSQLExecutionStart if s.description == "erase:receipt-counts" =>
+            receipt(s.executionId) = ()
+            plans(s.executionId) = s.physicalPlanDescription
+          case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+            plans(u.executionId) = u.physicalPlanDescription
+          case _ =>
+        }
+      }) { report = EraseOps.eraseSubjects(subjects, "doc_id", "text", sink, "sweep-1") }
+      finally spark.conf.set(key, prev)
+      val tables = Seq(SearchOps.Postings, SearchOps.DocLens, SearchOps.Stats)
+      (report, tables.map(t => rows(sink, t)), receipt.keys.toSeq.map(plans))
+    }
+    val (report, tables, receiptPlans) = sweep("1024") // the postings keys are larger
+    val (wantReport, wantTables, _) = sweep(spark.conf.get(key))
+    assert(receiptPlans.size == 1, receiptPlans)
+    assert(receiptPlans.head.contains("SortMergeJoin"), receiptPlans.head)
+    assert(report == wantReport, s"$report vs $wantReport")
+    assert(tables == wantTables, "the sort-merged sweep left other tables")
+    assert(report.subjects == subjects.count(), report)
+  }
 }

@@ -1792,7 +1792,7 @@ class UpsertSinkSpec extends SparkSpec {
       Files.createTempDirectory("graft_sink_rkb_held").toString, numBuckets = 8)
     sink.merge("t", (1L to 40L).map(i => (i, s"w${i % 3}", s"v$i")).toDF("id", "w", "v"),
       Seq("id"))
-    sink.merge("c", (1L to 40L).map(i => (s"w${i % 3}", i, i * 2)).toDF("w", "id", "v"),
+    sink.merge("c", (1L to 400L).map(i => (s"w${i % 3}", i, i * 2)).toDF("w", "id", "v"),
       Seq("w", "id"))
     sink.merge("b", (1 to 40).map(i => (Array[Byte](i.toByte, 7), i)).toDF("k", "v"), Seq("k"))
     def read(table: String, keys: DataFrame, pk: String*): Seq[String] =
@@ -1800,8 +1800,10 @@ class UpsertSinkSpec extends SparkSpec {
         case b: Array[Byte] => b.mkString("0x[", ",", "]")
         case v => String.valueOf(v)
       }.mkString("|")).toSeq.sorted
-    // more than 10 keys: Spark tests membership in a set, not a list
+    // more than 10 keys: Spark tests membership in a set, not a list;
+    // more than 200: the held keys semi-join instead of filtering
     val many = (1L to 12L).map(i => (s"w${i % 3}", i))
+    val wide = (1L to 300L).map(i => (s"w${i % 3}", i)) :+ (("w0", 999L))
     for ((table, pk, keys, expected) <- Seq(
         ("t", Seq("id"), Seq(7L, 7L, 12L, 999L).toDF("id"), Seq("12|w0|v12", "7|w1|v7")),
         ("t", Seq("id"), Seq(7, 8).toDF("id"), Seq("7|w1|v7", "8|w2|v8")), // int keys, long pk
@@ -1809,6 +1811,8 @@ class UpsertSinkSpec extends SparkSpec {
         ("c", Seq("w", "id"), Seq(("w1", 7L), ("w0", 7L), ("w0", 12L)).toDF("w", "id"),
           Seq("w0|12|24", "w1|7|14")),
         ("c", Seq("w", "id"), many.toDF("w", "id"), many.map { case (w, i) => s"$w|$i|${i * 2}" }.sorted),
+        ("c", Seq("w", "id"), wide.toDF("w", "id"),
+          wide.init.map { case (w, i) => s"$w|$i|${i * 2}" }.sorted),
         ("b", Seq("k"), (3 to 14).map(i => Array[Byte](i.toByte, 7)).toDF("k"),
           (3 to 14).map(i => s"0x[$i,7]|$i").sorted),
         ("t", Seq("id"), Seq.empty[Long].toDF("id"), Nil))) {
@@ -1819,5 +1823,30 @@ class UpsertSinkSpec extends SparkSpec {
       val distributed = read(table, keys.localCheckpoint(), pk: _*)
       assert(held == distributed, s"$table $pk: held $held vs distributed $distributed")
     }
+  }
+
+  test("distributed keys semi-join by size: over the broadcast threshold they sort-merge, under it they broadcast") {
+    import org.apache.spark.sql.DataFrame
+    val sink = new UpsertSink(spark,
+      Files.createTempDirectory("graft_sink_rkb_smj").toString, numBuckets = 8)
+    sink.merge("c", (1L to 400L).map(i => (s"w${i % 3}", i, i * 2)).toDF("w", "id", "v"),
+      Seq("w", "id"))
+    def keys(n: Long) = ((1L to n).map(i => (s"w${i % 3}", i)) :+ (("w0", 999L)))
+      .toDF("w", "id").localCheckpoint()
+    def plan(df: DataFrame): (Int, String) = {
+      val n = df.collect().length
+      (n, df.queryExecution.executedPlan.toString)
+    }
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, "1024") // 301 keys are larger, 3 are smaller
+    try {
+      val (n, large) = plan(sink.readKeyBuckets("c", keys(300), Seq("w", "id")))
+      assert(n == 300, n)
+      assert(large.contains("SortMergeJoin") && !large.contains("BroadcastHashJoin"), large)
+      val (sn, small) = plan(sink.readKeyBuckets("c", keys(2), Seq("w", "id")))
+      assert(sn == 2, sn)
+      assert(small.contains("BroadcastHashJoin") && !small.contains("SortMergeJoin"), small)
+    } finally spark.conf.set(key, prev)
   }
 }

@@ -2,8 +2,7 @@
 """Per-label Spark job counts from an event log.
 
 Reads a Spark event log (one JSON event per line; plain, or zstd-compressed
-through the `zstd` CLI when the name ends in .zst/.zstd; a rolling event-log
-directory's `events_*` files are read in name order) and prints, per
+through the `zstd` CLI when the name ends in .zst/.zstd) and prints, per
 `spark.job.description` and per `perfbench.span`, the number of jobs, their
 busy time (the union of their intervals) and their inter-job gap (first start
 to last end, minus the busy time).
@@ -12,31 +11,25 @@ Write an event log with any program run, for example the service-path bench:
 
     JAVA_TOOL_OPTIONS="-Dspark.eventLog.enabled=true -Dspark.eventLog.dir=/tmp/ev" \\
       python3 perfbench/run.py --workload index_lifecycle --seed 1 --seconds 20 --trace 1
-    log=$(ls -td /tmp/ev/* | head -1)        # the newest application's log
+    log=$(ls -t /tmp/ev/*/events_* | head -1) # the newest application's log
     python3 tools/joblog.py "$log"                # every label in full
-    python3 tools/joblog.py --depth 2 "$log"      # sink:swap:t -> sink:swap
-    python3 tools/joblog.py --jobs 26-38 "$log"   # a job-id range only
     python3 tools/joblog.py --span 3 "$log"       # the jobs of one traced span
 
-(A first run of a new bench build also logs the short run that records its
-class-data archive: take the newest log.)
+(Spark writes each application's log as a directory of `events_*` files;
+a log under 128 MB is one file. A first run of a new bench build also logs
+the short run that records its class-data archive: take the newest log.)
 
 `perfbench.span` is the id of the traced span that submitted a job (set on
 `--trace 1` runs only). Jobs with no description count as `<unlabelled>`;
-jobs with no span as `<none>`. `--json` prints one JSON object instead.
+jobs with no span as `<none>`.
 """
 import argparse
 import json
-import os
 import subprocess
 import sys
 
 
 def _lines(path):
-    if os.path.isdir(path):
-        for name in sorted(n for n in os.listdir(path) if n.startswith("events_")):
-            yield from _lines(os.path.join(path, name))
-        return
     if path.endswith((".zst", ".zstd")):
         # a log whose application was killed ends in a cut frame: zstd
         # fails on it after writing everything before the cut
@@ -49,7 +42,7 @@ def _lines(path):
 
 
 def jobs(lines):
-    """(job id, description, span, start ms, end ms) of every finished job."""
+    """(description, span, start ms, end ms) of every finished job."""
     started = {}
     for line in lines:
         line = line.strip()
@@ -67,7 +60,7 @@ def jobs(lines):
                                     e["Submission Time"])
         elif kind == "SparkListenerJobEnd" and e["Job ID"] in started:
             desc, span, t0 = started.pop(e["Job ID"])
-            yield e["Job ID"], desc, span, t0, e["Completion Time"]
+            yield desc, span, t0, e["Completion Time"]
 
 
 def busy_ms(intervals):
@@ -84,35 +77,26 @@ def busy_ms(intervals):
 
 
 def summarize(found, key):
+    """(jobs, busy ms, gap ms, name) per group, most jobs first."""
     groups = {}
     for j in found:
-        groups.setdefault(key(j), []).append((j[3], j[4]))
+        groups.setdefault(key(j), []).append((j[2], j[3]))
     rows = []
     for name, iv in groups.items():
         busy = busy_ms(iv)
-        rows.append({"name": name, "jobs": len(iv), "busy_ms": busy,
-                     "gap_ms": max(t for _, t in iv) - min(s for s, _ in iv) - busy})
-    return sorted(rows, key=lambda r: (-r["jobs"], r["name"]))
+        rows.append((len(iv), busy, max(t for _, t in iv) - min(s for s, _ in iv) - busy, name))
+    return sorted(rows, key=lambda r: (-r[0], r[3]))
 
 
-def report(found, depth):
-    def desc(j):
-        return ":".join(j[1].split(":")[:depth]) if depth else j[1]
-    spans = [j[3] for j in found] + [j[4] for j in found]
-    busy = busy_ms([(j[3], j[4]) for j in found])
-    return {"jobs": len(found), "busy_ms": busy,
-            "gap_ms": (max(spans) - min(spans) - busy) if found else 0,
-            "by_description": summarize(found, desc),
-            "by_span": summarize(found, lambda j: j[2])}
-
-
-def render(r):
-    out = [f"jobs {r['jobs']}  busy_ms {r['busy_ms']}  gap_ms {r['gap_ms']}"]
-    for title, key in (("spark.job.description", "by_description"), ("perfbench.span", "by_span")):
+def render(found):
+    (total,) = summarize(found, lambda j: "") or [(0, 0, 0, "")]
+    out = [f"jobs {total[0]}  busy_ms {total[1]}  gap_ms {total[2]}"]
+    for title, key in (("spark.job.description", lambda j: j[0]),
+                       ("perfbench.span", lambda j: j[1])):
         out.append("")
         out.append(f"{'jobs':>5} {'busy_ms':>9} {'gap_ms':>9}  {title}")
-        for g in r[key]:
-            out.append(f"{g['jobs']:>5} {g['busy_ms']:>9} {g['gap_ms']:>9}  {g['name']}")
+        for n, busy, gap, name in summarize(found, key):
+            out.append(f"{n:>5} {busy:>9} {gap:>9}  {name}")
     return "\n".join(out)
 
 
@@ -124,26 +108,23 @@ def _self_test():
 
     def end(i, t):
         return json.dumps({"Event": "SparkListenerJobEnd", "Job ID": i, "Completion Time": t})
-    log = [start(0, 0, "sink:swap:a", "7"), end(0, 10), start(1, 5, "sink:swap:b", "7"), end(1, 20),
+    log = [start(0, 0, "sink:swap:a", "7"), end(0, 10), start(1, 5, "sink:swap:a", "7"), end(1, 20),
            start(2, 50, None, None), end(2, 60), json.dumps({"Event": "SparkListenerStageSubmitted"}),
            start(3, 70, "erase:hold")]
-    r = report(list(jobs(log)), depth=2)
-    assert r["jobs"] == 3 and r["busy_ms"] == 30 and r["gap_ms"] == 30, r
-    swap = [g for g in r["by_description"] if g["name"] == "sink:swap"][0]
-    assert swap == {"name": "sink:swap", "jobs": 2, "busy_ms": 20, "gap_ms": 0}, swap
-    assert [g["name"] for g in r["by_span"]] == ["7", "<none>"], r["by_span"]
+    found = list(jobs(log))
+    assert summarize(found, lambda j: "") == [(3, 30, 30, "")], found
+    assert summarize(found, lambda j: j[0]) == [(2, 20, 0, "sink:swap:a"),
+                                                (1, 10, 0, "<unlabelled>")]
+    assert [g[3] for g in summarize(found, lambda j: j[1])] == ["7", "<none>"]
     assert busy_ms([(0, 10), (20, 30)]) == 20 and busy_ms([]) == 0
+    assert render([]).startswith("jobs 0  busy_ms 0  gap_ms 0")
     print("joblog self-test ok")
 
 
 def main(argv):
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("log", nargs="*", help="event log file(s) or rolling event-log dir(s)")
-    ap.add_argument("--depth", type=int, default=0,
-                    help="group descriptions by their first N ':'-separated parts (0 = whole)")
-    ap.add_argument("--jobs", help="only job ids in this inclusive range, e.g. 26-38")
+    ap.add_argument("log", nargs="?", help="event log file")
     ap.add_argument("--span", help="only jobs of this perfbench.span id")
-    ap.add_argument("--json", action="store_true", help="print one JSON object")
     ap.add_argument("--self-test", action="store_true", help="check the tool on a synthetic log")
     a = ap.parse_args(argv)
     if a.self_test:
@@ -151,14 +132,8 @@ def main(argv):
         return 0
     if not a.log:
         ap.error("no event log given")
-    found = [j for p in a.log for j in jobs(_lines(p))]
-    if a.jobs:
-        lo, hi = (int(x) for x in a.jobs.split("-"))
-        found = [j for j in found if lo <= j[0] <= hi]
-    if a.span:
-        found = [j for j in found if j[2] == a.span]
-    r = report(found, a.depth)
-    print(json.dumps(r) if a.json else render(r))
+    found = [j for j in jobs(_lines(a.log)) if not a.span or j[1] == a.span]
+    print(render(found))
     return 0
 
 
