@@ -949,7 +949,7 @@ private[graft] trait CatalogStores extends CatalogShared {
         "exhaustive archive x batch Jaccard MINUS the erased subjects: " +
         "an erased document can never resurface as a candidate, and " +
         "every bystander pair survives byte-for-byte. " +
-        "StoreRetractSpec pins the op; UpsertSinkSpec pins deleteMany's " +
+        "StoreRetractSpec pins the op; UpsertSinkSpec pins eraseMany's " +
         "group semantics incl. the live-deleter snapshot race.",
       Some("""WITH toks AS (SELECT doc_id, regexp_extract_all(lower(text), '[a-z]+') w
              |  FROM documents),

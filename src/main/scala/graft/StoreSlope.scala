@@ -78,7 +78,7 @@ object StoreSlope {
 
   /** The seven persisted-store modalities, catalog-parameter-exact. Every
     * modality now also ships its ERASE leg (round-12 verdict: the
-    * deleteMany/eraseMany cost-model claim — O(erasure batch + touched
+    * eraseMany cost-model claim — O(erasure batch + touched
     * buckets), never O(store) — is exactly the kind of claim this audit
     * measures): erase a FIXED small-archive subject slice from the
     * store, both scales.

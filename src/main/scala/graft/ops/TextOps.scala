@@ -285,7 +285,7 @@ object TextOps {
   /** ERASE documents from the persisted near-dup state (retention /
     * right-to-erasure over the store, not just the corpus): removes
     * the ids' band postings AND shingle sets in ONE
-    * [[graft.sink.UpsertSink.deleteMany]] group delete under a single
+    * [[graft.sink.UpsertSink.eraseMany]] group delete under a single
     * writer lease — a concurrent `snapshotMany` reader never captures
     * a posting whose shingle row is already gone, and later probes
     * can never surface an erased document as a candidate. The bands
@@ -293,7 +293,7 @@ object TextOps {
     * from one filtered posting scan (map-only, erasure-batch-bounded;
     * the erased-id frame broadcast-joins against the postings) —
     * eagerly checkpointed, because that plan reads the very files the
-    * delete rewrites. Key derivation runs INSIDE the deleteMany lease
+    * delete rewrites. Key derivation runs INSIDE the eraseMany lease
     * (the thunk overload), so a concurrent admit can never slip
     * postings in between the key scan and the delete: the erasure
     * contract holds under concurrent writers, not just single-writer
@@ -1710,7 +1710,7 @@ object TextOps {
     require(!batchIds.contains(0L),
       "batch id 0 is the compacted archive row — it aggregates settled " +
         "batches and cannot be retracted at batch granularity")
-    sink.deleteMany(Seq(SubstrDelta)) {
+    sink.eraseMany(Seq(SubstrDelta)) {
       val keys = sink.read(SubstrDelta)
         .filter(col("batch_id").isin(batchIds: _*))
         .select(col("win_hash"), col("batch_id"))

@@ -42,7 +42,7 @@ final case class TableMerge(table: String, updates: DataFrame,
                             pk: Seq[String],
                             versionCol: Option[String] = None,
                             pkUnique: Boolean = false,
-                            counts: Seq[String] = Nil) {
+                            counts: Seq[String] = Nil) extends SinkMember {
   require(!(pkUnique && versionCol.isDefined),
     s"$table: pkUnique promises one row per pk — versionCol is meaningless")
   require(counts.isEmpty || versionCol.isEmpty,
@@ -69,12 +69,17 @@ final case class TableWrite(table: String, df: DataFrame,
   * store family needs: posting/payload tables erase by key, count
   * inventories erase by subtracting the subject's contribution.
   */
-sealed trait TableErase {
+sealed trait TableErase extends SinkMember
+
+/** A member of one sink write, a [[TableMerge]] or a [[TableErase]]:
+  * what the sink's one touched-bucket rewrite takes.
+  */
+private[sink] sealed trait SinkMember {
   def table: String
   def pk: Seq[String]
 }
 
-/** One table's payload for [[UpsertSink.deleteMany]] — the per-table
+/** One table's payload for [[UpsertSink.eraseMany]] — the per-table
   * arguments of [[UpsertSink.delete]] as data. `pk` must be the
   * table's FULL merge key (bucket routing hashes it; a partial key
   * would route to the wrong buckets and silently delete nothing —
@@ -121,11 +126,17 @@ final case class TableCountRetract(table: String, decrements: DataFrame,
   *
   * Tables live in a hash-bucketed layout (parquet files under
   * `table/__bucket=N/`), with the bucket computed from the primary key.
-  * `merge` then rewrites ONLY the buckets that contain updated keys:
-  * per-block incremental merges cost O(batch + touched buckets), not
-  * O(table) — the cost model of the reference's targeted `ON CONFLICT`
-  * upsert rather than a full rebuild. Untouched buckets' files are never
-  * opened, let alone rewritten.
+  * Every change takes ONE path, as Delta Lake's MERGE applies its
+  * clauses through one touched-files rewrite: [[merge]], [[mergeMany]],
+  * [[delete]] and [[eraseMany]] hand their upserts, count merges, PK
+  * deletes and count retracts to one private rewrite. It skips members
+  * that already hold the op id, routes each delta to the buckets its
+  * keys hash into (no Spark job when the driver holds it; one shared
+  * job for the distributed ones) and rewrites ONLY those buckets, each
+  * kind contributing just its step from stored rows to rows kept. A
+  * per-block merge costs O(batch + touched buckets), not O(table) — the
+  * cost model of the reference's targeted `ON CONFLICT` upsert rather
+  * than a full rebuild. Untouched buckets' files are never opened.
   *
   * Consistency comes from ONE ordered commit log per root
   * ([[CommitLog]], after Delta Lake's transaction log): every mutator
@@ -164,7 +175,7 @@ final case class TableCountRetract(table: String, decrements: DataFrame,
 final class UpsertSink(spark: SparkSession, root: String,
                        numBuckets: Int = 64,
                        writerWaitMs: Long = 60000L) {
-  import UpsertSink.{BucketCol, distinctCount, held, keyFilter}
+  import UpsertSink.{BucketCol, Plan, distinctCount, held, keyFilter}
 
   /** The session this sink writes with — model-persistence helpers
     * (e.g. BpeOps.saveModel) build their DataFrames on it rather than
@@ -292,10 +303,7 @@ final class UpsertSink(spark: SparkSession, root: String,
     * Reentrant per thread; multi-table acquisition orders by name, so
     * overlapping scopes never deadlock. Readers take no lease.
     */
-  def writerLocked[T](tables: Seq[String])(body: => T): T =
-    withWriterLease(tables)(body)
-
-  private def withWriterLease[T](tables: Seq[String])(body: => T): T = {
+  def writerLocked[T](tables: Seq[String])(body: => T): T = {
     // name contract FIRST: the lease path is derived from the name
     tables.foreach(requireValidTableName)
     val need = tables.distinct.sorted.filterNot(heldLeases.get.contains)
@@ -549,79 +557,71 @@ final class UpsertSink(spark: SparkSession, root: String,
   /** Current table contents, bucket layout hidden from callers. */
   def read(table: String): DataFrame = scan(table, state(table), None).drop(BucketCol)
 
-  /** One bounded (table, bucket) collect over several keyed frames that
-    * already carry [[BucketCol]]: each frame's shuffle runs (and a
-    * persisted frame materializes) in ONE job. */
-  private def touchedBuckets(frames: Seq[(String, DataFrame)],
-                             label: String): Map[String, Seq[Int]] =
-    if (frames.isEmpty) Map.empty
-    else graft.ops.Par.labeled(spark, label)(frames.map { case (t, df) =>
-        df.select(lit(t).as("__t"), col(BucketCol)) }
-        .reduce(_ unionByName _).distinct().collect()) // bounded by buckets
-      .groupBy(_.getString(0))
-      .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq.sorted }
+  /** THE held-vs-distributed routing of merge, erase and keyed read:
+    * the touched buckets of (table, bucketed frame, [[heldRoutes]])
+    * members. Held rows give theirs with no Spark job; the distributed
+    * frames share ONE bounded (table, bucket) collect, labelled `label`
+    * + their tables, that runs each one's shuffle (and materializes a
+    * persisted frame). Members touching no bucket are absent.
+    */
+  private def touchedBuckets(members: Seq[(String, DataFrame, Option[Array[Row]])],
+                             label: String): Map[String, Seq[Int]] = {
+    val distributed = members.collect { case (t, df, None) => t -> df }
+    val collected =
+      if (distributed.isEmpty) Array.empty[Row]
+      else graft.ops.Par.labeled(spark, label + distributed.map(_._1).mkString(","))(
+        distributed.map { case (t, df) => df.select(lit(t).as("__t"), col(BucketCol)) }
+          .reduce(_ unionByName _).distinct().collect()) // bounded by buckets
+    val routed = members.collect { case (t, _, Some(routes)) if routes.nonEmpty =>
+      t -> routes.map(r => r.getInt(r.length - 1)).distinct.sorted.toSeq }
+    collected.groupBy(_.getString(0))
+      .map { case (t, rows) => t -> rows.map(_.getInt(1)).toSeq.sorted } ++ routed
+  }
 
   /** Rows of `table` whose `pk` matches a key in `keys` (a semi-join),
     * opening ONLY the buckets `keys` hash into — the READ-side sibling
     * of the merge/erase touched-bucket discipline, for guards and
     * receipts that check a bounded key set against a large table without
     * paying a full scan. `pk` must be the table's merge key; key columns
-    * are cast to the STORED types first (a type-skewed hash would prune
-    * the WRONG buckets and silently miss every match). Keys the driver
-    * holds ([[UpsertSink.held]]) route on the driver, so no Spark job
-    * runs before the caller's action; when their types compare exactly
-    * there and they are few (at most 200 distinct keys), they match as
-    * a filter on the key values and that action needs no join.
-    * Distributed keys learn their buckets in one job. All other keys
-    * semi-join, and Spark picks the join by size. Flat-layout and
-    * fileless tables fall back to the plain read. Like [[read]], not pinned — run under the
-    * writer lease (or a snapshot) when racing writers matter.
+    * are cast to the STORED types first ([[storedKeys]]). The keys route
+    * like a rewrite's delta ([[touchedBuckets]]): held keys
+    * ([[UpsertSink.held]]) with no Spark job before the caller's action,
+    * distributed ones in one job. When held keys' types compare exactly
+    * on the driver and they are few (at most 200 distinct keys), they
+    * match as a filter on the key values and that action needs no join.
+    * All other keys semi-join, and Spark picks the join by size.
+    * Flat-layout and fileless tables fall back to the plain read. Like
+    * [[read]], not pinned — run under the writer lease (or a snapshot)
+    * when racing writers matter.
     */
   private[graft] def readKeyBuckets(table: String, keys: DataFrame,
                                     pk: Seq[String]): DataFrame = {
     require(pk.nonEmpty, s"readKeyBuckets on $table needs the merge key")
     val cur = state(table)
     val all = scan(table, cur, None).drop(BucketCol) // a missing table fails here
-    val stored = cur.get.schema
-    val typed = keys.select(pk.map { c =>
-      val f = stored.find(_.name == c).getOrElse(
-        throw new IllegalArgumentException(
-          s"readKeyBuckets $table: key column $c not in stored schema " +
-            s"[${stored.map(_.name).mkString(", ")}]"))
-      keys(c).cast(f.dataType).as(c)
-    }: _*)
-    cur.filter(_.bucketed) match {
-      case None => semiJoin(all, typed, pk)
-      case Some(st) =>
-        val keyed = withBucket(typed, pk, st.buckets)
-        val routes = heldRoutes(keyed, pk)
-        // no key-level distinct: the bucket set is a pure function of
-        // the key VALUES (duplicates fold in the map-side partial
-        // aggregate), so deduping keys first would only add an exchange
-        val touched = routes.fold(touchedBuckets(Seq(table -> keyed),
-            s"sink:keybuckets:$table").getOrElse(table, Nil))(bucketsOf)
-          .filter(st.files.contains)
-        val rows = if (touched.isEmpty) all.limit(0)
-          else scan(table, cur, Some(touched)).drop(BucketCol)
-        routes.flatMap(r => keyFilter(typed.schema, r.map(_.toSeq.init)))
-          .fold(semiJoin(rows, typed, pk))(rows.filter)
+    val typed = keys.select(storedKeys(s"readKeyBuckets $table", cur.get.schema, keys, pk): _*)
+    // a bucketed table opens only the buckets the keys route to
+    val (rows, routes) = cur.filter(_.bucketed).fold((all, Option.empty[Array[Row]])) { st =>
+      val keyed = withBucket(typed, pk, st.buckets)
+      val routes = heldRoutes(keyed, pk)
+      // no key-level distinct: the bucket set is a pure function of
+      // the key VALUES (duplicates fold in the map-side partial
+      // aggregate), so deduping keys first would only add an exchange
+      val touched = touchedBuckets(Seq((table, keyed, routes)), "sink:keybuckets:")
+        .getOrElse(table, Nil).filter(st.files.contains)
+      (if (touched.isEmpty) all.limit(0) else scan(table, cur, Some(touched)).drop(BucketCol),
+        routes)
     }
+    // Spark picks the semi-join by size
+    routes.flatMap(r => keyFilter(typed.schema, r.map(_.toSeq.init)))
+      .fold(rows.join(typed.select(pk.map(col): _*), pk, "left_semi"))(rows.filter)
   }
 
-  /** `rows` semi-joined to the key set `keys`; Spark picks the join by
-    * size. */
-  private def semiJoin(rows: DataFrame, keys: DataFrame, pk: Seq[String]): DataFrame =
-    rows.join(keys.select(pk.map(col): _*), pk, "left_semi")
-
   /** The (pk, [[BucketCol]]) rows of a bucketed frame the driver holds
-    * ([[UpsertSink.held]]) — its touched buckets with no Spark job — or
-    * None for a distributed frame. */
+    * ([[UpsertSink.held]]), collected with no Spark job, or None for a
+    * distributed frame. */
   private def heldRoutes(keyed: DataFrame, pk: Seq[String]): Option[Array[Row]] =
     held(keyed.select((pk :+ BucketCol).map(col): _*))
-
-  /** The buckets of [[heldRoutes]] rows. */
-  private def bucketsOf(routes: Array[Row]): Seq[Int] =
-    routes.map(r => r.getInt(r.length - 1)).distinct.sorted.toSeq
 
   private def withBucket(df: DataFrame, pk: Seq[String],
                          buckets: Int): DataFrame =
@@ -739,7 +739,7 @@ final class UpsertSink(spark: SparkSession, root: String,
 
   private def writeGroup(writes: Seq[TableWrite], drops: Seq[String],
                          group: Option[String]): Unit =
-    withWriterLease(writes.map(_.table) ++ drops) {
+    writerLocked(writes.map(_.table) ++ drops) {
       val head = states(writes.map(_.table))
       val written = graft.ops.Par.map(writes) { w =>
         val pk = if (w.pk.nonEmpty) w.pk
@@ -757,7 +757,7 @@ final class UpsertSink(spark: SparkSession, root: String,
 
   /** Drop a table entirely (no-op when absent). Files a pinned snapshot
     * still reads stay until its pin is released. */
-  def drop(table: String): Unit = withWriterLease(Seq(table)) {
+  def drop(table: String): Unit = writerLocked(Seq(table)) {
     if (exists(table)) commit(Map(table -> None))
     else vacuum(log.head(), Seq(table)) // leftovers of a crashed first write
   }
@@ -778,7 +778,7 @@ final class UpsertSink(spark: SparkSession, root: String,
   def rebucket(table: String, pk: Seq[String], newBuckets: Int): Unit = {
     require(pk.nonEmpty, s"rebucket of $table needs the table's merge key")
     require(newBuckets >= 1, s"newBuckets must be >= 1, got $newBuckets")
-    withWriterLease(Seq(table)) {
+    writerLocked(Seq(table)) {
       val st = state(table).getOrElse(
         throw new IllegalArgumentException(s"cannot rebucket missing table $table"))
       val df = scan(table, Some(st), None).drop(BucketCol)
@@ -788,7 +788,7 @@ final class UpsertSink(spark: SparkSession, root: String,
     }
   }
 
-  // ---- merges --------------------------------------------------------
+  // ---- merges and erasure: one touched-bucket rewrite ----------------
 
   /** The merge schema contract, checked loudly up front: an update
     * batch must carry exactly the stored columns with exactly the
@@ -820,6 +820,20 @@ final class UpsertSink(spark: SparkSession, root: String,
     updates.select(stored.map(f => col(f.name)): _*)
   }
 
+  /** `keys`' `pk` columns cast to their STORED types in `stored`: a key
+    * of another type hashes to other buckets and would silently match
+    * nothing. `what` names the operation in the error for a key column
+    * the table does not have.
+    */
+  private def storedKeys(what: String, stored: StructType, keys: DataFrame,
+                         pk: Seq[String]): Seq[Column] = pk.map { c =>
+    val f = stored.find(_.name == c).getOrElse(
+      throw new IllegalArgumentException(
+        s"$what: key column $c not in stored schema " +
+          s"[${stored.map(_.name).mkString(", ")}]"))
+    keys(c).cast(f.dataType).as(c)
+  }
+
   /** PK merge: upsert `updates` into `table`, rewriting only the hash
     * buckets that contain updated keys. `versionCol` orders versions
     * within the incoming batch (e.g. blockNumber); rows whose keys match
@@ -830,138 +844,34 @@ final class UpsertSink(spark: SparkSession, root: String,
   def merge(table: String, updates: DataFrame, pk: Seq[String],
             versionCol: Option[String] = None,
             pkUnique: Boolean = false): Unit =
-    merge(table, updates, pk, versionCol, pkUnique, None)
-
-  /** [[merge]] with an EXACTLY-ONCE guarantee under crash-replay, keyed
-    * by a caller-chosen `opId` — the ADMIT-direction sibling of
-    * [[eraseMany]]'s erasure id, for merges that are NOT naturally
-    * idempotent: a merge of sums derived from the stored rows, replayed
-    * after a crash, double-counts (a [[TableMerge]] with `counts` folds
-    * inside the sink instead, through [[mergeMany]]). The id commits in
-    * the same log entry as the rewritten buckets, so a replay either
-    * finds it (and skips the table) or finds the table untouched (and
-    * applies the merge once). Replay with the SAME updates derivation.
-    */
-  def merge(table: String, updates: DataFrame, pk: Seq[String],
-            versionCol: Option[String], pkUnique: Boolean,
-            opId: Option[String]): Unit = {
-    require(pk.nonEmpty, s"merge into $table needs a primary key")
-    opId.foreach(requireValidOpId("admit"))
-    applyMerges(Seq(TableMerge(table, updates, pk, versionCol, pkUnique)),
-      opId, createEmpty = true, s"sink:merge:touched:$table")
-  }
+    rewrite(Seq(TableMerge(table, updates, pk, versionCol, pkUnique)), None,
+      createEmpty = true, "sink:merge:touched:")
 
   /** Batched multi-table merge: upsert several tables' deltas in one
-    * sink round-trip and ONE commit. Semantically [[merge]] per table,
-    * except that an empty delta never creates a missing table. The
-    * fixed-cost profile is the point for SMALL deltas (per-micro-batch
-    * streaming state). A delta the driver already holds (a local
-    * relation, e.g. `createDataFrame(rows, schema)`) yields its touched
-    * buckets on the driver with no Spark job, and with unique keys it
-    * skips the dedupe and the cache. The distributed deltas share ONE
-    * Spark job that learns their touched buckets (materializing each
-    * one's persist). Then the per-table rewrites run CONCURRENTLY. If
-    * one table's rewrite fails, the others still commit and the first
-    * failure is rethrown.
+    * sink round-trip and ONE commit, through the one rewrite (class
+    * doc). Semantically [[merge]] per table, except that an empty delta
+    * never creates a missing table. The fixed-cost profile is the point
+    * for SMALL deltas (per-micro-batch streaming state): a delta the
+    * driver already holds (a local relation, e.g.
+    * `createDataFrame(rows, schema)`) routes with no Spark job, and with
+    * unique keys it skips the dedupe and the cache. The per-table
+    * rewrites run CONCURRENTLY; if one fails, the others still commit
+    * and the first failure is rethrown.
+    *
+    * An `opId` makes it EXACTLY-ONCE under crash-replay — the
+    * ADMIT-direction sibling of [[eraseMany]]'s erasure id, for merges
+    * that are NOT naturally idempotent: a merge of sums derived from the
+    * stored rows, replayed after a crash, double-counts (a [[TableMerge]]
+    * with `counts` folds inside the sink instead). Every member that
+    * applies records `opId` in the same log entry as its rewritten
+    * buckets, so a replay skips the members that hold it and applies the
+    * rest once — after a partial failure, only the members that failed.
+    * Replay with the SAME updates derivation.
     */
-  def mergeMany(merges: Seq[TableMerge]): Unit = mergeMany(merges, None)
-
-  /** [[mergeMany]] with the [[merge]] op-id guarantee: every member that
-    * applies records `opId` in the one commit, and a replay skips the
-    * members that hold it — after a partial failure, only the members
-    * that failed apply, once.
-    */
-  def mergeMany(merges: Seq[TableMerge], opId: Option[String]): Unit = {
-    require(merges.map(_.table).distinct.size == merges.size,
-      s"one merge per table: ${merges.map(_.table).mkString(", ")}")
-    merges.foreach(m =>
-      require(m.pk.nonEmpty, s"merge into ${m.table} needs a primary key"))
+  def mergeMany(merges: Seq[TableMerge], opId: Option[String] = None): Unit = {
     opId.foreach(requireValidOpId("admit"))
-    applyMerges(merges, opId, createEmpty = false,
-      s"sink:mergeMany:touched:${merges.map(_.table).mkString(",")}")
+    rewrite(merges, opId, createEmpty = false, "sink:mergeMany:touched:")
   }
-
-  private def applyMerges(merges: Seq[TableMerge], opId: Option[String],
-                          createEmpty: Boolean, label: String): Unit =
-    withWriterLease(merges.map(_.table)) {
-      val head = states(merges.map(_.table))
-      // a table whose state already holds this op id applied it: skip
-      val live = merges.filterNot(m => opId.exists(id => head.get(m.table).exists(_.admits(id))))
-      // the schema contract for EVERY table before ANY table writes
-      val aligned = live.map(m => head.get(m.table).filter(_.hasData)
-        .fold(m)(s => m.copy(updates = alignToStored(m.table, s.schema, m.updates))))
-      val prepped = aligned.map { m =>
-        val st = head.get(m.table)
-        // bucket with the LOGGED modulus, never the instance default —
-        // a mismatch would scatter updated keys away from their rows
-        val buckets = st.filter(_.bucketed).fold(numBuckets)(_.buckets)
-        val keyed = withBucket(m.updates, m.pk, buckets)
-        // a delta the driver already holds (a local relation) yields its
-        // (pk, bucket) rows with no Spark job: its touched buckets come
-        // from them, and unique keys need neither the dedupe nor the cache
-        val routes = heldRoutes(keyed, m.pk)
-        val unique = m.pkUnique || routes.exists(r => distinctCount(r).contains(r.length))
-        val latest =
-          if (unique) keyed
-          else withBucket(
-            if (m.counts.nonEmpty)
-              sumCounts(m.updates, m.pk.map(col), m.counts, m.updates.schema)
-                .select(m.updates.columns.toSeq.map(col): _*)
-            else dedupeLastWins(m.updates, m.pk, m.versionCol), m.pk, buckets)
-        // a distributed or deduped delta is cached: the touched collect
-        // and the rewrite's two reads would otherwise recompute it
-        val cached = routes.isEmpty || !unique
-        (m, st, buckets, if (cached) latest.persist(StorageLevel.MEMORY_AND_DISK) else latest,
-          routes.map(bucketsOf), cached)
-      }
-      try {
-        val touched = touchedBuckets(prepped.collect {
-          case (m, st, _, latest, None, _) if st.exists(s => s.hasData && s.bucketed) ||
-            (!createEmpty && !st.exists(_.hasData)) => m.table -> latest
-        }, label) ++ prepped.collect { case (m, _, _, _, Some(t), _) if t.nonEmpty => m.table -> t }
-        val results = graft.ops.Par.map(prepped) { case (m, st, buckets, latest, _, _) =>
-          def upserted(cur: DataFrame): DataFrame =
-            if (m.counts.nonEmpty)
-              // DO UPDATE SET c = t.c + EXCLUDED.c: stored and delta rows
-              // sum per pk (a key's bucket is a function of the key), so
-              // absent keys insert and present ones add
-              sumCounts(cur.unionByName(latest), (m.pk :+ BucketCol).map(col),
-                m.counts, cur.schema).select(cur.columns.toSeq.map(col): _*)
-            else cur.join(latest.select(m.pk.map(col): _*), m.pk, "left_anti")
-              .unionByName(latest)
-          m.table -> Try(st match {
-            case Some(s) if s.hasData && s.bucketed =>
-              // incremental: only buckets holding updated keys rewrite
-              val t = touched.getOrElse(m.table, Nil)
-              if (t.isEmpty) None
-              else {
-                val withData = t.filter(s.files.contains)
-                val merged =
-                  if (withData.isEmpty) latest
-                  else upserted(scan(m.table, st, Some(withData)))
-                Some(s.copy(files = s.files -- t ++
-                  writeFiles(m.table, merged, buckets, s"sink:swap:${m.table}")))
-              }
-            case Some(s) if s.hasData =>
-              // one-time migration of a flat-layout table
-              val merged = upserted(withBucket(scan(m.table, st, None), m.pk, buckets))
-              Some(s.copy(pk = m.pk, buckets = buckets,
-                files = writeFiles(m.table, merged, buckets, s"sink:swap:${m.table}")))
-            case _ if !createEmpty && !touched.contains(m.table) => None
-            case _ =>
-              // first write, or a re-create of an emptied table
-              Some(TableState(0L, schemaOf(m.updates), m.pk, buckets, None,
-                writeFiles(m.table, latest, buckets, s"sink:overwrite:${m.table}"),
-                st.fold(Set.empty[String])(_.admits),
-                st.fold(Set.empty[String])(_.erasures)))
-          })
-        }
-        commitAll(results.map { case (t, r) =>
-          t -> r.map(_.orElse(opId.flatMap(_ => head.get(t)))
-            .map(s => s.copy(admits = s.admits ++ opId)))
-        })
-      } finally prepped.foreach(p => if (p._6) p._4.unpersist())
-    }
 
   /** Commit every member whose rewrite succeeded in one entry, then
     * rethrow the first failure (unwrapped). */
@@ -969,14 +879,6 @@ final class UpsertSink(spark: SparkSession, root: String,
     commit(results.collect { case (t, Success(Some(s))) => t -> Some(s) }.toMap)
     results.collectFirst { case (_, Failure(e)) => e }.foreach(throw _)
   }
-
-  /** Last-write-wins within a batch: one row per PK — shared with the
-    * JDBC writer via [[MergeSemantics]] so the two sinks stay
-    * swap-compatible.
-    */
-  private def dedupeLastWins(df: DataFrame, pk: Seq[String],
-                             versionCol: Option[String]): DataFrame =
-    MergeSemantics.dedupeLastWins(df, pk, versionCol)
 
   /** One row per `keys` value, each of `cntCols` summed as its type in
     * `types` and cast back to it (a sum must not promote the stored
@@ -993,8 +895,6 @@ final class UpsertSink(spark: SparkSession, root: String,
     df.groupBy(keys: _*).agg(aggs.head, aggs.tail: _*)
   }
 
-  // ---- erasure -------------------------------------------------------
-
   /** PK DELETE — the retention/right-to-erasure half of a merge sink:
     * physically remove the rows whose keys appear in `keys`, rewriting
     * ONLY the buckets that contain them (the [[merge]] cost model). Keys
@@ -1005,61 +905,43 @@ final class UpsertSink(spark: SparkSession, root: String,
     * further `delete` is a no-op. Key columns are cast to the stored
     * types first, so int keys against a long table just work.
     */
-  def delete(table: String, keys: DataFrame, pk: Seq[String]): Unit = {
-    require(pk.nonEmpty, s"delete from $table needs a primary key")
+  def delete(table: String, keys: DataFrame, pk: Seq[String]): Unit =
     eraseMany(Seq(TableDelete(table, keys, pk)))
-  }
-
-  /** GROUP PK delete — [[delete]] across a table GROUP in one commit:
-    * a store whose state spans tables (LSH postings + vectors, bands +
-    * shingle sets) erases a subject from ALL of them at once. Every
-    * `pk` must be its table's FULL merge key (see [[TableDelete]]).
-    */
-  def deleteMany(deletes: Seq[TableDelete]): Unit = eraseMany(deletes)
-
-  /** [[deleteMany]] with the delete keys DERIVED INSIDE the writer
-    * lease. An erasure whose full merge keys come from scanning the
-    * store itself has a race in the eager form — a concurrent admit
-    * landing between the caller's key scan and the lease adds postings
-    * the scan never saw. Declaring the member `tables` up front and
-    * evaluating `derive` only after the lease is held closes that
-    * window. `derive` must only delete from the declared tables
-    * (enforced) and should eagerly checkpoint store-scanning frames.
-    */
-  def deleteMany(tables: Seq[String])(derive: => Seq[TableDelete]): Unit =
-    eraseMany(tables)(derive)
 
   /** GROUP erasure across heterogeneous store shapes: PK deletes
     * ([[TableDelete]]) and count decrements ([[TableCountRetract]])
     * under ONE writer lease and ONE commit — a subject erases from
     * posting tables, payload tables, count inventories and policy
     * histograms at once, and no reader captures a half-erased state.
+    * Every `pk` must be its table's FULL merge key (see [[TableDelete]]).
     * Without an erasure id a count retraction is at-least-once under
-    * crash-replay; see the erasureId overload. A payload the driver
-    * already holds (a local relation, e.g. `createDataFrame(rows,
-    * schema)`) routes on the driver: its touched buckets come from its
-    * key rows with no Spark job, and it is neither deduped nor cached.
-    * The distributed payloads share ONE Spark job that learns their
-    * touched buckets.
+    * crash-replay. The members run the one rewrite (class doc): a
+    * payload the driver already holds routes with no Spark job and is
+    * neither deduped nor cached.
+    *
+    * An `erasureId` (unique per logical erasure — a sweep id, a ticket
+    * number) makes it EXACTLY-ONCE under crash-replay: the id commits in
+    * the same log entry as the member rewrites (a member with nothing to
+    * erase records it too), so a replay skips every member that applied
+    * it and applies the rest once — bit-identical to a single uncrashed
+    * run. Replay must re-derive the SAME payloads. An id is never
+    * forgotten.
     */
-  def eraseMany(erases: Seq[TableErase]): Unit = eraseMany(erases, None)
-
-  /** [[eraseMany]] with an EXACTLY-ONCE guarantee under crash-replay,
-    * keyed by a caller-chosen `erasureId` (unique per logical erasure —
-    * a sweep id, a ticket number). The id commits in the same log entry
-    * as the member rewrites (a member with nothing to erase records it
-    * too), so a replay skips every member that applied it and applies
-    * the rest once — bit-identical to a single uncrashed run. Replay
-    * must re-derive the SAME payloads. An id is never forgotten.
-    */
-  def eraseMany(erases: Seq[TableErase], erasureId: Option[String]): Unit = {
+  def eraseMany(erases: Seq[TableErase], erasureId: Option[String] = None): Unit = {
     require(erases.nonEmpty, "eraseMany needs at least one table")
     erasureId.foreach(requireValidOpId("erasure"))
-    withWriterLease(erases.map(_.table))(eraseLeased(erases, erasureId))
+    rewrite(erases, erasureId, createEmpty = false, "sink:erase:touched:")
   }
 
   /** [[eraseMany]] with the per-table payloads DERIVED INSIDE the
-    * writer lease (see the [[deleteMany]] thunk form for why). */
+    * writer lease. An erasure whose full merge keys come from scanning
+    * the store itself has a race in the eager form — a concurrent admit
+    * landing between the caller's key scan and the lease adds postings
+    * the scan never saw. Declaring the member `tables` up front and
+    * evaluating `derive` only after the lease is held closes that
+    * window. `derive` must only erase from the declared tables
+    * (enforced) and should eagerly checkpoint store-scanning frames.
+    */
   def eraseMany(tables: Seq[String])(derive: => Seq[TableErase]): Unit =
     eraseMany(tables, None)(derive)
 
@@ -1070,7 +952,7 @@ final class UpsertSink(spark: SparkSession, root: String,
     require(tables.distinct.size == tables.size,
       s"duplicate tables in lease scope: ${tables.mkString(", ")}")
     erasureId.foreach(requireValidOpId("erasure"))
-    withWriterLease(tables) {
+    writerLocked(tables) {
       val erases = derive
       // an EMPTY derivation is a no-op: a plan that scans the store for
       // its keys legitimately derives nothing from an emptied store
@@ -1079,7 +961,7 @@ final class UpsertSink(spark: SparkSession, root: String,
         require(outside.isEmpty,
           s"derived erases target tables outside the lease scope: " +
             s"${outside.mkString(", ")} (declared: ${tables.mkString(", ")})")
-        eraseLeased(erases, erasureId)
+        rewrite(erases, erasureId, createEmpty = false, "sink:erase:touched:")
       }
     }
   }
@@ -1091,108 +973,163 @@ final class UpsertSink(spark: SparkSession, root: String,
         id.forall(c => c.isLetterOrDigit || c == '.' || c == '_' || c == '-'),
       s"invalid $kind id '$id': need 1-128 chars of [A-Za-z0-9._-]")
 
-  private def eraseLeased(erases: Seq[TableErase],
-                          erasureId: Option[String]): Unit = {
-    require(erases.map(_.table).distinct.size == erases.size,
-      s"one erase per table: ${erases.map(_.table).mkString(", ")}")
-    erases.foreach(d =>
-      require(d.pk.nonEmpty, s"erase from ${d.table} needs a primary key"))
-    val head = states(erases.map(_.table))
-    erases.foreach(d => require(head.contains(d.table),
-      s"cannot erase from missing table ${d.table}"))
-    val live = erases.filterNot(d => erasureId.exists(head(d.table).erasures))
-    val prepped = live.filter(d => head(d.table).hasData).map { d =>
-      val st = head(d.table)
-      val buckets = if (st.bucketed) st.buckets else numBuckets
-      val stored = st.schema
-      def typed(frame: DataFrame, what: String): Seq[Column] = d.pk.map { c =>
-        val f = stored.find(_.name == c).getOrElse(
-          throw new IllegalArgumentException(
-            s"$what ${d.table}: key column $c not in stored schema " +
-              s"[${stored.map(_.name).mkString(", ")}]"))
-        frame(c).cast(f.dataType).as(c)
-      }
-      // a payload the driver holds routes on the driver: its touched
-      // buckets come from its key rows, and it is read once (by the
-      // rewrite), so it needs neither the distinct nor the cache
-      val (keyed, routes) = d match {
-        case TableDelete(_, keys, pk) =>
-          val typedKeys = keys.select(typed(keys, "delete from"): _*)
-          val routes = heldRoutes(withBucket(typedKeys, pk, buckets), pk)
-          (withBucket(if (routes.isDefined) typedKeys else typedKeys.distinct(),
-            pk, buckets), routes)
-        case TableCountRetract(t, decrements, pk, cntCols, _) =>
-          // one decrement row per pk, each count in its STORED type
-          cntCols.foreach { c =>
-            require(stored.exists(_.name == c),
-              s"count retract $t: count column $c not in stored schema " +
-                s"[${stored.map(_.name).mkString(", ")}]")
-            require(decrements.columns.contains(c),
-              s"count retract $t: decrements frame lacks count column $c")
-          }
-          val pks = typed(decrements, "count retract")
-          (withBucket(sumCounts(decrements, pks, cntCols, stored, c => s"__dec_$c"),
-            pk, buckets), heldRoutes(withBucket(decrements.select(pks: _*), pk, buckets), pk))
-      }
-      (d, st, buckets,
-        if (routes.isDefined) keyed else keyed.persist(StorageLevel.MEMORY_AND_DISK),
-        routes.map(bucketsOf))
-    }
-    try {
-      val touchedAll = touchedBuckets(prepped.collect { case (d, _, _, keyed, None) =>
-          d.table -> keyed },
-        s"sink:erase:touched:${prepped.map(_._1.table).mkString(",")}") ++
-        prepped.collect { case (d, _, _, _, Some(t)) => d.table -> t }
-      val results = graft.ops.Par.map(prepped) { case (d, st, buckets, keyed, _) =>
-        d.table -> Try {
-          val touched = touchedAll.getOrElse(d.table, Nil)
-            .filter(b => !st.bucketed || st.files.contains(b))
-          if (touched.isEmpty) None
-          else {
-            // a flat member rewrites whole, into the bucketed layout
-            val cur =
-              if (st.bucketed) scan(d.table, Some(st), Some(touched))
-              else withBucket(scan(d.table, Some(st), None), d.pk, buckets)
-            val kept = d match {
-              case td: TableDelete =>
-                cur.join(keyed.select(td.pk.map(col): _*), td.pk, "left_anti")
-              case cr: TableCountRetract =>
-                // decrement in place: stored counts minus the subject's
-                // sums, clamped at zero; un-decremented rows pass through
-                val updated = cur.join(
-                  keyed.select((cr.pk ++ cr.cntCols.map(c => s"__dec_$c"))
-                    .map(col): _*),
-                  cr.pk, "left")
-                val outCols = cur.columns.toSeq.map { c =>
-                  if (cr.cntCols.contains(c)) {
-                    val tpe = cur.schema(c).dataType
-                    greatest(col(c) - coalesce(col(s"__dec_$c"),
-                      lit(0).cast(tpe)), lit(0).cast(tpe)).cast(tpe).as(c)
-                  } else col(c)
-                }
-                val dec = updated.select(outCols: _*)
-                if (cr.dropAtZero)
-                  dec.filter(cr.cntCols.map(col(_) > 0).reduce(_ || _))
-                else dec
-            }
-            val written = writeFiles(d.table, kept, buckets, s"sink:swap:${d.table}")
-            Some(if (st.bucketed) st.copy(files = st.files -- touched ++ written)
-              else st.copy(pk = d.pk, buckets = buckets, files = written))
-          }
+  /** `m`'s [[Plan]] at its table's modulus `buckets`, or None when it
+    * has nothing to rewrite (an erase from a table with no rows). */
+  private def plan(m: SinkMember, st: Option[TableState], buckets: Int): Option[Plan] =
+    m match {
+      case TableMerge(table, raw, pk, versionCol, pkUnique, counts) =>
+        // the schema contract: a delta into stored rows has their types
+        val updates = st.filter(_.hasData).fold(raw)(s => alignToStored(table, s.schema, raw))
+        val keyed = withBucket(updates, pk, buckets)
+        val routes = heldRoutes(keyed, pk)
+        // a held delta with unique keys needs neither the dedupe nor the
+        // cache; a distributed or deduped one is cached, since the touched
+        // collect and the rewrite's reads would otherwise recompute it
+        val unique = pkUnique || routes.exists(r => distinctCount(r).contains(r.length))
+        val latest =
+          if (unique) keyed
+          else withBucket(
+            if (counts.nonEmpty)
+              sumCounts(updates, pk.map(col), counts, updates.schema)
+                .select(updates.columns.toSeq.map(col): _*)
+            // last-write-wins, shared with the JDBC writer
+            else MergeSemantics.dedupeLastWins(updates, pk, versionCol), pk, buckets)
+        Some(Plan(latest, routes, cache = routes.isEmpty || !unique, inserts = true, cur =>
+          if (counts.nonEmpty)
+            // DO UPDATE SET c = t.c + EXCLUDED.c: stored and delta rows
+            // sum per pk (a key's bucket is a function of the key), so
+            // absent keys insert and present ones add
+            sumCounts(cur.unionByName(latest), (pk :+ BucketCol).map(col),
+              counts, cur.schema).select(cur.columns.toSeq.map(col): _*)
+          else cur.join(latest.select(pk.map(col): _*), pk, "left_anti")
+            .unionByName(latest)))
+      case e: TableErase if !st.exists(_.hasData) =>
+        require(st.nonEmpty, s"cannot erase from missing table ${e.table}")
+        None
+      case TableDelete(table, keys, pk) =>
+        val typed = keys.select(storedKeys(s"delete from $table", st.get.schema, keys, pk): _*)
+        val routes = heldRoutes(withBucket(typed, pk, buckets), pk)
+        // a held payload is read once, by the rewrite: no distinct, no cache
+        val keyed = withBucket(if (routes.isDefined) typed else typed.distinct(), pk, buckets)
+        Some(Plan(keyed, routes, cache = routes.isEmpty, inserts = false,
+          _.join(keyed.select(pk.map(col): _*), pk, "left_anti")))
+      case TableCountRetract(table, decrements, pk, cntCols, dropAtZero) =>
+        val stored = st.get.schema
+        cntCols.foreach { c =>
+          require(stored.exists(_.name == c),
+            s"count retract $table: count column $c not in stored schema " +
+              s"[${stored.map(_.name).mkString(", ")}]")
+          require(decrements.columns.contains(c),
+            s"count retract $table: decrements frame lacks count column $c")
         }
-      }.toMap
-      commitAll(live.map { d =>
-        d.table -> results.getOrElse(d.table, Success(None)).map(
-          _.orElse(erasureId.map(_ => head(d.table)))
-            .map(s => s.copy(erasures = s.erasures ++ erasureId)))
-      })
-    } finally prepped.foreach(p => if (p._5.isEmpty) p._4.unpersist())
+        val pks = storedKeys(s"count retract $table", stored, decrements, pk)
+        // one decrement row per pk, each count in its STORED type
+        val keyed = withBucket(sumCounts(decrements, pks, cntCols, stored, c => s"__dec_$c"),
+          pk, buckets)
+        val routes = heldRoutes(withBucket(decrements.select(pks: _*), pk, buckets), pk)
+        Some(Plan(keyed, routes, cache = routes.isEmpty, inserts = false, { cur =>
+          // decrement in place: stored counts minus the subject's sums,
+          // clamped at zero; un-decremented rows pass through
+          val dec = cur.join(keyed.select((pk ++ cntCols.map(c => s"__dec_$c")).map(col): _*),
+              pk, "left")
+            .select(cur.columns.toSeq.map { c =>
+              if (cntCols.contains(c)) {
+                val tpe = cur.schema(c).dataType
+                greatest(col(c) - coalesce(col(s"__dec_$c"), lit(0).cast(tpe)),
+                  lit(0).cast(tpe)).cast(tpe).as(c)
+              } else col(c)
+            }: _*)
+          if (dropAtZero) dec.filter(cntCols.map(col(_) > 0).reduce(_ || _)) else dec
+        }))
+    }
+
+  /** THE touched-bucket rewrite (class doc) of merges and erases. Every
+    * member is planned, so every schema contract checked, before any
+    * table writes. Per member, concurrently: a bucketed table rewrites
+    * only its touched buckets; a flat-layout one rewrites whole, once,
+    * into the bucketed layout; a missing or emptied one is created from
+    * a merge's delta (an empty delta only when `createEmpty`). The
+    * commit records `opId` — admit ids for merges, erasure ids for
+    * erases — on every member that did not hold it yet.
+    */
+  private def rewrite(members: Seq[SinkMember], opId: Option[String],
+                      createEmpty: Boolean, label: String): Unit = {
+    val tables = members.map(_.table)
+    require(tables.distinct.size == tables.size,
+      s"one write per table: ${tables.mkString(", ")}")
+    members.foreach(m =>
+      require(m.pk.nonEmpty, s"a write to ${m.table} needs its primary key"))
+    writerLocked(tables) {
+      val head = states(tables)
+      def ids(m: SinkMember, s: TableState): Set[String] = m match {
+        case _: TableMerge => s.admits
+        case _ => s.erasures
+      }
+      def record(m: SinkMember, s: TableState): TableState = m match {
+        case _: TableMerge => s.copy(admits = s.admits ++ opId)
+        case _ => s.copy(erasures = s.erasures ++ opId)
+      }
+      // a member whose table already holds this op id applied it: skip
+      val live = members.filterNot(m => opId.exists(id => head.get(m.table).exists(ids(m, _)(id))))
+      val plans = live.flatMap { m =>
+        val st = head.get(m.table)
+        // the LOGGED modulus, never the instance default: a mismatch
+        // would scatter keys away from their rows
+        val buckets = st.filter(_.bucketed).fold(numBuckets)(_.buckets)
+        plan(m, st, buckets).map((m, st, buckets, _))
+      }
+      try {
+        plans.foreach { case (_, _, _, p) => if (p.cache) p.delta.persist(StorageLevel.MEMORY_AND_DISK) }
+        // a merge into a flat table or a createEmpty one into a table with
+        // no rows writes whatever its delta touches: it skips the job
+        val touched = touchedBuckets(plans.collect {
+          case (m, st, _, p) if st.filter(_.hasData).fold(!createEmpty)(_.bucketed || !p.inserts) =>
+            (m.table, p.delta, p.routes)
+        }, label)
+        val results = graft.ops.Par.map(plans) { case (m, st, buckets, p) =>
+          val t = touched.getOrElse(m.table, Nil)
+          def swap(df: DataFrame) = writeFiles(m.table, df, buckets, s"sink:swap:${m.table}")
+          m.table -> Try(st.filter(_.hasData) match {
+            case Some(s) if s.bucketed =>
+              val stored = t.filter(s.files.contains)
+              if (t.isEmpty || (stored.isEmpty && !p.inserts)) None
+              else Some(s.copy(files = s.files -- t ++ swap(
+                if (stored.isEmpty) p.delta else p.step(scan(m.table, st, Some(stored))))))
+            case Some(s) => // a flat-layout table: migrates on this rewrite
+              if (t.isEmpty && !p.inserts) None
+              else Some(s.copy(pk = m.pk, buckets = buckets,
+                files = swap(p.step(withBucket(scan(m.table, st, None), m.pk, buckets)))))
+            case None if !createEmpty && t.isEmpty => None
+            case None => // first write, or a re-create of an emptied table
+              Some(TableState(0L, schemaOf(p.delta), m.pk, buckets, None,
+                writeFiles(m.table, p.delta, buckets, s"sink:overwrite:${m.table}"),
+                st.fold(Set.empty[String])(_.admits),
+                st.fold(Set.empty[String])(_.erasures)))
+          })
+        }.toMap
+        commitAll(live.map { m =>
+          m.table -> results.getOrElse(m.table, Success(None)).map(
+            _.orElse(opId.flatMap(_ => head.get(m.table))).map(record(m, _)))
+        })
+      } finally plans.foreach { case (_, _, _, p) => if (p.cache) p.delta.unpersist() }
+    }
   }
 }
 
 object UpsertSink {
   /** The bucket partition column of the bucketed layout. */
   private[sink] val BucketCol = "__bucket"
+
+  /** A member of the sink's one rewrite, planned against its table's
+    * head: its bucketed `delta`, the delta's held (pk, bucket) rows,
+    * whether the rewrite persists it, whether it `inserts` (a merge: a
+    * touched bucket with no stored rows, or a missing table, gets the
+    * delta as it is), and the kind's `step` from the touched buckets'
+    * stored rows to the rows kept.
+    */
+  private final case class Plan(delta: DataFrame, routes: Option[Array[Row]],
+                                cache: Boolean, inserts: Boolean,
+                                step: DataFrame => DataFrame)
 
   /** Whether the driver already holds `df`: its plan optimizes to a
     * [[LocalRelation]] (`createDataFrame(rows, schema)`, `toDF`, or a

@@ -91,7 +91,7 @@ class StoreSlopeSpec extends SparkSpec {
             "the overhead regime for this scale")
       }
       assert(m.admit.isDefined == (aSmall.isDefined && aBig.isDefined))
-      // the erase leg (round-12 verdict: measure deleteMany's cost
+      // the erase leg (round-12 verdict: measure eraseMany's cost
       // model) — O(subjects + touched buckets), never O(store): the
       // subject set is FIXED across the decade, so the wall must not
       // track the archive either

@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.functions._
 
 import graft.{SparkSpec, Tables}
-import graft.sink.UpsertSink
+import graft.sink.{TableMerge, UpsertSink}
 
 /** Persisted BM25 inverted index: served scores must equal the direct
   * corpus-side scorer exactly, and the lifecycle (build/admit/erase)
@@ -244,8 +244,8 @@ class SearchOpsSpec extends SparkSpec {
       .select(col("k"), (col("n") + col("__bn")).as("n"),
         (col("sum_dl") + col("__bs")).as("sum_dl"))
       .localCheckpoint(true)
-    sink.merge(SearchOps.Stats, folded, Seq("k"), None, pkUnique = true,
-      opId = Some("readmit-crash"))
+    sink.mergeMany(Seq(TableMerge(SearchOps.Stats, folded, Seq("k"), pkUnique = true)),
+      Some("readmit-crash"))
     SearchOps.invertedIndexAdmit(batch, "doc_id", "text", sink,
       admitId = Some("readmit-crash"))
     val expected = freshSink("readmit_expect")

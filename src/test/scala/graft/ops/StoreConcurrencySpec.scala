@@ -219,7 +219,7 @@ class StoreConcurrencySpec extends SparkSpec {
     @volatile var eraseErr: Option[Throwable] = None
     val eraser = new Thread(() => {
       // three erasure waves over disjoint archive subjects — each wave
-      // derives its band keys inside the deleteMany lease, racing the
+      // derives its band keys inside the eraseMany lease, racing the
       // admitter's mergeMany leases on the SAME two tables
       try (0L until 3L).foreach { w =>
         val subjects = ((w * 5 + 1) to (w * 5 + 5)).toDF("doc_id")

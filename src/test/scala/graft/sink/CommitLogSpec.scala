@@ -95,7 +95,7 @@ class CommitLogSpec extends SparkSpec {
         .join(s.read("inv").withColumnRenamed("cnt", "__old"), Seq("k"), "left")
         .select($"k", (coalesce($"__old", lit(0L)) + $"cnt").as("cnt"))
         .localCheckpoint(true)
-      s.merge("inv", summed, Seq("k"), None, pkUnique = true, opId = id)
+      s.mergeMany(Seq(TableMerge("inv", summed, Seq("k"), pkUnique = true)), id)
     }
     def erase(s: UpsertSink, id: Option[String]): Unit =
       s.eraseMany(Seq("inv", "post"), id) {
@@ -254,8 +254,8 @@ class CommitLogSpec extends SparkSpec {
     def headBytes(): Long = entries(root).map(Files.size).sum
     val start = headBytes()
     for (i <- 1 to 8)
-      sink.merge("a", Seq((1L, i.toLong)).toDF("k", "cnt"), Seq("k"), None, pkUnique = true,
-        opId = Some(s"admit-$i"))
+      sink.mergeMany(Seq(TableMerge("a", Seq((1L, i.toLong)).toDF("k", "cnt"), Seq("k"),
+        pkUnique = true)), Some(s"admit-$i"))
     assert(headBytes() == start, "op ids landed in the root entry")
     assert((1 to 8).forall(i => sink.admitCommitted("a", s"admit-$i")))
     assert(!sink.admitCommitted("b", "admit-1"))

@@ -1036,7 +1036,7 @@ class UpsertSinkSpec extends SparkSpec {
     sink.merge("b", (1L to 40L).map(i => (i, i * 2)).toDF("id", "n"), Seq("id"))
     // erase ids 1..10 from BOTH tables in one group delete; 99 is absent
     val keys = ((1L to 10L) :+ 99L).toDF("id")
-    sink.deleteMany(Seq(
+    sink.eraseMany(Seq(
       TableDelete("a", keys, Seq("id")),
       TableDelete("b", keys, Seq("id"))))
     assert(sink.read("a").select("id").as[Long].collect().sorted.toSeq
@@ -1044,19 +1044,19 @@ class UpsertSinkSpec extends SparkSpec {
     assert(sink.read("b").select("id").as[Long].collect().sorted.toSeq
       == (11L to 40L))
     // idempotent re-delete
-    sink.deleteMany(Seq(TableDelete("a", keys, Seq("id")),
+    sink.eraseMany(Seq(TableDelete("a", keys, Seq("id")),
       TableDelete("b", keys, Seq("id"))))
     assert(sink.read("a").count() == 30 && sink.read("b").count() == 30)
     // contract: missing table, duplicate member, empty pk all loud
     intercept[IllegalArgumentException] {
-      sink.deleteMany(Seq(TableDelete("missing", keys, Seq("id"))))
+      sink.eraseMany(Seq(TableDelete("missing", keys, Seq("id"))))
     }
     intercept[IllegalArgumentException] {
-      sink.deleteMany(Seq(TableDelete("a", keys, Seq("id")),
+      sink.eraseMany(Seq(TableDelete("a", keys, Seq("id")),
         TableDelete("a", keys, Seq("id"))))
     }
     intercept[IllegalArgumentException] {
-      sink.deleteMany(Seq(TableDelete("a", keys, Seq.empty)))
+      sink.eraseMany(Seq(TableDelete("a", keys, Seq.empty)))
     }
   }
 
@@ -1108,7 +1108,7 @@ class UpsertSinkSpec extends SparkSpec {
   }
 
   test("version/hasDataFiles vs a LIVE deleter: metadata walks never crash on vanishing files") {
-    // the r12 judge-confirmed race: deleteMany's bucket swaps remove
+    // the r12 judge-confirmed race: eraseMany's bucket swaps remove
     // .bkup_N backups and emptied-bucket dirs between a concurrent
     // metadata walk's listing and its stat — version()'s Files.walk
     // crashed with UncheckedIOException(NoSuchFileException) instead of
@@ -1130,11 +1130,11 @@ class UpsertSinkSpec extends SparkSpec {
     reader.start()
     try {
       // descending blocks leave the table non-empty throughout; each
-      // deleteMany's swaps churn .bkup_N files under the live walker
+      // eraseMany's swaps churn .bkup_N files under the live walker
       (0 until 12).foreach { r =>
         val lo = 400L - (r + 1) * 30
         val keys = ((lo + 1) to (lo + 30)).toDF("id")
-        sink.deleteMany(Seq(TableDelete("t", keys, Seq("id"))))
+        sink.eraseMany(Seq(TableDelete("t", keys, Seq("id"))))
       }
     } finally {
       stop.set(true)
@@ -1257,7 +1257,7 @@ class UpsertSinkSpec extends SparkSpec {
           .select($"k", (org.apache.spark.sql.functions.coalesce($"__old",
             org.apache.spark.sql.functions.lit(0L)) + $"cnt").as("cnt"))
           .localCheckpoint(true)
-        s.merge("inv", summed, Seq("k"), None, pkUnique = true, opId = id)
+        s.mergeMany(Seq(TableMerge("inv", summed, Seq("k"), pkUnique = true)), id)
       }
     val once = freshSink(); seed(once); fold(once, None)
     val real = freshSink(); seed(real)
@@ -1288,7 +1288,7 @@ class UpsertSinkSpec extends SparkSpec {
           .select($"k", (org.apache.spark.sql.functions.coalesce($"__old",
             org.apache.spark.sql.functions.lit(0L)) + $"cnt").as("cnt"))
           .localCheckpoint(true)
-        s.merge("inv", summed, Seq("k"), None, pkUnique = true, opId = id)
+        s.mergeMany(Seq(TableMerge("inv", summed, Seq("k"), pkUnique = true)), id)
       }
     val ref = new UpsertSink(spark,
       Files.createTempDirectory("graft_sink_aref").toString, numBuckets = 4)
@@ -1431,7 +1431,7 @@ class UpsertSinkSpec extends SparkSpec {
         var hi = 200L
         while (!stop.get() && hi > 40L) {
           val keys = ((hi - 19) to hi).toDF("id")
-          sink.deleteMany(Seq(TableDelete("x", keys, Seq("id")),
+          sink.eraseMany(Seq(TableDelete("x", keys, Seq("id")),
             TableDelete("y", keys, Seq("id"))))
           hi -= 20
           Thread.sleep(100L)
@@ -1646,7 +1646,7 @@ class UpsertSinkSpec extends SparkSpec {
     }
     assert(admit.getMessage.contains("invalid admit id 'bad id!'"), admit.getMessage)
     val merge = intercept[IllegalArgumentException] {
-      sink.merge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"), None, false, Some(""))
+      sink.mergeMany(Seq(TableMerge("t", Seq((1L, "a")).toDF("id", "v"), Seq("id"))), Some(""))
     }
     assert(merge.getMessage.contains("invalid admit id"), merge.getMessage)
     val erase = intercept[IllegalArgumentException] {
@@ -1670,6 +1670,19 @@ class UpsertSinkSpec extends SparkSpec {
     assert(sink.read("t").count() == 200L)
   }
 
+  /** The id of the sink's `_log` head entry. */
+  private def headId(sink: UpsertSink): Long =
+    new CommitLog(java.nio.file.Paths.get(sink.rootPath)).head().id
+
+  /** `op` on `sink` under op id "op-1", then again: the replay must
+    * commit nothing. */
+  private def replayed(sink: UpsertSink)(op: Option[String] => Unit): Unit = {
+    op(Some("op-1"))
+    val head = headId(sink)
+    op(Some("op-1"))
+    assert(headId(sink) == head, "a replay under the same op id committed")
+  }
+
   /** Table `t`'s rows as sorted strings (binary by content). */
   private def contents(sink: UpsertSink): Seq[String] =
     if (!sink.exists("t")) Seq("<missing>")
@@ -1681,13 +1694,16 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("a delta the driver holds merges exactly like a distributed copy of the same rows") {
     import org.apache.spark.sql.DataFrame
-    // each case merges `base` (when given), then `delta` held on the
-    // driver in one sink and checkpointed (distributed) in another
-    def parity(name: String, base: Option[DataFrame], delta: DataFrame)(
+    // each case merges `base` (when given), runs `setup`, then merges
+    // `delta` held on the driver in one sink and checkpointed
+    // (distributed) in another
+    def parity(name: String, base: Option[DataFrame], delta: DataFrame,
+               setup: UpsertSink => Unit = _ => ())(
         merge: (UpsertSink, DataFrame) => Unit): Seq[String] = {
       val Seq(held, distributed) = Seq(delta, delta.localCheckpoint()).map { d =>
         val sink = freshSink()
         base.foreach(merge(sink, _))
+        setup(sink)
         merge(sink, d)
         contents(sink)
       }
@@ -1718,6 +1734,35 @@ class UpsertSinkSpec extends SparkSpec {
       s.mergeMany(Seq(TableMerge("t", d, Seq("id"))))) == Seq("<missing>"))
     assert(parity("empty merge", None, empty)((s, d) =>
       s.merge("t", d, Seq("id"))) != Seq("<missing>"))
+    // per merge kind: a flat-layout table (migrated by the merge), an
+    // emptied table (re-created), and an op-id replay (commits nothing)
+    val rows = base.get
+    val countBase = Seq(("a", 5L), ("c", 1L)).toDF("k", "cnt")
+    val countDelta = Seq(("a", 1L), ("b", 3L), ("a", 2L)).toDF("k", "cnt")
+    def upsert(id: Option[String])(s: UpsertSink, d: DataFrame): Unit =
+      s.mergeMany(Seq(TableMerge("t", d, Seq("id"))), id)
+    def countMerge(id: Option[String])(s: UpsertSink, d: DataFrame): Unit =
+      s.mergeMany(Seq(TableMerge("t", d, Seq("k"), counts = Seq("cnt"))), id)
+    def emptied(df: DataFrame, pk: String)(s: UpsertSink): Unit = {
+      s.merge("t", df, Seq(pk))
+      s.delete("t", df.select(pk), Seq(pk))
+    }
+    val flat = parity("flat upsert", None, dups, _.overwrite("t", rows))(upsert(None))
+    assert(flat.count(_.startsWith("3|")) == 1 && flat.size == 21, flat)
+    val flatCounts = parity("flat count merge", None, countDelta,
+      _.overwrite("t", countBase))(countMerge(None))
+    assert(flatCounts == Seq("a|8", "b|3", "c|1"), flatCounts)
+    val emptiedUpsert = parity("emptied upsert", None, dups, emptied(rows, "id"))(upsert(None))
+    assert(emptiedUpsert.map(_.takeWhile(_ != '|')).toSet == Set("3", "4", "30"), emptiedUpsert)
+    val emptiedCounts = parity("emptied count merge", None, countDelta,
+      emptied(countBase, "k"))(countMerge(None))
+    assert(emptiedCounts == Seq("a|3", "b|3"), emptiedCounts)
+    val replayUpsert = parity("upsert op-id replay", None, dups,
+      _.merge("t", rows, Seq("id")))((s, d) => replayed(s)(upsert(_)(s, d)))
+    assert(replayUpsert.count(_.startsWith("3|")) == 1 && replayUpsert.size == 21, replayUpsert)
+    val replayCounts = parity("count merge op-id replay", None, countDelta,
+      _.merge("t", countBase, Seq("k")))((s, d) => replayed(s)(countMerge(_)(s, d)))
+    assert(replayCounts == Seq("a|8", "b|3", "c|1"), replayCounts)
   }
 
   test("a held 1-key delete runs no sink:erase:touched job; a distributed one does") {
@@ -1735,14 +1780,16 @@ class UpsertSinkSpec extends SparkSpec {
 
   test("an erase the driver holds leaves the table a distributed copy of it leaves") {
     import org.apache.spark.sql.DataFrame
-    // each case builds `base` with `pk`, then erases `payload` held on
-    // the driver in one sink and checkpointed (distributed) in another
-    def parity(name: String, base: DataFrame, pk: Seq[String], payload: DataFrame)(
+    // each case builds `base` with `pk` (by `build`), then erases
+    // `payload` held on the driver in one sink and checkpointed
+    // (distributed) in another
+    def parity(name: String, base: DataFrame, pk: Seq[String], payload: DataFrame,
+               build: (UpsertSink, DataFrame, Seq[String]) => Unit = _.merge("t", _, _))(
         erase: (UpsertSink, DataFrame) => Unit): Seq[String] = {
       val Seq(held, distributed) = Seq(payload, payload.localCheckpoint()).map { d =>
         val sink = new UpsertSink(spark,
           Files.createTempDirectory("graft_sink_erase").toString, numBuckets = 8)
-        sink.merge("t", base, pk)
+        build(sink, base, pk)
         erase(sink, d)
         contents(sink)
       }
@@ -1784,6 +1831,34 @@ class UpsertSinkSpec extends SparkSpec {
       once()
     }
     assert(replay == Seq("a|3", "c|1"), replay)
+    // per erase kind: a flat-layout table (migrated by the erase), an
+    // emptied table (nothing to erase), and an erasure-id replay
+    // (commits nothing)
+    def flat(s: UpsertSink, df: DataFrame, pk: Seq[String]): Unit = s.overwrite("t", df)
+    def emptied(s: UpsertSink, df: DataFrame, pk: Seq[String]): Unit = {
+      s.merge("t", df, pk)
+      s.delete("t", df.select(pk.head, pk.tail: _*), pk)
+    }
+    def retract(id: Option[String])(s: UpsertSink, d: DataFrame): Unit =
+      s.eraseMany(Seq(TableCountRetract("t", d, Seq("k"), Seq("cnt"))), id)
+    def deleteId(id: Option[String])(s: UpsertSink, d: DataFrame): Unit =
+      s.eraseMany(Seq(TableDelete("t", d, Seq("id"))), id)
+    val keys = Seq(3L, 3L, 4L, 99L).toDF("id")
+    val flatDelete = parity("flat delete", base, Seq("id"), keys, flat)(deleteId(None))
+    assert(flatDelete.size == 18 && !flatDelete.exists(_.startsWith("3|")), flatDelete)
+    val flatRetract = parity("flat count retract", counts, Seq("k"), repeated, flat)(retract(None))
+    assert(flatRetract == Seq("a|3", "c|1"), flatRetract)
+    val emptiedDelete = parity("emptied delete", base, Seq("id"), keys, emptied)(deleteId(None))
+    assert(emptiedDelete == Seq("<no data>"), emptiedDelete)
+    val emptiedRetract = parity("emptied count retract", counts, Seq("k"), repeated, emptied)(
+      retract(None))
+    assert(emptiedRetract == Seq("<no data>"), emptiedRetract)
+    val replayDelete = parity("delete erasure-id replay", base, Seq("id"), keys)((s, d) =>
+      replayed(s)(deleteId(_)(s, d)))
+    assert(replayDelete.size == 18 && !replayDelete.exists(_.startsWith("3|")), replayDelete)
+    val replayRetract = parity("count retract erasure-id replay", counts, Seq("k"), repeated)(
+      (s, d) => replayed(s)(retract(_)(s, d)))
+    assert(replayRetract == Seq("a|3", "c|1"), replayRetract)
   }
 
   test("readKeyBuckets with held keys runs no sink:keybuckets job and returns the distributed copy's rows") {

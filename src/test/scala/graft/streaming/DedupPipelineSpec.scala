@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.types._
 
 import graft.SparkSpec
-import graft.sink.UpsertSink
+import graft.sink.{TableMerge, UpsertSink}
 
 /** Streaming exact dedup: first occurrence wins, duplicates are dropped
   * by stream state (not sink conflicts), and a checkpoint restart does
@@ -230,8 +230,8 @@ class DedupPipelineSpec extends SparkSpec {
       .select($"k", ($"n" + $"__bn").as("n"),
         ($"sum_dl" + $"__bs").as("sum_dl"))
       .localCheckpoint(true)
-    sink.merge(SearchOps.Stats, folded, Seq("k"), None, pkUnique = true,
-      opId = Some("search-ingest-b1"))
+    sink.mergeMany(Seq(TableMerge(SearchOps.Stats, folded, Seq("k"), pkUnique = true)),
+      Some("search-ingest-b1"))
 
     // THE RESTART: the checkpoint re-delivers batch 1 under batchId 1
     // -> same admit id -> the journal skips guard+fold, the idempotent
@@ -534,8 +534,8 @@ class DedupPipelineSpec extends SparkSpec {
       .select($"k", ($"n" + $"__bn").as("n"),
         ($"sum_dl" + $"__bs").as("sum_dl"))
       .localCheckpoint(true)
-    sink.merge(SearchOps.Stats, folded, Seq("k"), None, pkUnique = true,
-      opId = Some("fdx-admit-b2"))
+    sink.mergeMany(Seq(TableMerge(SearchOps.Stats, folded, Seq("k"), pkUnique = true)),
+      Some("fdx-admit-b2"))
     val erase2 = eraseBatches(2).map(doc).toDF("doc_id", "text")
     EraseOps.eraseSubjects(erase2, "doc_id", "text", sink,
       sweepId = "fdx-erase-b2")
